@@ -576,7 +576,6 @@ def _cms_sql_rows(src: str, cols: str) -> str:
     ORDER BY true_cnt DESC, l_partkey
     """,
     tags=("agg", "sketch"),
-    window_defer=True,
     doc=f"Count-min-sketch heavy hitters — the frequency-estimation "
     f"sketch completing the mergeable family (KMV = distinct, CMS = "
     f"counts): {CMS_D} seeded hash rows x {CMS_W} buckets of plain "
@@ -680,7 +679,6 @@ KMVJ_K = 256  # union-sketch size (same k as approx_kmv_distinct)
     FROM sk CROSS JOIN ex
     """,
     tags=("agg", "sketch", "join"),
-    window_defer=True,
     doc=f"KMV set algebra — pre-join cardinality estimation, completing "
     "the mergeable-sketch family (KMV distinct, CMS frequency, bitmap "
     "retention, and now OVERLAP): estimate |A ∪ B|, Jaccard(A, B), and "
@@ -802,7 +800,6 @@ def _binned_quantile_oracle() -> str:
     "approx_quantiles_binned",
     oracle=_binned_quantile_oracle(),
     tags=("agg", "sketch"),
-    window_defer=True,
     doc=f"Mergeable binned-quantile sketch over order totals — the "
     "quantile member of the engine-portable sketch family (KMV "
     f"distinct, CMS heavy hitters, HLL registers): {NBINS_Q} "

@@ -1028,7 +1028,6 @@ def a13_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l.l_returnflag, b.p05, b.p95
     """,
     tags=("agg", "robust"),
-    window_defer=True,
     doc="Winsorized mean per return flag — the robust-average sibling of "
     "a9's MAD outlier count: values are CLAMPED to the group's exact "
     "[p05, p95] band before averaging, so a handful of wild rows move "
@@ -1087,7 +1086,6 @@ def a15_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM r WHERE rn = 1
     """,
     tags=("agg", "stats"),
-    window_defer=True,
     doc="Exact per-group mode with a total tie-break (most frequent "
     "shipdate per return flag; ties -> earliest value) — the "
     "deterministic counterpart of Spark's mode(), whose tie behavior "
@@ -1151,7 +1149,6 @@ def a16_group_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m
     """,
     tags=("agg", "stats"),
-    window_defer=True,
     doc="Population skewness and kurtosis per return flag from EXACT "
     "integer power sums s1..s4 — the 3rd/4th-moment extension of "
     "a8_exact_corr's discipline: built-in skewness()/kurtosis() "
@@ -1225,7 +1222,6 @@ def a17_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM nat
     """,
     tags=("agg", "window", "rollup"),
-    window_defer=True,
     doc="Share-of-parent hierarchy report (nation revenue as a share of "
     "its region and of the world) — the OLAP ratio g1_rollup's plain "
     "subtotals cannot express, and the pattern that replaces a "
@@ -1289,7 +1285,6 @@ def a18_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY decile
     """,
     tags=("agg", "window", "stats"),
-    window_defer=True,
     doc="Pareto decile audit (does the top 10% of customers carry 80% of "
     "revenue?) — the discrete companion to a13's Gini scalar: customers "
     "ranked into spend deciles (NTILE with a total order: cents desc, "

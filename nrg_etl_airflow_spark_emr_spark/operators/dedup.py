@@ -276,7 +276,7 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "vocabulary that overhead buys nothing and the prefix plan runs "
     "2-2.5x SLOWER than the all-pairs sibling (BENCH_r2/r3). The win "
     "condition is MEASURED, not assumed: on Zipfian corpora "
-    "(scripts/bench_zipf.py; BASELINE.md 'Zipfian crossover') the "
+    "(BASELINE.md 'Zipfian crossover') the "
     "all-pairs join's sum(df^2) blow-up crosses over by 10k docs "
     "(1.8x faster at s=1.2) and reaches 15x faster at 20k docs — "
     "that curve, not the fixture, is the 100 TB case for it.",
@@ -992,7 +992,6 @@ def _wide_hamming(a: str, b: str) -> F.Column:
           <= {WIDE_HAMMING_MAX}
     """,
     tags=("dedup", "sketch"),
-    window_defer=True,
     doc=f"WIDTH-PARAMETERIZED simhash banding — the scale-safe variant "
     "closing dedup_simhash_banded's classified regime bound (round-11 "
     "sf10 probe: fixed 32-bit sketches give B*n^2/2^5-ish uncorrelated "
@@ -1095,7 +1094,6 @@ assert RB_BLOCKS * RB_BLOCK_BITS == SIMHASH_BITS and RB_MATCH >= 1
     WHERE bit_count(xor(a.simhash, b.simhash)) <= {HAMMING_MAX}
     """,
     tags=("dedup", "sketch"),
-    window_defer=True,
     doc=f"Manku r-of-b simhash candidates — the CONTRACT-PRESERVING "
     f"scale route for simhash dedup (VERDICT r12 item 5): same "
     f"{SIMHASH_BITS}-bit sketch and Hamming <= {HAMMING_MAX} bound as "
@@ -1416,9 +1414,9 @@ def embedding_dedup_twolevel(
 ) -> DataFrame:
     """Two-level trained-routing embedding near-dup — the parameterized
     core behind dedup_embedding_twolevel, exposed so the scale-regime
-    probe can size (k1, k2) to the corpus (scripts/probe_twolevel.py
-    runs it at sf10 with sqrt-sized levels; the registered query pins
-    the fixture sizes for the oracle gate).
+    probe can size (k1, k2) to the corpus (BASELINE.md "Round-11 fix of
+    regime finding 1" runs it at sf10 with sqrt-sized levels; the
+    registered query pins the fixture sizes for the oracle gate).
 
     Level 1 trains k1 coarse cells over the whole corpus; level 2 trains
     k2 sub-cells INSIDE each coarse cell (the same grouped quantized-
@@ -1499,7 +1497,6 @@ def dedup_embedding_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_embedding_twolevel_persisted",
     oracle=_twolevel_oracle(_TL_K1, _TL_K2, _TL_ITERS),
     tags=("dedup", "similarity", "index", "sink"),
-    window_defer=True,
     doc="Two-level trained dedup routing FROM A PERSISTED INDEX — the "
     "train-once/search-many completion of dedup_embedding_twolevel "
     "(whose inline twin retrains BOTH levels per run). The builder "
@@ -1554,7 +1551,6 @@ def _twolevel_balance_oracle(k1: int, k2: int, iters: int) -> str:
     "qc_twolevel_index_balance",
     oracle=_twolevel_balance_oracle(_TL_K1, _TL_K2, _TL_ITERS),
     tags=("qc", "dedup", "index"),
-    window_defer=True,
     doc="Router health audit over the PERSISTED two-level index: per-"
     "(coarse, sub) bucket postings count and corpus share, through the "
     "SAME composite-bucket cell_balance law maintain_twolevel_index's "
@@ -1588,7 +1584,6 @@ def qc_twolevel_index_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY md5(lower(trim(regexp_replace(text, ' +', ' ', 'g'))))
     """,
     tags=("dedup", "text"),
-    window_defer=True,
     doc="Normalization-aware exact dedup (the C4-style 'exact after "
     "canonicalization' stage between raw-digest dedup and MinHash): "
     "documents equal after lowercasing, trimming, and whitespace "
@@ -1701,7 +1696,6 @@ def _sql_lsh_tune_oracle() -> str:
     "dedup_lsh_tune",
     oracle=_sql_lsh_tune_oracle(),
     tags=("dedup", "sketch", "stats"),
-    window_defer=True,
     doc="LSH parameter tuner — closes SCALE.md's 'retune (k, bands) per "
     "corpus similarity profile' shortcut by making the retune ITSELF a "
     "query: estimate the corpus pair-similarity histogram from MinHash "
@@ -1876,7 +1870,6 @@ def _sql_incremental_lsh_oracle() -> str:
     bench=True,
     oracle=_sql_incremental_lsh_oracle(),
     tags=("dedup", "sketch", "incremental"),
-    window_defer=True,
     doc="INCREMENTAL MinHash-LSH dedup — the production shape the "
     "full-recompute queries skip: a new batch (fixture: doc_id % "
     f"{INCR_MOD} == 0) is deduped against the HISTORICAL corpus plus "
@@ -1972,7 +1965,6 @@ def _band_frame(sig: DataFrame) -> DataFrame:
     "dedup_incremental_persisted",
     oracle=_sql_incremental_lsh_oracle(),
     tags=("dedup", "sketch", "incremental", "index", "sink"),
-    window_defer=True,
     doc="Incremental MinHash-LSH dedup FROM A PERSISTED BAND INDEX — "
     "extends the round-10 train-once/search-many family to dedup: the "
     "builder first persists the historical corpus's index "
@@ -2112,7 +2104,6 @@ _SPAN_SEED_SQL = sql_hash60(
     ORDER BY doc_a, doc_b, start_a, start_b
     """,
     tags=("dedup", "text", "substring"),
-    window_defer=True,
     doc=f"Exact-substring dedup — maximal shared token spans between doc "
     f"pairs (the 'deduplicating training data' substring granularity: "
     f"near-dup docs caught by MinHash still share verbatim passages that "

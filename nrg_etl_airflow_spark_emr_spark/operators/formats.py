@@ -225,7 +225,6 @@ def src_gzcsv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "src_avro_roundtrip",
     oracle=_AGG_ORACLE,
     tags=("source", "format"),
-    window_defer=True,
     doc="Avro Object Container File sink + source round-trip — the last "
     "mainstream interchange format without a catalog query (SURVEY.md "
     "§2.1 absent-format gap-fill; JSON/ORC/CSV/gz-CSV/binary all have "
@@ -255,7 +254,6 @@ def src_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "src_avro_split_scan",
     oracle=_AGG_ORACLE,
     tags=("source", "format"),
-    window_defer=True,
     doc="SPLITTABLE Avro read — the few-huge-files landing shape: orders "
     "written as TWO container files (coalesce(2)), then read back with "
     "16 byte-range splits via sync-marker seek (sources/avro_ocf.py "
@@ -287,7 +285,6 @@ _DERBY_DRIVER = "org.apache.derby.iapi.jdbc.AutoloadedDriver"
     "src_jdbc_roundtrip",
     oracle=_AGG_ORACLE,
     tags=("source", "format"),
-    window_defer=True,
     doc="JDBC sink + source round-trip — the LAST absent format from "
     "SURVEY.md §2.1's gap list (JSON/ORC/Avro all have rows). The only "
     "JDBC driver on this deployment's classpath is embedded Derby "
@@ -540,7 +537,6 @@ _EVO_CUTOFF = "1996-07-01"  # rows before this wrote the OLD (narrower) schema
     GROUP BY priority
     """,
     tags=("source", "format"),
-    window_defer=True,
     doc="Parquet schema-evolution round-trip — the long-lived-table "
     "reality the fixed-schema round-trips skip: an old commit wrote "
     "(orderkey, totalprice, orderdate), a newer commit added "
@@ -598,7 +594,6 @@ _BAD_CSV_LINES = (
     FROM orders
     """,
     tags=("source", "format", "qc"),
-    window_defer=True,
     doc="Malformed-record ingestion audit over a PERMISSIVE CSV read with "
     "columnNameOfCorruptRecord: three corrupt lines (unparseable "
     "number, extra token, free text) are injected next to the clean "
@@ -679,7 +674,6 @@ _LAYOUT_KEY_HI = 120   # populated at every fixture scale (sf0.001 has ~150 keys
     WHERE o_custkey >= {_LAYOUT_KEY_LO} AND o_custkey < {_LAYOUT_KEY_HI}
     """,
     tags=("source", "format", "layout"),
-    window_defer=True,
     doc="Range-clustered layout round-trip: orders rewritten with "
     "write_sorted_parquet (repartitionByRange + sortWithinPartitions "
     "on o_custkey — disjoint per-file key bands), then a key-range "
@@ -716,7 +710,6 @@ def src_sorted_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "snk_compacted_roundtrip",
     oracle=_AGG_ORACLE,
     tags=("sink", "format", "layout"),
-    window_defer=True,
     doc="Small-file compaction round-trip: orders deliberately fragmented "
     "into 32 undersized files (the shape incremental/streaming sinks "
     "leave behind), rewritten by compact_parquet to ceil(bytes/target) "
@@ -763,7 +756,6 @@ _Z_OK_HI = 3000  # o_orderkey bound: rectangle, not a stripe
       AND o_orderkey < {_Z_OK_HI}
     """,
     tags=("source", "format", "layout"),
-    window_defer=True,
     doc="Z-order (Morton-curve) layout round-trip: orders rewritten with "
     "write_zordered_parquet clustered on the interleaved bits of "
     "(o_custkey, o_orderkey) — each output file covers a small SQUARE "

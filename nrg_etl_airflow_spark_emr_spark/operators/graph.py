@@ -305,21 +305,6 @@ def _pagerank_oracle() -> str:
     "2 longs/node.",
 )
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return pagerank_frame(spark, sf_dir)
-
-
-def pagerank_frame(
-    spark: SparkSession, sf_dir: str, graph_layout: str = "merge"
-) -> DataFrame:
-    """graph_pagerank's parameterized core: ``graph_layout`` selects how
-    the loop-invariant edge+degree frame is stored across iterations —
-    "merge" (production: merge-hinted join + layout-preserving cache),
-    "cache" (repartition+sort+cache), or "checkpoint" (the round-10
-    localCheckpoint shape). Exposed so scripts/ab_pagerank_layout.py
-    measures the EXACT production loop (same iterations, checkpoint
-    cadence, arithmetic) with only the layout varying — the A/B that
-    chose "merge" (BASELINE.md round-11 finding-2 fix) stays honest as
-    the loop evolves."""
     orders = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     e = (
@@ -348,16 +333,8 @@ def pagerank_frame(
     # 3.6 GB disk); this layout measured ZERO spill and 0.86x wall at sf10
     # at a 1.09x cost at sf0.1 — the three-way layout A/B (old checkpoint /
     # repartition+sort+cache / merge-hinted cache) is recorded in
-    # BASELINE.md, repro scripts/ab_pagerank_layout.py.
-    pre = bi.join(deg, "src")
-    if graph_layout == "merge":
-        graph = bi.join(deg.hint("merge"), "src").cache()
-    elif graph_layout == "cache":
-        graph = pre.repartition("src").sortWithinPartitions("src").cache()
-    elif graph_layout == "checkpoint":
-        graph = pre.localCheckpoint(eager=False)
-    else:
-        raise ValueError(f"unknown graph_layout: {graph_layout!r}")
+    # BASELINE.md, "Round-11 fix of regime finding 2".
+    graph = bi.join(deg.hint("merge"), "src").cache()
     # Every node appears as src in bi (each edge is mirrored), so the
     # graph's src domain is exactly the node set. Rank init reads it
     # FROM THE CACHED GRAPH, not from deg: deg's plan re-embeds the
@@ -581,7 +558,6 @@ def dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY degree_digits
     """,
     tags=("graph", "agg"),
-    window_defer=True,
     doc="Degree distribution of the part co-purchase graph, bucketed by "
     "digit count of the degree (the exact-integer log10 proxy the "
     "surprisal operators use — a power-law graph shows roughly linear "

@@ -351,7 +351,6 @@ def _kmeans_cells_oracle(k: int, iters: int) -> str:
     GROUP BY a.cell, qe.dim
     """,
     tags=("similarity", "iterative"),
-    window_defer=True,
     doc=f"ONE Lloyd iteration with pinned centroids (the k={K_DEFAULT} "
     "lowest vec_ids — the trainer's deterministic init), oracle-gated "
     "bit-for-bit: assign every vector to its nearest centroid (exact "
@@ -424,7 +423,6 @@ def sim_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sim_kmeans_cells",
     oracle=_kmeans_cells_oracle(K_DEFAULT, ITERS_DEFAULT),
     tags=("similarity", "iterative"),
-    window_defer=True,
     doc=f"K-means cell summary after {ITERS_DEFAULT} Lloyd's iterations "
     f"(k={K_DEFAULT}): per-cell member count and mean squared distance, "
     "oracle-gated END-TO-END — the whole-vector trainer is "
@@ -553,7 +551,6 @@ def _ivf_trained_oracle(k: int, iters: int, nprobe: int, nq: int) -> str:
     bench=True,
     oracle=_ivf_trained_oracle(K_DEFAULT, IVF_TRAIN_ITERS, NPROBE, N_QUERIES),
     tags=("similarity", "topk", "iterative"),
-    window_defer=True,
     doc=f"IVF top-5 over TRAINED centroids, oracle-gated end-to-end "
     "INCLUDING the trainer — closes SCALE.md's 'fixture-rule centroids' "
     f"shortcut with a stronger guarantee than the planned swap: "
@@ -753,7 +750,6 @@ def ivf_trained_shortlist(spark: SparkSession, sf_dir: str, topn: int) -> DataFr
     bench=True,
     oracle=_ivf_trained_oracle(K_DEFAULT, IVF_TRAIN_ITERS, NPROBE, N_QUERIES),
     tags=("similarity", "topk", "index", "sink"),
-    window_defer=True,
     doc="Trained-IVF search FROM A PERSISTED INDEX — the train-once / "
     "search-many shape a 100 TB deployment actually runs, closing the "
     "'every trainer re-trains inline per query' gap: the builder first "
@@ -818,7 +814,6 @@ def _ivf_balance_oracle() -> str:
     "qc_ivf_index_balance",
     oracle=_ivf_balance_oracle(),
     tags=("qc", "similarity", "index"),
-    window_defer=True,
     doc="ANN-index health audit: per-cell postings count and share of "
     "the corpus under the trained-IVF assignment — the gate a vector "
     "store checks before (and after each maintenance cycle of) serving "
@@ -885,7 +880,6 @@ def _ivf_upsert_oracle() -> str:
     "sim_knn_ivf_upsert",
     oracle=_ivf_upsert_oracle(),
     tags=("similarity", "topk", "index", "sink", "upsert"),
-    window_defer=True,
     doc="INCREMENTAL maintenance of the persisted IVF index — the "
     "operation a growing 100 TB corpus runs instead of rebuilds: the "
     "index is built on the base slice (vec_id % 4 != 0), then the new "
@@ -968,7 +962,6 @@ def _ivf_mmr_oracle() -> str:
     bench=True,
     oracle=_ivf_mmr_oracle(),
     tags=("similarity", "topk", "rerank", "iterative"),
-    window_defer=True,
     doc="Trained-IVF shortlist feeding the MMR diversification rerank — "
     "the end-to-end RAG retrieval path, composing the two round-8 "
     "flagships: candidates come from ivf_trained_shortlist (quantized-"

@@ -679,7 +679,6 @@ def audio_cross_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     FROM wagg
     """,
     tags=("multimodal", "udf"),
-    window_defer=True,
     doc="Audio decode stage, HASH-GATED end-to-end (rows-only through "
     "r11; the mm_decode_meta cross-check discipline applied to the WAV "
     "codec): every document renders to a REAL RIFF/WAVE PCM payload — "
@@ -905,7 +904,6 @@ def frame_sample_batches(
     FROM fpick p JOIN fd d ON p.doc_id = d.doc_id
     """,
     tags=("multimodal", "udf"),
-    window_defer=True,
     doc="Frame sampling, HASH-GATED end-to-end (rows-only through r11; "
     "the cross-check discipline applied to the video container): every "
     "document renders to a REAL multi-frame RIFF/AVI — frame count "
@@ -1069,7 +1067,6 @@ _PHASH_ORACLE = f"""
     "mm_phash_dedup",
     oracle=_PHASH_ORACLE,
     tags=("multimodal", "dedup", "similarity"),
-    window_defer=True,
     doc="Perceptual-hash near-dup pairs — the multimodal dedup bridge: "
     "the image pipeline's aHash (8x8 average hash; REAL for PNG/BMP via "
     "phash_bands_image, property-pinned: resize-invariant, local-edit "
@@ -1212,7 +1209,6 @@ def render_phash_image(text: str, doc_id: int) -> bytes:
     "mm_phash_image_dedup",
     oracle=_PHASH_IMAGE_ORACLE,
     tags=("multimodal", "dedup", "similarity"),
-    window_defer=True,
     doc="The REAL image path of the perceptual-hash dedup, driver-gated "
     "end-to-end: every document is rendered to an actual image (8x8 "
     "grayscale PNG for even doc_ids, 24-bit BMP for odd — both via the "
@@ -1328,7 +1324,6 @@ def cross_codec_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
           WHERE length(text) >= 1)
     """,
     tags=("multimodal", "udf", "dedup"),
-    window_defer=True,
     doc="Decode stage, HASH-GATED end-to-end via a cross-codec check "
     "(round 12 — this row was rows-only through r11; VERDICT r11 item "
     "7): every document's pixel law (the 255-clamped sampled "
@@ -1427,7 +1422,6 @@ def _resize_oracle() -> str:
     "mm_resize",
     oracle=_resize_oracle(),
     tags=("multimodal", "udf"),
-    window_defer=True,
     doc="Resize stage, HASH-GATED end-to-end (rows-only through r11 — "
     "the last gateable mm row): every document's pixel law renders "
     "into its parity container (grayscale PNG even / 24-bit BMP odd), "

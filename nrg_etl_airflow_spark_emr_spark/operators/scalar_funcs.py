@@ -265,7 +265,6 @@ TB_ORIGIN = "2024-01-01 00:30:00"          # off-hour origin: catches floor-to-
     GROUP BY bucket_us, event_type
     """,
     tags=("function", "temporal", "agg"),
-    window_defer=True,
     doc="Arbitrary-width, arbitrary-origin time bucketing (the "
     "TimescaleDB time_bucket / date_bin primitive): 90-minute buckets "
     "anchored at an off-hour origin, counted per event type. Width and "
@@ -307,7 +306,6 @@ def f15_time_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     """,
     tags=("function", "conditional"),
-    window_defer=True,
     doc="Error-safe function surface (try_cast / try_divide): malformed "
     "input yields NULL instead of aborting a 1000-executor job in its "
     "final stage — the difference between quarantining bad rows and "
@@ -386,7 +384,6 @@ def _word_offsets_udtf():
     FROM off
     """,
     tags=("function", "generator", "udtf"),
-    window_defer=True,
     doc="Python UDTF surface (Spark 4 @udtf, SURVEY.md §2.10 — closes "
     "VERDICT r8 item 8 by DELIVERY, superseding the round-9 declination): "
     "a LATERAL table function fanning each document into its first "

@@ -879,7 +879,6 @@ def _pq_oracle(
     oracle=_pq_oracle(PQ_M, PQ_SUB_W, PQ_K, PQ_ITERS, PQ_SHORTLIST, N_QUERIES),
     bench=True,
     tags=("similarity", "topk", "compression", "iterative"),
-    window_defer=True,
     doc=f"Product-quantized top-10 with exact re-rank (IVFADC's PQ half), "
     "oracle-gated END-TO-END including the codebook trainer — closes one "
     "of the two rows-only PQ rows by moving the trainer onto the "
@@ -965,7 +964,6 @@ def _pq_adc_search(
     "sim_knn_pq_persisted",
     oracle=_pq_oracle(PQ_M, PQ_SUB_W, PQ_K, PQ_ITERS, PQ_SHORTLIST, N_QUERIES),
     tags=("similarity", "topk", "index", "sink"),
-    window_defer=True,
     doc="PQ search FROM A PERSISTED INDEX — completes the train-once / "
     "search-many family (sim_knn_ivf_persisted, text_bpe_encode_"
     "persisted) for the compressed-corpus case: the builder first "
@@ -1005,7 +1003,6 @@ def sim_knn_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_where="vec_id % 4 != 0",
     ),
     tags=("similarity", "topk", "index", "sink", "upsert"),
-    window_defer=True,
     doc="INCREMENTAL maintenance of the persisted PQ index — the "
     "compressed-corpus twin of sim_knn_ivf_upsert: codebooks are "
     "trained on the base slice (vec_id % 4 != 0), then the new batch "
@@ -1138,7 +1135,6 @@ def _ivfpq_oracle(
         PQ_M, PQ_SUB_W, PQ_K, PQ_ITERS, PQ_SHORTLIST, N_QUERIES, NPROBE
     ),
     tags=("similarity", "topk", "compression", "iterative"),
-    window_defer=True,
     doc=f"IVFADC — the full inverted-file + product-quantization layout "
     "(the composition of sim_knn_ivf's coarse routing and sim_knn_pq's "
     "compressed scoring), oracle-gated END-TO-END: vectors assign to "
@@ -1355,7 +1351,6 @@ def sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT query_id, vec_id, dist2_scaled, rn FROM ranked WHERE rn <= 10
     """,
     tags=("similarity", "topk"),
-    window_defer=True,
     doc="Brute-force EUCLIDEAN top-10 — the other standard ANN metric "
     "(cosine ranks by angle; L2 also feels magnitude, and for "
     "non-normalized embeddings the two disagree). The squared distance "
@@ -1443,7 +1438,6 @@ def sim_knn_l2_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY label
     """,
     tags=("qc", "similarity"),
-    window_defer=True,
     doc="Vector-column QC audit — the embedding-side counterpart of "
     "qc_documents_audit: per label, count NULL vectors, non-finite "
     "components (NULL/NaN/Inf — a NULL element poisons fixed-point "
@@ -1631,7 +1625,6 @@ _MMR_ORACLE = (
     bench=True,
     oracle=_MMR_ORACLE,
     tags=("similarity", "topk", "rerank"),
-    window_defer=True,
     doc=f"Maximal-marginal-relevance rerank — the retrieval stage AFTER "
     f"top-k: greedily pick {MMR_K} of the top-{MMR_C} relevance "
     f"candidates, each round scoring score = {MMR_L}·rel − {MMR_1ML}·"
@@ -1805,7 +1798,6 @@ HN_K = 2         # hard negatives per anchor
     WHERE rn <= {HN_K}
     """,
     tags=("training", "similarity", "topk"),
-    window_defer=True,
     doc=f"Hard-negative mining for contrastive training — the ANN-routed "
     "complement of train_negative_pairs' random negatives (random "
     "negatives are easy; the pairs a contrastive objective learns from "

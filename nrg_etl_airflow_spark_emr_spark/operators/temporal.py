@@ -1147,7 +1147,6 @@ def events_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n_events
     """,
     tags=("temporal", "agg", "stats"),
-    window_defer=True,
     doc="Session-duration profile by session size — the observability "
     "endpoint for w5_sessionize (how long do k-event sessions last?): "
     "sessions from the same lag+running-sum kernel, then per-size "
@@ -1203,7 +1202,6 @@ FUNNEL_W2_US = 7 * 24 * 3600 * 1_000_000  # click -> purchase conversion window
            LEFT JOIN p ON p.user_id = v.user_id
     """,
     tags=("temporal", "funnel"),
-    window_defer=True,
     doc="Time-bounded conversion funnel — funnel_stages' windowed "
     "sibling: the click must land within 24h of the user's FIRST view, "
     "the purchase within 7d of that qualifying click (unbounded 'ever "
@@ -1285,7 +1283,6 @@ SEMI_ADD_ID_SLOT = 10_000_000_000
     GROUP BY day_us
     """,
     tags=("temporal", "agg", "window"),
-    window_defer=True,
     doc="Semi-additive measure rollup — the warehouse pattern plain SUM "
     "gets wrong: a balance-style reading is additive ACROSS users but "
     "NOT across time (summing every reading in a day double-counts; "
@@ -1406,7 +1403,6 @@ def user_activity_masks(ev: DataFrame) -> DataFrame:
     ORDER BY cohort_day, off
     """,
     tags=("temporal", "agg", "bitmap"),
-    window_defer=True,
     doc="Exact 32-day retention from one BIGINT bitmap per user — the "
     "roaring-bitmap trick in its fixed-width form: each user's activity "
     "relative to their first-seen day folds into bit_or(1 << offset), "

@@ -1498,7 +1498,6 @@ COOC_MIN_PAIR = 5    # report pairs seen at least this often
     WHERE pair_n >= {COOC_MIN_PAIR}
     """,
     tags=("text", "stats"),
-    window_defer=True,
     doc=f"Windowed word co-occurrence with exact PMI-odds — the skip-gram "
     f"count matrix (radius {COOC_WINDOW}, forward-ordered pairs) that "
     "word-embedding and collocation pipelines start from. pmi_odds = "
@@ -1582,7 +1581,6 @@ HASH_DIM = 1024  # feature-hashing dimensionality
     GROUP BY doc_id, feature_idx
     """,
     tags=("text", "features"),
-    window_defer=True,
     doc=f"Feature hashing (the HashingVectorizer trick):every token maps to "
     f"hash60(word) mod {HASH_DIM} and per-doc counts land in a fixed-"
     "width sparse feature space — no vocabulary pass, no fitted state, "
@@ -1657,7 +1655,6 @@ _PII_PHONE_RE = r"\b[0-9]{3}-[0-9]{4}\b"
     FROM scrubbed
     """,
     tags=("text", "clean", "pii"),
-    window_defer=True,
     doc="PII detection + redaction — the scrub stage every production "
     "training-data pipeline runs before anything else (emails, dotted-quad "
     "IPs, phone-shaped numbers -> typed placeholders, with per-doc match "
@@ -1751,7 +1748,6 @@ def _chunk_oracle(src: str = "documents") -> str:
     bench=True,
     oracle=_chunk_oracle(),
     tags=("text", "rag"),
-    window_defer=True,
     doc=f"Overlapping-window chunking — the retrieval-unit split every "
     f"RAG ingestion runs between cleaning and embedding: {CHUNK_TOK}-"
     f"token chunks at stride {CHUNK_STRIDE} (so consecutive chunks "
@@ -2007,7 +2003,6 @@ def _bpe_encode_unseen_oracle(k: int) -> str:
     "text_bpe_encode_unseen",
     oracle=_bpe_encode_unseen_oracle(BPE_MERGES),
     tags=("text", "iterative", "training", "index"),
-    window_defer=True,
     doc="Tokenize text the trainer NEVER SAW — the capability that makes "
     "a trained tokenizer deployable, completing the apply story the way "
     "sim_knn_ivf_upsert completes the index story (old artifact, union "
@@ -2086,7 +2081,6 @@ def text_bpe_encode_unseen(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM j
     """,
     tags=("text", "qc", "training"),
-    window_defer=True,
     doc="Tokenizer-deployment QC: out-of-vocabulary rate of a trained "
     "vocabulary (the even-doc_id half, the same split text_bpe_encode_"
     "unseen trains on) measured over the FULL corpus — by token "
@@ -2137,7 +2131,6 @@ def text_bpe_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_bpe_oracle(BPE_MERGES),
     bench=True,
     tags=("text", "iterative", "training"),
-    window_defer=True,
     doc=f"BPE tokenizer TRAINING — the iterative-text counterpart of the "
     "fixed-point k-means trainer, oracle-gated end-to-end: learn the "
     f"first {BPE_MERGES} byte-pair merges over the corpus. The classic "
@@ -2330,7 +2323,6 @@ def bpe_apply_merges(seqs: DataFrame, merges: list[tuple[str, str]]) -> DataFram
     "text_bpe_encode",
     oracle=_bpe_encode_oracle(BPE_MERGES),
     tags=("text", "iterative", "training"),
-    window_defer=True,
     doc="Tokenize WITH the trained tokenizer — the apply half that "
     "completes text_bpe_train_merges the way trained-IVF search "
     f"completes its trainer: re-train the {BPE_MERGES} merges (shared "
@@ -2648,7 +2640,6 @@ def _bpe_batched_oracle(n_merges: int, batch: int) -> str:
     "text_bpe_train_batched",
     oracle=_bpe_batched_oracle(BPE_MERGES * 2, 8),
     tags=("text", "iterative", "training"),
-    window_defer=True,
     doc=f"Batched BPE merge learning — lifts the greedy trainer's "
     "one-driver-round-trip-PER-MERGE regime bound (SCALE.md): each "
     "round selects the top-8 symbol-disjoint pairs from one bounded "
@@ -2679,7 +2670,6 @@ def text_bpe_train_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_bpe_encode_persisted",
     oracle=_bpe_encode_oracle(BPE_MERGES),
     tags=("text", "iterative", "training", "index", "sink"),
-    window_defer=True,
     doc="BPE encode FROM PERSISTED TOKENIZER ARTIFACTS — the tokenizer "
     "twin of sim_knn_ivf_persisted, closing the re-train-per-query gap "
     "for the text side: the builder first writes the trained artifacts "
@@ -2755,7 +2745,6 @@ def _line_dedup_oracle(src: str = "documents") -> str:
     "text_line_dedup",
     oracle=_line_dedup_oracle(),
     tags=("text", "dedup"),
-    window_defer=True,
     doc="C4-style repeated-span dedup WITHIN documents, corpus-wide — "
     "the preprocessing stage that strips boilerplate/duplicated spans "
     "while keeping documents intact (C4 discards all but one of any "

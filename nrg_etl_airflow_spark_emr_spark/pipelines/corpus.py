@@ -562,7 +562,6 @@ def _compose_training_card_oracle() -> str:
     "corpus_training_card",
     oracle=_compose_training_card_oracle(),
     tags=("pipeline", "training", "text"),
-    window_defer=True,
     doc="End-to-end training-data pipeline card — the capstone "
     "composition a user of this engine actually ships: the CLEANED "
     "corpus (quality + language + canonical-dedup, each stage the "
@@ -635,7 +634,6 @@ _FK_EDGES = (
     )
     + "\n    ORDER BY edge",
     tags=("qc", "join"),
-    window_defer=True,
     doc="Referential-integrity audit — every FK edge of the star schema "
     "in one report: child rows, orphaned FKs (non-null value with no "
     "parent row), and NULL FKs (legal but counted separately, since "
@@ -731,7 +729,6 @@ _PK_EDGES = (
     )
     + "\n    ORDER BY tbl",
     tags=("qc", "agg"),
-    window_defer=True,
     doc="Primary-key uniqueness audit — the PK half of the integrity "
     "pair (qc_fk_orphans is the FK half): for every table with a "
     "declared key, row count, distinct-key count, and the number of "
@@ -809,7 +806,6 @@ _PROFILE_COLS = (
     ) ORDER BY col
     """,
     tags=("qc", "agg"),
-    window_defer=True,
     doc="Per-column profile of the orders table — the third leg of the "
     "integrity tripod (qc_fk_orphans = FK, qc_pk_duplicates = PK, this "
     "= column content): for every column, exact row/null/distinct "
@@ -1026,7 +1022,6 @@ def _approx_profile_oracle() -> str:
     bench=True,
     oracle=_approx_profile_oracle(),
     tags=("qc", "agg", "sketch"),
-    window_defer=True,
     doc="Column profile across the star's five scaling tables with HLL "
     "distinct estimates — the 100 TB twin of qc_orders_profile: exact "
     "row/null counts and portable min/max from one fused aggregate per "
@@ -1051,7 +1046,6 @@ def qc_table_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     "qc_table_profile_approx_xx",
     oracle=None,  # xxhash64 is Spark-engine-native — see rows-only policy below
     tags=("qc", "agg", "sketch"),
-    window_defer=True,
     doc="qc_table_profile_approx's 100 TB REGISTER-HASH variant: same "
     "fused exact stats + relational HLL, but the per-value register "
     "hash is Spark's built-in xxhash64 (codegen'd JVM integer mixing) "
@@ -1273,7 +1267,6 @@ _DRIFT_COLS = (
     ORDER BY col, category
     """,
     tags=("qc", "stats", "agg"),
-    window_defer=True,
     doc=f"Epoch drift audit — did the feed's value distributions change "
     f"between two time periods? For each audited column, per-category "
     f"observed counts before/after the {DRIFT_PIVOT} pivot plus the "

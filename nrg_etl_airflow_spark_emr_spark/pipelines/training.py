@@ -726,7 +726,6 @@ _SQL_KFOLD_KEY = "'fold:7:' || CAST(doc_id AS VARCHAR)"
     FROM r GROUP BY round, role
     """,
     tags=("training", "split"),
-    window_defer=True,
     doc=f"{KFOLD_K}-fold cross-validation assignment: fold = "
     f"hash60('fold:7:'||doc_id) mod {KFOLD_K}, each round r holds fold r "
     "out for eval and trains on the rest. Gated at the round x role "
@@ -787,7 +786,6 @@ BATCH_TOKENS = 2048  # per-batch token budget within one length bucket
     FROM b GROUP BY bucket
     """,
     tags=("training", "pack"),
-    window_defer=True,
     doc="Length-bucketed batching audit — the pad-to-longest batching "
     "strategy that complements train_pack_sequences' concat-packing: "
     "docs are grouped into digit-of-length buckets (the exact-integer "

@@ -695,7 +695,6 @@ def upsert_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_custkey
     """,
     tags=("upsert", "cdc"),
-    window_defer=True,
     doc="CDC apply — the round-trip proof for upsert_cdc_deletes: the "
     "Spark side reconstructs snapshot T2 by APPLYING the diff to "
     "snapshot T1 (anti-join out the deletes, upsert the insert/update "
@@ -755,7 +754,6 @@ def upsert_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND (h.valid_to IS NULL OR CAST(o.o_orderdate AS DATE) < h.valid_to)
     """,
     tags=("upsert", "scd2", "join", "temporal"),
-    window_defer=True,
     doc="Point-in-time (FOR SYSTEM_TIME AS OF) lookup against the SCD2 "
     "history — the query every versioned dimension exists to answer: "
     "each order joined to the customer attributes that were CURRENT on "
@@ -824,7 +822,6 @@ _MERGE_BIG = 200_000.0    # spend above this upgrades the account
     WHERE t.custkey IS NULL AND s.n_orders >= 2
     """,
     tags=("upsert", "merge"),
-    window_defer=True,
     doc="MERGE-INTO-semantics twin over the merge_into kernel — the "
     "upsert family's mechanisms (last-wins, SCD2, CDC apply) were "
     "oracle-proven piecewise, but no query exercised the full ANSI "

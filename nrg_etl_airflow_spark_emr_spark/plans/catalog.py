@@ -59,12 +59,6 @@ class QuerySpec:
     doc: str = ""
     tags: tuple[str, ...] = ()
     bench: bool = False  # include in bench.py headline set
-    # Registered after the current round's window was already committed to
-    # a composition (e.g. a planned rows-only retirement batch): sort
-    # behind every other evidence-lacking spec so late registrations can
-    # never displace the round's planned slots. Affects ONLY the
-    # lacking-evidence phase; once checked, the spec rotates normally.
-    window_defer: bool = False
 
 
 def register(
@@ -73,7 +67,6 @@ def register(
     tags: tuple[str, ...] = (),
     bench: bool = False,
     doc: str = "",
-    window_defer: bool = False,
 ) -> Callable[[Builder], Builder]:
     """Decorator: register a query builder under ``name``."""
 
@@ -82,191 +75,17 @@ def register(
             raise ValueError(f"duplicate query name: {name}")
         _REGISTRY[name] = QuerySpec(
             name=name, builder=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""), tags=tags, bench=bench,
-            window_defer=window_defer,
         )
         return fn
 
     return deco
 
 
-_LOAD_DEPTH = 0  # >0 while module imports are in flight (may reenter)
-
-
-def _mid_import() -> bool:
-    """True while any operator module is partway through its own module
-    body (importlib sets __spec__._initializing for the duration): the
-    registry is legitimately incomplete then, whichever frame asked."""
-    import sys
-
-    return any(
-        getattr(getattr(sys.modules.get(mod), "__spec__", None), "_initializing", False)
-        for mod in _MODULES
-    )
-
-
 def _load() -> None:
-    global _LOAD_DEPTH
     import importlib
 
-    _LOAD_DEPTH += 1
-    try:
-        for mod in _MODULES:
-            importlib.import_module(mod)
-    finally:
-        _LOAD_DEPTH -= 1
-
-
-# Driver-window rotation. The external verify harness checks the FIRST 50
-# entries of all_specs() per round, so ordering is evidence policy: queries
-# that have never received a driver-side correctness row go first. Rounds
-# 1-2 greened 97 queries (relational/analytic/scalar/advanced/TPC-H/
-# temporal/streaming/dedup/similarity); round 3's window is the remaining
-# oracle-gated tail — the whole text/training family, multimodal's one
-# oracle query, graph/skew/corpus, the round-2 additions — topped up to
-# exactly 50 with this round's new queries. Rows-only (oracle=None) specs
-# are NEVER window-priority: the driver records err:"no_oracle" for them
-# (cannot score), so they sort behind every oracle-gated query (see
-# all_specs) and a recorded no_oracle row counts as terminal evidence.
-# Regenerate CATALOG.md after editing (scripts/gen_catalog.py).
-_DRIVER_WINDOW_PRIORITY = (
-    # text family (operators/text.py) — never driver-checked
-    "text_token_stats",
-    "text_quality_score",
-    "text_langid",
-    "text_fingerprint",
-    "text_bpe_token_count",
-    "text_rolling_fingerprint",
-    "text_langid_ngram",
-    "text_gopher_filter",
-    "text_top_ngram_frac",
-    "text_word_freq_topk",
-    "text_remove_stopwords",
-    "text_tfidf_pairs",
-    "text_tfidf_topk_capped",
-    "text_fuzzy_pairs",
-    # training-data pipeline family (pipelines/training.py)
-    "train_split_assign",
-    "train_sample_hash",
-    "train_sample_stratified",
-    "train_pack_sequences",
-    "train_importance_sample",
-    "train_epoch_order",
-    "train_split_leakage",
-    "train_split_by_cluster",
-    "train_mixture_weights",
-    "train_contamination_check",
-    "train_negative_pairs",
-    # multimodal (the one oracle-gated mm query)
-    "mm_binary_meta",
-    # graph / skew / composed pipeline
-    "graph_pagerank",
-    "skew_salted_agg",
-    "skew_salted_join",
-    "corpus_clean",
-    # dedup/similarity stragglers
-    "dedup_jaccard_prefix",
-    "sim_knn_numpy",
-    "sim_knn_sq8",
-    "sim_knn_classify",
-    # round-2 additions that missed the round-2 window
-    "j8_bloom_semijoin",
-    "j9_nullsafe_join",
-    "a8_exact_corr",
-    "a9_mad_outliers",
-    "a10_histogram",
-    "f12_bitwise_aggs",
-    "f13_posexplode",
-    "sub6_lateral_topn",
-    "events_locf_fill",
-    "events_daily_dense",
-    "events_anomaly_score",
-    "events_rollup_two_level",
-    # round-3 additions
-    "st_session_timeout",
-    "a11_conditional_agg",
-    "w9_trailing_7d",
-    "text_chunk_dedup",
-)
-
-# Driver evidence recorded BEFORE the named round is void for these
-# queries: their Spark kernel (or oracle) changed in that round, so an
-# older green row no longer certifies the current code. Voiding demotes
-# the query back to the pending block of all_specs() — it re-enters the
-# driver window immediately and the entry heals itself once a fresh
-# terminal row lands (evidence round >= the named round). Keep entries
-# only while they matter; stale ones are harmless but noisy.
-_EVIDENCE_VOID_BEFORE: dict[str, int] = {
-    # r13 clamped the WAV sample-law codes to 191 in the mm_audio_meta
-    # kernel AND oracle after its last driver row (r12) — VERDICT r13
-    # item 5.
-    "mm_audio_meta": 13,
-    # r15 optimization round: every row whose Spark kernel (or builder
-    # path) changed needs post-change driver evidence. This also closes
-    # VERDICT r14 finding 1 (the six consumers of the round-14
-    # connected-components rewrite — all six appear below, voided at 15
-    # because the CC kernel changed again this round via
-    # edges_canonical). Changes per family:
-    # - connected_components edge-dedup skip (operators/graph.py):
-    "dedup_clusters": 15,
-    "dedup_cluster_stats": 15,
-    "corpus_clean": 15,
-    "corpus_training_card": 15,
-    "train_split_by_cluster": 15,
-    # - e2e chain checkpointed boundaries + minhash sig checkpoint + CC:
-    "corpus_pipeline_e2e": 15,
-    "corpus_pipeline_e2e_lsh": 15,
-    # - BPE row-local fold rounds (operators/text.py):
-    "text_bpe_train_merges": 15,
-    "text_bpe_encode": 15,
-    "text_bpe_encode_unseen": 15,
-    "text_bpe_vocab_coverage": 15,
-    "text_bpe_train_batched": 15,
-    "text_bpe_encode_persisted": 15,
-    # - pagerank rank-init from the cached graph (operators/graph.py):
-    "graph_pagerank": 15,
-    # - mmr_rerank checkpointed candidate frame:
-    "sim_knn_mmr": 15,
-    "sim_knn_ivf_mmr": 15,
-    # - _check_pq_dim_src (raw-table dim probe):
-    "sim_knn_pq": 15,
-    "sim_knn_ivfpq": 15,
-    # - _sized index segment writes (sources/ann_index.py):
-    "sim_knn_ivf_persisted": 15,
-    "sim_knn_ivf_upsert": 15,
-    "sim_knn_pq_persisted": 15,
-    "sim_knn_pq_upsert": 15,
-    "dedup_incremental_persisted": 15,
-    "dedup_embedding_twolevel_persisted": 15,
-    "qc_twolevel_index_balance": 15,
-    # - write_partitioned_parquet REBALANCE sizing (sources/readers.py):
-    "snk_partitioned_parquet": 15,
-    # r16 optimization round: trainer-boundary eager localCheckpoint in
-    # operators/kmeans.py (_trainer_boundary — ivf_train +
-    # lloyd_fit_grouped_quantized). Every row whose returned plan or
-    # builder path runs one of the two trainers needs post-change
-    # driver evidence:
-    "sim_knn_pq": 16,
-    "sim_knn_ivf_trained": 16,
-    "sim_knn_ivf_mmr": 16,
-    "sim_knn_ivf_persisted": 16,
-    "sim_knn_ivf_upsert": 16,
-    "sim_knn_pq_persisted": 16,
-    "sim_knn_pq_upsert": 16,
-    "sim_knn_ivfpq": 16,
-    "sim_kmeans_cells": 16,
-    "qc_ivf_index_balance": 16,
-    "qc_twolevel_index_balance": 16,
-    "dedup_embedding_twolevel": 16,
-    "dedup_embedding_twolevel_persisted": 16,
-    # - spread() below the profile stack (pipelines/corpus.py —
-    #   parallelizes the md5 register pass; shared by the xx twin):
-    "qc_table_profile_approx": 16,
-    "qc_table_profile_approx_xx": 16,
-    # - _boundary() conf hook refactor of the e2e stage boundaries
-    #   (default path identical; builder code changed):
-    "corpus_pipeline_e2e": 16,
-    "corpus_pipeline_e2e_lsh": 16,
-}
+    for mod in _MODULES:
+        importlib.import_module(mod)
 
 
 def _driver_evidence() -> dict[str, int]:
@@ -325,73 +144,32 @@ def _driver_evidence() -> dict[str, int]:
                 terminal = not any(r.get(k) is False for k in keys)
             else:
                 terminal = all(r.get(k) for k in keys)
-            if terminal and rnd >= _EVIDENCE_VOID_BEFORE.get(name, 0):
+            if terminal:
                 evidence[name] = rnd
             else:
                 evidence.pop(name, None)
     return evidence
 
 
-def _driver_green_names() -> set[str]:
-    return set(_driver_evidence())
-
-
 def all_specs() -> dict[str, QuerySpec]:
     """Load all operator modules and return the full registry, ordered for
     the driver's 50-entry correctness window:
 
-    1. hand-priority names (_DRIVER_WINDOW_PRIORITY) lacking terminal
-       driver evidence,
-    2. other oracle-gated queries lacking evidence, registration order,
-    3. rows-only (oracle=None) queries lacking a recorded driver row —
-       demoted behind every scoreable query because the driver can only
-       record an unscoreable ``no_oracle`` row for them,
-    4. everything with terminal evidence, OLDEST evidence first — the
-       window slots left after the pending queries re-verify the greens
-       whose last driver row is most rounds stale, so long-green queries
-       cycle back through the window instead of never being re-checked.
+    1. queries lacking terminal driver evidence, registration order;
+    2. everything with terminal evidence, OLDEST evidence first (ties in
+       registration order) — the window slots left after the pending
+       queries re-verify the greens whose last driver row is most rounds
+       stale, so long-green queries cycle back through the window.
 
     The demotion makes the window self-rotating across rounds, and a
-    query that ever FAILS a driver check keeps (or regains) a window
-    slot until it goes green."""
+    query that ever FAILS a driver check regains a window slot until it
+    goes green."""
     _load()
-    missing = [n for n in _DRIVER_WINDOW_PRIORITY if n not in _REGISTRY]
-    if missing and _LOAD_DEPTH == 0 and not _mid_import():
-        # A priority name may legitimately be absent during a reentrant
-        # call from a module that is itself still importing (corpus.py
-        # composes its oracle from other specs at import time). That
-        # reentrancy has TWO entry paths: via _load() (depth > 0) and via
-        # a DIRECT `import pipelines.corpus` from user code — the latter
-        # leaves depth at 0, so it is detected by the module's own
-        # __spec__._initializing flag instead (_mid_import).
-        raise KeyError(f"_DRIVER_WINDOW_PRIORITY names not registered: {missing}")
-    base = {n: _REGISTRY[n] for n in _DRIVER_WINDOW_PRIORITY if n in _REGISTRY}
-    base.update((n, s) for n, s in _REGISTRY.items() if n not in base)
     green = _driver_evidence()
-    base_idx = {n: i for i, n in enumerate(base)}
-    pending = [n for n in base if n not in green]
-    ordered = {
-        n: base[n]
-        for n in pending
-        if base[n].oracle is not None and not base[n].window_defer
-    }
-    # Rows-only retirements before ANY deferred spec — a deferred
-    # rows-only spec must land in the deferred block, not here, or it
-    # would displace the planned retirement batch.
-    ordered.update(
-        (n, base[n])
-        for n in pending
-        if base[n].oracle is None and not base[n].window_defer
-    )
-    ordered.update((n, base[n]) for n in pending if base[n].window_defer)
-    ordered.update(
-        (n, base[n])
-        for n in sorted(
-            (n for n in base if n in green),
-            key=lambda n: (green[n], base_idx[n]),
-        )
-    )
-    return ordered
+    pending = [n for n in _REGISTRY if n not in green]
+    # sorted() is stable: equal evidence rounds keep registration order.
+    terminal = sorted((n for n in _REGISTRY if n in green), key=green.__getitem__)
+    return {n: _REGISTRY[n] for n in pending + terminal}
 
 
 def spec(name: str) -> QuerySpec:

@@ -414,7 +414,6 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE c.event_type = 'click'
     """,
     tags=("streaming", "join"),
-    window_defer=True,
     doc="Click->purchase attribution within 1 hour, LEFT OUTER: every "
     "click appears, unconverted clicks with NULL purchase — the "
     "conversion-rate denominator the inner join (st_click_purchase_"
@@ -461,7 +460,6 @@ def st_click_purchase_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE rn = 1
     """,
     tags=("streaming", "dedup"),
-    window_defer=True,
     doc="Keep-earliest dedup on the daily idempotency key (user_id, "
     "event_type, day) — batch twin of streaming/jobs.py "
     "dedup_events_within_watermark (dropDuplicatesWithinWatermark, the "
@@ -505,7 +503,6 @@ def st_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND p.ts > c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR
     """,
     tags=("streaming", "join"),
-    window_defer=True,
     doc="Click<->purchase attribution within 1 hour, FULL OUTER: every "
     "click AND every purchase appears — unconverted clicks null-padded "
     "on the purchase side (the conversion denominator) and orphan "

@@ -39,8 +39,8 @@ whose stage boundaries are eager localCheckpoints since r15
 (corpus_pipeline_e2e*, the MMR rerank rows): the upstream stages
 execute at build time and the returned plan starts from the
 checkpointed LogicalRDD, so their visible operator counts cover only
-the post-boundary tail — the full before/after plans live in
-plans/r15/.
+the post-boundary tail — `scripts/capture_plans.py` dumps the full
+plans.
 """
 
 

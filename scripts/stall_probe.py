@@ -19,8 +19,14 @@ each run is one config point (JVM flags need a fresh driver anyway):
       python scripts/stall_probe.py sim_knn_ivfpq 20
 
 Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS,
-SPARK_GRAFT_DRIVER_JAVA_OPTS (appended to driver extraJavaOptions).
+SPARK_GRAFT_DRIVER_JAVA_OPTS (appended to any spark.driver.extraJavaOptions
+given as NAME=VALUE; -Djava.net.preferIPv4Stack=true is always kept).
 Prints one JSON line with per-rep rows and a summary.
+
+The session now sets spark.sql.codegen.cache.maxEntries=1024, so the
+SCALE.md bisect's pre-fix "baseline" row needs it passed explicitly:
+
+  python scripts/stall_probe.py sim_knn_ivfpq 20 spark.sql.codegen.cache.maxEntries=100
 """
 
 from __future__ import annotations
@@ -42,10 +48,10 @@ def main() -> None:
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 20
     extra = dict(kv.split("=", 1) for kv in sys.argv[3:])
     jopts = os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "")
-    if jopts:
-        extra["spark.driver.extraJavaOptions"] = (
-            "-Djava.net.preferIPv4Stack=true " + jopts
-        )
+    key, ipv4 = "spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true"
+    if jopts or key in extra:
+        opts = " ".join(o for o in (extra.get(key, ""), jopts) if o)
+        extra[key] = opts if ipv4 in opts.split() else f"{ipv4} {opts}"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name=f"stall-probe-{name}", extra=extra)
     spec = all_specs()[name]

@@ -169,7 +169,7 @@ def test_tfidf_capped_zipf_corpus_exact_and_pruning(spark, tmp_path):
     import duckdb
 
     from nrg_etl_airflow_spark_emr_spark.operators.text import TFIDF_PAIR_BUDGET
-    from scripts.bench_zipf import make_corpus
+    from .zipf_corpus import make_corpus
 
     zdir = make_corpus(str(tmp_path / "zipf"), n_docs=400, s=1.2)
     spec = all_specs()["text_tfidf_topk_capped"]

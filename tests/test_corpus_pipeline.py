@@ -350,7 +350,9 @@ def test_boundary_checkpoint_reliable_mode_contract(spark, sf_dir, tmp_path):
         map(tuple, cp._e2e_frame(spark, sf_dir).collect())
     )
     ckdir = str(tmp_path / "reliable_ck")
-    spark.sparkContext.setCheckpointDir(ckdir)
+    sc = spark.sparkContext
+    ck_before = sc.getCheckpointDir()
+    sc.setCheckpointDir(ckdir)
     spark.conf.set("spark.nrg.corpus.boundaryCheckpoint", "reliable")
     try:
         reliable_rows = sorted(
@@ -358,6 +360,11 @@ def test_boundary_checkpoint_reliable_mode_contract(spark, sf_dir, tmp_path):
         )
     finally:
         spark.conf.unset("spark.nrg.corpus.boundaryCheckpoint")
+        # setCheckpointDir cannot restore a previous value verbatim (it
+        # appends a fresh UUID subdir, and there is no unset), so put the
+        # JVM field back directly: the session is shared across tests.
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(ck_before))
+    assert sc.getCheckpointDir() == ck_before
     assert reliable_rows == default_rows
     # The boundaries really landed in the durable checkpoint dir.
     found = [

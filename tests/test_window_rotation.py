@@ -11,7 +11,8 @@ CORRECTNESS records:
 3. a rows-only ``no_oracle`` row is terminal (the driver can never score
    it better);
 4. a rows-only row with an EXPLICIT False verdict keeps its slot;
-5. pending rows-only specs sort behind every pending oracle-gated spec.
+5. pending specs come first in registration order, then terminal specs
+   by (evidence round, registration order).
 """
 
 from __future__ import annotations
@@ -51,14 +52,14 @@ def test_failed_oracle_row_keeps_window_slot(tmp_path, monkeypatch):
         {"q1_pricing_summary": GREEN, "q3_shipping_priority": FAILED},
     )
     assert ordered.index("q3_shipping_priority") < ordered.index("q1_pricing_summary")
-    green = cat._driver_green_names()
+    green = cat._driver_evidence()
     assert "q1_pricing_summary" in green
     assert "q3_shipping_priority" not in green
 
 
 def test_no_oracle_row_is_terminal_for_rows_only_spec(tmp_path, monkeypatch):
     _with_records(tmp_path, monkeypatch, {"approx_sketches": NO_ORACLE})
-    assert "approx_sketches" in cat._driver_green_names()
+    assert "approx_sketches" in cat._driver_evidence()
 
 
 def test_explicit_false_keeps_rows_only_spec_pending(tmp_path, monkeypatch):
@@ -66,53 +67,18 @@ def test_explicit_false_keeps_rows_only_spec_pending(tmp_path, monkeypatch):
     # of this test (sim_knn_pq, then sim_knn_ivfpq) graduated to
     # oracle-gated in round 9.
     _with_records(tmp_path, monkeypatch, {"mm_byte_histogram": ROWS_ONLY_FAIL})
-    assert "mm_byte_histogram" not in cat._driver_green_names()
-
-
-def test_pending_rows_only_sorts_behind_pending_oracle_gated(tmp_path, monkeypatch):
-    ordered = _with_records(tmp_path, monkeypatch, {})
-    # With no evidence at all, every spec is pending. Ordering contract:
-    # non-deferred oracle-gated, then rows-only, then window-deferred —
-    # rows-only specs trail every scoreable non-deferred spec and sit in
-    # one contiguous block.
-    # Deferred rows-only specs belong to the DEFERRED block, not the
-    # rows-only retirement batch (catalog.all_specs ordering contract) —
-    # exclude them here (first such specs: round-10's
-    # text_bpe_train_batched / qc_table_profile_approx_xx).
-    rows_only = [
-        i
-        for i, n in enumerate(ordered)
-        if cat._REGISTRY[n].oracle is None and not cat._REGISTRY[n].window_defer
-    ]
-    normal_oracle = [
-        i
-        for i, n in enumerate(ordered)
-        if cat._REGISTRY[n].oracle is not None and not cat._REGISTRY[n].window_defer
-    ]
-    deferred = [i for i, n in enumerate(ordered) if cat._REGISTRY[n].window_defer]
-    assert min(rows_only) > max(normal_oracle), (
-        "rows-only specs must trail every non-deferred oracle-gated spec"
-    )
-    assert rows_only == list(range(min(rows_only), min(rows_only) + len(rows_only)))
-    if deferred:
-        assert min(deferred) > max(rows_only), (
-            "deferred specs must trail the rows-only retirement batch"
-        )
+    assert "mm_byte_histogram" not in cat._driver_evidence()
 
 
 def _with_rounds(tmp_path, monkeypatch, per_round: dict) -> list[str]:
     """per_round: {round_number: {name: record}} written as separate
-    CORRECTNESS_r{N}.json files, processed in round order. The
-    kernel-change void map (_EVIDENCE_VOID_BEFORE) is neutralized: it
-    names REAL rounds where a query's kernel changed, which has no
-    meaning inside a synthetic round history."""
+    CORRECTNESS_r{N}.json files, processed in round order."""
     paths = []
     for rnd, records in sorted(per_round.items()):
         p = tmp_path / f"CORRECTNESS_r{rnd:02d}.json"
         p.write_text(json.dumps(records))
         paths.append(str(p))
     monkeypatch.setattr(glob_mod, "glob", lambda pattern: paths)
-    monkeypatch.setattr(cat, "_EVIDENCE_VOID_BEFORE", {})
     return list(cat.all_specs())
 
 
@@ -133,96 +99,26 @@ def test_later_red_overrides_earlier_green(tmp_path, monkeypatch):
     # Green in r1 but red in r3: the query must regain a window slot.
     ordered = _with_rounds(
         tmp_path, monkeypatch,
-        {1: {"q1_pricing_summary": GREEN}, 3: {"q1_pricing_summary": FAILED}},
+        {1: {"q1_pricing_summary": GREEN, "q3_shipping_priority": GREEN},
+         3: {"q1_pricing_summary": FAILED}},
     )
-    assert "q1_pricing_summary" not in cat._driver_green_names()
-    # Pending again => sorts with the pending oracle-gated group, i.e.
-    # ahead of every rows-only spec.
-    first_rows_only = min(
-        i for i, n in enumerate(ordered) if cat._REGISTRY[n].oracle is None
-    )
-    assert ordered.index("q1_pricing_summary") < first_rows_only
-
-
-def test_window_defer_sorts_behind_retirement_batch(tmp_path, monkeypatch):
-    """A window_defer spec lacking evidence must sort behind EVERY other
-    evidence-lacking spec — including rows-only retirements — so a late
-    registration can never displace a round's planned window. Once it
-    has green evidence it rejoins the normal re-check rotation."""
-    cat._load()
-    deferred = [n for n, s in cat._REGISTRY.items() if s.window_defer]
-    if not deferred:
-        import pytest
-
-        pytest.skip("no deferred specs registered this round")
-    ordered = _with_rounds(tmp_path, monkeypatch, {})
     ev = cat._driver_evidence()
-    lacking = [n for n in ordered if n not in ev]
-    last_normal = max(
-        i for i, n in enumerate(lacking) if not cat._REGISTRY[n].window_defer
-    )
-    for n in deferred:
-        assert lacking.index(n) > last_normal, (
-            f"deferred spec {n} displaced a planned window slot"
-        )
+    assert "q1_pricing_summary" not in ev
+    # Pending again => sorts with the pending block, i.e. ahead of every
+    # terminal spec.
+    first_terminal = min(i for i, n in enumerate(ordered) if n in ev)
+    assert ordered.index("q1_pricing_summary") < first_terminal
 
 
-def test_deferred_rows_only_spec_lands_in_deferred_block(tmp_path, monkeypatch):
-    """A spec that is BOTH rows-only and window-deferred must land in the
-    deferred block (behind the rows-only retirement batch), not inside
-    it — the review found the original ordering inserted it with the
-    rows-only group, displacing planned retirement slots."""
+def test_pending_then_terminal_in_registration_order(tmp_path, monkeypatch):
+    # Pending specs keep registration order; terminal specs with equal
+    # evidence rounds tie-break on registration order too.
     cat._load()
-    name = "zz_test_deferred_rows_only"
-    assert name not in cat._REGISTRY
-    cat._REGISTRY[name] = cat.QuerySpec(
-        name=name, builder=lambda spark, sf: None, oracle=None, window_defer=True
-    )
-    try:
-        ordered = _with_rounds(tmp_path, monkeypatch, {})
-        ev = cat._driver_evidence()
-        lacking = [n for n in ordered if n not in ev]
-        last_plain_rows_only = max(
-            i
-            for i, n in enumerate(lacking)
-            if cat._REGISTRY[n].oracle is None and not cat._REGISTRY[n].window_defer
-        )
-        assert lacking.index(name) > last_plain_rows_only, (
-            "deferred rows-only spec must trail the retirement batch"
-        )
-    finally:
-        del cat._REGISTRY[name]
-
-
-def test_simulated_round5_window_composition(tmp_path, monkeypatch):
-    """Dry-run the NEXT round: if round 4's driver run greens its whole
-    window (oracle rows green, rows-only rows no_oracle), round 5's
-    first 50 slots must be exactly the deferred batch followed by the
-    oldest-evidence greens — no deferred spec stranded, no slot wasted
-    on an already-terminal spec."""
-    cat._load()
-    ordered_now = list(cat.all_specs())
-    window = ordered_now[:50]
-    records = {}
-    for n in window:
-        records[n] = NO_ORACLE if cat._REGISTRY[n].oracle is None else GREEN
-    # Prior rounds' evidence must persist too: replay it as round 3.
-    prior = {n: GREEN for n in cat._driver_evidence() if n not in records}
-    ordered = _with_rounds(tmp_path, monkeypatch, {3: prior, 4: records})
-    ev = cat._driver_evidence()
-    deferred_pending = [
-        n for n in ordered if cat._REGISTRY[n].window_defer and n not in ev
-    ]
-    next_window = ordered[:50]
-    # Every still-pending deferred spec leads the round-5 window...
-    for n in deferred_pending:
-        assert n in next_window, f"deferred spec {n} missed the round-5 window"
-    assert next_window[: len(deferred_pending)] == deferred_pending
-    # ...and the remaining slots re-check greens, oldest evidence first.
-    tail = next_window[len(deferred_pending):]
-    assert all(n in ev for n in tail)
-    ages = [ev[n] for n in tail]
-    assert ages == sorted(ages), "re-check tail must be oldest-first"
+    names = list(cat._REGISTRY)
+    greens = names[::3]
+    ordered = _with_rounds(tmp_path, monkeypatch, {7: {n: GREEN for n in greens}})
+    pending = [n for n in names if n not in greens]
+    assert ordered == pending + greens
 
 
 def test_simulated_round6_window_is_pure_recheck(tmp_path, monkeypatch):
@@ -255,31 +151,3 @@ def test_simulated_round6_window_is_pure_recheck(tmp_path, monkeypatch):
     assert all(ev[n] <= min(
         ev[m] for m in ordered[50:]
     ) for n in window), "no staler spec left outside the window"
-
-
-def test_kernel_change_voids_older_evidence(tmp_path, monkeypatch):
-    """_EVIDENCE_VOID_BEFORE (round 14): a green row recorded BEFORE a
-    query's kernel changed no longer certifies the code — the query
-    must re-enter the pending block; a green row AT or AFTER the named
-    round heals it back to terminal."""
-    paths = []
-    for rnd, records in sorted(
-        {4: {"q1_pricing_summary": GREEN}, 6: {"q1_pricing_summary": GREEN}}.items()
-    ):
-        p = tmp_path / f"CORRECTNESS_r{rnd:02d}.json"
-        p.write_text(json.dumps(records))
-        paths.append(str(p))
-    monkeypatch.setattr(glob_mod, "glob", lambda pattern: paths[:1])
-    monkeypatch.setattr(
-        cat, "_EVIDENCE_VOID_BEFORE", {"q1_pricing_summary": 5}
-    )
-    assert "q1_pricing_summary" not in cat._driver_evidence()  # r4 row void
-    ordered = list(cat.all_specs())
-    # Pending again: sorts with the pending oracle-gated block, ahead of
-    # every rows-only spec (same contract as a red row).
-    first_rows_only = min(
-        i for i, n in enumerate(ordered) if cat._REGISTRY[n].oracle is None
-    )
-    assert ordered.index("q1_pricing_summary") < first_rows_only
-    monkeypatch.setattr(glob_mod, "glob", lambda pattern: paths)
-    assert cat._driver_evidence()["q1_pricing_summary"] == 6  # r6 row heals
