@@ -34,6 +34,48 @@ def spread(df: DataFrame) -> DataFrame:
     return df
 
 
+BOUNDARY_CONF = "spark.nrg.boundaryCheckpoint"
+
+
+def boundary(df: DataFrame, eager: bool = True) -> DataFrame:
+    """THE plan boundary: materialize ``df`` and truncate its logical plan
+    to a LogicalRDD over the materialized rows. Every checkpoint in the
+    package goes through here (pinned by a source-scan test).
+
+    Why a checkpoint and not ``cache()``: ``cache()`` shortens
+    *execution* but never the *logical plan* — every consumer of a cached
+    frame still re-embeds its whole upstream tree, and single-threaded
+    Catalyst analysis walks every copy (the driver cost that dominated the
+    composed corpus chain, the MMR candidate self-join and the unrolled
+    trainers). Iterative loops (PageRank, connected components, BPE) need
+    it too, or each round's plan re-embeds every earlier round.
+
+    Durability, from the one conf ``spark.nrg.boundaryCheckpoint``:
+
+    - ``local`` (default): ``localCheckpoint`` — fast, executor-local
+      blocks that CANNOT be recomputed from lineage, so losing an executor
+      (or a dynamic-allocation decommission) past a boundary aborts the
+      query instead of recovering;
+    - ``reliable``: ``checkpoint()`` into the session checkpoint dir,
+      recomputable after executor loss. The caller must
+      ``setCheckpointDir`` to durable storage first.
+
+    Any other value raises: a typo must not silently drop durability.
+
+    ``eager=False`` is not free: under AQE, building the boundary runs
+    the upstream plan's shuffle stages before this returns. A lazy
+    boundary saves only the final materialization job, whose work then
+    happens inside the first action on the result."""
+    mode = df.sparkSession.conf.get(BOUNDARY_CONF, "local")
+    if mode == "local":
+        return df.localCheckpoint(eager)
+    if mode == "reliable":
+        return df.checkpoint(eager)
+    raise ValueError(
+        f"{BOUNDARY_CONF} must be 'local' or 'reliable', got {mode!r}"
+    )
+
+
 def explode_unpushed(df: DataFrame, arr: Column, alias: str, *keep: str) -> DataFrame:
     """``explode`` that defeats InferFiltersFromGenerate pushdown.
 

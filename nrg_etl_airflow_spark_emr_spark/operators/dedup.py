@@ -32,7 +32,7 @@ from ..functions.hashing import (
     sql_word_shingles,
 )
 from ..plans.catalog import register
-from ._util import explode_unpushed, spread, t
+from ._util import boundary, explode_unpushed, spread, t
 
 # MinHash configuration: 16 hashes in 4 bands of 4.
 MINHASH_K = 16
@@ -592,21 +592,16 @@ def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     (corpus_pipeline_e2e). Identical shingle → signature → band-key →
     agreement-score arithmetic.
 
-    The signature frame is materialized with an EAGER localCheckpoint
-    rather than cache(): it feeds three plan copies downstream (band
-    self-join a/b + score join s1/s2), and cache() shortcuts execution
-    but never the LOGICAL plan, so inside composed pipelines every copy
-    re-embedded the whole upstream chain (clean stage, line dedup, the
-    16 minhash HOF columns) and single-threaded Catalyst work — plan
-    clone + analysis + AQE re-planning, observed via driver jstack —
-    dominated wall time over the actual 32-core execution (guide §3.3:
-    materialising an intermediate truncates the plan; §7.3 planning
-    signature). The checkpoint truncates the lineage to a LogicalRDD of
-    (doc_id, 16 longs) — corpus-bounded state, same footprint class as
-    the cache it replaces."""
-    sig = _signatures_from(
-        _doc_shingles_from(docs, require_shingles=True)
-    ).localCheckpoint()
+    The signature frame sits behind an eager ``boundary()``: it feeds
+    three plan copies downstream (band self-join a/b + score join
+    s1/s2), and inside composed pipelines every copy re-embedded the
+    whole upstream chain (clean stage, line dedup, the 16 minhash HOF
+    columns) — Catalyst work that dominated wall time over execution.
+    The boundary truncates the lineage to a LogicalRDD of (doc_id, 16
+    longs), corpus-bounded state."""
+    sig = boundary(
+        _signatures_from(_doc_shingles_from(docs, require_shingles=True))
+    )
     return _lsh_scored(sig, _lsh_candidates_from(sig))
 
 

@@ -10,8 +10,9 @@ DataFrame API (small-star style). Each round joins labels to the edge
 list and takes the min over self + neighbors; converges in O(component
 diameter) rounds. The edge list after LSH candidate pruning is tiny
 relative to the corpus (that's the point of LSH), so at 100 TB the loop
-shuffles only near-dup docs, never the corpus. localCheckpoint() per
-round truncates the lineage so plans don't grow with iterations.
+shuffles only near-dup docs, never the corpus. A lazy plan boundary
+(_util.boundary) per round truncates the lineage so plans don't grow
+with iterations.
 
 Oracle: DuckDB recursive CTE computing min reachable id — genuinely
 iterative SQL, proving the Spark loop equals the fixpoint semantics.
@@ -24,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..plans.catalog import register
 from .dedup import JACCARD_THRESHOLD, _SQL_SHINGLES_CTE, dedup_jaccard_pairs
-from ._util import t
+from ._util import boundary, t
 
 MAX_ITERATIONS = 40  # 2^40 diameter headroom — pointer jumping is O(log d)
 
@@ -63,10 +64,10 @@ def connected_components(
     ).unionAll(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
     if not edges_canonical:
         both = both.distinct()
-    # Lazy checkpoints throughout (see graph_pagerank): lineage still
-    # truncates, but blocks materialize inside the round's convergence
-    # count instead of one standalone eager job per round.
-    both = both.localCheckpoint(eager=False)
+    # Lazy boundaries throughout: each one's final materialization job
+    # folds into the round's convergence count. Building one still runs
+    # its upstream shuffle stages (see _util.boundary).
+    both = boundary(both, eager=False)
 
     # Only edge ENDPOINTS can ever change label: an isolated node's
     # label is itself in every round, so looping over the full node set
@@ -99,14 +100,13 @@ def connected_components(
         tgt = stepped.select(
             F.col("node").alias("tnode"), F.col("slbl").alias("tlbl")
         )
-        new_labels = (
-            stepped.join(tgt, stepped["slbl"] == tgt["tnode"])
-            .select(
+        new_labels = boundary(
+            stepped.join(tgt, stepped["slbl"] == tgt["tnode"]).select(
                 "node",
                 F.least(F.col("slbl"), F.col("tlbl")).alias("new_lbl"),
                 "old_lbl",
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
         # The convergence count doubles as the checkpoint materialization.
         changed = new_labels.filter(F.col("new_lbl") != F.col("old_lbl")).count()
@@ -297,12 +297,13 @@ def _pagerank_oracle() -> str:
     "the in-memory scan with no per-round exchange or sort (the round-"
     "11 sf10 spill fix; plan-pinned). Each round is one join + one "
     "groupBy-sum keyed on the destination, and an every-2nd-round lazy "
-    "localCheckpoint(eager=False) truncates the RANK frame's growing "
-    "lineage so no plan ever embeds more than 2 iterations, with all "
-    "checkpoint blocks materializing inside the final action instead "
-    "of standalone driver jobs. At 100 TB the graph frame would be "
-    "bucketed by src so every round's join is co-located; rank state is "
-    "2 longs/node.",
+    "plan boundary truncates the RANK frame's growing lineage so no "
+    "plan ever embeds more than 2 iterations. Lazy is not job-free: "
+    "under AQE building each boundary runs its upstream shuffle stages "
+    "(the builder runs 19 jobs at sf0.01), and laziness saves only the "
+    "boundary's final materialization job. At 100 TB the graph frame "
+    "would be bucketed by src so every round's join is co-located; rank "
+    "state is 2 longs/node.",
 )
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -361,13 +362,13 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         # Truncate lineage every 2nd round: plan depth stays bounded (≤2
-        # iterations) while halving the checkpoint count — at fixture
+        # iterations) while halving the boundary count — at fixture
         # scale per-job overhead was ~20% of the whole bench when every
-        # round checkpointed eagerly; every-other-round + lazy keeps the
-        # unbounded-plan-growth protection that matters at 100 TB with
-        # zero standalone materialization jobs.
+        # round checkpointed eagerly. Lazy still runs the round's
+        # shuffle stages when the boundary is built; it saves only the
+        # final materialization job.
         if i % 2 == 1:
-            ranks = ranks.localCheckpoint(eager=False)
+            ranks = boundary(ranks, eager=False)
     return ranks.select("node", F.col("r").alias("pagerank")).orderBy(
         F.col("pagerank").desc(), "node"
     )

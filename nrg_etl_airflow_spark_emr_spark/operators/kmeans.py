@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators._util import spread, t
+from ..operators._util import boundary, spread, t
 from ..operators.similarity import (
     FP_SCALE,
     N_QUERIES,
@@ -46,25 +46,6 @@ from ..plans.catalog import register
 K_DEFAULT = 5
 ITERS_DEFAULT = 5
 IVF_TRAIN_ITERS = 2  # unrolled quantized-Lloyd rounds in sim_knn_ivf_trained
-
-
-def _trainer_boundary(cent: DataFrame) -> DataFrame:
-    """Materialize a trained centroid/codebook frame and TRUNCATE its
-    plan (eager ``localCheckpoint``) — the r15 corpus/MMR mechanism
-    applied to the fixed-iteration trainers (guide §3.3: materialise an
-    intermediate to truncate a huge plan).
-
-    ``cache()`` shortcuts *execution* but never the *logical plan*:
-    every consumer of the cached centroids (final assignment, probe
-    routing, ADC lookup tables) re-embeds the entire unrolled Lloyd
-    tree, and single-threaded Catalyst analysis walks every copy — the
-    driver-side cost that dominated these rows at fixture scale. The
-    checkpoint replaces all copies with a LogicalRDD over k (or k*M)
-    centroid rows — bounded state at any corpus scale, so the
-    fault-tolerance trade (checkpointed blocks cannot be recomputed
-    from lineage on executor loss) is k rows, not O(corpus)."""
-    return cent.localCheckpoint()
-
 
 
 def _long_d2_guard(vectors: DataFrame, col: str = "q") -> DataFrame:
@@ -209,9 +190,9 @@ def lloyd_fit_grouped_quantized(
 
     Unlike lloyd_fit_grouped there is NO driver loop state: the trainer
     is one declarative plan (iters is small and fixed), materialized at
-    the trainer boundary (_trainer_boundary: eager localCheckpoint of
-    the k*M centroid rows) so downstream search plans start from a
-    LogicalRDD instead of re-embedding the unroll per consumer.
+    an eager plan boundary (_util.boundary over the k*M centroid rows)
+    so downstream search plans start from a LogicalRDD instead of
+    re-embedding the unroll per consumer.
     Returns (codes: gid/vec_id/cid/d2 under the FINAL centroids — d2 is
     the exact integer distance to the winning centroid,
     cent: gid/cid/c_q — checkpointed, k*M rows)."""
@@ -263,7 +244,7 @@ def lloyd_fit_grouped_quantized(
             )
             .select("gid", F.col("cell").alias("cid"), "c_q")
         )
-    cent = _trainer_boundary(cent)
+    cent = boundary(cent)
     codes = assign(cent).select("gid", "vec_id", "cid", "d2")
     return codes, cent
 
@@ -630,14 +611,9 @@ def ivf_train(v: DataFrame) -> tuple[DataFrame, DataFrame]:
             .select(F.col("cell").alias("cid"), "c_q")
         )
     # The trained centroid frame (k rows) feeds BOTH the final assignment
-    # and the probe routing. r15 cached it so the two consumers share one
-    # materialization; r16 upgrades the boundary to an eager
-    # localCheckpoint (_trainer_boundary) because cache() never truncates
-    # the LOGICAL plan — each consumer still re-embedded both unrolled
-    # Lloyd rounds and Catalyst re-analyzed every copy (the corpus-chain
-    # finding). Post-checkpoint, every search plan starts the trainer at
-    # a k-row LogicalRDD.
-    cent = _trainer_boundary(cent)
+    # and the probe routing; the eager boundary hands each of them a k-row
+    # LogicalRDD instead of both unrolled Lloyd rounds.
+    cent = boundary(cent)
     return cent, assign(cent)
 
 

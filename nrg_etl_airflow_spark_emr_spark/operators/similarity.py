@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..plans.catalog import register
-from ._util import spread, t
+from ._util import boundary, spread, t
 
 FP_SCALE = 10_000_000  # 1e-7 resolution; exact for unit-norm float32 vectors
 N_QUERIES = 5          # fixture queries: vec_id < 5
@@ -1677,14 +1677,11 @@ def mmr_rerank(cand: DataFrame) -> DataFrame:
     candidate-set pairwise cosines relationally, then runs the K greedy
     rounds as ONE grouped-map kernel per query (the formulation the
     round-8 A/B kept: 5.4x over the plan-unrolled variant)."""
-    # Eager localCheckpoint, not cache() (r15): cand feeds BOTH sides of
-    # the pairwise-sim self-join plus the feats projection — three plan
-    # copies — and for sim_knn_ivf_mmr each copy re-embedded the entire
-    # unrolled IVF trainer tree (cache shortcuts execution, never the
-    # logical plan; the corpus-chain finding). The checkpoint truncates
-    # all three to a q*C-row LogicalRDD; candidate state is
-    # O(queries * C) at any corpus scale.
-    cand = cand.localCheckpoint()
+    # Eager boundary (r15): cand feeds BOTH sides of the pairwise-sim
+    # self-join plus the feats projection — three plan copies, each of
+    # which re-embedded the unrolled IVF trainer for sim_knn_ivf_mmr.
+    # The boundary truncates all three to a q*C-row LogicalRDD.
+    cand = boundary(cand)
     a = cand.select(
         "query_id",
         F.col("vec_id").alias("vid_a"),

@@ -12,12 +12,14 @@ association order in both expressions.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash60, sql_hash60
 from ..plans.catalog import register
-from ._util import explode_unpushed, spread, t
+from ._util import boundary, explode_unpushed, spread, t
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
 
@@ -1803,7 +1805,7 @@ def chunk_for_rag(docs: DataFrame) -> DataFrame:
 # --- BPE merge training ------------------------------------------------------
 
 BPE_MERGES = 8  # unrolled training rounds (one merge learned per round)
-# Lazy-localCheckpoint interval. 4, not 8: interval 8 was measured
+# Lazy plan-boundary interval (in rounds). 4, not 8: interval 8 was measured
 # (48 merges, same protocol) at 37.2s vs interval 4's 24.8s — the
 # analysis cost is super-linear WITHIN a segment well before the
 # catastrophic ~depth-10 knee, so short segments win even though they
@@ -2012,7 +2014,7 @@ def _bpe_encode_unseen_oracle(k: int) -> str:
     "token sequence from the vocabulary cache by JOIN; ONLY the unseen "
     "words (left_anti against the cache) replay the learned merges in "
     "rank order (bpe_apply_merges — one window pass per merge over the "
-    "UNSEEN vocabulary frame, never the corpus, sharing _apply_pair "
+    "UNSEEN vocabulary frame, never the corpus, sharing _apply_pairs "
     "with the trainer). Replaying unseen-only then unioning the cache "
     "is value-identical to replaying the whole union vocabulary because "
     "per-word application is word-local and the trainer's own final "
@@ -2167,13 +2169,29 @@ def _bpe_train(
     sf_dir: str,
     n_merges: int = BPE_MERGES,
     doc_where=None,
+    batch: int = 1,
 ):
     """Run the trainer; returns (learned merges as plain rows, the final
     merged vocabulary frame seqs(word, n, toks) — cached). Shared by the
-    trainer query and text_bpe_encode. ``n_merges`` parameterizes the
+    trainer queries and the encoders. ``n_merges`` parameterizes the
     merge count (SCALE.md records the merges-vs-wall regime curve);
     ``doc_where`` optionally restricts the TRAINING corpus (the
-    encode-unseen split trains on half the documents)."""
+    encode-unseen split trains on half the documents).
+
+    Each round selects the top-``batch`` SYMBOL-DISJOINT pairs (greedy
+    by (count desc, a, b) over a bounded 4*batch candidate collect) and
+    applies them all in ONE vocabulary pass (_apply_pairs). batch=1 is
+    classic greedy BPE — one merge per round, the argmax pair. At
+    batch > 1 the ONE deviation from strict greedy BPE is that pairs
+    2..B of a round are chosen by PRE-round counts (stale by the round's
+    earlier merges) and their recorded pair_count is that stale count;
+    the measured merge-set deviation is recorded in SCALE.md.
+
+    Why batches exist: greedy BPE is one driver round-trip + one
+    vocabulary pass PER MERGE — fine at 8, fatal at a production 30k
+    (SCALE.md's regime bound). Batch-B cuts the sequential-round count
+    B-fold: 30k merges at batch 256 is ~120 rounds, back inside the
+    driver-loop regime the k-means trainer already owns."""
     base = t(spark, sf_dir, "documents")
     if doc_where is not None:
         base = base.filter(doc_where)
@@ -2194,23 +2212,23 @@ def _bpe_train(
 
     rows: list[tuple[int, str, str, int]] = []
     generations = [seqs]  # cached frames; all but the last two unpersist
-    for r in range(1, n_merges + 1):
-        # Lineage truncation every BPE_CKPT_EVERY rounds: cache()
-        # shortcuts EXECUTION but never the LOGICAL plan, and the
-        # round-10 merges-vs-wall measurement (SCALE.md) showed
-        # per-round wall DOUBLING from ~round 10 (1.4s -> 182s by round
-        # 17) as Catalyst re-analyzes the deepening lineage. A lazy
-        # localCheckpoint resets the plan to the materialized rows (the
-        # graph_pagerank discipline), holding per-round cost flat at any
-        # merge count. (Skipped on the final round: truncation only pays
-        # off for rounds that FOLLOW it, so the registered 8-merge query
-        # pays exactly one checkpoint.)
-        if r % BPE_CKPT_EVERY == 0 and r < n_merges:
-            seqs = seqs.localCheckpoint(eager=False)
-        top = (
+    rounds = 0
+    while len(rows) < n_merges:
+        rounds += 1
+        # Lineage truncation every BPE_CKPT_EVERY rounds: the round-10
+        # merges-vs-wall measurement (SCALE.md) showed per-round wall
+        # DOUBLING from ~round 10 (1.4s -> 182s by round 17) as Catalyst
+        # re-analyzes the deepening lineage; a lazy boundary holds
+        # per-round cost flat at any merge count. Skipped on the final
+        # round (the one that can learn every remaining merge):
+        # truncation only pays off for rounds that FOLLOW it, so the
+        # registered 8-merge query pays exactly one boundary.
+        if rounds % BPE_CKPT_EVERY == 0 and n_merges - len(rows) > batch:
+            seqs = boundary(seqs, eager=False)
+        cands = (
             _bpe_pair_counts(seqs)
             .orderBy(F.col("cnt").desc(), "a", "b")
-            .limit(1)
+            .limit(4 * batch)
             .collect()
         )
         # This round's collect materialized the newest cached frame, so
@@ -2218,11 +2236,32 @@ def _bpe_train(
         # newest frame stays lazy and recomputes from its cached parent).
         if len(generations) >= 2:
             generations[-2].unpersist()
-        if not top:
+        if not cands:
             break
-        a, b, cnt = top[0]["a"], top[0]["b"], int(top[0]["cnt"])
-        rows.append((r, a, b, cnt))
-        seqs = _apply_pair(seqs, a, b).cache()
+        want = min(batch, n_merges - len(rows))
+        used: set[str] = set()
+        sel: list[tuple[str, str]] = []
+        for c in cands:
+            if len(sel) >= want:
+                break
+            # Exclusion set covers each selected pair's CONCAT as well
+            # as its symbols: a pair whose symbol equals another
+            # selected pair's output (e.g. (t,h) with (th,e)) would
+            # make simultaneous != sequential. Under the trainer's own
+            # dynamics that state is unreachable — "th" existing as a
+            # token implies (t,h) was merged earlier, which consumed
+            # every (t,h) adjacency, and merges never re-create a
+            # bare-symbol adjacency (both neighbors of a merge are
+            # replaced by the grown token) — but guarding it here makes
+            # the disjointness invariant locally checkable instead of
+            # resting on that global argument.
+            a, b = c["a"], c["b"]
+            if a in used or b in used or (a + b) in used:
+                continue
+            sel.append((a, b))
+            rows.append((len(rows) + 1, a, b, int(c["cnt"])))
+            used.update((a, b, a + b))
+        seqs = _apply_pairs(seqs, sel).cache()
         generations.append(seqs)
 
     return rows, seqs
@@ -2255,42 +2294,47 @@ def _bpe_pair_counts(seqs: DataFrame) -> DataFrame:
     )
 
 
-def _apply_pair(seqs: DataFrame, a: str, b: str) -> DataFrame:
-    """One greedy left-to-right non-overlapping merge pass of pair
-    (a, b) over a vocabulary frame ``seqs(word, n, toks)`` — THE
-    single-pair application law, shared by the trainer rounds and merge
-    REPLAY (bpe_apply_merges). ROW-LOCAL (r15): a left-fold over each
-    token array (F.aggregate) that appends the current token, or — when
-    the accumulator's last token equals ``a``, the current token equals
-    ``b``, and the last token was NOT itself produced by this pass's
-    previous step (the non-overlap rule) — replaces it with the merged
-    token. This is exactly the run-parity law the old window
-    formulation computed (consecutive-match runs, odd ranks taken):
-    within a run of consecutive matches the fold alternates
-    merge/skip from the run's start, i.e. takes the odd-ranked
-    positions. The window version exploded the vocabulary and paid a
-    word-partitioned shuffle + 4 window passes + a collect_list
+def _apply_pairs(seqs: DataFrame, pairs: list[tuple[str, str]]) -> DataFrame:
+    """One greedy left-to-right non-overlapping merge pass of the
+    SYMBOL-DISJOINT ``pairs`` over a vocabulary frame ``seqs(word, n,
+    toks)`` — THE application law, shared by the trainer rounds and
+    merge REPLAY (bpe_apply_merges). ROW-LOCAL (r15): a left-fold over
+    each token array (F.aggregate) that appends the current token, or —
+    when (last token, current token) is one of ``pairs`` and the last
+    token was NOT itself produced by this pass's previous step (the
+    non-overlap rule) — replaces it with the merged token
+    concat(last, current). For one pair this is exactly the run-parity
+    law the old window formulation computed (consecutive-match runs,
+    odd ranks taken): within a run of consecutive matches the fold
+    alternates merge/skip from the run's start. The window version paid
+    a word-partitioned shuffle + 4 window passes + a collect_list
     regroup PER MERGE; the fold touches nothing but the row (guide
-    §2.4: remove shuffles outright). Value identity pinned by the
-    unchanged unrolled-SQL oracles and batch=1 equivalence tests."""
-    merged = a + b
+    §2.4: remove shuffles outright).
+
+    Several pairs apply simultaneously because they share no symbols:
+    a position can match at most one pair, and ADJACENT positions can
+    never match different pairs (position i matching (a, b) forces
+    tok[i+1] = b, which no other pair may contain) — every run of
+    consecutive matches is single-pair, so the single-pair law applies
+    verbatim, and one pass equals applying the pairs sequentially in
+    any order. Value identity pinned by the unrolled-SQL oracles."""
     zero = F.struct(
         F.array().cast("array<string>").alias("arr"),
         F.lit(False).alias("just"),
     )
 
     def step(acc, x):
-        can = (
-            (F.try_element_at(acc["arr"], F.lit(-1)) == F.lit(a))
-            & (x == F.lit(b))
-            & (~acc["just"])
+        last = F.try_element_at(acc["arr"], F.lit(-1))
+        match = reduce(
+            lambda m, p: m | p,
+            [(last == F.lit(a)) & (x == F.lit(b)) for a, b in pairs],
         )
         return F.when(
-            can,
+            match & (~acc["just"]),
             F.struct(
                 F.concat(
                     F.slice(acc["arr"], 1, F.size(acc["arr"]) - 1),
-                    F.array(F.lit(merged)),
+                    F.array(F.concat(last, x)),
                 ).alias("arr"),
                 F.lit(True).alias("just"),
             ),
@@ -2310,12 +2354,12 @@ def bpe_apply_merges(seqs: DataFrame, merges: list[tuple[str, str]]) -> DataFram
     order, over a vocabulary frame ``seqs(word, n, toks)`` — what
     encoding a NEW corpus with a trained tokenizer does. One row-local
     fold per merge over the vocabulary (never the corpus — and since
-    r15 never a shuffle either, see _apply_pair), with the same lazy-
-    localCheckpoint lineage cadence as the trainer."""
+    r15 never a shuffle either, see _apply_pairs), with the same lazy
+    plan-boundary cadence as the trainer."""
     for i, (a, b) in enumerate(merges, start=1):
         if i % BPE_CKPT_EVERY == 0 and i < len(merges):
-            seqs = seqs.localCheckpoint(eager=False)
-        seqs = _apply_pair(seqs, a, b)
+            seqs = boundary(seqs, eager=False)
+        seqs = _apply_pairs(seqs, [(a, b)])
     return seqs
 
 
@@ -2394,129 +2438,6 @@ def write_bpe_artifacts(spark: SparkSession, sf_dir: str, path: str) -> None:
     )
 
 
-def _bpe_train_batched(
-    spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES, batch: int = 8
-):
-    """Batched BPE merge learning: per round, select the top-``batch``
-    SYMBOL-DISJOINT pairs (greedy by (count desc, a, b) over a bounded
-    4*batch candidate collect) and apply them all in ONE vocabulary
-    pass. Returns (rows, seqs) like _bpe_train.
-
-    Correctness of simultaneous application: selected pairs share no
-    symbols, so a position can match at most one pair, and ADJACENT
-    positions can never match different pairs (position i matching
-    (a, b) forces tok[i+1] = b, which no other selected pair may
-    contain) — every run of consecutive matches is single-pair, so the
-    single-pair run-parity greedy law applies verbatim, and applying
-    the batch simultaneously equals applying its pairs sequentially in
-    any order. The ONE deviation from strict greedy BPE: pairs 2..B of
-    a round are chosen by PRE-round counts (stale by the round's
-    earlier merges) and their recorded pair_count is that stale count.
-    batch=1 is bit-identical to _bpe_train (pinned in
-    tests/test_properties.py); the measured merge-set deviation at
-    real batch sizes is recorded in SCALE.md.
-
-    Why this exists: the greedy trainer is one driver round-trip + one
-    vocabulary pass PER MERGE — fine at 8, fatal at a production 30k
-    (SCALE.md's regime bound). Batch-B cuts the sequential-round count
-    B-fold: 30k merges at batch 256 is ~120 rounds, back inside the
-    driver-loop regime the k-means trainer already owns."""
-    docs = spread(t(spark, sf_dir, "documents").select("text"))
-    wf = (
-        docs.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    seqs = wf.select(
-        "word",
-        "n",
-        F.expr(
-            "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
-        ).alias("toks"),
-    ).cache()
-
-    rows: list[tuple[int, str, str, int]] = []
-    generations = [seqs]
-    rounds = 0
-    while len(rows) < n_merges:
-        # Same lineage truncation as _bpe_train (see the note there).
-        rounds += 1
-        if rounds % BPE_CKPT_EVERY == 0:
-            seqs = seqs.localCheckpoint(eager=False)
-        cands = (
-            _bpe_pair_counts(seqs)
-            .orderBy(F.col("cnt").desc(), "a", "b")
-            .limit(4 * batch)
-            .collect()
-        )
-        if len(generations) >= 2:
-            generations[-2].unpersist()
-        if not cands:
-            break
-        want = min(batch, n_merges - len(rows))
-        used: set[str] = set()
-        sel: list[tuple[str, str, int]] = []
-        for c in cands:
-            if len(sel) >= want:
-                break
-            # Exclusion set covers each selected pair's CONCAT as well
-            # as its symbols: a pair whose symbol equals another
-            # selected pair's output (e.g. (t,h) with (th,e)) would
-            # make simultaneous != sequential. Under the trainer's own
-            # dynamics that state is unreachable — "th" existing as a
-            # token implies (t,h) was merged earlier, which consumed
-            # every (t,h) adjacency, and merges never re-create a
-            # bare-symbol adjacency (both neighbors of a merge are
-            # replaced by the grown token) — but guarding it here makes
-            # the disjointness invariant locally checkable instead of
-            # resting on that global argument.
-            if c["a"] in used or c["b"] in used or (c["a"] + c["b"]) in used:
-                continue
-            sel.append((c["a"], c["b"], int(c["cnt"])))
-            used.update((c["a"], c["b"], c["a"] + c["b"]))
-        for a, b, cnt in sel:
-            rows.append((len(rows) + 1, a, b, cnt))
-        # Row-local simultaneous application (r15, see _apply_pair):
-        # selected pairs are symbol-disjoint, so a fold position can
-        # match at most one pair and the single-pair run-parity law
-        # applies verbatim; the merged token is position-local
-        # concat(last, current) — no per-pair literal needed.
-        zero = F.struct(
-            F.array().cast("array<string>").alias("arr"),
-            F.lit(False).alias("just"),
-        )
-        pair_lits = [(F.lit(a), F.lit(b)) for a, b, _ in sel]
-
-        def step(acc, x):
-            last = F.try_element_at(acc["arr"], F.lit(-1))
-            match = F.lit(False)
-            for la, lb in pair_lits:
-                match = match | ((last == la) & (x == lb))
-            can = match & (~acc["just"])
-            return F.when(
-                can,
-                F.struct(
-                    F.concat(
-                        F.slice(acc["arr"], 1, F.size(acc["arr"]) - 1),
-                        F.array(F.concat(last, x)),
-                    ).alias("arr"),
-                    F.lit(True).alias("just"),
-                ),
-            ).otherwise(
-                F.struct(
-                    F.concat(acc["arr"], F.array(x)).alias("arr"),
-                    F.lit(False).alias("just"),
-                )
-            )
-
-        out = F.aggregate("toks", zero, step, lambda acc: acc["arr"])
-        seqs = seqs.select("word", "n", out.alias("toks")).cache()
-        generations.append(seqs)
-
-    return rows, seqs
-
-
 def _bpe_batched_oracle(n_merges: int, batch: int) -> str:
     """ANSI replay of the BATCHED trainer — graduates it from rows-only
     to hash-gated (round-11 brief): the driver-side greedy disjoint
@@ -2525,11 +2446,11 @@ def _bpe_batched_oracle(n_merges: int, batch: int) -> str:
     selection unrolls as one CTE pair per pick (sel = the lowest-rank
     candidate whose a, b, and concat avoid every symbol selected so
     far; used = the accumulated symbol set), exactly the loop
-    _bpe_train_batched runs over its collect. The batch application
+    _bpe_train runs over its collect. The batch application
     reuses the single-pair run-parity law verbatim with the match set
     joined against the round's selected pairs (runs of consecutive
     matches are single-pair under symbol-disjointness — see
-    _bpe_train_batched), and the merged token is position-local
+    _apply_pairs), and the merged token is position-local
     (p.a || p.b). One spare round is unrolled beyond ceil(n/batch) and
     the output LIMITed to n_merges, so a round that under-fills (fewer
     than ``batch`` disjoint pairs in its pool — unseen on real text)
@@ -2649,10 +2570,10 @@ def _bpe_batched_oracle(n_merges: int, batch: int) -> str:
     f"surface as text_bpe_train_merges for {BPE_MERGES * 2} merges "
     "(two rounds at batch=8). Simultaneous application is exact "
     "because selected pairs share no symbols (adjacent positions can "
-    "never match different pairs — see _bpe_train_batched); the only "
+    "never match different pairs — see _apply_pairs); the only "
     "greedy deviation is stale counts for pairs 2..B of a round, "
-    "measured and recorded in SCALE.md. batch=1 is pinned bit-equal "
-    "to the oracle-gated greedy trainer, and since round 11 the "
+    "measured and recorded in SCALE.md. The same loop at batch=1 IS "
+    "the greedy trainer (_bpe_train), and since round 11 the "
     "batched trainer itself is HASH-GATED end-to-end: the bounded "
     "greedy disjoint selection unrolls to per-pick CTEs and the batch "
     "application replays under the shared run-parity law "
@@ -2660,7 +2581,7 @@ def _bpe_batched_oracle(n_merges: int, batch: int) -> str:
     "SQL-replayable, graduated.",
 )
 def text_bpe_train_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rows, _seqs = _bpe_train_batched(spark, sf_dir, n_merges=BPE_MERGES * 2, batch=8)
+    rows, _seqs = _bpe_train(spark, sf_dir, n_merges=BPE_MERGES * 2, batch=8)
     return spark.createDataFrame(
         rows, "merge_rank int, lhs string, rhs string, pair_count bigint"
     )

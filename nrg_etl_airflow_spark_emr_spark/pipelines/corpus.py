@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..operators.graph import dedup_clusters
 from ..operators.text import text_langid, text_quality_score  # noqa: F401 (survival_stats)
-from ..operators._util import spread, t
+from ..operators._util import boundary, spread, t
 from ..plans.catalog import register
 
 QUALITY_THRESHOLD = 0.55
@@ -215,11 +215,9 @@ def _e2e_oracle(candidates: str = "exact") -> str:
     "accounting rows, sub-3-word docs that cannot shingle (no "
     "signature → auto-keep, both engines), and chunk coordinates over "
     "REWRITTEN text. Plan shape: the two multi-consumer stage "
-    "boundaries (cleaned, lined) are eager localCheckpoints (r15: was "
-    "cache(), which never truncates the LOGICAL plan — every self-join "
-    "copy re-embedded the whole upstream tree and single-threaded "
-    "Catalyst analysis dominated wall time) so no stage re-scans the "
-    "raw corpus and no plan copy re-embeds it; all "
+    "boundaries (cleaned, lined) are eager plan boundaries "
+    "(operators/_util.boundary) so no stage re-scans the raw corpus and "
+    "no self-join plan copy re-embeds it; all "
     "shuffles are keyed (doc_id, line digest, band key, shard id); no "
     "row-UDFs anywhere (repo-wide BatchEvalPython pin). At 100 TB each "
     "boundary becomes a durable parquet hand-off via the SHIPPED runner "
@@ -283,47 +281,21 @@ def _e2e_frame(
     stage kernels are module-level so corpus_pipeline_run drives the
     SAME code over durable parquet boundaries.
 
-    Stage boundaries are EAGER localCheckpoints, not cache(): each
-    boundary frame is consumed by several downstream plan copies (lined
-    feeds the LSH verdict self-join AND the kept anti-join), and cache()
-    leaves the full logical tree in every copy — the r15 driver-side
-    profile (jstack + job timeline) showed the composed chain spending
-    more wall on single-threaded Catalyst plan clone/analysis than on
-    its 32-core execution, with multi-10-second outliers. Truncating the
-    plan at the boundaries (guide §3.3) fixed both the median and the
-    tail; value identity is pinned by the unchanged oracle. This is the
-    in-memory analog of corpus_pipeline_run's durable parquet hand-offs.
-
-    FAULT-TOLERANCE TRADE (VERDICT r15 finding 1): unlike cache(), a
-    localCheckpoint's blocks CANNOT be recomputed from lineage — the
-    boundary frames here are O(corpus) executor-stored state, so losing
-    an executor (or a dynamic-allocation decommission) past a boundary
-    ABORTS the query instead of recovering. That is acceptable on a
-    single-node/local deployment; at 100 TB with executor churn either
-    run the chain through corpus_pipeline_run (durable parquet
-    hand-offs — the stated scale path) or set
-    ``spark.nrg.corpus.boundaryCheckpoint=reliable``, which switches
-    the boundaries to reliable ``checkpoint()`` into the session's
-    checkpoint dir (caller must ``setCheckpointDir`` to durable
-    storage; contract pinned in tests/test_corpus_pipeline.py)."""
-    cleaned = _boundary(
+    Stage boundaries are eager ``boundary()`` calls: each boundary frame
+    is consumed by several downstream plan copies (lined feeds the LSH
+    verdict self-join AND the kept anti-join), and the r15 driver-side
+    profile showed the untruncated chain spending more wall on Catalyst
+    plan clone/analysis than on execution. This is the in-memory analog
+    of corpus_pipeline_run's durable parquet hand-offs. The boundary
+    frames are O(corpus) executor-stored state, so at 100 TB with
+    executor churn either run the chain through corpus_pipeline_run (the
+    stated scale path) or use ``boundary()``'s reliable mode (contract
+    pinned in tests/test_corpus_pipeline.py)."""
+    cleaned = boundary(
         clean_corpus(spark, sf_dir, candidates=candidates).select("doc_id", "text")
     )
-    lined = _boundary(_stage_lined(cleaned))
+    lined = boundary(_stage_lined(cleaned))
     return _stage_manifest(_stage_kept(lined))
-
-
-def _boundary(df: DataFrame) -> DataFrame:
-    """One e2e stage boundary: eager plan-truncating materialization.
-    Default = localCheckpoint (fast, executor-local, NOT recomputable —
-    see _e2e_frame's fault-tolerance note); conf
-    ``spark.nrg.corpus.boundaryCheckpoint=reliable`` = reliable
-    checkpoint() into the session checkpoint dir for deployments where
-    executor loss mid-query is routine."""
-    mode = df.sparkSession.conf.get("spark.nrg.corpus.boundaryCheckpoint", "local")
-    if mode == "reliable":
-        return df.checkpoint()
-    return df.localCheckpoint()
 
 
 def corpus_pipeline_run(

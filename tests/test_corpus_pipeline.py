@@ -8,6 +8,7 @@ dedup, chunk coordinates over rewritten text) and the plan shape."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from nrg_etl_airflow_spark_emr_spark.plans.catalog import all_specs
@@ -158,8 +159,6 @@ def test_durable_runner_resumes_from_last_completed_stage(
     stage again (counted via the clean_corpus wrapper)."""
     import os
 
-    import pytest
-
     from nrg_etl_airflow_spark_emr_spark.pipelines import corpus as cp
 
     mat = str(tmp_path / "mat")
@@ -235,8 +234,6 @@ def test_durable_runner_crash_matrix_every_stage(spark, sf_dir, tmp_path, monkey
     to the in-memory chain."""
     import os
 
-    import pytest
-
     from nrg_etl_airflow_spark_emr_spark.pipelines import corpus as cp
 
     want = sorted(
@@ -299,8 +296,6 @@ def test_durable_runner_control_plane_is_fs_agnostic(
     local-IO calls would have broken on)."""
     import os
 
-    import pytest
-
     from nrg_etl_airflow_spark_emr_spark.pipelines import corpus as cp
 
     mat_local = str(tmp_path / "mat_uri")
@@ -334,37 +329,53 @@ def test_durable_runner_control_plane_is_fs_agnostic(
         cp.corpus_pipeline_run(spark, sf_dir, mat, candidates="lsh")
 
 
-def test_boundary_checkpoint_reliable_mode_contract(spark, sf_dir, tmp_path):
+# One catalog row per boundary site family (operators/_util.boundary).
+_BOUNDARY_SITE_ROWS = (
+    "corpus_pipeline_e2e_lsh",  # corpus stage boundaries + MinHash signatures
+    "sim_knn_ivf_mmr",  # IVF trainer centroids + MMR candidates
+    "sim_knn_pq",  # grouped Lloyd trainer codebooks
+    "dedup_cluster_stats",  # connected components (lazy)
+    "graph_pagerank",  # PageRank ranks (lazy)
+    "text_bpe_encode_unseen",  # BPE train + merge replay (lazy)
+)
+
+
+@pytest.mark.parametrize("name", _BOUNDARY_SITE_ROWS)
+def test_boundary_checkpoint_reliable_mode_contract(spark, sf_dir, tmp_path, name):
     """The documented fault-tolerance switch (VERDICT r15 finding 1):
-    ``spark.nrg.corpus.boundaryCheckpoint=reliable`` routes the e2e
-    stage boundaries through reliable checkpoint() into the session's
-    checkpoint dir — recomputable-on-executor-loss state on durable
-    storage — and the manifest stays value-identical to the default
-    (local, non-recomputable) mode. Guards the conf name and both
-    materialization paths."""
+    ``spark.nrg.boundaryCheckpoint=reliable`` routes every plan boundary
+    through reliable checkpoint() into the session's checkpoint dir —
+    recomputable-on-executor-loss state on durable storage — and the
+    rows stay value-identical to the default (local, non-recomputable)
+    mode. Guards the conf name and both materialization paths at every
+    site family, eager and lazy."""
     import os
 
-    from nrg_etl_airflow_spark_emr_spark.pipelines import corpus as cp
+    from nrg_etl_airflow_spark_emr_spark.operators._util import BOUNDARY_CONF
 
-    default_rows = sorted(
-        map(tuple, cp._e2e_frame(spark, sf_dir).collect())
-    )
+    def rows():
+        return sorted(SPECS[name].builder(spark, sf_dir).collect(), key=repr)
+
+    default_rows = rows()
     ckdir = str(tmp_path / "reliable_ck")
     sc = spark.sparkContext
     ck_before = sc.getCheckpointDir()
+    conf_before = spark.conf.get(BOUNDARY_CONF, None)
     sc.setCheckpointDir(ckdir)
-    spark.conf.set("spark.nrg.corpus.boundaryCheckpoint", "reliable")
+    spark.conf.set(BOUNDARY_CONF, "reliable")
     try:
-        reliable_rows = sorted(
-            map(tuple, cp._e2e_frame(spark, sf_dir).collect())
-        )
+        reliable_rows = rows()
     finally:
-        spark.conf.unset("spark.nrg.corpus.boundaryCheckpoint")
+        if conf_before is None:
+            spark.conf.unset(BOUNDARY_CONF)
+        else:
+            spark.conf.set(BOUNDARY_CONF, conf_before)
         # setCheckpointDir cannot restore a previous value verbatim (it
         # appends a fresh UUID subdir, and there is no unset), so put the
         # JVM field back directly: the session is shared across tests.
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(ck_before))
     assert sc.getCheckpointDir() == ck_before
+    assert spark.conf.get(BOUNDARY_CONF, None) == conf_before
     assert reliable_rows == default_rows
     # The boundaries really landed in the durable checkpoint dir.
     found = [

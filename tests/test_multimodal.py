@@ -37,24 +37,6 @@ def test_histogram_bins_sum_to_length(spark, sf_dir):
     assert bad == 0
 
 
-def test_catalog_queries_emit_only_scalar_columns(spark, sf_dir):
-    """The verify driver's pandas canonicalizer cannot sort/hash array or
-    map cells (round-1 f8/a6 failure mode) — every catalog query must
-    emit scalar-typed columns only."""
-    from nrg_etl_airflow_spark_emr_spark.plans.catalog import all_specs
-
-    offenders = {}
-    for name, s in all_specs().items():
-        schema = s.builder(spark, sf_dir).schema
-        nonscalar = [
-            f.name for f in schema.fields
-            if f.dataType.typeName() in ("array", "map", "struct")
-        ]
-        if nonscalar:
-            offenders[name] = nonscalar
-    assert not offenders, offenders
-
-
 def test_decode_meta_cross_codec(spark, sf_dir):
     """mm_decode_meta's round-12 cross-codec semantics: every document's
     pixel law renders to BOTH containers and decodes back pixel-equal;

@@ -94,16 +94,28 @@ def test_minhash_signatures_shuffle_once_no_regression(spark, sf_dir):
     )
 
 
-def test_no_row_python_udfs_anywhere(spark, sf_dir):
-    """Policy (SURVEY.md §2.10): no row-at-a-time Python UDFs in any
-    catalog query. Arrow-batched pandas ops (MapInPandas/FlatMapGroups)
-    are the sanctioned slow path."""
-    offenders = []
+def test_catalog_sweep_row_udfs_and_scalar_columns(spark, sf_dir):
+    """Two catalog-wide policies, checked over ONE build per query:
+
+    - no row-at-a-time Python UDFs in any plan (SURVEY.md §2.10);
+      Arrow-batched pandas ops (MapInPandas/FlatMapGroups) are the
+      sanctioned slow path;
+    - scalar-typed output columns only: the verify driver's pandas
+      canonicalizer cannot sort/hash array or map cells (round-1 f8/a6
+      failure mode)."""
+    row_udfs, nonscalar = [], {}
     for name in sorted(SPECS):
-        plan = _plan(spark, sf_dir, name)
-        if "BatchEvalPython" in plan:
-            offenders.append(name)
-    assert not offenders, f"row-python UDFs found in: {offenders}"
+        df = SPECS[name].builder(spark, sf_dir)
+        if "BatchEvalPython" in df._jdf.queryExecution().executedPlan().toString():
+            row_udfs.append(name)
+        cols = [
+            f.name for f in df.schema.fields
+            if f.dataType.typeName() in ("array", "map", "struct")
+        ]
+        if cols:
+            nonscalar[name] = cols
+    assert not row_udfs, f"row-python UDFs found in: {row_udfs}"
+    assert not nonscalar, f"non-scalar output columns: {nonscalar}"
 
 
 def test_events_scan_prunes_for_asof(spark, sf_dir):
@@ -799,8 +811,8 @@ def test_trained_ivf_candidates_keyed_and_trainer_shared(spark, sf_dir):
     cartesian over vectors — the only nested-loop joins allowed are the
     k-row centroid broadcasts and the 1-row exactness guard); the vector
     table is cache-backed (assignment + queries + guard share one scan),
-    and the trained centroid frame is CHECKPOINT-backed (r16
-    _trainer_boundary: the two consumers of the trainer — final
+    and the trained centroid frame is CHECKPOINT-backed (an eager
+    operators/_util.boundary: the two consumers of the trainer — final
     assignment and probe routing — read the k-row LogicalRDD instead of
     each re-embedding the unrolled Lloyd plan)."""
     spark.catalog.clearCache()

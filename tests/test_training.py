@@ -176,48 +176,30 @@ def test_bpe_greedy_overlap_chain_semantics(spark, tmp_path):
     assert want == got, (want, got)
 
 
-def test_bpe_batched_batch1_equals_greedy(spark, sf_dir):
-    """The batched trainer's bridge to the oracle gate: at batch=1 the
-    disjoint-selection loop degenerates to the argmax and the one-pass
-    application is the single-pair law — rows AND the final vocabulary
-    must be bit-identical to the greedy oracle-gated trainer."""
-    from nrg_etl_airflow_spark_emr_spark.operators.text import (
-        _bpe_train,
-        _bpe_train_batched,
-    )
-
-    g_rows, g_seqs = _bpe_train(spark, sf_dir)
-    b_rows, b_seqs = _bpe_train_batched(spark, sf_dir, batch=1)
-    assert b_rows == g_rows
-    g = {r.word: (r.n, list(r.toks)) for r in g_seqs.collect()}
-    b = {r.word: (r.n, list(r.toks)) for r in b_seqs.collect()}
-    assert b == g
-
-
 def test_bpe_batched_skips_interacting_pairs(spark, tmp_path):
     """Symbol-disjointness is the batch's safety law: with top pairs
     (a,b) and (b,c) sharing 'b', one batch=2 round must select only
     (a,b) and leave (b,c) to the next round."""
-    from nrg_etl_airflow_spark_emr_spark.operators.text import _bpe_train_batched
+    from nrg_etl_airflow_spark_emr_spark.operators.text import _bpe_train
 
     rows = [(0, "ab ab ab bc bc", "en", "s", 14)]
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(str(tmp_path / "documents.parquet"))
-    got, _ = _bpe_train_batched(spark, str(tmp_path), n_merges=2, batch=2)
+    got, _ = _bpe_train(spark, str(tmp_path), n_merges=2, batch=2)
     assert got == [(1, "a", "b", 3), (2, "b", "c", 2)]
 
 
 def test_bpe_batched_simultaneous_application(spark, tmp_path):
     """Two disjoint pairs inside ONE word apply in one pass: 'abcd'
     under batch {(a,b), (c,d)} becomes [ab, cd] after round 1."""
-    from nrg_etl_airflow_spark_emr_spark.operators.text import _bpe_train_batched
+    from nrg_etl_airflow_spark_emr_spark.operators.text import _bpe_train
 
     rows = [(0, "abcd abcd ab cd", "en", "s", 15)]
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(str(tmp_path / "documents.parquet"))
-    got, seqs = _bpe_train_batched(spark, str(tmp_path), n_merges=2, batch=2)
+    got, seqs = _bpe_train(spark, str(tmp_path), n_merges=2, batch=2)
     assert [(r[1], r[2]) for r in got] == [("a", "b"), ("c", "d")]
     toks = {r.word: list(r.toks) for r in seqs.collect()}
     assert toks["abcd"] == ["ab", "cd"]
