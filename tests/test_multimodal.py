@@ -37,6 +37,15 @@ def test_histogram_bins_sum_to_length(spark, sf_dir):
     assert bad == 0
 
 
+def test_catalog_queries_emit_only_scalar_columns(catalog_sweep):
+    """The verify driver's pandas canonicalizer cannot sort/hash array or
+    map cells (round-1 f8/a6 failure mode) — every catalog query must
+    emit scalar-typed columns only. The schemas come from the shared
+    one-build-per-query sweep (conftest.catalog_sweep)."""
+    offenders = catalog_sweep["nonscalar"]
+    assert not offenders, offenders
+
+
 def test_decode_meta_cross_codec(spark, sf_dir):
     """mm_decode_meta's round-12 cross-codec semantics: every document's
     pixel law renders to BOTH containers and decodes back pixel-equal;

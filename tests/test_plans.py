@@ -94,28 +94,13 @@ def test_minhash_signatures_shuffle_once_no_regression(spark, sf_dir):
     )
 
 
-def test_catalog_sweep_row_udfs_and_scalar_columns(spark, sf_dir):
-    """Two catalog-wide policies, checked over ONE build per query:
-
-    - no row-at-a-time Python UDFs in any plan (SURVEY.md §2.10);
-      Arrow-batched pandas ops (MapInPandas/FlatMapGroups) are the
-      sanctioned slow path;
-    - scalar-typed output columns only: the verify driver's pandas
-      canonicalizer cannot sort/hash array or map cells (round-1 f8/a6
-      failure mode)."""
-    row_udfs, nonscalar = [], {}
-    for name in sorted(SPECS):
-        df = SPECS[name].builder(spark, sf_dir)
-        if "BatchEvalPython" in df._jdf.queryExecution().executedPlan().toString():
-            row_udfs.append(name)
-        cols = [
-            f.name for f in df.schema.fields
-            if f.dataType.typeName() in ("array", "map", "struct")
-        ]
-        if cols:
-            nonscalar[name] = cols
-    assert not row_udfs, f"row-python UDFs found in: {row_udfs}"
-    assert not nonscalar, f"non-scalar output columns: {nonscalar}"
+def test_no_row_python_udfs_anywhere(catalog_sweep):
+    """Policy (SURVEY.md §2.10): no row-at-a-time Python UDFs in any
+    catalog query. Arrow-batched pandas ops (MapInPandas/FlatMapGroups)
+    are the sanctioned slow path. The plans come from the shared
+    one-build-per-query sweep (conftest.catalog_sweep)."""
+    offenders = catalog_sweep["row_udfs"]
+    assert not offenders, f"row-python UDFs found in: {offenders}"
 
 
 def test_events_scan_prunes_for_asof(spark, sf_dir):
