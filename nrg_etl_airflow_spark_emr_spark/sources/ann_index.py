@@ -8,7 +8,16 @@ one shape a 100 TB deployment cannot pay: there the index is a
 thousands of searches. This module writes trained indexes the way a
 vector store lays them out, and commits every state change the way a
 table format does — by writing ONE new immutable manifest file, never
-by renaming or deleting data a reader might hold:
+by renaming or deleting data a reader might hold.
+
+Four index kinds share ONE storage protocol and ONE implementation of
+it. Each kind is a private ``_Layout`` record — its router segments
+(IVF ``centroids``, two-level ``l1cent`` + ``l2cent``, PQ
+``codebooks``, MinHash none), its data segments with their partition
+column, column order and stream dir, and its route function — and
+every lifecycle operation (``_build``, ``_upsert``, ``_stream_ingest``,
+``_compact``, ``_maintain``, ``_read``) runs on that record. The public
+per-kind functions are short calls into it. The protocol:
 
 - ``manifest/vNNNNNNNN.json`` — the committed states. A manifest lists
   the exact segment directories of its version; it is live only once
@@ -17,28 +26,42 @@ by renaming or deleting data a reader might hold:
   transaction log's put-if-absent — the Delta/Iceberg commit
   mechanism). Readers pin the highest committed manifest; a torn
   publish (json without marker) is invisible garbage, and NOTHING in
-  any publish path renames or removes a file (the round-10
-  ``os.rename`` swap choreography and its crash matrix are gone).
-- ``centroids-vNNNNNNNN/`` / ``postings-vNNNNNNNN*/`` — immutable
-  per-commit segment dirs. The IVF postings are PARTITIONED BY trained
-  cell id: Hive partitioning on cid is the physical realization of the
-  IVF inverted lists — a query that probes nprobe cells touches nprobe
-  directories and Spark's partition pruning skips every other file
-  without opening it. At 100 TB this is the difference between a full
-  corpus scan per query batch and nprobe/ncells of it.
-- ``postings_stream/ingest_batch=N/`` — streaming-ingest segments
-  (stream_ingest_ivf). Each micro-batch owns ONE directory, written
-  with whole-dir overwrite so a replayed batch heals itself; the
-  batch's ``_SUCCESS`` marker is its commit record. Readers union
-  committed batches with id > the manifest's ``folded_upto`` fence —
-  so compaction retires stream segments by MOVING THE FENCE, never by
-  deleting them, and a batch landing while compaction runs (id above
-  the fence it publishes) stays live: every row exists exactly once in
+  any publish path renames or removes a file. Every commit goes
+  through ``_commit``: claim the version (``_next_version``), write
+  the versioned segments, then CAS-publish (``_publish``) on the
+  snapshot the writer planned against.
+- ``<segment>-vNNNNNNNN[-upsert]/`` — immutable per-commit segment
+  dirs, named by the version that wrote them. A router segment is one
+  dir, replaced only by a build; a data segment is a dir LIST — a
+  build writes one, an upsert appends one (``-upsert`` suffix), a
+  compaction replaces the list with one. Postings are Hive-partitioned
+  by their routed cell (IVF cid, two-level c1): a query that probes
+  nprobe cells touches nprobe directories and partition pruning skips
+  every other file without opening it — at 100 TB the difference
+  between a full corpus scan per query batch and nprobe/ncells of it.
+- ``<stream>/ingest_batch=N/`` — streaming-ingest segments. Each
+  micro-batch owns ONE directory per stream of its kind, written with
+  whole-dir overwrite so a replayed batch heals itself; the dir's
+  ``_SUCCESS`` marker is its commit record, and a batch counts as
+  committed only when EVERY stream of its kind carries it (PQ writes
+  codes before norms, so a crash between them leaves the batch
+  invisible until replay completes it). Router kinds also record the
+  router epoch that routed the batch (``_centroid_epoch``:
+  ``centroids-vN`` or ``l1cent-vN|l2cent-vN``).
+- ``folded_upto`` — the manifest's fence. Readers union committed
+  batches with id > fence, so compaction retires stream segments by
+  MOVING THE FENCE, never by deleting them. One listing drives both
+  the fold and the fence, and only its contiguous prefix folds, so a
+  batch landing while compaction runs (or a late gap batch) stays live
+  above the fence it publishes: every row exists exactly once in
   (manifest segments ∪ live stream batches) across any crash point.
+  Compaction re-routes batches whose recorded epoch is not the
+  manifest's (a mid-rebuild landing) and trusts the stored routing of
+  in-epoch ones.
 - ``vacuum_index`` — the ONLY place data is deleted: drops dirs no
-  committed current manifest references (superseded segments, folded
+  retained committed manifest references (superseded segments, folded
   stream batches, torn writes). Crash-safe because everything it
-  touches is already unreachable through the current manifest. In
+  touches is already unreachable through the retained manifests. In
   production it runs with a retention window so pinned readers finish
   first; the single-maintenance-writer assumption (standard for table
   formats without a lock service) is documented here once.
@@ -63,7 +86,10 @@ from __future__ import annotations
 import json
 import os
 import re
-from functools import reduce
+from contextlib import contextmanager
+from dataclasses import dataclass
+from functools import partial, reduce
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -199,9 +225,9 @@ def _publish(path: str, manifest: dict, expect_parent: int | None = None) -> Non
             )
 
 
-def _sized(df: DataFrame, *cols: str) -> DataFrame:
+def _sized(df: DataFrame, part: str | None = None) -> DataFrame:
     """Size-adaptive output layout for index segment writes (guide §6):
-    an AQE REBALANCE hint keyed on the write's partitionBy columns (or
+    an AQE REBALANCE hint keyed on the write's partitionBy column (or
     keyless for unpartitioned segments). Without it every segment write
     fanned out tasks x partition-values files — the sf0.1 IVF postings
     segment was 322 files of a few KB each (r15 measurement), paying
@@ -209,12 +235,18 @@ def _sized(df: DataFrame, *cols: str) -> DataFrame:
     read-back. REBALANCE coalesces small partitions to the advisory
     size AND splits oversized ones, so the same code writes one tidy
     file per cell locally and size-bounded multi-file cells at 100 TB —
-    unlike a repartition(cols), which would cap a cell at one task."""
-    return df.hint("rebalance", *cols) if cols else df.hint("rebalance")
+    unlike a repartition(col), which would cap a cell at one task."""
+    return df.hint("rebalance", part) if part else df.hint("rebalance")
 
 
 def _seg(name: str, ver: int, suffix: str = "") -> str:
     return f"{name}-v{ver:08d}{suffix}"
+
+
+def _write(df: DataFrame, target: str, part: str | None) -> None:
+    """Whole-dir overwrite of one segment or stream-batch directory."""
+    w = df.write.mode("overwrite")
+    (w.partitionBy(part) if part else w).parquet(target)
 
 
 def _pin(df: DataFrame) -> bool:
@@ -246,27 +278,30 @@ def _read_segments(
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 
+# --- stream batches and the fence ---------------------------------------------
+
 _EPOCH_FILE = "_centroid_epoch"
 
 
+def _batch_dir(stream: str, batch_id: int) -> str:
+    """A stream batch's directory, relative to the index root."""
+    return os.path.join(stream, f"ingest_batch={batch_id}")
+
+
 def _write_batch_epoch(path: str, stream: str, batch_id: int, epoch: str) -> None:
-    """Record WHICH centroid segment(s) routed this stream batch — a
+    """Record WHICH router segment(s) routed this stream batch — a
     tiny marker inside the batch dir, written after the parquet commit
     (so a crash between the two leaves a committed batch with no
     marker, which compaction treats as unknown-epoch and re-routes
     conservatively). Replay's whole-dir overwrite removes the marker
     with the dir and the replayed write recreates it."""
-    with open(
-        os.path.join(path, stream, f"ingest_batch={batch_id}", _EPOCH_FILE), "w"
-    ) as fh:
+    with open(os.path.join(path, _batch_dir(stream, batch_id), _EPOCH_FILE), "w") as fh:
         fh.write(epoch)
 
 
 def _batch_epoch(path: str, stream: str, batch_id: int) -> str | None:
     try:
-        with open(
-            os.path.join(path, stream, f"ingest_batch={batch_id}", _EPOCH_FILE)
-        ) as fh:
+        with open(os.path.join(path, _batch_dir(stream, batch_id), _EPOCH_FILE)) as fh:
             return fh.read().strip()
     except OSError:
         return None
@@ -374,9 +409,506 @@ def vacuum_index(path: str, keep_versions: int = 1) -> list[str]:
     return removed
 
 
-# --- IVF index ----------------------------------------------------------------
+def _require(path: str, kind: str) -> dict:
+    m = current_manifest(path)
+    if m is None:
+        raise FileNotFoundError(f"no committed {kind} index manifest under {path}")
+    if m.get("kind") != kind:
+        raise ValueError(f"index at {path} is kind={m.get('kind')!r}, want {kind!r}")
+    return m
 
-_IVF_STREAM = "postings_stream"
+
+# --- layouts: what differs between the four index kinds -----------------------
+
+_VEC = ("vec_id", "fe", "nrm")  # what a router kind re-routes and retrains on
+_TL_POSTINGS = ("vec_id", "fe", "nrm", "c2", "c1")
+_CQ = ("gid", "cid", "c_q")
+
+
+@dataclass(frozen=True)
+class _Segment:
+    """One segment of a layout: its manifest key, the column order it is
+    read and folded in (None keeps the recorded schema's), its Hive
+    partition column, and — for a data segment that streams — its
+    stream dir."""
+
+    name: str
+    cols: tuple[str, ...] | None
+    part: str | None = None
+    stream: str | None = None
+
+
+@dataclass(frozen=True)
+class _Layout:
+    """An index kind. ``route(frame, *routers)`` places new rows under
+    the manifest's router frames, returning one frame per data segment;
+    ``epoch`` kinds record the routing epoch on stream batches and
+    re-route stale ones at compaction."""
+
+    kind: str
+    routers: tuple[_Segment, ...]
+    data: tuple[_Segment, ...]
+    route: Callable[..., tuple[DataFrame, ...]]
+    epoch: bool = False
+
+    @property
+    def streams(self) -> list[str]:
+        return [d.stream for d in self.data if d.stream]
+
+
+# Route functions import their operators at call time: the operator
+# modules import this one lazily, and tests monkeypatch their trainers.
+
+
+def _route_ivf(v: DataFrame, cent: DataFrame) -> tuple[DataFrame]:
+    from ..operators.kmeans import ivf_assign
+
+    return (ivf_assign(v, cent),)
+
+
+def _route_twolevel(
+    v: DataFrame, cent1: DataFrame, cent2: DataFrame
+) -> tuple[DataFrame]:
+    from ..operators.dedup import route_twolevel
+
+    return (route_twolevel(v, cent1, cent2).select(*_TL_POSTINGS),)
+
+
+def _route_pq(v: DataFrame, cb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Encode under the codebooks. The batch's embedding width is
+    validated first — the build's guard covers only the base, and a
+    mis-sized batch would otherwise silently write short/ragged
+    subvector codes (round-10 advice)."""
+    from ..operators.kmeans import pq_assign
+    from ..operators.similarity import _check_pq_dim, _subvectors
+
+    first = v.select("fe").first()
+    if first is not None:
+        _check_pq_dim(len(first[0]))
+    codes = pq_assign(_subvectors(v, "vec_id", "fe", "sv"), cb)
+    return codes.select("gid", "vec_id", "cid"), v.select("vec_id", "nrm")
+
+
+def _route_minhash(sigs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    from ..operators.dedup import _band_frame
+
+    return sigs, _band_frame(sigs)
+
+
+_IVF = _Layout(
+    "ivf",
+    (_Segment("centroids", ("cid", "c_q")),),
+    (_Segment("postings", ("vec_id", "fe", "nrm", "cid"), "cid", "postings_stream"),),
+    _route_ivf,
+    epoch=True,
+)
+_TWOLEVEL = _Layout(
+    "twolevel",
+    (_Segment("l1cent", _CQ), _Segment("l2cent", _CQ)),
+    (_Segment("postings", _TL_POSTINGS, "c1", "postings_stream"),),
+    _route_twolevel,
+    epoch=True,
+)
+_PQ = _Layout(
+    "pq",
+    (_Segment("codebooks", _CQ),),
+    (
+        _Segment("codes", ("gid", "vec_id", "cid"), stream="codes_stream"),
+        _Segment("norms", ("vec_id", "nrm"), stream="norms_stream"),
+    ),
+    _route_pq,
+)
+_MINHASH = _Layout(
+    "minhash",
+    (),
+    (
+        _Segment("signatures", None),
+        _Segment("bands", ("doc_id", "band_id", "band_key"), "band_id"),
+    ),
+    _route_minhash,
+)
+
+
+# --- the shared lifecycle -----------------------------------------------------
+
+
+def _epoch(m: dict, layout: _Layout) -> str:
+    """The routing epoch a stream batch records: its router segment
+    name(s) in ``m`` — ``centroids-vN`` or ``l1cent-vN|l2cent-vN``."""
+    return "|".join(m["segments"][r.name] for r in layout.routers)
+
+
+def _live_batches(path: str, layout: _Layout, fence: int) -> list[int]:
+    """Batch ids above ``fence`` committed in EVERY stream of ``layout``."""
+    ids = [set(_committed_stream_batches(path, s, above=fence)) for s in layout.streams]
+    return sorted(set.intersection(*ids)) if ids else []
+
+
+def _frame(
+    spark: SparkSession, path: str, m: dict, seg: _Segment, dirs: list[str]
+) -> DataFrame:
+    df = _read_segments(spark, path, dirs, m["schemas"][seg.name])
+    return df.select(*seg.cols) if seg.cols else df
+
+
+def _routers(
+    spark: SparkSession, path: str, layout: _Layout, m: dict
+) -> list[DataFrame]:
+    return [_frame(spark, path, m, r, [m["segments"][r.name]]) for r in layout.routers]
+
+
+def _read(
+    spark: SparkSession,
+    path: str,
+    layout: _Layout,
+    manifest: dict | None = None,
+    batches: list[int] | None = None,
+) -> tuple[DataFrame, ...]:
+    """(*routers, *data segments) of one snapshot. ``manifest`` pins the
+    read to an ALREADY-READ snapshot (ADVICE r13: compaction, maintain
+    and balance assemble their fence, corpus and CAS token from ONE
+    manifest, not re-reads that can each see a different committed
+    version). Data segments are the manifest's dirs ∪ the stream
+    batches ``batches`` — by default every committed batch above the
+    fence; ``[]`` reads the manifest's dirs only."""
+    m = manifest if manifest is not None else _require(path, layout.kind)
+    if batches is None:
+        batches = _live_batches(path, layout, m.get("folded_upto", -1))
+    data = [
+        _frame(
+            spark, path, m, d,
+            m["segments"][d.name] + [_batch_dir(d.stream, b) for b in batches],
+        )
+        for d in layout.data
+    ]
+    return (*_routers(spark, path, layout, m), *data)
+
+
+def _commit(
+    path: str,
+    layout: _Layout,
+    base: dict,
+    expect_parent: int,
+    frames: dict[str, DataFrame],
+    append: bool = False,
+    fence: int | None = None,
+    suffix: str = "",
+) -> None:
+    """Commit the successor of manifest ``base``: claim the next version,
+    write each of ``frames`` as its versioned segment, then publish with
+    a CAS on ``expect_parent``. A written router segment replaces the
+    old one; a data segment is appended to its list (``append``) or
+    replaces the list. ``fence`` moves folded_upto; a build's base
+    carries folded_upto None, which resolves to the max batch committed
+    at publish time (a from-source build supersedes them all).
+    A crash anywhere before the publish leaves ``base`` the readers'
+    truth and the written dirs torn and unreferenced — a retry claims a
+    fresh version, so the commit is idempotent under retry."""
+    ver = _next_version(path)
+    m = {
+        **base,
+        "version": ver,
+        "segments": dict(base["segments"]),
+        "schemas": dict(base["schemas"]),
+    }
+    routers = {r.name for r in layout.routers}
+    parts = {s.name: s.part for s in (*layout.routers, *layout.data)}
+    for name, df in frames.items():
+        seg = _seg(name, ver, suffix)
+        _write(_sized(df, parts[name]), os.path.join(path, seg), parts[name])
+        m["schemas"].setdefault(name, df.schema.json())
+        if name in routers:
+            m["segments"][name] = seg
+        else:
+            m["segments"][name] = (base["segments"][name] if append else []) + [seg]
+    if fence is not None:
+        m["folded_upto"] = fence
+    elif m.get("folded_upto", -1) is None:
+        m["folded_upto"] = max(
+            (_max_committed_batch(path, s) for s in layout.streams), default=-1
+        )
+    _publish(path, m, expect_parent=expect_parent)
+
+
+def _parent(path: str, expect_parent: int | None) -> int:
+    """A build's CAS token: the caller's, else the version committed
+    when the build STARTS (so a commit landing during training fails
+    the build's publish instead of being silently superseded)."""
+    if expect_parent is not None:
+        return expect_parent
+    pm = current_manifest(path)
+    return pm["version"] if pm else 0
+
+
+@contextmanager
+def _corpus(spark: SparkSession, sf_dir: str, vectors: DataFrame | None):
+    """The build corpus: the caller's ``vectors`` as given (its cache
+    pin stays the caller's), or ``sf_dir``'s embeddings cached for the
+    build and released after it."""
+    if vectors is not None:
+        yield vectors
+        return
+    from ..operators.similarity import _vectors
+
+    v = _vectors(spark, sf_dir).cache()
+    try:
+        yield v
+    finally:
+        v.unpersist()
+
+
+@contextmanager
+def _train_sample(v: DataFrame, fraction: float | None, salt: str, k: int):
+    """Yield (training frame, sample_rows) for a router build.
+
+    ``fraction`` None/1.0 trains on ``v`` (sample_rows None). Otherwise
+    the trainer runs on a deterministic xxhash64(vec_id) sample — Lloyd
+    centroids are a statistic needing O(k·occupancy) rows, not the
+    corpus (the sf100 two-level build spilled 543 GB exploding the full
+    corpus; BASELINE.md round 13) — and the caller routes the FULL
+    corpus under the trained routers, map-side at any scale. No RNG:
+    every rebuild and engine samples identically. Degenerate-sample
+    guard (VERDICT r13 finding 2): a sample with fewer rows than the
+    trainer's ``k`` would seed a short (or empty) router table and
+    silently misroute everything, so one count of the cached sample
+    decides, and a short one falls back to ``v`` — loud in the manifest,
+    where sample_rows < k records the fallback."""
+    if fraction is None or fraction >= 1.0:
+        yield v, None
+        return
+    sample = v.filter(
+        F.abs(F.xxhash64(F.col("vec_id"), F.lit(salt))) % 1_000_000
+        < int(fraction * 1_000_000)
+    ).cache()
+    try:
+        rows = sample.count()
+        yield (sample if rows >= k else v), rows
+    finally:
+        sample.unpersist()
+
+
+def _build(
+    path: str,
+    layout: _Layout,
+    parent: int,
+    frames: dict[str, DataFrame],
+    vacuum_keep: int,
+    params: dict | None = None,
+    folded_upto: int | None = None,
+) -> None:
+    """Commit a freshly trained index (routers + one segment per data
+    kind) as a new version on top of ``parent``. A rebuild fences out
+    every stream batch of the previous epoch: their rows are covered by
+    the rebuilt segments, and unioning them would duplicate rows and
+    carry the OLD routing. ``folded_upto`` narrows that fence for a
+    corpus rebuild (``_maintain``), which covered only the batches it
+    read — fencing a later batch would strand its rows outside both the
+    rebuild and the live stream (ADVICE r12). The publish deletes
+    nothing; the post-publish vacuum retains ``vacuum_keep`` versions
+    (default 2), so readers pinned to the previous epoch — including a
+    maintain's own trainer scan if its cache blocks evict — stay alive
+    through this rebuild and older epochs retire. Ingest should be
+    quiesced across a rebuild (single-maintenance-writer contract); a
+    batch that lands mid-rebuild anyway is healed by ``_maintain``."""
+    skeleton = {
+        "version": None,
+        "kind": layout.kind,
+        "segments": {},
+        "schemas": {},
+        **({"params": params} if params is not None else {}),
+        "streams": layout.streams,
+        "folded_upto": folded_upto,
+    }
+    _commit(path, layout, skeleton, parent, frames)
+    vacuum_index(path, keep_versions=vacuum_keep)
+
+
+def _upsert(spark: SparkSession, path: str, layout: _Layout, batch: DataFrame) -> None:
+    """Route ``batch`` under the PERSISTED routers and commit it as one
+    ``-upsert`` segment per data kind in one manifest version — the
+    incremental law (search over the upserted index == the union corpus
+    under the OLD routers) the *_upsert oracles state; the routers are
+    never retrained here. At 100 TB a daily ingest writes a few files
+    of its own segments, never rewriting the corpus. An empty batch
+    commits nothing — no data-less segment, no manifest churn. The
+    batch is pinned first, so its lineage is evaluated at most once per
+    partition across guard + route + write; only a pin this call
+    created is released."""
+    owned = _pin(batch)
+    try:
+        if batch.isEmpty():
+            return
+        m = _require(path, layout.kind)
+        routed = layout.route(batch, *_routers(spark, path, layout, m))
+        frames = {d.name: df for d, df in zip(layout.data, routed)}
+        _commit(path, layout, m, m["version"], frames, append=True, suffix="-upsert")
+    finally:
+        if owned:
+            batch.unpersist()
+
+
+def _stream_ingest(
+    vectors_stream: DataFrame, index_path: str, checkpoint: str, layout: _Layout
+):
+    """``_upsert`` as a Structured Streaming sink — the vector-store
+    memtable-flush shape: each micro-batch is routed under the current
+    manifest's routers and lands in its OWN ``<stream>/ingest_batch=N``
+    directory per data segment (whole-dir overwrite: a replayed batch,
+    failed between write and checkpoint commit, rewrites exactly its own
+    directories — the effectively-exactly-once contract). Router kinds
+    then write the batch's epoch marker. Searches read manifest
+    segments ∪ committed batches above the fence; ``_compact`` folds
+    them in by moving the fence. Returns the started query; drive with
+    trigger(availableNow=True)."""
+
+    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
+        m = _require(index_path, layout.kind)
+        routers = _routers(batch_df.sparkSession, index_path, layout, m)
+        for d, df in zip(layout.data, layout.route(batch_df, *routers)):
+            _write(df, os.path.join(index_path, _batch_dir(d.stream, batch_id)), d.part)
+        if layout.epoch:
+            stream = layout.data[0].stream
+            _write_batch_epoch(index_path, stream, batch_id, _epoch(m, layout))
+
+    return (
+        vectors_stream.writeStream.foreachBatch(_ingest)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _compact(spark: SparkSession, path: str, layout: _Layout) -> None:
+    """Fold the committed stream batches and accumulated upsert
+    segments into ONE segment per data kind — the maintenance job that
+    completes the memtable-flush cycle. What folding buys is file count:
+    a long-running ingest leaves one file per (batch, cell), and per-cell
+    scan cost at 100 TB is listing + open overhead once files outnumber
+    row groups.
+
+    ONE listing drives both the fold and the published fence, and only
+    its contiguous prefix folds: a batch committing at any point after
+    the listing, or one behind a gap, is neither folded nor fenced and
+    stays live above the new fence. The crash discipline is the
+    commit's: a crash anywhere leaves the previous manifest the
+    readers' truth (bounded staleness, never loss or duplication).
+
+    Router kinds fold in-epoch batches with their stored routing (zero
+    re-assignment — the steady-state case) and RE-ROUTE stale or
+    unknown-epoch ones (a mid-rebuild landing under the previous
+    routers, a pre-marker layout, a crash between parquet and marker)
+    under the manifest's routers: the heal (VERDICT r13 item 4), and
+    value-neutral in-epoch since routing under the same routers is
+    bit-exactly the identity. Map-side broadcast work over only the
+    stale slice."""
+    m = _require(path, layout.kind)
+    fence = m.get("folded_upto", -1)
+    batches = _contiguous_prefix(_live_batches(path, layout, fence), fence)
+    if not batches and all(len(m["segments"][d.name]) == 1 for d in layout.data):
+        return  # nothing to fold; keep the manifest pointer unchanged
+    epoch = _epoch(m, layout)
+    stale = [
+        b for b in batches
+        if layout.epoch and _batch_epoch(path, layout.data[0].stream, b) != epoch
+    ]
+    frames = _read(spark, path, layout, m, [b for b in batches if b not in stale])
+    routers, data = frames[: len(layout.routers)], frames[len(layout.routers):]
+    if stale:
+        d0 = layout.data[0]
+        vecs = _frame(
+            spark, path, m, d0, [_batch_dir(d0.stream, b) for b in stale]
+        ).select(*_VEC)
+        data = [
+            df.unionByName(r.select(*df.columns))
+            for df, r in zip(data, layout.route(vecs, *routers))
+        ]
+    _commit(
+        path, layout, m, m["version"],
+        {d.name: df for d, df in zip(layout.data, data)},
+        fence=batches[-1] if batches else fence,
+    )
+
+
+def _maintain(
+    spark: SparkSession,
+    path: str,
+    layout: _Layout,
+    m: dict,
+    hot_ratio: float,
+    buckets: Callable[[DataFrame], DataFrame],
+    cells_key: str,
+    n_cells: int | None,
+    rebuild: Callable[..., None],
+) -> dict:
+    """The audit→retrain loop of a router kind, over ONE snapshot ``m``.
+    Reads the index's CURRENT corpus — base ∪ upserts ∪ the contiguous
+    run of stream batches committed AT CORPUS-READ TIME, not the
+    original source table, which misses upserted vectors — and its
+    per-bucket balance (``buckets`` maps postings to a ``cid`` bucket
+    column). If the hottest bucket exceeds ``hot_ratio`` times the
+    uniform share (1 / ``n_cells``, or 1 / non-empty buckets when None
+    — probe p99 is set by the LARGEST probed list), ``rebuild`` retrains
+    over that corpus.
+
+    The rebuild publishes the corpus's batch-list end as its fence, so
+    a batch committing after the read stays LIVE above it (ADVICE r12),
+    and CASes on ``m``'s version: an interleaved UPSERT (a manifest
+    commit) fails the rebuild loudly with ConcurrentWriterError — its
+    rows are absent from the rebuild, and retrying reads them. An
+    interleaved STREAM batch commits no manifest, so the CAS cannot see
+    it: after the publish the live batches are re-listed and the
+    contiguous run folded at once through ``_compact``, whose re-route
+    under the rebuilt routers restores its routing (detect and heal,
+    not quiesce — bounded staleness, never loss). Versioned segments
+    make the read-while-rewrite safe: the trainer scans the old
+    manifest's dirs while writing fresh ones. healed_batches is a LOWER
+    BOUND (ADVICE r14): the compaction re-lists and may fold batches
+    that committed after this listing."""
+    from ..operators.kmeans import cell_balance
+
+    fence = m.get("folded_upto", -1)
+    covered = _contiguous_prefix(_live_batches(path, layout, fence), fence)
+    postings = _read(spark, path, layout, m, covered)[-1]
+    stats = (
+        cell_balance(buckets(postings))
+        .agg(
+            F.count(F.lit(1)).alias("nb"),
+            F.max("n_postings").alias("mx"),
+            F.sum("n_postings").alias("tot"),
+        )
+        .collect()[0]
+    )
+    cells = n_cells if n_cells is not None else (stats["nb"] or 0)
+    max_share = (stats["mx"] or 0) / max(stats["tot"] or 0, 1)
+    threshold = hot_ratio / max(cells, 1)
+    rebuilt = max_share > threshold
+    healed_batches = 0
+    if rebuilt:
+        new_fence = covered[-1] if covered else fence
+        corpus = postings.select(*_VEC).cache()
+        try:
+            corpus.count()  # pin the old-manifest scan BEFORE the rebuild's
+            # post-publish vacuum retires those directories
+            rebuild(vectors=corpus, folded_upto=new_fence, expect_parent=m["version"])
+        finally:
+            corpus.unpersist()
+        late = _contiguous_prefix(_live_batches(path, layout, new_fence), new_fence)
+        if late:
+            healed_batches = len(late)
+            _compact(spark, path, layout)
+    return {
+        "rebuilt": rebuilt,
+        cells_key: cells,
+        "max_share": round(max_share, 6),
+        "threshold": round(threshold, 6),
+        "healed_batches": healed_batches,
+    }
+
+
+HOT_CELL_RATIO = 3.0  # a cell above 3x the uniform 1/k share is "hot"
+
+
+# --- IVF index ----------------------------------------------------------------
 
 
 def write_ivf_index(
@@ -391,316 +923,54 @@ def write_ivf_index(
 ) -> None:
     """Build the trained-IVF index over ``sf_dir``'s embeddings (or an
     explicit ``vectors`` frame — e.g. the base slice of an incremental
-    build) and COMMIT it as a new manifest version: fresh immutable
-    centroids-vN/ + cid-partitioned postings-vN/ dirs, then one manifest
-    publish. A rebuild (the centroid-retrain job) fences out every
-    stream segment of the previous epoch by setting folded_upto to the
-    max batch id committed at publish time — their vectors are covered
-    by the rebuilt postings, and unioning them would both duplicate
-    rows and carry cell ids from the OLD centroids. The publish itself
-    deletes nothing; the post-publish vacuum retains the previous
-    epoch (``vacuum_keep``, default 2), so readers pinned to the
-    previous manifest stay alive through this rebuild and epochs older
-    than that retire. Ingest should be quiesced
-    across a rebuild (single-maintenance-writer contract — a batch
-    landing between the fence capture and the publish would land under
-    old centroids yet sit above the fence)."""
-    from ..operators.kmeans import ivf_assign, ivf_train
-    from ..operators.similarity import _vectors
+    build) and commit it: centroids-vN/ + cid-partitioned postings-vN/.
+    ``train_fraction`` trains on a hash-sample and assigns the full
+    corpus under the trained centroids (ivf_assign — a row-local fold);
+    oracle-gated rows keep full-corpus training, since sampled
+    centroids legitimately differ."""
+    from ..operators.kmeans import K_DEFAULT, ivf_assign, ivf_train
 
-    if expect_parent is None:
-        pm = current_manifest(path)
-        expect_parent = pm["version"] if pm else 0
-    created = vectors is None
-    v = _vectors(spark, sf_dir).cache() if created else vectors
-    sample_rows = None
-    if train_fraction is not None and train_fraction < 1.0:
-        # Same third-decade build law as write_twolevel_index: Lloyd
-        # centroids are a statistic — train on a deterministic
-        # xxhash64(vec_id) sample, ASSIGN the full corpus under the
-        # trained centroids (ivf_assign — a row-local fold, pure map
-        # work at any scale). Oracle-gated rows keep full-corpus
-        # training; sampled centroids legitimately differ.
-        sample = v.filter(
-            F.abs(F.xxhash64(F.col("vec_id"), F.lit("ivf-train")))
-            % 1_000_000
-            < int(train_fraction * 1_000_000)
-        ).cache()
-        # Degenerate-sample guard (VERDICT r13 finding 2): a fraction
-        # small relative to the corpus can yield fewer rows than the
-        # trainer's k — ivf_train then seeds short (or empty), and the
-        # published index would route every vector through a crippled
-        # centroid table with no error: the silent-row-loss class.
-        # One cheap count on the already-cached sample decides: short
-        # sample → fall back to FULL-corpus training (loud in the
-        # manifest: sample_rows records what the fraction actually
-        # drew; train_fraction stays as requested for audit).
-        from ..operators.kmeans import K_DEFAULT
-
-        sample_rows = sample.count()
-        if sample_rows < K_DEFAULT:
-            sample.unpersist()
-            cent, fassign = ivf_train(v)
-        else:
-            cent, _sample_assign = ivf_train(sample)
+    parent = _parent(path, expect_parent)
+    with _corpus(spark, sf_dir, vectors) as v, _train_sample(
+        v, train_fraction, "ivf-train", K_DEFAULT
+    ) as (train, sample_rows):
+        cent, fassign = ivf_train(train)
+        if train is not v:
             fassign = ivf_assign(v, cent)
-            sample.unpersist()
-    else:
-        cent, fassign = ivf_train(v)
-    ver = _next_version(path)
-    cent_dir, post_dir = _seg("centroids", ver), _seg("postings", ver)
-    _sized(cent).write.mode("overwrite").parquet(os.path.join(path, cent_dir))
-    (
-        _sized(fassign, "cid").write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(os.path.join(path, post_dir))
-    )
-    _publish(
-        path,
-        {
-            "version": ver,
-            "kind": "ivf",
-            "segments": {"centroids": cent_dir, "postings": [post_dir]},
-            "schemas": {
-                "centroids": cent.schema.json(),
-                "postings": fassign.schema.json(),
-            },
-            "params": {
-                "train_fraction": train_fraction,
-                # Effective sample size the fraction drew (None when
-                # training was full-corpus by request); a value below
-                # the trainer's k means the build fell back to full
-                # training rather than publish a crippled index.
-                "sample_rows": sample_rows,
-            },
-            "streams": [_IVF_STREAM],
-            # Fence: callers that rebuilt from the index's OWN corpus
-            # (maintain_ivf_index) pass the highest batch id that corpus
-            # actually covered — fencing any later batch would strand its
-            # rows outside both the rebuild and the live stream (ADVICE
-            # r12). A from-source build (vectors=None or an external
-            # frame) supersedes everything committed so far, so the
-            # publish-time max is the right default fence there.
-            "folded_upto": (
-                folded_upto
-                if folded_upto is not None
-                else _max_committed_batch(path, _IVF_STREAM)
-            ),
-        },
-        expect_parent=expect_parent,
-    )
-    if created:
-        v.unpersist()
-    # Full rebuilds are the natural GC point — but the PREVIOUS epoch
-    # must survive this one: vacuum_keep=2 retains the last committed
-    # manifest besides the fresh one, so a reader pinned before the
-    # rebuild (including maintain_ivf_index's own trainer scan if its
-    # cache blocks evict) keeps a live manifest to recompute from.
-    # Epochs older than that retire. Size vacuum_keep to the longest
-    # running reader; runs strictly AFTER the publish — a crash before
-    # it just leaves garbage for the next run.
-    vacuum_index(path, keep_versions=vacuum_keep)
+        _build(
+            path, _IVF, parent, {"centroids": cent, "postings": fassign},
+            vacuum_keep,
+            params={"train_fraction": train_fraction, "sample_rows": sample_rows},
+            folded_upto=folded_upto,
+        )
 
 
 def upsert_ivf_postings(spark: SparkSession, path: str, new_vectors: DataFrame) -> None:
-    """Incremental index maintenance — the operation a GROWING corpus
-    runs instead of rebuilds: assign ``new_vectors`` (vec_id/fe/nrm)
-    under the index's PERSISTED centroids (ivf_assign — the identical
-    exact-BIGINT argmin the trainer used) and commit them as ONE new
-    postings segment + manifest version. At 100 TB a daily ingest
-    writes a few files into a few inverted-list cid directories of its
-    own segment, never rewriting the corpus. Centroids are NOT
-    retrained: the incremental law (search over the upserted index ==
-    assignment of the union corpus under the OLD centroids) is what the
-    sim_knn_ivf_upsert oracle states; periodic retrain is
-    maintain_ivf_index's separate, rarer job.
-
-    Replay semantics — better than the round-10 append: the segment dir
-    is named by its manifest version, so a failed run leaves a torn,
-    UNREFERENCED dir and the retry overwrites that same dir before
-    publishing. The upsert is therefore idempotent under retry (the old
-    bare append duplicated rows on replay). An empty batch commits
-    nothing — no data-less segment, no manifest churn (the same quiet-
-    day guard as upsert_pq_codes). The guard pins the batch first, so
-    its lineage is evaluated at most once per partition across
-    guard + write."""
-    from ..operators.kmeans import ivf_assign
-
-    nv = new_vectors
-    owned = _pin(nv)
-    try:
-        if nv.isEmpty():
-            return  # empty batch: nothing to assign, nothing to commit
-        m = _require(path, "ivf")
-        cent = read_ivf_centroids(spark, path, m)
-        assigned = ivf_assign(nv, cent)
-        ver = _next_version(path)
-        seg = _seg("postings", ver, "-upsert")
-        (
-            _sized(assigned, "cid").write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(os.path.join(path, seg))
-        )
-        m2 = dict(m)
-        m2["version"] = ver
-        m2["segments"] = dict(m["segments"])
-        m2["segments"]["postings"] = list(m["segments"]["postings"]) + [seg]
-        _publish(path, m2, expect_parent=m["version"])
-    finally:
-        if owned:
-            nv.unpersist()
+    """Assign ``new_vectors`` (vec_id/fe/nrm) under the PERSISTED
+    centroids (ivf_assign — the identical exact-BIGINT argmin the
+    trainer used) and commit them as one postings segment; the
+    sim_knn_ivf_upsert oracle states the law. Periodic retrain is
+    maintain_ivf_index's separate, rarer job."""
+    _upsert(spark, path, _IVF, new_vectors)
 
 
 def stream_ingest_ivf(vectors_stream: DataFrame, index_path: str, checkpoint: str):
-    """STREAMING ANN ingest — upsert_ivf_postings as a Structured
-    Streaming sink: each micro-batch of new vectors (vec_id/fe/nrm) is
-    assigned under the index's current-manifest centroids (the same
-    ivf_assign law) and landed in its OWN directory
-    ``postings_stream/ingest_batch=N/`` (cid-partitioned inside) via
-    whole-directory overwrite — a replayed batch (failure between write
-    and checkpoint commit) rewrites exactly its own directory, stale
-    cid subdirs included, the effectively-exactly-once contract; the
-    directory's _SUCCESS marker is the batch's commit record, so
-    readers and compaction never see a torn batch. Searches read
-    manifest segments ∪ committed stream batches above the manifest's
-    folded_upto fence (read_ivf_index) — the vector-store
-    memtable-flush shape: the base segments are bulk commits, stream
-    segments accrue per trigger, and compact_ivf_index periodically
-    folds them in by moving the fence. Returns the started query; drive
-    with trigger(availableNow=True)."""
-    from ..operators.kmeans import ivf_assign
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        m = _require(index_path, "ivf")
-        cent = read_ivf_centroids(spark, index_path, m)
-        (
-            ivf_assign(batch_df, cent)
-            .write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(
-                os.path.join(index_path, _IVF_STREAM, f"ingest_batch={batch_id}")
-            )
-        )
-        # Epoch marker: names the centroid segment that routed this
-        # batch, so compaction re-routes ONLY batches whose epoch is
-        # not the current one (round 14 — the heal stays exact, the
-        # common in-epoch fold pays no re-assignment).
-        _write_batch_epoch(
-            index_path, _IVF_STREAM, batch_id, m["segments"]["centroids"]
-        )
-
-    return (
-        vectors_stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    """Streaming IVF ingest: each micro-batch of vectors (vec_id/fe/nrm)
+    is assigned under the current centroids and lands cid-partitioned in
+    ``postings_stream/ingest_batch=N/``."""
+    return _stream_ingest(vectors_stream, index_path, checkpoint, _IVF)
 
 
 def compact_ivf_index(spark: SparkSession, path: str) -> None:
-    """Fold committed stream segments and accumulated upsert segments
-    into ONE cid-partitioned base segment — the periodic maintenance
-    job that completes the memtable-flush cycle. Value-neutral for
-    in-epoch batches (re-assignment under the same centroids is the
-    identity, so the folded frame is exactly what searches already
-    read — pinned in tests/test_ann_index.py); for a batch that landed
-    mid-rebuild under the PREVIOUS centroids it is the routing heal
-    (VERDICT r13 item 4 — see the re-route note below). What folding
-    buys is file count: a long-running ingest leaves one file per
-    (batch, cid), and per-cell scan cost at 100 TB is listing + open
-    overhead once files outnumber row groups.
-
-    Crash discipline — the manifest makes it one-step: (1) write the
-    folded segment under the next version's name; (2) publish a
-    manifest listing only that segment, with folded_upto advanced to
-    the HIGHEST BATCH THE SNAPSHOT ACTUALLY READ. A crash anywhere
-    leaves the previous manifest intact (readers see the pre-compaction
-    state — bounded staleness, never loss or duplication) and a retry
-    overwrites the same torn dir. Batches landing AFTER the snapshot
-    list have higher ids than the published fence, so they remain live
-    under the new manifest — the round-10 design deleted the whole
-    stream dir and could drop them; here nothing is deleted at all
-    (vacuum_index retires fenced batches later)."""
-    m = _require(path, "ivf")
-    fence = m.get("folded_upto", -1)
-    # ONE listing drives both the fold and the published fence: the
-    # folded frame is built from exactly these batch dirs, so a batch
-    # committing at ANY point after this line is neither folded nor
-    # fenced — it stays live above the new fence. (Re-listing inside
-    # the read, as read_ivf_index does, would fold a late batch while
-    # fencing only up to the earlier listing — duplicating its rows.)
-    # Only the CONTIGUOUS prefix folds: a gap in the committed ids
-    # (late/out-of-order commit) stops the fold before it, so the
-    # published fence can never strand a gap batch (row loss); the gap
-    # and everything behind it stay live and fold once it commits.
-    batches = _contiguous_prefix(
-        _committed_stream_batches(path, _IVF_STREAM, above=fence), fence
-    )
-    if not batches and len(m["segments"]["postings"]) == 1:
-        return  # nothing to fold; keep the manifest pointer unchanged
-    cent, postings = read_ivf_index(spark, path, include_stream=False, manifest=m)
-    if batches:
-        # RE-ROUTE stale batches under the manifest's centroids instead
-        # of trusting their stored cid (VERDICT r13 item 4): a batch
-        # that landed while a rebuild was training carries the PREVIOUS
-        # epoch's routing — folding it as-is would bake the misrouting
-        # into the base segment forever. The re-route is EPOCH-GATED
-        # (round 14): each batch dir's _centroid_epoch marker names the
-        # centroid segment that routed it, so a batch written under the
-        # CURRENT centroids folds with its stored cid (zero extra work
-        # — the dominant case in a steady-state ingest loop, measured
-        # as the one against-grain compaction cost when the re-route
-        # was unconditional), while a stale or unknown-epoch batch
-        # (mid-rebuild landing, pre-marker layout, crash between
-        # parquet and marker) is re-assigned — ivf_assign under the
-        # same centroids reproduces the stored cid bit-exactly, so the
-        # conservative path is value-neutral too. Map-side broadcast
-        # work over only the stale slice — no new shuffle at any scale.
-        from ..operators.kmeans import ivf_assign
-
-        epoch = m["segments"]["centroids"]
-        in_epoch = [
-            b for b in batches if _batch_epoch(path, _IVF_STREAM, b) == epoch
-        ]
-        stale = [b for b in batches if b not in in_epoch]
-        if in_epoch:
-            dirs = [os.path.join(_IVF_STREAM, f"ingest_batch={b}") for b in in_epoch]
-            postings = postings.unionByName(
-                _read_segments(spark, path, dirs, m["schemas"]["postings"]).select(
-                    "vec_id", "fe", "nrm", "cid"
-                )
-            )
-        if stale:
-            dirs = [os.path.join(_IVF_STREAM, f"ingest_batch={b}") for b in stale]
-            postings = postings.unionByName(
-                ivf_assign(
-                    _read_segments(
-                        spark, path, dirs, m["schemas"]["postings"]
-                    ).select("vec_id", "fe", "nrm"),
-                    cent,
-                ).select("vec_id", "fe", "nrm", "cid")
-            )
-    ver = _next_version(path)
-    seg = _seg("postings", ver)
-    _sized(postings, "cid").write.mode("overwrite").partitionBy("cid").parquet(
-        os.path.join(path, seg)
-    )
-    m2 = dict(m)
-    m2["version"] = ver
-    m2["segments"] = dict(m["segments"])
-    m2["segments"]["postings"] = [seg]
-    m2["folded_upto"] = batches[-1] if batches else fence
-    _publish(path, m2, expect_parent=m["version"])
+    """Fold IVF stream batches and upserts into one cid-partitioned
+    postings segment; stale batches re-assign through ivf_assign."""
+    _compact(spark, path, _IVF)
 
 
 def read_ivf_centroids(
     spark: SparkSession, path: str, manifest: dict | None = None
 ) -> DataFrame:
-    m = manifest or _require(path, "ivf")
-    return _read_segments(
-        spark, path, [m["segments"]["centroids"]], m["schemas"]["centroids"]
-    ).select("cid", "c_q")
+    return _routers(spark, path, _IVF, manifest or _require(path, "ivf"))[0]
 
 
 def read_ivf_index(
@@ -709,49 +979,10 @@ def read_ivf_index(
     include_stream: bool = True,
     manifest: dict | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Load the persisted IVF index at its current manifest: (cent:
-    cid/c_q, postings: vec_id/fe/nrm/cid). Postings are the manifest's
-    base segments ∪ committed stream batches above the folded_upto
-    fence (see stream_ingest_ivf) unless ``include_stream=False``.
-    Explicit manifest schemas throughout — cid comes back long with no
-    cast, and empty segments (quiet ingest days) read as empty frames
-    instead of failing schema inference. ``manifest`` pins the read to
-    an ALREADY-READ snapshot (ADVICE r13: maintenance must assemble its
-    fence, corpus, and CAS token from ONE manifest, not three
-    re-reads that can each see a different committed version)."""
-    m = manifest if manifest is not None else _require(path, "ivf")
-    cent = read_ivf_centroids(spark, path, m)
-    postings = _read_segments(
-        spark, path, m["segments"]["postings"], m["schemas"]["postings"]
-    ).select("vec_id", "fe", "nrm", "cid")
-    if include_stream:
-        batches = _committed_stream_batches(
-            path, _IVF_STREAM, above=m.get("folded_upto", -1)
-        )
-        if batches:
-            dirs = [
-                os.path.join(_IVF_STREAM, f"ingest_batch={b}") for b in batches
-            ]
-            postings = postings.unionByName(
-                _read_segments(spark, path, dirs, m["schemas"]["postings"]).select(
-                    "vec_id", "fe", "nrm", "cid"
-                )
-            )
-    return cent, postings
-
-
-def _require(path: str, kind: str) -> dict:
-    m = current_manifest(path)
-    if m is None:
-        raise FileNotFoundError(f"no committed {kind} index manifest under {path}")
-    if m.get("kind") != kind:
-        raise ValueError(f"index at {path} is kind={m.get('kind')!r}, want {kind!r}")
-    return m
-
-
-# --- IVF health / retrain wiring ----------------------------------------------
-
-HOT_CELL_RATIO = 3.0  # a cell above 3x the uniform 1/k share is "hot"
+    """(cent: cid/c_q, postings: vec_id/fe/nrm/cid) at the current (or
+    the given) manifest; ``include_stream=False`` skips live stream
+    batches. cid comes back long with no cast."""
+    return _read(spark, path, _IVF, manifest, None if include_stream else [])
 
 
 def ivf_index_balance(spark: SparkSession, path: str) -> DataFrame:
@@ -762,116 +993,28 @@ def ivf_index_balance(spark: SparkSession, path: str) -> DataFrame:
     metadata-weight — partition footprints, not data."""
     from ..operators.kmeans import cell_balance
 
-    _, postings = read_ivf_index(spark, path)
-    return cell_balance(postings)
+    return cell_balance(read_ivf_index(spark, path)[1])
 
 
 def maintain_ivf_index(
     spark: SparkSession, path: str, hot_ratio: float = HOT_CELL_RATIO
 ) -> dict:
-    """The automated consumer of the balance audit — closes the loop
-    qc_ivf_index_balance only reports on: read the persisted index's
-    per-cell shares; if the hottest cell exceeds ``hot_ratio`` times
-    the uniform 1/k share (probe-time p99 is set by the LARGEST probed
-    inverted list), RETRAIN the centroids over the index's CURRENT
-    corpus (base segments ∪ upserts ∪ the stream batches committed AT
-    CORPUS-READ TIME — not the original source table, which misses
-    upserted vectors) and commit the rebuild through write_ivf_index's
-    manifest publish. The committed-batch list is captured ONCE, when
-    the corpus is assembled, and its contiguous-prefix end is passed to
-    write_ivf_index as the publish fence: a batch committing between
-    the corpus read and the publish stays LIVE above the fence instead
-    of being fenced without its rows in the rebuild (silent row loss —
-    ADVICE r12). Concurrency is DETECTED, not quiesced (round 14): the
-    rebuild publish CASes on the manifest version the corpus was read
-    from, so an interleaved UPSERT (which commits a manifest) fails the
-    rebuild loudly with ConcurrentWriterError — its rows are absent
-    from the rebuilt postings, and retrying the maintenance reads them;
-    an interleaved STREAM batch (no manifest commit — invisible to the
-    CAS) is re-listed after the publish and folded immediately through
-    compact_ivf_index, whose re-route under the rebuilt centroids
-    restores its routing (bounded staleness, never loss OR permanent
-    misrouting). Versioned segments make the read-while-rewrite safe:
-    the trainer scans the old manifest's dirs while writing fresh ones.
-    Returns {rebuilt, k, max_share, threshold, healed_batches} for the
-    maintenance log. healed_batches is a LOWER BOUND at detection time
-    (ADVICE r14): it counts the post-publish listing made here, while
-    the compaction it hands off to re-lists and may fold batches that
-    committed in between."""
-    from ..operators.kmeans import cell_balance
-
+    """Close the loop qc_ivf_index_balance only reports on: if the
+    hottest cell exceeds ``hot_ratio`` times the uniform 1/k share,
+    retrain the centroids over the index's current corpus through
+    write_ivf_index. Returns {rebuilt, k, max_share, threshold,
+    healed_batches} for the maintenance log."""
     m = _require(path, "ivf")
-    fence = m.get("folded_upto", -1)
-    covered = _contiguous_prefix(
-        _committed_stream_batches(path, _IVF_STREAM, above=fence), fence
+    return _maintain(
+        spark, path, _IVF, m, hot_ratio,
+        buckets=lambda postings: postings,
+        cells_key="k",
+        n_cells=read_ivf_centroids(spark, path, m).count(),
+        rebuild=partial(write_ivf_index, spark, "", path),
     )
-    cent, postings = read_ivf_index(spark, path, include_stream=False, manifest=m)
-    if covered:
-        dirs = [os.path.join(_IVF_STREAM, f"ingest_batch={b}") for b in covered]
-        postings = postings.unionByName(
-            _read_segments(spark, path, dirs, m["schemas"]["postings"]).select(
-                "vec_id", "fe", "nrm", "cid"
-            )
-        )
-    k = cent.count()
-    stats = (
-        cell_balance(postings)
-        .agg(F.max("n_postings").alias("mx"), F.sum("n_postings").alias("tot"))
-        .collect()[0]
-    )
-    max_share = (stats["mx"] or 0) / max(stats["tot"] or 0, 1)
-    threshold = hot_ratio / max(k, 1)
-    rebuilt = max_share > threshold
-    healed_batches = 0
-    if rebuilt:
-        corpus = postings.select("vec_id", "fe", "nrm").cache()
-        try:
-            corpus.count()  # pin the old-manifest scan BEFORE the rebuild's
-            # post-publish vacuum retires those directories
-            new_fence = covered[-1] if covered else fence
-            write_ivf_index(
-                spark,
-                sf_dir="",
-                path=path,
-                vectors=corpus,
-                folded_upto=new_fence,
-                # CAS against the snapshot the corpus was READ from, not
-                # a re-read at build start (ADVICE r13): an upsert
-                # committing between this function's corpus read and the
-                # rebuild publish must fail the publish loudly — its
-                # rows are absent from the rebuilt postings.
-                expect_parent=m["version"],
-            )
-        finally:
-            corpus.unpersist()
-        # Detect-and-heal, not quiesce (VERDICT r13 item 4): a STREAM
-        # batch (no manifest commit, so invisible to the CAS) that
-        # landed after the corpus read sits live above the fence but
-        # was routed under the OLD centroids. Re-list now; fold the
-        # contiguous run immediately — compact_ivf_index re-routes
-        # folded batches under the rebuilt centroids, restoring search
-        # recall over their vectors. A gap batch (or one landing after
-        # THIS listing) stays live and heals at the next compaction the
-        # same way — bounded routing staleness, never loss.
-        late = _contiguous_prefix(
-            _committed_stream_batches(path, _IVF_STREAM, above=new_fence),
-            new_fence,
-        )
-        if late:
-            healed_batches = len(late)
-            compact_ivf_index(spark, path)
-    return {
-        "rebuilt": rebuilt,
-        "k": k,
-        "max_share": round(max_share, 6),
-        "threshold": round(threshold, 6),
-        "healed_batches": healed_batches,
-    }
 
 
 # --- Two-level dedup router ----------------------------------------------------
-
-_TL_STREAM = "postings_stream"
 
 
 def write_twolevel_index(
@@ -888,133 +1031,50 @@ def write_twolevel_index(
     train_fraction: float | None = None,
 ) -> None:
     """Build the TWO-LEVEL trained dedup router as a persisted artifact
-    and commit it through the manifest pointer — the train-once shape
-    BASELINE.md's two-level fix note promises ('at deployment the
-    levels are persisted artifacts… the trainer term is paid once').
-    Three immutable segments per version: the coarse centroids
-    (l1cent, k1 rows), the per-cell sub-centroids (l2cent, ≤k1*k2
-    rows — one more broadcastable parquet), and the routed corpus
-    postings PARTITIONED BY the coarse cell c1 (bounded dir count:
-    k1 ~ sqrt(n/c) directories, each holding its sub-cell column —
-    partitioning by (c1, c2) would create ~n/c dirs, a small-files
-    explosion at corpus scale). Same IVF rebuild discipline: publish
-    deletes nothing, the post-publish vacuum retains the previous
-    epoch for pinned readers (``vacuum_keep``).
+    — the train-once shape BASELINE.md's two-level fix note promises
+    ('at deployment the levels are persisted artifacts… the trainer
+    term is paid once'). Three segments per version: the coarse
+    centroids (l1cent, k1 rows), the per-cell sub-centroids (l2cent,
+    ≤k1*k2 rows — one more broadcastable parquet), and the routed
+    corpus postings PARTITIONED BY the coarse cell c1 (bounded dir
+    count: k1 ~ sqrt(n/c) directories, each holding its sub-cell
+    column — partitioning by (c1, c2) would create ~n/c dirs, a
+    small-files explosion at corpus scale).
 
-    ``train_fraction`` — the third-decade build fix (sf100 probe,
-    BASELINE.md round 13): the grouped-Lloyd trainer's centroid-update
-    stage explodes the corpus to (cell, dim, value) rows, and at
-    n = 2M / k = 134 that stage spilled 543 GB — the one step of the
-    router lifecycle that outgrew the JVM. Lloyd centroids are a
-    statistic (they need O(k·occupancy) samples, not the corpus), so
-    the standard IVF discipline applies: TRAIN on a deterministic
-    hash-sample of the corpus (xxhash64(vec_id) — no RNG, every
-    rebuild/engine samples identically), then ROUTE the full corpus
-    under the trained centroids — route_twolevel is two broadcast
-    joins, map-side at any scale. None/1.0 keeps full-corpus training
-    (the oracle-gated fixture rows, where trainer determinism IS the
-    gate). Sampled centroids differ from full-corpus centroids, so this
-    is a deployment knob, not an oracle-path default; the search/
-    increment/compaction laws are unchanged either way."""
-    from ..operators.dedup import route_twolevel, twolevel_train
-    from ..operators.similarity import _vectors
+    ``train_fraction`` — the third-decade build fix: the grouped-Lloyd
+    trainer's centroid-update stage explodes the corpus to (cell, dim,
+    value) rows, and at n = 2M / k = 134 that stage spilled 543 GB. A
+    sampled build routes the full corpus through route_twolevel (two
+    broadcast joins). None/1.0 keeps full-corpus training (the
+    oracle-gated fixture rows, where trainer determinism IS the gate)."""
+    from ..operators.dedup import twolevel_train
 
-    if expect_parent is None:
-        pm = current_manifest(path)
-        expect_parent = pm["version"] if pm else 0
-    created = vectors is None
-    v = _vectors(spark, sf_dir).cache() if created else vectors
-    sample_rows = None
-    sampled = train_fraction is not None and train_fraction < 1.0
-    if sampled:
-        sample = v.filter(
-            F.abs(F.xxhash64(F.col("vec_id"), F.lit("tl-train")))
-            % 1_000_000
-            < int(train_fraction * 1_000_000)
-        ).cache()
-        # Degenerate-sample guard (VERDICT r13 finding 2), twolevel
-        # law: the coarse trainer seeds k1 centroids from the sample —
-        # fewer than k1 rows and the router publishes with a short (or
-        # empty) cent1, silently misrouting everything. Count the
-        # cached sample once; short → full-corpus fallback, recorded
-        # in the manifest as sample_rows < k1.
-        sample_rows = sample.count()
-        if sample_rows < k1:
-            sample.unpersist()
-            sampled = False
-    if sampled:
-        cent1, cent2, _assigned, pins = twolevel_train(sample, k1, k2, iters)
-        # Route the FULL corpus under the sampled-trainer centroids;
-        # materialize before releasing the trainer pins.
-        posted = route_twolevel(v, cent1, cent2).select(
-            "vec_id", "fe", "nrm", "c2", "c1"
-        )
-        _assigned.unpersist()
-    else:
-        cent1, cent2, posted_assigned, pins = twolevel_train(v, k1, k2, iters)
-        posted = posted_assigned.select("vec_id", "fe", "nrm", "c2", "c1")
-        pins = (*pins, posted_assigned)
-    ver = _next_version(path)
-    c1_dir, c2_dir = _seg("l1cent", ver), _seg("l2cent", ver)
-    post_dir = _seg("postings", ver)
-    _sized(cent1).write.mode("overwrite").parquet(os.path.join(path, c1_dir))
-    _sized(cent2).write.mode("overwrite").parquet(os.path.join(path, c2_dir))
-    _sized(posted, "c1").write.mode("overwrite").partitionBy("c1").parquet(
-        os.path.join(path, post_dir)
-    )
-    _publish(
-        path,
-        {
-            "version": ver,
-            "kind": "twolevel",
-            "segments": {
-                "l1cent": c1_dir,
-                "l2cent": c2_dir,
-                "postings": [post_dir],
-            },
-            "schemas": {
-                "l1cent": cent1.schema.json(),
-                "l2cent": cent2.schema.json(),
-                "postings": posted.schema.json(),
-            },
-            "params": {
+    parent = _parent(path, expect_parent)
+    with _corpus(spark, sf_dir, vectors) as v, _train_sample(
+        v, train_fraction, "tl-train", k1
+    ) as (train, sample_rows):
+        cent1, cent2, assigned, pins = twolevel_train(train, k1, k2, iters)
+        if train is v:
+            posted = assigned.select(*_TL_POSTINGS)
+        else:
+            (posted,) = _route_twolevel(v, cent1, cent2)
+        _build(
+            path, _TWOLEVEL, parent,
+            {"l1cent": cent1, "l2cent": cent2, "postings": posted},
+            vacuum_keep,
+            params={
                 "k1": k1,
                 "k2": k2,
                 "iters": iters,
                 "train_fraction": train_fraction,
-                # Effective sample size (None when full-corpus was
-                # requested); sample_rows < k1 records a full-training
-                # fallback from a degenerate sample.
                 "sample_rows": sample_rows,
             },
-            "streams": [_TL_STREAM],
-            # Same fence law as write_ivf_index: a corpus-rebuild caller
-            # (maintain_twolevel_index) passes the highest batch id its
-            # rebuild corpus covered; a from-source build defaults to
-            # the publish-time max (it supersedes everything).
-            "folded_upto": (
-                folded_upto
-                if folded_upto is not None
-                else _max_committed_batch(path, _TL_STREAM)
-            ),
-        },
-        expect_parent=expect_parent,
-    )
-    # Release only pins this function (or its trainer) created: the
-    # caller-supplied ``vectors`` frame stays pinned — its cache is the
-    # caller's to manage (ADVICE r12; maintain_twolevel_index and the
-    # probe scripts rely on their corpus pin surviving this call). The
-    # trainer's input pin (pins[0]) is ours when it is the hash-sample
-    # or a v we built from sf_dir; it is the caller's when vectors was
-    # passed and trained on directly.
-    own_v, *trainer_pins = pins
-    for pinned in (*trainer_pins, cent1):
-        pinned.unpersist()
-    if own_v is not v:
-        own_v.unpersist()  # the train-fraction sample cache is always ours
-    if created:
-        v.unpersist()
-    vacuum_index(path, keep_versions=vacuum_keep)
+            folded_upto=folded_upto,
+        )
+        # pins[0] is the trainer's input — the sample or the corpus,
+        # released by their owners above; the rest are the trainer's.
+        for pinned in (*pins[1:], cent1, assigned):
+            pinned.unpersist()
 
 
 def read_twolevel_centroids(
@@ -1022,13 +1082,9 @@ def read_twolevel_centroids(
 ) -> tuple[DataFrame, DataFrame]:
     """(cent1: gid(=0)/cid/c_q, cent2: gid(=coarse cid)/cid/c_q) at the
     current committed manifest — the two broadcastable routing tables."""
-    m = manifest or _require(path, "twolevel")
-    cent1 = _read_segments(
-        spark, path, [m["segments"]["l1cent"]], m["schemas"]["l1cent"]
-    ).select("gid", "cid", "c_q")
-    cent2 = _read_segments(
-        spark, path, [m["segments"]["l2cent"]], m["schemas"]["l2cent"]
-    ).select("gid", "cid", "c_q")
+    cent1, cent2 = _routers(
+        spark, path, _TWOLEVEL, manifest or _require(path, "twolevel")
+    )
     return cent1, cent2
 
 
@@ -1038,135 +1094,28 @@ def read_twolevel_index(
     include_stream: bool = True,
     manifest: dict | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Load the persisted two-level router at its current manifest:
-    (cent1, cent2, postings: c1/c2/vec_id/fe/nrm). Postings are the
-    manifest's base segments ∪ committed stream batches above the
-    folded_upto fence (stream_ingest_twolevel), same read law as the
-    IVF index. Manifest-recorded schemas throughout — no inference,
-    partition column c1 comes back long with no cast. ``manifest``
-    pins the read to an already-read snapshot (see read_ivf_index)."""
-    m = manifest if manifest is not None else _require(path, "twolevel")
-    cent1, cent2 = read_twolevel_centroids(spark, path, m)
-    postings = _read_segments(
-        spark, path, m["segments"]["postings"], m["schemas"]["postings"]
-    ).select("c1", "c2", "vec_id", "fe", "nrm")
-    if include_stream:
-        batches = _committed_stream_batches(
-            path, _TL_STREAM, above=m.get("folded_upto", -1)
-        )
-        if batches:
-            dirs = [os.path.join(_TL_STREAM, f"ingest_batch={b}") for b in batches]
-            postings = postings.unionByName(
-                _read_segments(spark, path, dirs, m["schemas"]["postings"]).select(
-                    "c1", "c2", "vec_id", "fe", "nrm"
-                )
-            )
-    return cent1, cent2, postings
+    """(cent1, cent2, postings: c1/c2/vec_id/fe/nrm) at the current (or
+    the given) manifest; ``include_stream=False`` skips live stream
+    batches."""
+    cent1, cent2, postings = _read(
+        spark, path, _TWOLEVEL, manifest, None if include_stream else []
+    )
+    return cent1, cent2, postings.select("c1", "c2", "vec_id", "fe", "nrm")
 
 
 def stream_ingest_twolevel(vectors_stream: DataFrame, index_path: str, checkpoint: str):
-    """Streaming router ingest — upsert_twolevel_postings as a
-    Structured Streaming sink, the same memtable-flush shape as
-    stream_ingest_ivf: each micro-batch of vectors (vec_id/fe/nrm)
-    routes under the current-manifest centroids (route_twolevel, two
-    broadcast joins) and lands its own
-    ``postings_stream/ingest_batch=N/`` directory (c1-partitioned,
-    whole-dir overwrite — replay-idempotent; the _SUCCESS marker is the
-    batch's commit record). Readers union committed batches above the
-    manifest's folded_upto fence. Returns the started query; drive with
-    trigger(availableNow=True)."""
-    from ..operators.dedup import route_twolevel
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        m = _require(index_path, "twolevel")
-        cent1, cent2 = read_twolevel_centroids(spark, index_path, m)
-        (
-            route_twolevel(batch_df, cent1, cent2)
-            .select("vec_id", "fe", "nrm", "c2", "c1")
-            .write.mode("overwrite")
-            .partitionBy("c1")
-            .parquet(os.path.join(index_path, _TL_STREAM, f"ingest_batch={batch_id}"))
-        )
-        # Epoch marker for the epoch-gated compaction re-route — both
-        # routing levels name the epoch (see stream_ingest_ivf).
-        _write_batch_epoch(
-            index_path,
-            _TL_STREAM,
-            batch_id,
-            m["segments"]["l1cent"] + "|" + m["segments"]["l2cent"],
-        )
-
-    return (
-        vectors_stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    """Streaming router ingest: each micro-batch of vectors
+    (vec_id/fe/nrm) routes under the current centroids (route_twolevel,
+    two broadcast joins) and lands c1-partitioned in
+    ``postings_stream/ingest_batch=N/``."""
+    return _stream_ingest(vectors_stream, index_path, checkpoint, _TWOLEVEL)
 
 
 def compact_twolevel_index(spark: SparkSession, path: str) -> None:
-    """Fold committed stream segments and accumulated upsert segments
-    into ONE c1-partitioned base segment — compact_ivf_index's law for
-    the router, with the same one-listing + contiguous-prefix fence
-    discipline: only the gap-free run of batch ids above the fence
-    folds, so a late-committing gap batch can never be fenced unfolded;
-    a crash anywhere leaves the previous manifest as the readers'
-    truth. Folded batches are RE-ROUTED under the manifest's centroids
-    (route_twolevel — identity for in-epoch batches, the heal for a
-    batch that landed mid-rebuild under the previous epoch's routing;
-    VERDICT r13 item 4)."""
-    from ..operators.dedup import route_twolevel
-
-    m = _require(path, "twolevel")
-    fence = m.get("folded_upto", -1)
-    batches = _contiguous_prefix(
-        _committed_stream_batches(path, _TL_STREAM, above=fence), fence
-    )
-    if not batches and len(m["segments"]["postings"]) == 1:
-        return
-    cent1, cent2, postings = read_twolevel_index(
-        spark, path, include_stream=False, manifest=m
-    )
-    if batches:
-        # Epoch-gated re-route, same law as compact_ivf_index: batches
-        # routed under the CURRENT two-level centroids fold with their
-        # stored (c1, c2); stale/unknown-epoch batches re-route through
-        # route_twolevel (identity in-epoch, the heal otherwise).
-        epoch = m["segments"]["l1cent"] + "|" + m["segments"]["l2cent"]
-        in_epoch = [
-            b for b in batches if _batch_epoch(path, _TL_STREAM, b) == epoch
-        ]
-        stale = [b for b in batches if b not in in_epoch]
-        if in_epoch:
-            dirs = [os.path.join(_TL_STREAM, f"ingest_batch={b}") for b in in_epoch]
-            postings = postings.unionByName(
-                _read_segments(spark, path, dirs, m["schemas"]["postings"]).select(
-                    "c1", "c2", "vec_id", "fe", "nrm"
-                )
-            )
-        if stale:
-            dirs = [os.path.join(_TL_STREAM, f"ingest_batch={b}") for b in stale]
-            postings = postings.unionByName(
-                route_twolevel(
-                    _read_segments(
-                        spark, path, dirs, m["schemas"]["postings"]
-                    ).select("vec_id", "fe", "nrm"),
-                    cent1,
-                    cent2,
-                ).select("c1", "c2", "vec_id", "fe", "nrm")
-            )
-    ver = _next_version(path)
-    seg = _seg("postings", ver)
-    _sized(
-        postings.select("vec_id", "fe", "nrm", "c2", "c1"), "c1"
-    ).write.mode("overwrite").partitionBy("c1").parquet(os.path.join(path, seg))
-    m2 = dict(m)
-    m2["version"] = ver
-    m2["segments"] = dict(m["segments"])
-    m2["segments"]["postings"] = [seg]
-    m2["folded_upto"] = batches[-1] if batches else fence
-    _publish(path, m2, expect_parent=m["version"])
+    """Fold router stream batches and upserts into one c1-partitioned
+    postings segment; stale batches re-route through route_twolevel
+    under both levels."""
+    _compact(spark, path, _TWOLEVEL)
 
 
 def upsert_twolevel_postings(
@@ -1174,38 +1123,15 @@ def upsert_twolevel_postings(
 ) -> None:
     """Route an increment (vec_id/fe/nrm) under the PERSISTED two-level
     centroids (route_twolevel — the trainer's own final-assign law, two
-    broadcast joins) and commit it as one new postings segment — the
-    daily-ingest path where the trainer term is never paid again. Same
-    idempotent-retry semantics as upsert_ivf_postings: the segment dir
-    is named by its manifest version, a failed run's torn dir is
-    unreferenced and overwritten by the retry; an empty batch commits
-    nothing (the guard pins the batch first — lineage evaluated at most
-    once per partition across guard + write)."""
-    from ..operators.dedup import route_twolevel
+    broadcast joins) and commit it as one postings segment — the
+    daily-ingest path where the trainer term is never paid again."""
+    _upsert(spark, path, _TWOLEVEL, new_vectors)
 
-    nv = new_vectors
-    owned = _pin(nv)
-    try:
-        if nv.isEmpty():
-            return
-        m = _require(path, "twolevel")
-        cent1, cent2 = read_twolevel_centroids(spark, path, m)
-        routed = route_twolevel(nv, cent1, cent2).select(
-            "vec_id", "fe", "nrm", "c2", "c1"
-        )
-        ver = _next_version(path)
-        seg = _seg("postings", ver, "-upsert")
-        _sized(routed, "c1").write.mode("overwrite").partitionBy("c1").parquet(
-            os.path.join(path, seg)
-        )
-        m2 = dict(m)
-        m2["version"] = ver
-        m2["segments"] = dict(m["segments"])
-        m2["segments"]["postings"] = list(m["segments"]["postings"]) + [seg]
-        _publish(path, m2, expect_parent=m["version"])
-    finally:
-        if owned:
-            nv.unpersist()
+
+def _twolevel_buckets(m: dict, postings: DataFrame) -> DataFrame:
+    """The composite (c1, c2) bucket id as ``cid``."""
+    k2 = int(m["params"]["k2"])
+    return postings.select((F.col("c1") * F.lit(k2 + 1) + F.col("c2")).alias("cid"))
 
 
 def twolevel_index_balance(spark: SparkSession, path: str) -> DataFrame:
@@ -1216,105 +1142,34 @@ def twolevel_index_balance(spark: SparkSession, path: str) -> DataFrame:
     corpus scale."""
     from ..operators.kmeans import cell_balance
 
-    _c1, _c2, postings = read_twolevel_index(spark, path)
     m = _require(path, "twolevel")
-    k2 = int(m["params"]["k2"])
-    buckets = postings.select(
-        (F.col("c1") * F.lit(k2 + 1) + F.col("c2")).alias("cid")
-    )
-    return cell_balance(buckets)
+    return cell_balance(_twolevel_buckets(m, _read(spark, path, _TWOLEVEL, m)[-1]))
 
 
 def maintain_twolevel_index(
     spark: SparkSession, path: str, hot_ratio: float = HOT_CELL_RATIO
 ) -> dict:
-    """Audit→retrain loop for the router, symmetric with
-    maintain_ivf_index: if the hottest (c1, c2) bucket exceeds
-    ``hot_ratio`` times the uniform share (pair-generation p99 is set
-    by the LARGEST bucket's occupancy — quadratic in it), retrain BOTH
-    levels over the index's CURRENT corpus (base + upserts + the stream
-    batches committed AT CORPUS-READ TIME) and republish through the
-    manifest. Same fence AND concurrency discipline as
-    maintain_ivf_index: the committed-batch list is captured once with
-    the corpus, its contiguous-prefix end is the fence
-    write_twolevel_index publishes, the publish CASes on the manifest
-    version the corpus was read from (interleaved upsert ⇒ loud
-    ConcurrentWriterError), and a stream batch landing mid-rebuild is
-    re-listed after the publish and healed immediately through
-    compact_twolevel_index's re-route under the rebuilt centroids.
-    Returns {rebuilt, n_buckets, max_share, threshold,
-    healed_batches} — healed_batches is a lower bound at detection
-    time, same caveat as maintain_ivf_index (ADVICE r14)."""
-    from ..operators.kmeans import cell_balance
-
+    """Audit→retrain loop for the router: if the hottest (c1, c2)
+    bucket exceeds ``hot_ratio`` times the uniform share over the
+    non-empty buckets (pair-generation p99 is set by the LARGEST
+    bucket's occupancy — quadratic in it), retrain BOTH levels over the
+    index's current corpus with the manifest's k1/k2/iters. Returns
+    {rebuilt, n_buckets, max_share, threshold, healed_batches}."""
     m = _require(path, "twolevel")
-    fence = m.get("folded_upto", -1)
-    covered = _contiguous_prefix(
-        _committed_stream_batches(path, _TL_STREAM, above=fence), fence
+    p = m["params"]
+    return _maintain(
+        spark, path, _TWOLEVEL, m, hot_ratio,
+        buckets=partial(_twolevel_buckets, m),
+        cells_key="n_buckets",
+        n_cells=None,
+        rebuild=partial(
+            write_twolevel_index, spark, "", path,
+            int(p["k1"]), int(p["k2"]), int(p["iters"]),
+        ),
     )
-    _c1, _c2, postings = read_twolevel_index(
-        spark, path, include_stream=False, manifest=m
-    )
-    if covered:
-        dirs = [os.path.join(_TL_STREAM, f"ingest_batch={b}") for b in covered]
-        postings = postings.unionByName(
-            _read_segments(spark, path, dirs, m["schemas"]["postings"]).select(
-                "c1", "c2", "vec_id", "fe", "nrm"
-            )
-        )
-    k2 = int(m["params"]["k2"])
-    buckets = postings.select(
-        (F.col("c1") * F.lit(k2 + 1) + F.col("c2")).alias("cid")
-    )
-    bal = cell_balance(buckets)
-    stats = bal.agg(
-        F.count(F.lit(1)).alias("nb"),
-        F.max("n_postings").alias("mx"),
-        F.sum("n_postings").alias("tot"),
-    ).collect()[0]
-    n_buckets = stats["nb"] or 0
-    max_share = (stats["mx"] or 0) / max(stats["tot"] or 0, 1)
-    threshold = hot_ratio / max(n_buckets, 1)
-    rebuilt = max_share > threshold
-    healed_batches = 0
-    if rebuilt:
-        corpus = postings.select("vec_id", "fe", "nrm").cache()
-        try:
-            corpus.count()  # pin the old-manifest scan before its vacuum
-            new_fence = covered[-1] if covered else fence
-            write_twolevel_index(
-                spark,
-                sf_dir="",
-                path=path,
-                k1=int(m["params"]["k1"]),
-                k2=k2,
-                iters=int(m["params"]["iters"]),
-                vectors=corpus,
-                folded_upto=new_fence,
-                expect_parent=m["version"],
-            )
-        finally:
-            corpus.unpersist()
-        late = _contiguous_prefix(
-            _committed_stream_batches(path, _TL_STREAM, above=new_fence),
-            new_fence,
-        )
-        if late:
-            healed_batches = len(late)
-            compact_twolevel_index(spark, path)
-    return {
-        "rebuilt": rebuilt,
-        "n_buckets": n_buckets,
-        "max_share": round(max_share, 6),
-        "threshold": round(threshold, 6),
-        "healed_batches": healed_batches,
-    }
 
 
 # --- PQ index -----------------------------------------------------------------
-
-_PQ_CODES_STREAM = "codes_stream"
-_PQ_NORMS_STREAM = "norms_stream"
 
 
 def write_pq_index(
@@ -1326,8 +1181,8 @@ def write_pq_index(
     expect_parent: int | None = None,
 ) -> None:
     """Build the product-quantization index over ``sf_dir``'s embeddings
-    and COMMIT it as a manifest version — the real IVFADC storage shape,
-    where the index IS the compressed corpus:
+    and commit it — the real IVFADC storage shape, where the index IS
+    the compressed corpus:
 
     - ``codebooks-vN/`` — M*K rows (gid, cid, c_q): the per-subspace
       codebook entries; broadcast-sized at any corpus scale.
@@ -1338,263 +1193,63 @@ def write_pq_index(
       the denominator of cosine-via-IP.
 
     Search reads codes + codebooks + norms; raw vectors are fetched (by
-    vec_id, from the source table) ONLY for shortlist rows. A rebuild
-    fences out previous-epoch stream segments exactly like
-    write_ivf_index (their codes carry OLD codebook meanings)."""
+    vec_id, from the source table) ONLY for shortlist rows."""
     from ..operators.kmeans import lloyd_fit_grouped_quantized
-    from ..operators.similarity import (
-        PQ_ITERS,
-        PQ_K,
-        _check_pq_dim,
-        _subvectors,
-        _vectors,
-    )
+    from ..operators.similarity import PQ_ITERS, PQ_K, _check_pq_dim, _subvectors
 
-    if expect_parent is None:
-        pm = current_manifest(path)
-        expect_parent = pm["version"] if pm else 0
-    v = vectors if vectors is not None else _vectors(spark, sf_dir).cache()
-    _check_pq_dim(len(v.select("fe").first()[0]))
-    subs = _subvectors(v, "vec_id", "fe", "sv")
-    codes, cent = lloyd_fit_grouped_quantized(subs, PQ_K, PQ_ITERS)
-    codes = codes.select("gid", "vec_id", "cid")
-    norms = v.select("vec_id", "nrm")
-    ver = _next_version(path)
-    cb_dir = _seg("codebooks", ver)
-    cd_dir = _seg("codes", ver)
-    nm_dir = _seg("norms", ver)
-    _sized(cent).write.mode("overwrite").parquet(os.path.join(path, cb_dir))
-    _sized(codes).write.mode("overwrite").parquet(os.path.join(path, cd_dir))
-    _sized(norms).write.mode("overwrite").parquet(os.path.join(path, nm_dir))
-    fence = max(
-        _max_committed_batch(path, _PQ_CODES_STREAM),
-        _max_committed_batch(path, _PQ_NORMS_STREAM),
-    )
-    _publish(
-        path,
-        {
-            "version": ver,
-            "kind": "pq",
-            "segments": {
-                "codebooks": cb_dir,
-                "codes": [cd_dir],
-                "norms": [nm_dir],
-            },
-            "schemas": {
-                "codebooks": cent.schema.json(),
-                "codes": codes.schema.json(),
-                "norms": norms.schema.json(),
-            },
-            "streams": [_PQ_CODES_STREAM, _PQ_NORMS_STREAM],
-            "folded_upto": fence,
-        },
-        expect_parent=expect_parent,
-    )
-    vacuum_index(path, keep_versions=vacuum_keep)  # rebuild GC, previous epoch retained
+    parent = _parent(path, expect_parent)
+    with _corpus(spark, sf_dir, vectors) as v:
+        _check_pq_dim(len(v.select("fe").first()[0]))
+        codes, cent = lloyd_fit_grouped_quantized(
+            _subvectors(v, "vec_id", "fe", "sv"), PQ_K, PQ_ITERS
+        )
+        frames = {
+            "codebooks": cent,
+            "codes": codes.select("gid", "vec_id", "cid"),
+            "norms": v.select("vec_id", "nrm"),
+        }
+        _build(path, _PQ, parent, frames, vacuum_keep)
 
 
 def upsert_pq_codes(spark: SparkSession, path: str, new_vectors: DataFrame) -> None:
-    """Incremental PQ maintenance: ENCODE ``new_vectors`` (vec_id/fe/
-    nrm) under the index's PERSISTED codebooks (pq_assign — the
-    trainer's exact-BIGINT per-subspace argmin) and commit their codes
-    + norms as new segments in one manifest version. Codebooks are NOT
-    retrained — the incremental law (search over the upserted index ==
-    codes of the union corpus under the OLD codebooks) is what
-    sim_knn_pq_upsert's oracle states. At 100 TB the appended codes are
-    ~1% of the appended vectors' bytes: the daily ingest writes
-    compressed-corpus deltas. Idempotent under retry for the same
-    reason as upsert_ivf_postings (torn segment dirs are unreferenced
-    until the publish). The batch's embedding width is validated
-    HERE — write_pq_index's guard covers only the base build, and a
-    mis-sized batch would otherwise silently write short/ragged
-    subvector codes (round-10 advice)."""
-    from ..operators.kmeans import pq_assign
-    from ..operators.similarity import _check_pq_dim, _subvectors
-
-    nv = new_vectors
-    owned = _pin(nv)
-    try:
-        first = nv.select("fe").first()
-        if first is None:
-            return  # empty batch: nothing to encode, nothing to commit
-        _check_pq_dim(len(first[0]))
-        m = _require(path, "pq")
-        cb = _read_segments(
-            spark, path, [m["segments"]["codebooks"]], m["schemas"]["codebooks"]
-        ).select("gid", "cid", "c_q")
-        subs = _subvectors(nv, "vec_id", "fe", "sv")
-        codes = pq_assign(subs, cb).select("gid", "vec_id", "cid")
-        norms = nv.select("vec_id", "nrm")
-        ver = _next_version(path)
-        cd_seg = _seg("codes", ver, "-upsert")
-        nm_seg = _seg("norms", ver, "-upsert")
-        _sized(codes).write.mode("overwrite").parquet(os.path.join(path, cd_seg))
-        _sized(norms).write.mode("overwrite").parquet(os.path.join(path, nm_seg))
-        m2 = dict(m)
-        m2["version"] = ver
-        m2["segments"] = dict(m["segments"])
-        m2["segments"]["codes"] = list(m["segments"]["codes"]) + [cd_seg]
-        m2["segments"]["norms"] = list(m["segments"]["norms"]) + [nm_seg]
-        _publish(path, m2, expect_parent=m["version"])
-    finally:
-        if owned:
-            nv.unpersist()
+    """ENCODE ``new_vectors`` (vec_id/fe/nrm) under the PERSISTED
+    codebooks (pq_assign — the trainer's exact-BIGINT per-subspace
+    argmin) and commit their codes + norms; sim_knn_pq_upsert's oracle
+    states the law. At 100 TB the appended codes are ~1% of the
+    appended vectors' bytes. A mis-sized batch fails loudly before
+    anything is written."""
+    _upsert(spark, path, _PQ, new_vectors)
 
 
 def stream_ingest_pq(vectors_stream: DataFrame, index_path: str, checkpoint: str):
-    """Streaming PQ ingest — upsert_pq_codes as a Structured Streaming
-    sink, completing the PQ maintenance cycle the IVF index got in
-    round 10: each micro-batch is encoded under the current-manifest
-    codebooks and lands its codes and norms in its OWN
-    ``codes_stream/ingest_batch=N`` + ``norms_stream/ingest_batch=N``
-    directories (whole-dir overwrite = replay-idempotent). A batch is
-    committed only when BOTH directories carry _SUCCESS — codes are
-    written first, so a crash between the two writes leaves the batch
-    invisible until replay completes it. Mis-sized embedding batches
-    fail loudly via the same width guard as upsert_pq_codes. Returns
-    the started query; drive with trigger(availableNow=True)."""
-    from ..operators.kmeans import pq_assign
-    from ..operators.similarity import _check_pq_dim, _subvectors
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        first = batch_df.select("fe").first()
-        if first is None:
-            return
-        _check_pq_dim(len(first[0]))
-        m = _require(index_path, "pq")
-        cb = _read_segments(
-            spark,
-            index_path,
-            [m["segments"]["codebooks"]],
-            m["schemas"]["codebooks"],
-        ).select("gid", "cid", "c_q")
-        subs = _subvectors(batch_df, "vec_id", "fe", "sv")
-        (
-            pq_assign(subs, cb)
-            .select("gid", "vec_id", "cid")
-            .write.mode("overwrite")
-            .parquet(
-                os.path.join(
-                    index_path, _PQ_CODES_STREAM, f"ingest_batch={batch_id}"
-                )
-            )
-        )
-        (
-            batch_df.select("vec_id", "nrm")
-            .write.mode("overwrite")
-            .parquet(
-                os.path.join(
-                    index_path, _PQ_NORMS_STREAM, f"ingest_batch={batch_id}"
-                )
-            )
-        )
-
-    return (
-        vectors_stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _pq_live_batches(path: str, fence: int) -> list[int]:
-    """Batches committed in BOTH pq streams above the fence."""
-    cd = set(_committed_stream_batches(path, _PQ_CODES_STREAM, above=fence))
-    nm = set(_committed_stream_batches(path, _PQ_NORMS_STREAM, above=fence))
-    return sorted(cd & nm)
+    """Streaming PQ ingest: each micro-batch is encoded under the
+    current codebooks and lands in ``codes_stream/ingest_batch=N`` +
+    ``norms_stream/ingest_batch=N``, codes first. Mis-sized embedding
+    batches fail loudly via upsert_pq_codes' width guard."""
+    return _stream_ingest(vectors_stream, index_path, checkpoint, _PQ)
 
 
 def compact_pq_index(spark: SparkSession, path: str) -> None:
-    """Fold committed PQ stream segments + upsert segments into one
-    codes segment and one norms segment — compact_ivf_index's law for
-    the compressed corpus. Same one-step crash discipline: write the
-    folded dirs under the next version, publish a manifest whose fence
-    is the highest batch the snapshot read; batches landing later sit
-    above the fence and stay live; nothing is deleted until vacuum."""
-    m = _require(path, "pq")
-    fence = m.get("folded_upto", -1)
-    # Same single-listing + contiguous-prefix discipline as
-    # compact_ivf_index: fold exactly the gap-free run above the fence,
-    # publish exactly its max as the fence — a late-committing gap
-    # batch can never be fenced unfolded.
-    batches = _contiguous_prefix(_pq_live_batches(path, fence), fence)
-    if (
-        not batches
-        and len(m["segments"]["codes"]) == 1
-        and len(m["segments"]["norms"]) == 1
-    ):
-        return
-    cb, codes, norms = read_pq_index(spark, path, include_stream=False)
-    if batches:
-        cd_dirs = [
-            os.path.join(_PQ_CODES_STREAM, f"ingest_batch={b}") for b in batches
-        ]
-        nm_dirs = [
-            os.path.join(_PQ_NORMS_STREAM, f"ingest_batch={b}") for b in batches
-        ]
-        codes = codes.unionByName(
-            _read_segments(spark, path, cd_dirs, m["schemas"]["codes"]).select(
-                "gid", "vec_id", "cid"
-            )
-        )
-        norms = norms.unionByName(
-            _read_segments(spark, path, nm_dirs, m["schemas"]["norms"]).select(
-                "vec_id", "nrm"
-            )
-        )
-    ver = _next_version(path)
-    cd_seg, nm_seg = _seg("codes", ver), _seg("norms", ver)
-    _sized(codes).write.mode("overwrite").parquet(os.path.join(path, cd_seg))
-    _sized(norms).write.mode("overwrite").parquet(os.path.join(path, nm_seg))
-    m2 = dict(m)
-    m2["version"] = ver
-    m2["segments"] = dict(m["segments"])
-    m2["segments"]["codes"] = [cd_seg]
-    m2["segments"]["norms"] = [nm_seg]
-    m2["folded_upto"] = batches[-1] if batches else fence
-    _publish(path, m2, expect_parent=m["version"])
+    """Fold PQ stream batches and upserts into one codes and one norms
+    segment. Stored codes fold as they are: codes keep no fe, so they
+    cannot be re-encoded, and PQ batches carry no epoch marker."""
+    _compact(spark, path, _PQ)
 
 
 def read_pq_index(
-    spark: SparkSession, path: str, include_stream: bool = True
+    spark: SparkSession,
+    path: str,
+    include_stream: bool = True,
+    manifest: dict | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Load the persisted PQ index at its current manifest: (codebooks:
-    gid/cid/c_q, codes: gid/vec_id/cid, norms: vec_id/nrm), unioning
-    committed stream batches above the folded_upto fence."""
-    m = _require(path, "pq")
-    cb = _read_segments(
-        spark, path, [m["segments"]["codebooks"]], m["schemas"]["codebooks"]
-    ).select("gid", "cid", "c_q")
-    codes = _read_segments(
-        spark, path, m["segments"]["codes"], m["schemas"]["codes"]
-    ).select("gid", "vec_id", "cid")
-    norms = _read_segments(
-        spark, path, m["segments"]["norms"], m["schemas"]["norms"]
-    ).select("vec_id", "nrm")
-    if include_stream:
-        batches = _pq_live_batches(path, m.get("folded_upto", -1))
-        if batches:
-            cd_dirs = [
-                os.path.join(_PQ_CODES_STREAM, f"ingest_batch={b}") for b in batches
-            ]
-            nm_dirs = [
-                os.path.join(_PQ_NORMS_STREAM, f"ingest_batch={b}") for b in batches
-            ]
-            codes = codes.unionByName(
-                _read_segments(spark, path, cd_dirs, m["schemas"]["codes"]).select(
-                    "gid", "vec_id", "cid"
-                )
-            )
-            norms = norms.unionByName(
-                _read_segments(spark, path, nm_dirs, m["schemas"]["norms"]).select(
-                    "vec_id", "nrm"
-                )
-            )
-    return cb, codes, norms
+    """(codebooks: gid/cid/c_q, codes: gid/vec_id/cid, norms: vec_id/nrm)
+    at the current (or the given) manifest; ``include_stream=False``
+    skips live stream batches."""
+    return _read(spark, path, _PQ, manifest, None if include_stream else [])
 
 
 # --- MinHash band index ---------------------------------------------------------
+
 
 def write_minhash_index(
     spark: SparkSession,
@@ -1603,114 +1258,43 @@ def write_minhash_index(
     vacuum_keep: int = 2,
     expect_parent: int | None = None,
 ) -> None:
-    """Persist the HISTORICAL corpus's MinHash dedup index and COMMIT it
-    through the same manifest mechanism: signatures-vN/ (doc_id,
-    mh0..mh15) for verification joins and bands-vN/ (partitioned by
-    band_id) for candidate generation. The dedup counterpart of the IVF
-    index: at 100 TB the historical band table is what a daily
-    increment joins against — it must be an artifact, not a per-run
-    recomputation of corpus-wide signatures (one md5 per (doc, shingle)
-    over 100 TB per day is the bill the inline dedup_incremental_lsh
-    pays and this removes). History here = doc_id % INCR_MOD != 0,
-    matching the incremental fixture split."""
-    from ..operators.dedup import INCR_MOD, _band_frame, _signatures
+    """Persist the HISTORICAL corpus's MinHash dedup index:
+    signatures-vN/ (doc_id, mh0..mh15) for verification joins and
+    bands-vN/ (partitioned by band_id) for candidate generation. The
+    dedup counterpart of the IVF index: at 100 TB the historical band
+    table is what a daily increment joins against — it must be an
+    artifact, not a per-run recomputation of corpus-wide signatures
+    (one md5 per (doc, shingle) over 100 TB per day is the bill the
+    inline dedup_incremental_lsh pays and this removes). History here =
+    doc_id % INCR_MOD != 0, matching the incremental fixture split."""
+    from ..operators.dedup import INCR_MOD, _signatures
 
+    parent = _parent(path, expect_parent)
     hist_sig = _signatures(spark, sf_dir).filter(F.col("doc_id") % INCR_MOD != 0)
-    bands = _band_frame(hist_sig)
-    ver = _next_version(path)
-    sig_dir, band_dir = _seg("signatures", ver), _seg("bands", ver)
-    _sized(hist_sig).write.mode("overwrite").parquet(os.path.join(path, sig_dir))
-    _sized(bands, "band_id").write.mode("overwrite").partitionBy("band_id").parquet(
-        os.path.join(path, band_dir)
-    )
-    _publish(
-        path,
-        {
-            "version": ver,
-            "kind": "minhash",
-            "segments": {"signatures": [sig_dir], "bands": [band_dir]},
-            "schemas": {
-                "signatures": hist_sig.schema.json(),
-                "bands": bands.schema.json(),
-            },
-            "streams": [],
-            "folded_upto": -1,
-        },
-        expect_parent=(
-            expect_parent
-            if expect_parent is not None
-            else ((current_manifest(path) or {"version": 0})["version"])
-        ),
-    )
-    vacuum_index(path, keep_versions=vacuum_keep)  # rebuild GC, previous epoch retained
+    sigs, bands = _route_minhash(hist_sig)
+    _build(path, _MINHASH, parent, {"signatures": sigs, "bands": bands}, vacuum_keep)
 
 
 def upsert_minhash_index(
     spark: SparkSession, path: str, new_sigs: DataFrame
 ) -> None:
-    """Append a verdict batch's signatures + bands as new segments — the
-    daily step after an increment's KEEP verdicts land: today's kept
-    docs become tomorrow's history. One manifest commit, idempotent
-    under retry like the other upserts."""
-    from ..operators.dedup import _band_frame
-
-    m = _require(path, "minhash")
-    # Pin: the batch feeds BOTH the signature and the band write.
-    ns = new_sigs
-    owned = _pin(ns)
-    try:
-        bands = _band_frame(ns)
-        ver = _next_version(path)
-        sig_seg = _seg("signatures", ver, "-upsert")
-        band_seg = _seg("bands", ver, "-upsert")
-        _sized(ns).write.mode("overwrite").parquet(os.path.join(path, sig_seg))
-        _sized(bands, "band_id").write.mode("overwrite").partitionBy("band_id").parquet(
-            os.path.join(path, band_seg)
-        )
-        m2 = dict(m)
-        m2["version"] = ver
-        m2["segments"] = dict(m["segments"])
-        m2["segments"]["signatures"] = list(m["segments"]["signatures"]) + [
-            sig_seg
-        ]
-        m2["segments"]["bands"] = list(m["segments"]["bands"]) + [band_seg]
-        _publish(path, m2, expect_parent=m["version"])
-    finally:
-        if owned:
-            ns.unpersist()
+    """Append a verdict batch's signatures + bands — the daily step
+    after an increment's KEEP verdicts land: today's kept docs become
+    tomorrow's history."""
+    _upsert(spark, path, _MINHASH, new_sigs)
 
 
 def compact_minhash_index(spark: SparkSession, path: str) -> None:
     """Fold accumulated signature/band upsert segments into one segment
     each — band-side file count is what the increment's band join
     lists, so a long-appended index pays open overhead per (segment,
-    band_id) until compaction. Same one-step publish discipline."""
-    m = _require(path, "minhash")
-    if len(m["segments"]["signatures"]) == 1 and len(m["segments"]["bands"]) == 1:
-        return
-    sigs, bands = read_minhash_index(spark, path)
-    ver = _next_version(path)
-    sig_seg, band_seg = _seg("signatures", ver), _seg("bands", ver)
-    _sized(sigs).write.mode("overwrite").parquet(os.path.join(path, sig_seg))
-    _sized(bands, "band_id").write.mode("overwrite").partitionBy("band_id").parquet(
-        os.path.join(path, band_seg)
-    )
-    m2 = dict(m)
-    m2["version"] = ver
-    m2["segments"] = {"signatures": [sig_seg], "bands": [band_seg]}
-    _publish(path, m2, expect_parent=m["version"])
+    band_id) until compaction."""
+    _compact(spark, path, _MINHASH)
 
 
 def read_minhash_index(
-    spark: SparkSession, path: str
+    spark: SparkSession, path: str, manifest: dict | None = None
 ) -> tuple[DataFrame, DataFrame]:
-    """Load the persisted MinHash index at its current manifest:
-    (signatures: doc_id/mh*, bands: doc_id/band_key/band_id)."""
-    m = _require(path, "minhash")
-    sigs = _read_segments(
-        spark, path, m["segments"]["signatures"], m["schemas"]["signatures"]
-    )
-    bands = _read_segments(
-        spark, path, m["segments"]["bands"], m["schemas"]["bands"]
-    ).select("doc_id", "band_id", "band_key")
-    return sigs, bands
+    """(signatures: doc_id/mh*, bands: doc_id/band_id/band_key) at the
+    current (or the given) manifest."""
+    return _read(spark, path, _MINHASH, manifest)

@@ -7,6 +7,8 @@ state loses nothing), and (b) the query-side plan contains no trainer
 
 from __future__ import annotations
 
+import pytest
+
 from nrg_etl_airflow_spark_emr_spark.plans.catalog import all_specs
 
 SPECS = all_specs()
@@ -1128,6 +1130,51 @@ def test_twolevel_empty_upsert_commits_nothing(spark, sf_dir, tmp_path):
     empty = _vectors(spark, sf_dir).select("vec_id", "fe", "nrm").limit(0)
     upsert_twolevel_postings(spark, path, empty)
     assert current_manifest(path)["version"] == before
+
+
+def test_minhash_empty_upsert_commits_nothing(spark, sf_dir, tmp_path):
+    """An empty verdict batch commits no version and no data-less
+    -upsert segments, the same quiet-day guard as the vector indexes."""
+    from nrg_etl_airflow_spark_emr_spark.operators.dedup import _signatures
+    from nrg_etl_airflow_spark_emr_spark.sources.ann_index import (
+        current_manifest,
+        upsert_minhash_index,
+        write_minhash_index,
+    )
+
+    path = str(tmp_path / "mh")
+    write_minhash_index(spark, sf_dir, path)
+    before = current_manifest(path)
+    upsert_minhash_index(spark, path, _signatures(spark, sf_dir).limit(0))
+    after = current_manifest(path)
+    assert after["version"] == before["version"]
+    assert after["segments"]["signatures"] == before["segments"]["signatures"]
+    assert after["segments"]["bands"] == before["segments"]["bands"]
+
+
+@pytest.mark.parametrize("kind", ["ivf", "twolevel", "pq", "minhash"])
+def test_build_from_source_releases_its_cache(spark, sf_dir, tmp_path, kind):
+    """A build over ``sf_dir`` (no caller frame) caches its corpus and
+    must release every pin it created: the session's cache manager is
+    empty after the build."""
+    from nrg_etl_airflow_spark_emr_spark.operators.dedup import (
+        _TL_ITERS,
+        _TL_K1,
+        _TL_K2,
+    )
+    from nrg_etl_airflow_spark_emr_spark.sources import ann_index as ai
+
+    builds = {
+        "ivf": lambda p: ai.write_ivf_index(spark, sf_dir, p),
+        "twolevel": lambda p: ai.write_twolevel_index(
+            spark, sf_dir, p, _TL_K1, _TL_K2, _TL_ITERS
+        ),
+        "pq": lambda p: ai.write_pq_index(spark, sf_dir, p),
+        "minhash": lambda p: ai.write_minhash_index(spark, sf_dir, p),
+    }
+    spark.catalog.clearCache()
+    builds[kind](str(tmp_path / kind))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 from hypothesis import given, settings
