@@ -91,7 +91,7 @@ from dataclasses import dataclass
 from functools import partial, reduce
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -442,13 +442,16 @@ class _Segment:
 class _Layout:
     """An index kind. ``route(frame, *routers)`` places new rows under
     the manifest's router frames, returning one frame per data segment;
-    ``epoch`` kinds record the routing epoch on stream batches and
-    re-route stale ones at compaction."""
+    ``check(row)``, when set, validates a new batch from its first row
+    before anything is routed or written; ``epoch`` kinds record the
+    routing epoch on stream batches and re-route stale ones at
+    compaction."""
 
     kind: str
     routers: tuple[_Segment, ...]
     data: tuple[_Segment, ...]
     route: Callable[..., tuple[DataFrame, ...]]
+    check: Callable[[Row], None] | None = None
     epoch: bool = False
 
     @property
@@ -475,18 +478,20 @@ def _route_twolevel(
 
 
 def _route_pq(v: DataFrame, cb: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Encode under the codebooks. The batch's embedding width is
-    validated first — the build's guard covers only the base, and a
-    mis-sized batch would otherwise silently write short/ragged
-    subvector codes (round-10 advice)."""
     from ..operators.kmeans import pq_assign
-    from ..operators.similarity import _check_pq_dim, _subvectors
+    from ..operators.similarity import _subvectors
 
-    first = v.select("fe").first()
-    if first is not None:
-        _check_pq_dim(len(first[0]))
     codes = pq_assign(_subvectors(v, "vec_id", "fe", "sv"), cb)
     return codes.select("gid", "vec_id", "cid"), v.select("vec_id", "nrm")
+
+
+def _check_pq(row: Row) -> None:
+    """A new batch's embedding width — the build's guard covers only the
+    base, and a mis-sized batch would otherwise silently write
+    short/ragged subvector codes (round-10 advice)."""
+    from ..operators.similarity import _check_pq_dim
+
+    _check_pq_dim(len(row["fe"]))
 
 
 def _route_minhash(sigs: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -517,6 +522,7 @@ _PQ = _Layout(
         _Segment("norms", ("vec_id", "nrm"), stream="norms_stream"),
     ),
     _route_pq,
+    check=_check_pq,
 )
 _MINHASH = _Layout(
     "minhash",
@@ -592,15 +598,15 @@ def _commit(
     frames: dict[str, DataFrame],
     append: bool = False,
     fence: int | None = None,
-    suffix: str = "",
 ) -> None:
     """Commit the successor of manifest ``base``: claim the next version,
     write each of ``frames`` as its versioned segment, then publish with
     a CAS on ``expect_parent``. A written router segment replaces the
-    old one; a data segment is appended to its list (``append``) or
-    replaces the list. ``fence`` moves folded_upto; a build's base
-    carries folded_upto None, which resolves to the max batch committed
-    at publish time (a from-source build supersedes them all).
+    old one; a data segment is appended to its list (``append``, as a
+    ``-upsert`` segment) or replaces the list. ``fence`` moves
+    folded_upto; a build's base carries folded_upto None, which resolves
+    to the max batch committed at publish time (a from-source build
+    supersedes them all).
     A crash anywhere before the publish leaves ``base`` the readers'
     truth and the written dirs torn and unreferenced — a retry claims a
     fresh version, so the commit is idempotent under retry."""
@@ -612,6 +618,7 @@ def _commit(
         "schemas": dict(base["schemas"]),
     }
     routers = {r.name for r in layout.routers}
+    suffix = "-upsert" if append else ""
     parts = {s.name: s.part for s in (*layout.routers, *layout.data)}
     for name, df in frames.items():
         seg = _seg(name, ver, suffix)
@@ -730,18 +737,22 @@ def _upsert(spark: SparkSession, path: str, layout: _Layout, batch: DataFrame) -
     under the OLD routers) the *_upsert oracles state; the routers are
     never retrained here. At 100 TB a daily ingest writes a few files
     of its own segments, never rewriting the corpus. An empty batch
-    commits nothing — no data-less segment, no manifest churn. The
-    batch is pinned first, so its lineage is evaluated at most once per
-    partition across guard + route + write; only a pin this call
-    created is released."""
+    commits nothing — no data-less segment, no manifest churn. One
+    action fetches the batch's first row for both the empty guard and
+    the layout's ``check``. The batch is pinned first, so its lineage is
+    evaluated at most once per partition across guard + route + write;
+    only a pin this call created is released."""
     owned = _pin(batch)
     try:
-        if batch.isEmpty():
+        head = batch.first()
+        if head is None:
             return
+        if layout.check:
+            layout.check(head)
         m = _require(path, layout.kind)
         routed = layout.route(batch, *_routers(spark, path, layout, m))
         frames = {d.name: df for d, df in zip(layout.data, routed)}
-        _commit(path, layout, m, m["version"], frames, append=True, suffix="-upsert")
+        _commit(path, layout, m, m["version"], frames, append=True)
     finally:
         if owned:
             batch.unpersist()
@@ -764,6 +775,9 @@ def _stream_ingest(
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
         m = _require(index_path, layout.kind)
         routers = _routers(batch_df.sparkSession, index_path, layout, m)
+        head = batch_df.first() if layout.check else None
+        if head is not None:
+            layout.check(head)
         for d, df in zip(layout.data, layout.route(batch_df, *routers)):
             _write(df, os.path.join(index_path, _batch_dir(d.stream, batch_id)), d.part)
         if layout.epoch:
@@ -1224,8 +1238,9 @@ def upsert_pq_codes(spark: SparkSession, path: str, new_vectors: DataFrame) -> N
 def stream_ingest_pq(vectors_stream: DataFrame, index_path: str, checkpoint: str):
     """Streaming PQ ingest: each micro-batch is encoded under the
     current codebooks and lands in ``codes_stream/ingest_batch=N`` +
-    ``norms_stream/ingest_batch=N``, codes first. Mis-sized embedding
-    batches fail loudly via upsert_pq_codes' width guard."""
+    ``norms_stream/ingest_batch=N``, codes first. A mis-sized embedding
+    batch fails loudly on the same width check as upsert_pq_codes,
+    before its batch dirs are written."""
     return _stream_ingest(vectors_stream, index_path, checkpoint, _PQ)
 
 
@@ -1237,15 +1252,12 @@ def compact_pq_index(spark: SparkSession, path: str) -> None:
 
 
 def read_pq_index(
-    spark: SparkSession,
-    path: str,
-    include_stream: bool = True,
-    manifest: dict | None = None,
+    spark: SparkSession, path: str, include_stream: bool = True
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(codebooks: gid/cid/c_q, codes: gid/vec_id/cid, norms: vec_id/nrm)
-    at the current (or the given) manifest; ``include_stream=False``
-    skips live stream batches."""
-    return _read(spark, path, _PQ, manifest, None if include_stream else [])
+    at the current manifest; ``include_stream=False`` skips live stream
+    batches."""
+    return _read(spark, path, _PQ, batches=None if include_stream else [])
 
 
 # --- MinHash band index ---------------------------------------------------------
@@ -1293,8 +1305,8 @@ def compact_minhash_index(spark: SparkSession, path: str) -> None:
 
 
 def read_minhash_index(
-    spark: SparkSession, path: str, manifest: dict | None = None
+    spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame]:
     """(signatures: doc_id/mh*, bands: doc_id/band_id/band_key) at the
-    current (or the given) manifest."""
-    return _read(spark, path, _MINHASH, manifest)
+    current manifest."""
+    return _read(spark, path, _MINHASH)
