@@ -125,20 +125,21 @@ def evaluate(tables: dict[str, DataFrame], checks: list[Check]) -> list[dict[str
             .agg(*[c.agg.cast("long").alias(f"c{i}") for i, c in enumerate(tchecks)])
             .collect()[0]
         )
-        for i, c in enumerate(tchecks):
-            actual = int(row[i])
-            passed = bool(_OPS[c.op](actual, c.expected))
-            results.append(
-                {
-                    "check": c.name,
-                    "table": c.table,
-                    "op": c.op,
-                    "expected": c.expected,
-                    "actual": actual,
-                    "passed": passed,
-                }
-            )
+        results.extend(_result(c, row[i]) for i, c in enumerate(tchecks))
     return results
+
+
+def _result(c: Check, value: Any) -> dict[str, Any]:
+    """One check's JSON-safe result dict (plain Python scalars, B2/B7)."""
+    actual = int(value)
+    return {
+        "check": c.name,
+        "table": c.table,
+        "op": c.op,
+        "expected": c.expected,
+        "actual": actual,
+        "passed": bool(_OPS[c.op](actual, c.expected)),
+    }
 
 
 def write_report(results: list[dict[str, Any]], path: str) -> dict[str, Any]:
@@ -216,20 +217,7 @@ def evaluate_observed(
     else:
         action(observed)
     got = obs.get
-    results = []
-    for i, c in enumerate(checks):
-        actual = int(got[f"c{i}"])
-        results.append(
-            {
-                "check": c.name,
-                "table": c.table,
-                "op": c.op,
-                "expected": c.expected,
-                "actual": actual,
-                "passed": bool(_OPS[c.op](actual, c.expected)),
-            }
-        )
-    return results
+    return [_result(c, got[f"c{i}"]) for i, c in enumerate(checks)]
 
 
 def audit_frame(df: DataFrame, checks: list[Check]) -> DataFrame:
@@ -257,19 +245,12 @@ def audit_frame(df: DataFrame, checks: list[Check]) -> DataFrame:
     stacked = row.selectExpr(
         f"stack({len(checks)}, {parts}) AS (check_name, actual, expected, op)"
     )
-    # One branch per _OPS entry, so audit_frame can never score a subset of
-    # the operators Check/__post_init__/evaluate accept. Checks were
+    # One branch per _OPS entry (its lambdas work on Columns as on ints),
+    # so audit_frame scores exactly the operators Check accepts. Checks were
     # validated at construction, so the chain is total — no otherwise(NULL)
     # for an unscored verdict to hide behind.
-    _COLUMN_OPS = {
-        "==": lambda a, e: a == e,
-        "!=": lambda a, e: a != e,
-        "<=": lambda a, e: a <= e,
-        ">=": lambda a, e: a >= e,
-    }
-    assert set(_COLUMN_OPS) == set(_OPS), "audit_frame op table drifted from _OPS"
     passed = None
-    for op, fn in sorted(_COLUMN_OPS.items()):
+    for op, fn in sorted(_OPS.items()):
         branch = (F.col("op") == op, fn(F.col("actual"), F.col("expected")))
         passed = F.when(*branch) if passed is None else passed.when(*branch)
     return stacked.select("check_name", "actual", "expected", "op", passed.alias("passed"))

@@ -47,11 +47,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     SURVEY.md §2.1 S4."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    for c in NANOS_TS_COLS.get(name, ()):
-        dt = dict(df.dtypes).get(c)
-        if dt == "bigint":
+    return _normalize_ts(df, NANOS_TS_COLS.get(name, ()))
+
+
+def _normalize_ts(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
+    """Apply the NANOS_TS_COLS rule to ``cols`` of a batch or streaming
+    frame: long nanos and TIMESTAMP_NTZ both become TimestampType. Reads
+    only the schema, so it runs no job."""
+    dtypes = dict(df.dtypes)
+    for c in cols:
+        if dtypes.get(c) == "bigint":
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-        elif dt == "timestamp_ntz":
+        elif dtypes.get(c) == "timestamp_ntz":
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
 

@@ -7,6 +7,16 @@ over ``events`` (streaming/jobs.py); each stateful shape here is the
 window/session/dedup semantics themselves are correctness-gated. The
 streaming tests then assert stream-vs-batch equality, closing the loop:
 oracle ⇔ batch twin ⇔ streaming job.
+
+One transform runs on both sources: a twin calls the streaming job's own
+function on the static ``events`` table, whose watermark the analyzer
+removes. A twin keeps its own body only where batch semantics differ —
+``st_dedup_first`` and ``st_dedup_within_watermark`` (batch
+``dropDuplicates`` keeps an arbitrary row, so they use ``row_number``),
+``st_user_totals`` and ``st_session_timeout`` (their jobs are
+``applyInPandasWithState`` kernels, the latter with GroupState
+timeouts). ``st_sliding_2d_1d``, ``events_rollup_two_level`` and
+``events_retention_cohorts`` have no streaming job.
 """
 
 from __future__ import annotations
@@ -15,11 +25,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import jobs
 from ..operators._util import dsum, sql_dsum, t
+from ..operators.temporal import SESSION_GAP_US, sessionize
 from ..plans.catalog import register
 
-SESSION_GAP = "30 minutes"
-TS_FMT = "yyyy-MM-dd HH:mm:ss"
 SQL_TS_FMT = "%Y-%m-%d %H:%M:%S"
 
 
@@ -35,22 +45,14 @@ SQL_TS_FMT = "%Y-%m-%d %H:%M:%S"
     """,
     tags=("streaming", "agg"),
     bench=True,
-    doc="Tumbling 1-day window aggregate (batch twin of the streaming "
-    "job). In streaming this runs with a watermark and incremental state; "
-    "the grouping semantics are identical, which is what the oracle pins.",
+    doc="Tumbling 1-day window aggregate: the streaming job "
+    "(streaming/jobs.py tumbling_daily) run on the static table. In "
+    "streaming it runs with a watermark and incremental state; in batch "
+    "the analyzer drops the watermark, and the grouping the oracle pins "
+    "is the same.",
 )
 def st_tumbling_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 day").alias("win"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
-        .select(
-            F.col("win.start").cast("date").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
+    return jobs.tumbling_daily(t(spark, sf_dir, "events"))
 
 
 @register(
@@ -156,16 +158,7 @@ def st_sliding_2d_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     "previous event is ≥ 30 min, matching Spark's strict-< merge rule.",
 )
 def st_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.session_window("ts", SESSION_GAP).alias("win"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.date_format("win.start", TS_FMT).alias("session_start"),
-            "n_events",
-        )
-    )
+    return jobs.session_windows(t(spark, sf_dir, "events"))
 
 
 @register(
@@ -194,7 +187,7 @@ def st_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             "event_type",
             "event_id",
-            F.date_format("ts", TS_FMT).alias("first_ts"),
+            F.date_format("ts", jobs.TS_FMT).alias("first_ts"),
             F.row_number().over(w).alias("rn"),
         )
         .filter(F.col("rn") == 1)
@@ -202,7 +195,6 @@ def st_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GAP_US = 30 * 60 * 1_000_000  # sessionize gap (operators/temporal.py)
 _WM_US = 30 * 60 * 1_000_000  # session_close_on_timeout watermark delay
 
 
@@ -239,10 +231,10 @@ _WM_US = 30 * 60 * 1_000_000  # session_close_on_timeout watermark delay
     SELECT user_id, session_start_us, session_end_us, n_events
     FROM marked
     WHERE session_end_us < last_end
-       OR (session_end_us + {_GAP_US}) // 1000 < gmax // 1000 - {_WM_US // 1000}
+       OR (session_end_us + {SESSION_GAP_US}) // 1000 < gmax // 1000 - {_WM_US // 1000}
     """,
     tags=("streaming", "agg", "session"),
-    doc="Batch twin of session_close_on_timeout (streaming/jobs.py:236): "
+    doc="Batch twin of session_close_on_timeout (streaming/jobs.py): "
     "the deterministic set of sessions a full availableNow replay emits. "
     "A session is CLOSED either by data (a later out-of-gap event exists "
     "for the user, i.e. it is not the user's last session) or by event-"
@@ -253,8 +245,6 @@ _WM_US = 30 * 60 * 1_000_000  # session_close_on_timeout watermark delay
     "int64 microseconds.",
 )
 def st_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.temporal import sessionize
-
     ev = t(spark, sf_dir, "events")
     sessions = sessionize(ev)
     gmax = ev.agg(F.max(F.unix_micros("ts")).alias("gmax"))
@@ -265,7 +255,7 @@ def st_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (timeout_ms < wm_ms), with wm_ms itself floored from the max event
     # time. An inclusive µs comparison would close sessions the real
     # stream never times out at the equality/sub-millisecond boundary.
-    timeout_fired = F.expr(f"(session_end_us + {_GAP_US}) div 1000") < (
+    timeout_fired = F.expr(f"(session_end_us + {SESSION_GAP_US}) div 1000") < (
         F.expr("gmax div 1000") - _WM_US // 1000
     )
     return (
@@ -313,26 +303,7 @@ def st_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the streaming form expire join state past the watermark.",
 )
 def st_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    return (
-        clicks.join(
-            purchases,
-            (F.col("user_id") == F.col("p_user_id"))
-            & (F.col("purchase_ts") > F.col("click_ts"))
-            & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-        )
-        .select("click_id", "purchase_id", "user_id")
-    )
+    return jobs.click_purchase_join(t(spark, sf_dir, "events"))
 
 
 @register(
@@ -349,12 +320,8 @@ def st_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "re-used by every micro-batch.",
 )
 def st_mktsegment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = t(spark, sf_dir, "events")
-    cust = t(spark, sf_dir, "customer")
-    return (
-        ev.join(F.broadcast(cust), F.col("user_id") == F.col("c_custkey"))
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n_events"))
+    return jobs.enrich_with_customers(
+        t(spark, sf_dir, "events"), t(spark, sf_dir, "customer")
     )
 
 
@@ -426,24 +393,7 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "one user_id exchange, state bounded by watermark + range.",
 )
 def st_click_purchase_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    return clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") > F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-        "left",
-    ).select("click_id", "user_id", "purchase_id")
+    return jobs.click_purchase_left_join(t(spark, sf_dir, "events"))
 
 
 @register(
@@ -483,7 +433,7 @@ def st_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.to_date("ts").alias("day"),
             "event_id",
-            F.date_format("ts", TS_FMT).alias("first_ts"),
+            F.date_format("ts", jobs.TS_FMT).alias("first_ts"),
             F.row_number().over(w).alias("rn"),
         )
         .filter(F.col("rn") == 1)
@@ -516,25 +466,4 @@ def st_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     "watermark + join range.",
 )
 def st_click_purchase_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    return clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") > F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-        "full",
-    ).select(
-        "click_id",
-        F.coalesce(F.col("user_id"), F.col("p_user_id")).alias("uid"),
-        "purchase_id",
-    )
+    return jobs.click_purchase_full_join(t(spark, sf_dir, "events"))

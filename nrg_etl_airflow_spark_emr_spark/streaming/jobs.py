@@ -1,10 +1,26 @@
 """Structured Streaming jobs over the ``events`` table (SURVEY.md §7 M4).
 
 Real ``readStream`` pipelines: file-source replay of the events parquet →
-watermarked stateful operators → any sink. Each job is the streaming form
-of a batch twin in ``batch_equiv.py``; tests drive them with
-``trigger(availableNow=True)`` into a memory sink and assert equality
-with the batch result, which the DuckDB oracle has already pinned.
+watermarked stateful operators → any sink.
+
+One transform runs on both sources. Each function here takes an events
+frame, streaming or static: on a stream the watermark bounds state, and
+on a static frame Spark's analyzer drops the watermark
+(``EliminateEventTimeWatermark``), so the oracle-gated catalog rows in
+``batch_equiv.py`` call these same functions on the batch ``events``
+table. A batch twin keeps its own body only where batch semantics
+differ from the streaming job:
+
+- ``st_dedup_first`` / ``st_dedup_within_watermark``: batch
+  ``dropDuplicates`` keeps an arbitrary row, so the twin pins
+  keep-earliest with ``row_number``;
+- ``st_user_totals`` / ``st_session_timeout``: the streaming jobs run
+  ``applyInPandasWithState`` kernels (the latter with GroupState
+  event-time timeouts), which have no batch form.
+
+Tests drive the jobs with ``trigger(availableNow=True)`` into a memory
+sink and assert equality with the batch result, which the DuckDB oracle
+has already pinned.
 
 Scale notes: watermarks bound state (without one, windowed aggregation
 state grows forever); ``availableNow`` gives batch-like backfill with
@@ -25,8 +41,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .batch_equiv import SESSION_GAP, TS_FMT
 from ..operators._util import dsum
+from ..operators.temporal import SESSION_GAP_US
+from ..sources.tables import NANOS_TS_COLS, _normalize_ts
+
+SESSION_GAP = f"{SESSION_GAP_US // 60_000_000} minutes"
+TS_FMT = "yyyy-MM-dd HH:mm:ss"
+
 
 def events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
     """File-source streaming read of the events fixture.
@@ -36,8 +57,8 @@ def events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int |
     The file source needs an explicit schema (no inference on streams), so
     take it from a batch scan of the same file — that also tracks whichever
     physical ts encoding the testdata generation used (long nanos under
-    nanosAsLong, or timestamp[us] NTZ); normalize to LTZ like the batch
-    loader (sources/tables.py NANOS_TS_COLS).
+    nanosAsLong, or timestamp[us] NTZ); normalized to LTZ by the batch
+    loader's own rule (sources/tables.py NANOS_TS_COLS).
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -46,10 +67,7 @@ def events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int |
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     raw = reader.load(_staged_replay_dir(sf_dir))
-    ts_type = raw_schema["ts"].dataType
-    if isinstance(ts_type, T.LongType):
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return _normalize_ts(raw, NANOS_TS_COLS["events"])
 
 
 def _staged_replay_dir(sf_dir: str) -> str:
@@ -69,7 +87,8 @@ def _staged_replay_dir(sf_dir: str) -> str:
 
 
 def tumbling_daily(events: DataFrame, watermark: str = "1 day") -> DataFrame:
-    """Streaming twin of st_tumbling_daily (same grouping, plus watermark)."""
+    """Daily tumbling-window totals per event type (catalog row
+    st_tumbling_daily)."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 day").alias("win"), "event_type")
@@ -84,7 +103,8 @@ def tumbling_daily(events: DataFrame, watermark: str = "1 day") -> DataFrame:
 
 
 def session_windows(events: DataFrame, watermark: str = "1 day") -> DataFrame:
-    """Streaming twin of st_session_windows (session_window + watermark)."""
+    """Gap sessions per user via session_window (catalog row
+    st_session_windows)."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.session_window("ts", SESSION_GAP).alias("win"), "user_id")
@@ -182,7 +202,6 @@ _SESSION_CLOSE_STATE = T.StructType(
         T.StructField("n", T.LongType()),
     ]
 )
-_SESSION_GAP_US = 30 * 60 * 1_000_000  # matches operators/temporal.py
 
 
 def _session_close_fn(key, pdf_iter, state):
@@ -227,7 +246,7 @@ def _session_close_fn(key, pdf_iter, state):
         ts = int(ts)
         if s is None:
             s, e, n = ts, ts, 1
-        elif ts - e <= _SESSION_GAP_US:  # merge rule matches sessionize()
+        elif ts - e <= SESSION_GAP_US:  # merge rule matches sessionize()
             e, n = ts, n + 1
         else:
             closed.append((s, e, n))
@@ -237,7 +256,7 @@ def _session_close_fn(key, pdf_iter, state):
     state.update((s, e, n))
     # Close the open session when the event-time watermark passes its
     # end + gap (ms resolution — the GroupState timeout clock).
-    state.setTimeoutTimestamp((e + _SESSION_GAP_US) // 1000)
+    state.setTimeoutTimestamp((e + SESSION_GAP_US) // 1000)
     yield frame(closed)
 
 
@@ -344,16 +363,16 @@ def foreach_batch_upsert_sink(
     )
 
 
-def click_purchase_join(events: DataFrame) -> DataFrame:
-    """Stream-stream self-join: attribute each purchase to the same user's
-    clicks in the preceding hour.
+def _click_purchase(events: DataFrame, how: str) -> DataFrame:
+    """Clicks joined to the same user's purchases in the following hour.
 
     Both sides carry a watermark and the join condition bounds purchase_ts
     to (click_ts, click_ts + 1h], so Spark can expire click state one hour
     past the watermark instead of buffering the stream forever — the state
     bound is what makes this viable on an unbounded 100 TB/day stream.
     The purchase-side watermark is wider by the join range so no in-range
-    click is dropped before its purchase arrives.
+    click is dropped before its purchase arrives. One keyed equi-join on
+    user_id plus a row-local range bound, whatever the join type.
     """
     clicks = (
         events.filter(F.col("event_type") == "click")
@@ -373,15 +392,19 @@ def click_purchase_join(events: DataFrame) -> DataFrame:
             F.col("ts").alias("purchase_ts"),
         )
     )
-    return (
-        clicks.join(
-            purchases,
-            (F.col("user_id") == F.col("p_user_id"))
-            & (F.col("purchase_ts") > F.col("click_ts"))
-            & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-        )
-        .select("click_id", "purchase_id", "user_id")
+    return clicks.join(
+        purchases,
+        (F.col("user_id") == F.col("p_user_id"))
+        & (F.col("purchase_ts") > F.col("click_ts"))
+        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
+        how,
     )
+
+
+def click_purchase_join(events: DataFrame) -> DataFrame:
+    """Stream-stream self-join: attribute each purchase to the same user's
+    clicks in the preceding hour."""
+    return _click_purchase(events, "inner").select("click_id", "purchase_id", "user_id")
 
 
 def enrich_with_customers(events: DataFrame, customers: DataFrame) -> DataFrame:
@@ -437,36 +460,10 @@ def click_purchase_full_join(events: DataFrame) -> DataFrame:
     The full-outer form needs state expiry on BOTH sides: an unmatched
     click emits nulls when its 1-hour match window closes under the
     joint watermark, an unmatched purchase when no in-range click can
-    still arrive. Same keyed equi-join + row-local range bound as the
-    inner/left forms — one user_id exchange, state bounded by watermark
-    + join range; unmatched state still open at end-of-input is WITHHELD
+    still arrive. Unmatched state still open at end-of-input is WITHHELD
     on both sides (pinned in tests/test_streaming.py).
     """
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "2 hours")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-    )
-    return clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") > F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-        "fullOuter",
-    ).select(
+    return _click_purchase(events, "fullOuter").select(
         "click_id",
         F.coalesce(F.col("user_id"), F.col("p_user_id")).alias("uid"),
         "purchase_id",
@@ -487,31 +484,7 @@ def click_purchase_left_join(events: DataFrame) -> DataFrame:
     emission is the price of never buffering unbounded state; consumers
     needing the unmatched tail promptly must tighten the watermark.
     """
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "2 hours")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-    )
-    return clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") > F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-        "leftOuter",
-    ).select("click_id", "user_id", "purchase_id")
+    return _click_purchase(events, "leftOuter").select("click_id", "user_id", "purchase_id")
 
 
 USER_BITMAP_SCHEMA = T.StructType(

@@ -648,3 +648,43 @@ def test_rocksdb_state_store_custom_kernel(spark, sf_dir, events_stream, tmp_pat
     batch = SPECS["st_user_totals"].builder(spark, sf_dir)
     assert _rows(stream_out) == _rows(batch)
     assert list(ck.rglob("*.sst")), "checkpoint must contain RocksDB SSTs"
+
+
+# Catalog rows whose builder is the streaming job's own transform on the
+# static events table, and whether that transform sets a watermark.
+SHARED_TRANSFORMS = [
+    ("st_tumbling_daily", "tumbling_daily", True),
+    ("st_session_windows", "session_windows", True),
+    ("st_click_purchase_join", "click_purchase_join", True),
+    ("st_click_purchase_left_join", "click_purchase_left_join", True),
+    ("st_click_purchase_full_join", "click_purchase_full_join", True),
+    ("st_mktsegment_counts", "enrich_with_customers", False),
+]
+
+
+@pytest.mark.parametrize("row,job,watermarked", SHARED_TRANSFORMS)
+def test_batch_twin_is_the_streaming_transform(
+    spark, sf_dir, events_stream, monkeypatch, row, job, watermarked
+):
+    """The catalog builder calls the streaming job's function, once, on a
+    static frame; and Spark drops that function's watermark there (it is
+    in the streaming plan but in no plan of the batch frame), so the batch
+    answers and work equal those of a watermark-free body."""
+    from nrg_etl_airflow_spark_emr_spark.sources import load_table
+
+    fn = getattr(jobs, job)
+    called_on_stream = []
+
+    def spy(events, *rest):
+        called_on_stream.append(events.isStreaming)
+        return fn(events, *rest)
+
+    monkeypatch.setattr(jobs, job, spy)
+    batch_qe = SPECS[row].builder(spark, sf_dir)._jdf.queryExecution()
+    assert called_on_stream == [False]
+
+    rest = [load_table(spark, sf_dir, "customer")] if job == "enrich_with_customers" else []
+    stream_plan = fn(events_stream, *rest)._jdf.queryExecution().analyzed().toString()
+    assert ("EventTimeWatermark" in stream_plan) == watermarked
+    assert "EventTimeWatermark" not in batch_qe.analyzed().toString()
+    assert "EventTimeWatermark" not in batch_qe.optimizedPlan().toString()
