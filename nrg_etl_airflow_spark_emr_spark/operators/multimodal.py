@@ -7,11 +7,14 @@ pure NumPy + stdlib zlib (``decode_png``/``encode_png`` covering all
 five scanline filters and palettes; ``decode_bmp`` for uncompressed
 24/32-bit; ``decode_wav`` for RIFF/WAVE PCM; ``decode_avi``/
 ``encode_avi`` for uncompressed BI_RGB RIFF/AVI video with real
-keyframe sampling). The fixture has no media files, so queries run over
-``encode(text)`` bytes and dispatch: real codec on PNG/BMP magic,
-deterministic fake otherwise. Everything Spark-side is real and tested:
-binary metadata as codegen'd column expressions, and Arrow-batched
-``mapInPandas`` feature extraction with an explicit output schema.
+keyframe sampling). The fixture has no media files, so the codec rows
+render each document into real PNG/BMP/WAV/AVI payloads from a text
+law the DuckDB oracle replays, then run the real codecs over them; the
+byte-level rows read ``encode(text)`` bytes. The codecs are the only
+path: a payload they do not recognize raises their ``ValueError``. Spark-side: binary metadata as codegen'd
+column expressions, and Arrow-batched ``mapInPandas`` kernels whose
+declared output schema is the one statement of their column names and
+types (each kernel yields plain row tuples through ``_frame``).
 
 Scale notes: binaries ride in parquet as BYTE_ARRAY — keep
 ``spark.sql.files.maxPartitionBytes`` at/below 128 MB so a partition of
@@ -34,6 +37,17 @@ from ..plans.catalog import register
 from ._util import t
 
 N_HIST_BINS = 16
+
+
+def _frame(rows: list[tuple], schema) -> pd.DataFrame:
+    """One mapInPandas output batch: plain row tuples under the declared
+    schema's field names. ``mapInPandas`` casts the Python values to the
+    schema's types, so the kernels do not restate them."""
+    if isinstance(schema, str):
+        names = [field.split()[0] for field in schema.split(",")]
+    else:
+        names = schema.fieldNames()
+    return pd.DataFrame(rows, columns=names)
 
 
 @register(
@@ -81,12 +95,10 @@ def byte_histogram_batches(
     vector out), but computable without media libraries.
     """
     for pdf in batches:
-        out = {
-            "doc_id": pdf["doc_id"],
-            "n_bytes": pdf["payload"].map(len).astype("int64"),
-            "histogram": pdf["payload"].map(_histogram16),
-        }
-        yield pd.DataFrame(out)
+        rows = [
+            (d, len(p), _histogram16(p)) for d, p in zip(pdf["doc_id"], pdf["payload"])
+        ]
+        yield _frame(rows, HISTOGRAM_SCHEMA)
 
 
 def _histogram16(payload: bytes) -> list[int]:
@@ -344,32 +356,23 @@ def decode_bmp(payload: bytes):
     return width, height, channels, np.ascontiguousarray(pixels)
 
 
-def decode_image(payload: bytes) -> tuple[int, int, int]:
-    """Decode an image payload to (width, height, channels) using the
-    real pure-NumPy codecs: PNG (8-bit, all filter types, palette) and
-    uncompressed 24/32-bit BMP, dispatched on magic bytes."""
+def _decode_raster(payload: bytes):
+    """Decode a PNG or BMP payload, dispatched on its magic bytes, to
+    (width, height, channels, pixels ndarray[h, w, c]); any other
+    payload raises ValueError."""
     if payload[:8] == _PNG_MAGIC:
-        w, h, c, _ = decode_png(payload)
-        return (w, h, c)
+        return decode_png(payload)
     if payload[:2] == b"BM":
-        w, h, c, _ = decode_bmp(payload)
-        return (w, h, c)
+        return decode_bmp(payload)
     raise ValueError("unrecognized image format (supported: PNG, BMP)")
 
 
-def fake_decode_image(payload: bytes) -> tuple[int, int, int]:
-    """Deterministic stand-in decoder for non-image payloads (the
-    documents fixture carries text bytes): derives a plausible (w, h, c)
-    from the payload bytes so the mapInPandas plumbing stays testable."""
-    n = len(payload)
-    return (16 + n % 64, 16 + (n // 64) % 64, 3)
-
-
-def dispatch_decode_image(payload: bytes) -> tuple[int, int, int]:
-    """Real codec for real image bytes, deterministic fake otherwise."""
-    if payload[:8] == _PNG_MAGIC or payload[:2] == b"BM":
-        return decode_image(payload)
-    return fake_decode_image(payload)
+def decode_image(payload: bytes) -> tuple[int, int, int]:
+    """Decode an image payload to (width, height, channels) using the
+    real pure-NumPy codecs: PNG (8-bit, all filter types, palette) and
+    uncompressed 24/32-bit BMP."""
+    w, h, c, _ = _decode_raster(payload)
+    return (w, h, c)
 
 
 DECODED_SCHEMA = T.StructType(
@@ -382,26 +385,17 @@ DECODED_SCHEMA = T.StructType(
 )
 
 
-def decode_image_batches(
-    batches: Iterator[pd.DataFrame], decoder=dispatch_decode_image
-) -> Iterator[pd.DataFrame]:
+def decode_image_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        decoded = pdf["payload"].map(decoder)
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "width": decoded.map(lambda d: d[0]).astype("int32"),
-                "height": decoded.map(lambda d: d[1]).astype("int32"),
-                "n_channels": decoded.map(lambda d: d[2]).astype("int32"),
-            }
-        )
+        rows = [(d, *decode_image(p)) for d, p in zip(pdf["doc_id"], pdf["payload"])]
+        yield _frame(rows, DECODED_SCHEMA)
 
 
 # mm_decode_meta is registered at the end of this module: its oracle and
 # render kernel build on the phash pixel-law section below.
 
 
-# --- Resize stub ------------------------------------------------------------
+# --- Resize -----------------------------------------------------------------
 
 
 def resize_image(payload: bytes, width: int, height: int) -> bytes:
@@ -410,33 +404,10 @@ def resize_image(payload: bytes, width: int, height: int) -> bytes:
     NumPy decoders, index-resample, encode_png."""
     import numpy as np
 
-    if payload[:8] == _PNG_MAGIC:
-        _, h, _, px = decode_png(payload)
-        w = px.shape[1]
-    elif payload[:2] == b"BM":
-        w, h, _, px = decode_bmp(payload)
-    else:
-        raise ValueError("unrecognized image format (supported: PNG, BMP)")
+    px = _decode_raster(payload)[3]
     ys = (np.arange(height) * px.shape[0] // height).clip(0, px.shape[0] - 1)
     xs = (np.arange(width) * px.shape[1] // width).clip(0, px.shape[1] - 1)
     return encode_png(px[ys][:, xs])
-
-
-def fake_resize_image(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic stand-in for non-image payloads: returns a byte
-    string whose length scales with the target area, derived from the
-    payload (content- and size-dependent without a codec)."""
-    area = max(width * height // 64, 1)
-    seed = payload[:16] or b"\0"
-    reps = area // len(seed) + 1
-    return (seed * reps)[:area]
-
-
-def dispatch_resize_image(payload: bytes, width: int, height: int) -> bytes:
-    """Real nearest-neighbor resize for PNG/BMP bytes, fake otherwise."""
-    if payload[:8] == _PNG_MAGIC or payload[:2] == b"BM":
-        return resize_image(payload, width, height)
-    return fake_resize_image(payload, width, height)
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -449,17 +420,14 @@ RESIZED_SCHEMA = T.StructType(
 
 
 def resize_batches(
-    batches: Iterator[pd.DataFrame], width: int = 64, height: int = 64, resizer=dispatch_resize_image
+    batches: Iterator[pd.DataFrame], width: int = 64, height: int = 64
 ) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        resized = pdf["payload"].map(lambda p: resizer(p, width, height))
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "resized": resized,
-                "n_bytes": resized.map(len).astype("int32"),
-            }
-        )
+        rows = []
+        for d, p in zip(pdf["doc_id"], pdf["payload"]):
+            out = resize_image(p, width, height)
+            rows.append((d, out, len(out)))
+        yield _frame(rows, RESIZED_SCHEMA)
 
 
 # mm_resize is registered at the end of this module: its oracle and
@@ -547,22 +515,6 @@ def audio_meta(payload: bytes):
     return sr, nc, bd, ns, ns / sr, rms
 
 
-def fake_audio_meta(payload: bytes):
-    """Deterministic stand-in for non-audio payloads (the text fixture):
-    derives plausible audio metadata from the byte length."""
-    n = len(payload)
-    sr = 8000 + (n % 3) * 4000
-    ns = max(n * 4, 1)
-    return sr, 1 + n % 2, 16, ns, ns / sr, (n % 100) / 100.0
-
-
-def dispatch_audio_meta(payload: bytes):
-    """Real RIFF/WAVE decode on magic bytes, deterministic fake otherwise."""
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        return audio_meta(payload)
-    return fake_audio_meta(payload)
-
-
 AUDIO_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -576,22 +528,10 @@ AUDIO_SCHEMA = T.StructType(
 )
 
 
-def audio_meta_batches(
-    batches: Iterator[pd.DataFrame], meta=dispatch_audio_meta
-) -> Iterator[pd.DataFrame]:
+def audio_meta_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        decoded = pdf["payload"].map(meta)
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "sample_rate": decoded.map(lambda d: d[0]).astype("int32"),
-                "n_channels": decoded.map(lambda d: d[1]).astype("int32"),
-                "bit_depth": decoded.map(lambda d: d[2]).astype("int32"),
-                "n_samples": decoded.map(lambda d: d[3]).astype("int64"),
-                "duration_s": decoded.map(lambda d: d[4]).astype("float64"),
-                "rms": decoded.map(lambda d: d[5]).astype("float64"),
-            }
-        )
+        rows = [(d, *audio_meta(p)) for d, p in zip(pdf["doc_id"], pdf["payload"])]
+        yield _frame(rows, AUDIO_SCHEMA)
 
 
 _AUDIO_META_SCHEMA = (
@@ -612,13 +552,7 @@ def audio_cross_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     import numpy as np
 
     for pdf in batches:
-        out: dict[str, list] = {
-            k: []
-            for k in (
-                "doc_id", "sample_rate", "n_channels", "bit_depth",
-                "n_samples", "duration_s", "sample_sum",
-            )
-        }
+        rows = []
         for d, s in zip(pdf["doc_id"], pdf["text"]):
             codes = np.frombuffer(s.encode("utf-32-le"), np.uint32).astype(np.int64)
             # Clamp to 191 so the whole clamped domain sits on the int16
@@ -630,26 +564,9 @@ def audio_cross_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
             rate = 8000 if int(d) % 2 == 0 else 16000
             wav = encode_wav((s16 / 32768.0)[:, None], rate, 16)
             sr, nc, bd, ns, dec = decode_wav(wav)
-            out["doc_id"].append(int(d))
-            out["sample_rate"].append(sr)
-            out["n_channels"].append(nc)
-            out["bit_depth"].append(bd)
-            out["n_samples"].append(ns)
-            out["duration_s"].append(ns / sr)
-            out["sample_sum"].append(
-                int(np.round(dec * 32768.0).astype(np.int64).sum())
-            )
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                "sample_rate": pd.Series(out["sample_rate"], dtype="int32"),
-                "n_channels": pd.Series(out["n_channels"], dtype="int32"),
-                "bit_depth": pd.Series(out["bit_depth"], dtype="int32"),
-                "n_samples": pd.Series(out["n_samples"], dtype="int64"),
-                "duration_s": pd.Series(out["duration_s"], dtype="float64"),
-                "sample_sum": pd.Series(out["sample_sum"], dtype="int64"),
-            }
-        )
+            ssum = int(np.round(dec * 32768.0).astype(np.int64).sum())
+            rows.append((int(d), sr, nc, bd, ns, ns / sr, ssum))
+        yield _frame(rows, _AUDIO_META_SCHEMA)
 
 
 @register(
@@ -692,8 +609,9 @@ def audio_cross_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     "the sum exact — no float-aggregation caveat), making a single "
     "flipped bit in either WAV codec a value-hash break. ASCII regime "
     "note: ord() bins codepoints == UTF-8 bytes on this corpus (the "
-    "mm_byte_histogram note). The non-audio fake fallback and the "
-    "8/32-bit + multi-channel decode paths keep their unit-test cover "
+    "mm_byte_histogram note). The 8/32-bit + multi-channel decode "
+    "paths and the raw-payload surface (audio_meta_batches, which "
+    "raises on non-WAV bytes) keep unit-test cover "
     "(tests/test_multimodal.py).",
 )
 def mm_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -838,39 +756,14 @@ def sample_frames_avi(payload: bytes, n_frames: int = N_FRAMES) -> list[bytes]:
     return [encode_png(frames[p]) for p in picks]
 
 
-def sample_frames(payload: bytes, n_frames: int = N_FRAMES) -> list[bytes]:
-    """Deterministic fallback frame sampler for non-video payloads: cut n
-    equally-spaced fixed-width slices. Keeps the query total over the
-    text fixture; real AVI bytes route to sample_frames_avi."""
-    if not payload:
-        return []
-    stride = max(len(payload) // n_frames, 1)
-    return [payload[i * stride : i * stride + 16] for i in range(min(n_frames, len(payload)))]
-
-
-def dispatch_sample_frames(payload: bytes, n_frames: int = N_FRAMES) -> list[bytes]:
-    """Real AVI keyframe sampling on magic bytes, deterministic fake
-    otherwise."""
-    if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-        return sample_frames_avi(payload, n_frames)
-    return sample_frames(payload, n_frames)
-
-
-def frame_sample_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def frame_sample_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        ids, idxs, frames = [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            for i, fr in enumerate(dispatch_sample_frames(payload)):
-                ids.append(doc_id)
-                idxs.append(i)
-                frames.append(fr)
-        yield pd.DataFrame(
-            {"doc_id": pd.Series(ids, dtype="int64"),
-             "frame_idx": pd.Series(idxs, dtype="int32"),
-             "frame": pd.Series(frames, dtype=object)}
-        )
+        rows = [
+            (d, i, fr)
+            for d, p in zip(pdf["doc_id"], pdf["payload"])
+            for i, fr in enumerate(sample_frames_avi(p))
+        ]
+        yield _frame(rows, FRAME_SCHEMA)
 
 
 @register(
@@ -917,8 +810,8 @@ def frame_sample_batches(
     "encode_avi/decode_avi/encode_png/decode_png OR one wrong pick in "
     "the sampler breaks the value hash. One binary video still fans "
     "out to N typed rows through mapInPandas (the multimodal analogue "
-    "of explode); the non-video slicer fallback and the raw-frame-"
-    "bytes surface (frame_sample_batches) keep unit-test cover.",
+    "of explode); the raw-frame-bytes surface (frame_sample_batches, "
+    "which raises on non-AVI bytes) keeps unit-test cover.",
 )
 def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents").filter(F.length("text") >= 1).select(
@@ -945,7 +838,7 @@ def frame_cross_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     import numpy as np
 
     for pdf in batches:
-        ids, idxs, ws, hs, cs, sums = [], [], [], [], [], []
+        rows = []
         for d, s in zip(pdf["doc_id"], pdf["text"]):
             n = len(s)
             total = 1 + n % 8
@@ -954,24 +847,10 @@ def frame_cross_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
             frames = np.stack(
                 [np.full((8, 8, 3), v, dtype=np.uint8) for v in vals]
             )
-            for i, png in enumerate(dispatch_sample_frames(encode_avi(frames))):
+            for i, png in enumerate(sample_frames_avi(encode_avi(frames))):
                 w, h, c, px = decode_png(png)
-                ids.append(int(d))
-                idxs.append(i)
-                ws.append(w)
-                hs.append(h)
-                cs.append(c)
-                sums.append(int(px.astype(np.int64).sum()))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "frame_idx": pd.Series(idxs, dtype="int32"),
-                "width": pd.Series(ws, dtype="int32"),
-                "height": pd.Series(hs, dtype="int32"),
-                "n_channels": pd.Series(cs, dtype="int32"),
-                "pixel_sum": pd.Series(sums, dtype="int64"),
-            }
-        )
+                rows.append((int(d), i, w, h, c, int(px.astype(np.int64).sum())))
+        yield _frame(rows, _FRAME_CROSS_SCHEMA)
 
 
 # --- Perceptual-hash near-dup (aHash + banded Hamming) ----------------------
@@ -988,28 +867,15 @@ def phash_bands_image(payload: bytes) -> list[int]:
     returned as 4 x 16-bit band ints (the banding the dedup join keys
     on). Perceptual by construction: resizing/re-encoding the same image
     preserves the hash, small local edits flip few bits (pinned in
-    tests/test_multimodal.py). Non-image payloads take the byte-stream
-    positional hash — the SAME definition mm_phash_dedup computes
-    relationally, so kernel and catalog query agree on the fixture."""
+    tests/test_multimodal.py). Any other payload raises ValueError;
+    mm_phash_dedup computes its text-fixture hash relationally instead."""
     import numpy as np
 
-    if payload[:8] == _PNG_MAGIC or payload[:2] == b"BM":
-        if payload[:8] == _PNG_MAGIC:
-            _, h, _, px = decode_png(payload)
-        else:
-            _, h, _, px = decode_bmp(payload)
-        gray = px.astype(np.int64).mean(axis=2) if px.ndim == 3 else px.astype(np.int64)
-        ys = (np.arange(8) * gray.shape[0] // 8).clip(0, gray.shape[0] - 1)
-        xs = (np.arange(8) * gray.shape[1] // 8).clip(0, gray.shape[1] - 1)
-        cells = gray[ys][:, xs].reshape(64)
-        bits = (64 * cells >= cells.sum()).astype(np.int64)
-    else:
-        n = len(payload)
-        if n == 0:
-            return [0] * PHASH_BANDS
-        idx = [(k * n) // PHASH_POS for k in range(PHASH_POS)]
-        vals = np.frombuffer(payload, dtype=np.uint8)[idx].astype(np.int64)
-        bits = (PHASH_POS * vals >= vals.sum()).astype(np.int64)
+    gray = _decode_raster(payload)[3].astype(np.int64).mean(axis=2)
+    ys = (np.arange(8) * gray.shape[0] // 8).clip(0, gray.shape[0] - 1)
+    xs = (np.arange(8) * gray.shape[1] // 8).clip(0, gray.shape[1] - 1)
+    cells = gray[ys][:, xs].reshape(64)
+    bits = (64 * cells >= cells.sum()).astype(np.int64)
     return [
         int((bits[j * 16 : (j + 1) * 16] << np.arange(16)).sum())
         for j in range(PHASH_BANDS)
@@ -1227,44 +1093,32 @@ def render_phash_image(text: str, doc_id: int) -> bytes:
     "equi-join, never all-pairs.",
 )
 def mm_phash_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     docs = (
         t(spark, sf_dir, "documents")
         .filter(F.length("text") >= 1)
         .select("doc_id", "text")
     )
+    image_schema = "doc_id long, image binary"
+    hash_schema = "doc_id long, " + ", ".join(f"b{j} long" for j in range(PHASH_BANDS))
 
     def render_kernel(it):
         for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "image": [
-                        render_phash_image(s, int(d))
-                        for d, s in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
+            rows = [
+                (d, render_phash_image(s, int(d)))
+                for d, s in zip(pdf["doc_id"], pdf["text"])
+            ]
+            yield _frame(rows, image_schema)
 
     def hash_kernel(it):
         for pdf in it:
-            bands = [phash_bands_image(bytes(b)) for b in pdf["image"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    **{
-                        f"b{j}": [bb[j] for bb in bands]
-                        for j in range(PHASH_BANDS)
-                    },
-                }
-            )
+            rows = [
+                (d, *phash_bands_image(bytes(b)))
+                for d, b in zip(pdf["doc_id"], pdf["image"])
+            ]
+            yield _frame(rows, hash_schema)
 
-    images = docs.mapInPandas(render_kernel, schema="doc_id long, image binary")
-    h = images.mapInPandas(
-        hash_kernel,
-        schema="doc_id long, " + ", ".join(f"b{j} long" for j in range(PHASH_BANDS)),
-    ).cache()
+    images = docs.mapInPandas(render_kernel, schema=image_schema)
+    h = images.mapInPandas(hash_kernel, schema=hash_schema).cache()
     return _banded_hamming_pairs(h)
 
 
@@ -1283,7 +1137,7 @@ def cross_codec_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     pixel sum — every output column predictable in pure SQL from the
     pixel law, which is what upgrades the decode row to hash-gated."""
     for pdf in batches:
-        doc_ids, widths, heights, chans, sums, eqs = [], [], [], [], [], []
+        rows = []
         for d, s in zip(pdf["doc_id"], pdf["text"]):
             png = render_phash_image(s, 0)  # even law → grayscale PNG
             bmp = render_phash_image(s, 1)  # odd law → 24-bit BMP
@@ -1291,22 +1145,9 @@ def cross_codec_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
             wb, hb, cb, bpx = decode_bmp(bmp)
             gray = ppx[..., 0]
             eq = (wp, hp) == (wb, hb) and bool((bpx == gray[..., None]).all())
-            doc_ids.append(int(d))
-            widths.append(wp)
-            heights.append(hp)
-            chans.append(cp if int(d) % 2 == 0 else cb)
-            sums.append(int(gray.astype("int64").sum()))
-            eqs.append(eq)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(doc_ids, dtype="int64"),
-                "width": pd.Series(widths, dtype="int32"),
-                "height": pd.Series(heights, dtype="int32"),
-                "n_channels": pd.Series(chans, dtype="int32"),
-                "pixel_sum": pd.Series(sums, dtype="int64"),
-                "cross_equal": pd.Series(eqs, dtype="bool"),
-            }
-        )
+            c = cp if int(d) % 2 == 0 else cb
+            rows.append((int(d), wp, hp, c, int(gray.astype("int64").sum()), eq))
+        yield _frame(rows, _DECODE_META_SCHEMA)
 
 
 @register(
@@ -1339,9 +1180,9 @@ def cross_codec_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     "pixel law, so a single flipped bit anywhere in either encoder or "
     "decoder breaks the value hash — codec confidence upgraded from "
     "property-pins to a driver-gated cross-check. Arrow-batched "
-    "mapInPandas, Python only per binary payload; the non-image "
-    "fake-fallback dispatch keeps its unit-test cover "
-    "(tests/test_multimodal.py).",
+    "mapInPandas, Python only per binary payload; the raw-payload "
+    "surface (decode_image_batches, which raises on non-PNG/BMP bytes) "
+    "keeps unit-test cover (tests/test_multimodal.py).",
 )
 def mm_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents").filter(F.length("text") >= 1).select(
@@ -1371,26 +1212,14 @@ def resize_cross_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
     import numpy as np
 
     for pdf in batches:
-        ids, tws, ths, cs, sums = [], [], [], [], []
+        rows = []
         for d, s in zip(pdf["doc_id"], pdf["text"]):
             img = render_phash_image(s, int(d))
             for tw, th in _RESIZE_TARGETS:
-                out = dispatch_resize_image(img, tw, th)
-                w2, h2, c2, px = decode_png(out)
-                ids.append(int(d))
-                tws.append(w2)  # decoded, not requested: gates the size
-                ths.append(h2)
-                cs.append(c2)
-                sums.append(int(px.astype(np.int64).sum()))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "target_w": pd.Series(tws, dtype="int32"),
-                "target_h": pd.Series(ths, dtype="int32"),
-                "n_channels": pd.Series(cs, dtype="int32"),
-                "pixel_sum": pd.Series(sums, dtype="int64"),
-            }
-        )
+                # Decoded, not requested, dimensions: gates the size.
+                w2, h2, c2, px = decode_png(resize_image(img, tw, th))
+                rows.append((int(d), w2, h2, c2, int(px.astype(np.int64).sum())))
+        yield _frame(rows, _RESIZE_SCHEMA)
 
 
 def _resize_oracle() -> str:
@@ -1434,8 +1263,8 @@ def _resize_oracle() -> str:
     "16x16 counts every source pixel exactly 4 times) — so a flipped "
     "bit in either decoder, the resampler, or the re-encoder breaks "
     "the value hash, for both container parities at once. The "
-    "non-image fake fallback and the binary-out surface "
-    "(resize_batches) keep unit-test cover.",
+    "binary-out surface (resize_batches, which raises on non-PNG/BMP "
+    "bytes) keeps unit-test cover.",
 )
 def mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents").filter(F.length("text") >= 1).select(

@@ -10,7 +10,8 @@ cost exactly the way the 100 TB runner pays it (no cache interplay
 between stages — r13's decomposition showed the exact-pair clean stage
 spills only under the fused cached chain; this harness attributes cost
 and spill per stage edge instead). Canaries bracket the session per the
-split-rule protocol.
+split-rule protocol. A failed canary or spill probe omits its fields
+and never sinks the run (bench.py's omission rule).
 
 Usage:
   python scripts/probe_e2e_stages.py [--sf DIR] [--candidates exact|lsh]
@@ -36,7 +37,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=".localdata/sf10")
     ap.add_argument("--candidates", default="lsh", choices=("exact", "lsh"))
-    ap.add_argument("--out", default="pr_e2e_stages.json")
+    ap.add_argument("--out", default=".localdata/e2e_stages.json")
     ap.add_argument(
         "--keep-dir",
         default=None,
@@ -70,8 +71,7 @@ def main() -> None:
     out: dict = {
         "sf_dir": args.sf,
         "candidates": args.candidates,
-        "canary_1t": canary["canary_1t"],
-        "canary_32t": canary["canary_32t"],
+        **canary,
         "stages": {},
     }
     out.update(run_spark_canary(spark))
@@ -84,23 +84,20 @@ def main() -> None:
             t0 = time.monotonic()
             fn(prev).write.mode("overwrite").parquet(d)
             wall = round(time.monotonic() - t0, 3)
-            mem, disk = measure(marker)
+            spill = measure(marker)
             rows = spark.read.parquet(d).count()
-            out["stages"][name] = {
-                "wall": wall,
-                "spill_mem": mem,
-                "spill_disk": disk,
-                "rows": rows,
-            }
-            print(f"{name}: {wall}s spill=({mem},{disk}) rows={rows}", flush=True)
+            rec = {"wall": wall, "rows": rows}
+            if spill is not None:
+                rec["spill_mem"], rec["spill_disk"] = spill
+            out["stages"][name] = rec
+            print(f"{name}: {wall}s spill={spill} rows={rows}", flush=True)
             prev = spark.read.parquet(d)
     finally:
         if args.keep_dir is None:
             shutil.rmtree(mat, ignore_errors=True)
     out.update({f"{k}_end": v for k, v in run_spark_canary(spark).items()})
-    end = run_canary()
-    out["canary_1t_end"] = end["canary_1t"]
-    out["canary_32t_end"] = end["canary_32t"]
+    out.update({f"{k}_end": v for k, v in run_canary().items()})
+    os.makedirs(os.path.dirname(args.out) or ".", exist_ok=True)
     with open(args.out, "w") as fh:
         json.dump(out, fh, indent=1)
     print(json.dumps(out))

@@ -1,6 +1,8 @@
-"""Multimodal plumbing tests: the mapInPandas kernels must agree exactly
-with a local Python recomputation (the driver gives these rows-only
-checks, so exactness is pinned here)."""
+"""Multimodal tests: the real codecs round-trip and reject foreign
+payloads, and the mapInPandas kernels agree exactly with a local Python
+recomputation. All eight ``mm_*`` catalog rows are also oracle-gated
+(CATALOG.md); these tests pin the codec paths and the raw-payload
+kernels that no catalog row drives."""
 
 from __future__ import annotations
 
@@ -72,26 +74,6 @@ def test_decode_meta_cross_codec(spark, sf_dir):
         codes = np.frombuffer(text.encode("utf-32-le"), np.uint32)
         idx = (np.arange(64) * n) // 64
         assert r.pixel_sum == int(np.minimum(codes[idx], 255).sum())
-
-
-def test_fake_decode_dispatch_on_text_payloads(spark, sf_dir):
-    """The non-image fallback keeps its cover now that the catalog row
-    decodes real renders: text bytes dispatch to the deterministic fake
-    through the original decode_image_batches kernel."""
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .selectExpr("doc_id", "encode(text, 'UTF-8') AS payload")
-        .limit(50)
-    )
-    typed = docs.mapInPandas(mm.decode_image_batches, schema=mm.DECODED_SCHEMA)
-    rows = {r.doc_id: (r.width, r.height, r.n_channels) for r in typed.collect()}
-    con = duckdb.connect()
-    texts = con.sql(
-        f"SELECT doc_id, text FROM read_parquet('{sf_dir}/documents.parquet')"
-    ).fetchall()
-    for doc_id, text in texts:
-        if doc_id in rows:
-            assert rows[doc_id] == mm.fake_decode_image(text.encode("utf-8"))
 
 
 def test_decode_rejects_unknown_format():
@@ -189,30 +171,6 @@ def test_bmp_roundtrip_24bit():
     assert mm.decode_image(payload) == (5, 6, 3)
 
 
-def test_resize_fake_path_matches_python(spark, sf_dir):
-    """The non-image fake fallback keeps its cover now that the catalog
-    row resizes real renders: text bytes dispatch to the deterministic
-    fake through the original resize_batches kernel."""
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .selectExpr("doc_id", "encode(text, 'UTF-8') AS payload")
-        .limit(50)
-    )
-    rows = {
-        r.doc_id: (r.n_bytes, bytes(r.resized))
-        for r in docs.mapInPandas(mm.resize_batches, schema=mm.RESIZED_SCHEMA).collect()
-    }
-    con = duckdb.connect()
-    texts = con.sql(
-        f"SELECT doc_id, text FROM read_parquet('{sf_dir}/documents.parquet')"
-    ).fetchall()
-    for doc_id, text in texts:
-        if doc_id not in rows:
-            continue
-        expect = mm.fake_resize_image(text.encode("utf-8"), 64, 64)
-        assert rows[doc_id] == (len(expect), expect)
-
-
 def test_resize_cross_codec(spark, sf_dir):
     """mm_resize's round-12 cross-check semantics: decoded dimensions
     and pixel sums of both targets match a local replay of the pixel
@@ -265,14 +223,12 @@ def test_resize_upscale_from_bmp():
 
 
 def test_decode_meta_real_images_through_spark(spark):
-    """End-to-end: real PNG and BMP bytes flow through the same
-    mapInPandas kernel the catalog query uses, decoded by the real
-    codecs (dispatch on magic), alongside a non-image payload."""
+    """End-to-end: real PNG and BMP bytes flow through the raw-payload
+    mapInPandas kernel, decoded by the real codecs."""
     png = mm.encode_png(_gradient(12, 34, 3), filter_type=4)
     bmp = _encode_bmp24(_gradient(7, 5, 3))
-    txt = b"just some text"
     df = spark.createDataFrame(
-        [(1, bytearray(png)), (2, bytearray(bmp)), (3, bytearray(txt))],
+        [(1, bytearray(png)), (2, bytearray(bmp))],
         "doc_id LONG, payload BINARY",
     )
     rows = {
@@ -283,36 +239,38 @@ def test_decode_meta_real_images_through_spark(spark):
     }
     assert rows[1] == (34, 12, 3)
     assert rows[2] == (5, 7, 3)
-    assert rows[3] == mm.fake_decode_image(txt)
 
 
-def test_frame_sample_fake_path_matches_python(spark, sf_dir):
-    """The non-video slicer fallback keeps its cover now that the
-    catalog row samples real AVI renders: text bytes dispatch to the
-    deterministic slicer through the original frame_sample_batches
-    kernel."""
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .selectExpr("doc_id", "encode(text, 'UTF-8') AS payload")
-        .limit(50)
-    )
-    got: dict[tuple[int, int], bytes] = {}
-    for r in docs.mapInPandas(mm.frame_sample_batches, schema=mm.FRAME_SCHEMA).collect():
-        got[(r.doc_id, r.frame_idx)] = bytes(r.frame)
-    con = duckdb.connect()
-    texts = con.sql(
-        f"SELECT doc_id, text FROM read_parquet('{sf_dir}/documents.parquet')"
-    ).fetchall()
-    seen_docs = {d for d, _ in got}
-    for doc_id, text in texts:
-        if doc_id not in seen_docs:
-            continue
-        frames = mm.sample_frames(text.encode("utf-8"))
-        for i, fr in enumerate(frames):
-            assert got[(doc_id, i)] == fr
-        assert {k for k in got if k[0] == doc_id} == {
-            (doc_id, i) for i in range(len(frames))
-        }
+def test_resize_real_png_through_spark(spark):
+    """End-to-end: a real PNG flows through resize_batches under its
+    declared RESIZED_SCHEMA; the binary column holds the real
+    nearest-neighbor resize and n_bytes its length."""
+    png = mm.encode_png(_gradient(8, 8, 3))
+    df = spark.createDataFrame([(1, bytearray(png))], "doc_id LONG, payload BINARY")
+    (row,) = df.mapInPandas(mm.resize_batches, schema=mm.RESIZED_SCHEMA).collect()
+    expect = mm.resize_image(png, 64, 64)
+    assert (row.doc_id, bytes(row.resized), row.n_bytes) == (1, expect, len(expect))
+    assert mm.decode_image(bytes(row.resized)) == (64, 64, 3)
+
+
+@pytest.mark.parametrize(
+    "kernel",
+    [
+        mm.decode_image_batches,
+        mm.resize_batches,
+        mm.audio_meta_batches,
+        mm.frame_sample_batches,
+    ],
+    ids=lambda k: k.__name__,
+)
+def test_payload_kernels_reject_non_media(kernel):
+    """No silent fallback: a payload the codec does not recognize raises
+    the codec's ValueError instead of becoming made-up metadata."""
+    import pandas as pd
+
+    pdf = pd.DataFrame({"doc_id": [1], "payload": [b"just some text"]})
+    with pytest.raises(ValueError):
+        list(kernel(iter([pdf])))
 
 
 def test_frame_sample_cross_codec(spark, sf_dir):
@@ -386,18 +344,13 @@ def test_wav_rejects_non_audio():
 
 
 def test_audio_meta_real_wav_through_spark(spark):
-    """End-to-end: real WAV bytes flow through the catalog kernel
-    (dispatch on RIFF magic), alongside a text payload that takes the
-    deterministic fake path."""
+    """End-to-end: real WAV bytes flow through the raw-payload
+    mapInPandas kernel, decoded by the real chunk-walk decoder."""
     import numpy as np
 
     tone = np.sin(np.linspace(0, 40 * np.pi, 4000)).reshape(-1, 1) * 0.5
     wav = mm.encode_wav(tone, 16000)
-    txt = b"just some text"
-    df = spark.createDataFrame(
-        [(1, bytearray(wav)), (2, bytearray(txt))],
-        "doc_id LONG, payload BINARY",
-    )
+    df = spark.createDataFrame([(1, bytearray(wav))], "doc_id LONG, payload BINARY")
     rows = {
         r.doc_id: r
         for r in df.mapInPandas(
@@ -411,8 +364,6 @@ def test_audio_meta_real_wav_through_spark(spark):
     assert rows[1].duration_s == pytest.approx(0.25)
     # RMS of a 0.5-amplitude sine ≈ 0.5/√2.
     assert rows[1].rms == pytest.approx(0.5 / 2**0.5, rel=1e-3)
-    fake = mm.fake_audio_meta(txt)
-    assert (rows[2].sample_rate, rows[2].n_channels) == (fake[0], fake[1])
 
 
 def test_mm_audio_meta_catalog_query(spark, sf_dir):
@@ -484,7 +435,7 @@ def test_avi_frame_sampling_uniform_and_png_encoded():
         [np.full((4, 4, 3), f * 20, dtype=np.uint8) for f in range(10)]
     )
     payload = mm.encode_avi(frames, fps=10)
-    out = mm.dispatch_sample_frames(payload, 4)
+    out = mm.sample_frames_avi(payload, 4)
     assert len(out) == 4
     picked = []
     for png in out:
@@ -521,33 +472,23 @@ def test_avi_rejects_non_video_and_compressed():
         mm.decode_avi(bytes(payload))
 
 
-def test_avi_non_video_payload_falls_back_to_slicer():
-    payload = b"just some text bytes, definitely not a container"
-    assert mm.dispatch_sample_frames(payload) == mm.sample_frames(payload)
-
-
 def test_frame_sample_real_avi_through_spark(spark):
-    """End-to-end: real AVI bytes flow through the same mapInPandas
-    kernel the catalog query uses — fan-out to PNG-encoded keyframes —
-    next to a text payload that takes the slicer fallback."""
+    """End-to-end: real AVI bytes flow through the raw-payload
+    mapInPandas kernel — fan-out to PNG-encoded keyframes."""
     import numpy as np
 
     frames = np.stack(
         [np.full((4, 4, 3), f * 10, dtype=np.uint8) for f in range(8)]
     )
     avi = mm.encode_avi(frames, fps=4)
-    txt = b"definitely not a video container payload"
-    df = spark.createDataFrame(
-        [(1, bytearray(avi)), (2, bytearray(txt))], "doc_id LONG, payload BINARY"
-    )
+    df = spark.createDataFrame([(1, bytearray(avi))], "doc_id LONG, payload BINARY")
     got: dict[tuple[int, int], bytes] = {}
     for r in df.mapInPandas(mm.frame_sample_batches, schema=mm.FRAME_SCHEMA).collect():
         got[(r.doc_id, r.frame_idx)] = bytes(r.frame)
     avi_frames = [v for (d, _), v in sorted(got.items()) if d == 1]
     assert avi_frames == mm.sample_frames_avi(avi)
     assert len(avi_frames) == 4
-    txt_frames = [v for (d, _), v in sorted(got.items()) if d == 2]
-    assert txt_frames == mm.sample_frames(txt)
+    assert {d for d, _ in got} == {1}
 
 
 # --- perceptual hash (aHash) ------------------------------------------------
@@ -592,24 +533,6 @@ def test_phash_tolerates_local_edit_but_separates_images():
     other = mm.phash_bands_image(mm.encode_png(np.stack([other_px] * 3, axis=2)))
     ham_far = sum(int(a ^ b).bit_count() for a, b in zip(base, other))
     assert ham_far > mm.PHASH_MAXH, f"unrelated images only {ham_far} bits apart"
-
-
-def test_phash_bands_are_16bit_and_text_path_matches_relational():
-    """Band ints fit 16 bits, and the byte-stream fallback implements the
-    same positional-average definition the catalog query computes
-    relationally (kernel == SQL on ASCII payloads)."""
-    payload = b"the quick brown fox jumps over the lazy dog " * 8
-    bands = mm.phash_bands_image(payload)
-    assert len(bands) == mm.PHASH_BANDS
-    assert all(0 <= b < 2**16 for b in bands)
-    n = len(payload)
-    vals = [payload[(k * n) // mm.PHASH_POS] for k in range(mm.PHASH_POS)]
-    total = sum(vals)
-    bits = [1 if mm.PHASH_POS * v >= total else 0 for v in vals]
-    expect = [
-        sum(bits[j * 16 + i] << i for i in range(16)) for j in range(mm.PHASH_BANDS)
-    ]
-    assert bands == expect
 
 
 def test_bmp_encode_decode_roundtrip():
