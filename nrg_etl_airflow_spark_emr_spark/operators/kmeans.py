@@ -1,28 +1,26 @@
-"""Iterative K-means (Lloyd's) over the embeddings table — the
-representative *iterative algorithm* (driver-controlled loop of
-DataFrame jobs), and the trainer for real IVF centroids
-(``sim_knn_ivf`` uses a fixture rule; SCALE.md marks KMeans as the
-production swap).
+"""Quantized k-means (Lloyd's) over the embeddings table — the
+representative *iterative algorithm*, and the ONE trainer behind every
+trained ANN structure: the IVF coarse quantizer (ivf_train), the PQ
+codebooks (sim_knn_pq, sim_knn_ivfpq), both levels of the two-level
+router (dedup.twolevel_train) and the whole-vector cells
+(sim_kmeans_cells). IVFADC treats the coarse quantizer and the PQ
+codebooks as the same k-means; so does this module.
 
-Shape of each iteration, all Catalyst built-ins:
-1. assign: vectors × broadcast(centroids) → per-vector argmin distance
-   (min_by over a (d2, cid) struct — map-side partial aggregation);
-2. update: posexplode the assigned vectors to (cell, dim, value), one
-   groupBy (cell, dim) average, re-assemble arrays with
-   sort_array(collect_list(struct(dim, mean))).
+One law, two functions:
+- pq_assign: exact BIGINT squared-L2 argmin per group, ties to the
+  lowest cid — a row-local array_min fold against one broadcast row of
+  cid-sorted centroids (no shuffle, one output row per input row);
+- lloyd_fit_grouped_quantized: deterministic init (the k lowest
+  vec_ids per group, cid = 0..k-1), ``iters`` rounds of (pq_assign,
+  floor-integer mean per (group, cell, dim)), and the final assignment.
 
-Driver holds only the K centroid arrays (collect of K rows — tiny);
-the vector table is cached once and never collected. Lineage does not
-grow across iterations because each round's centroids re-enter as a
-*literal* broadcast frame, so no checkpointing is needed — the classic
-iterative-Spark trap (unbounded plan growth) is designed out rather
-than patched.
-
-Determinism: init = the K lowest vec_ids; distance ties broken by cell
-id; means of float sums are stable under AQE because assignment is a
-pure function of (vector, centroids). Exactness is pinned by
-tests/test_kmeans.py (monotone inertia + argmin consistency), not a SQL
-oracle — per the rows-only policy for iterative ops.
+The trainer is one declarative plan (iters is small and fixed) cut at
+an eager plan boundary (_util.boundary over the k*groups centroid
+rows), so its consumers start from a LogicalRDD instead of re-embedding
+the unroll. Every intermediate stays in exact fixed-point arithmetic,
+so the whole trainer replays in ANSI SQL (similarity._pq_trainer_parts)
+and every trainer row here — sim_kmeans_step, sim_kmeans_cells and the
+trained-IVF rows — is oracle-gated value-exactly.
 """
 
 from __future__ import annotations
@@ -38,6 +36,7 @@ from ..operators.similarity import (
     _SQL_VEC_CTE,
     _dot,
     _fixed,
+    _pq_trainer_parts,
     _sql_d2,
     _vectors,
 )
@@ -49,7 +48,7 @@ IVF_TRAIN_ITERS = 2  # unrolled quantized-Lloyd rounds in sim_knn_ivf_trained
 
 
 def _long_d2_guard(vectors: DataFrame, col: str = "q") -> DataFrame:
-    """Derived-exactness guard for _assign's long accumulator (same
+    """Derived-exactness guard for pq_assign's long accumulator (same
     discipline as text._tfidf_weights's dot_sum): a squared-L2 partial
     sum is bounded by dims * (2 * max|component|)^2, so the BIGINT path
     is only valid while that bound stays under 2^63. The unit-norm
@@ -85,50 +84,22 @@ def _long_d2_guard(vectors: DataFrame, col: str = "q") -> DataFrame:
                 F.lit(", dims="),
                 F.col("dims").cast("string"),
                 F.lit(") exceed the BIGINT squared-L2 bound; widen "),
-                F.lit("_assign's zero to decimal(38,0)"),
+                F.lit("pq_assign's zero to decimal(38,0)"),
             ),
         ).alias("d2_ok")
     )
 
 
-def _assign(vectors: DataFrame, centroids: DataFrame, zero=None) -> DataFrame:
-    """(vec_id, emb, cell): nearest centroid by squared L2, ties → lowest cid.
-
-    argmin via min_by over a (d2, cid) struct instead of a row_number
-    window: the groupBy gets map-side partial aggregation, so each of the
-    trainer's iterations shuffles ~n rows, not the n·k crossJoin fan-out
-    a window sort would carry. Struct order == ORDER BY d2, cid (cid is
-    distinct, so the pick is deterministic in both engines).
-
-    ``zero``: distance accumulator literal. Default float64 (the
-    trainer's arithmetic); sim_kmeans_step passes a long 0 so the same
-    argmin runs in exact integer arithmetic over fixed-point vectors —
-    ONE tie rule and plan shape for the trainer and its oracle-gated
-    step."""
-    d2 = F.aggregate(
-        F.zip_with("emb", "c_emb", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0) if zero is None else zero,
-        lambda acc, v: acc + v,
-    )
-    best = F.min_by(F.struct("cid", "d2"), F.struct("d2", "cid")).alias("best")
-    return (
-        vectors.crossJoin(F.broadcast(centroids))
-        .select("vec_id", "emb", "cid", d2.alias("d2"))
-        .groupBy("vec_id")
-        .agg(F.first("emb").alias("emb"), best)
-        .select("vec_id", "emb", F.col("best.cid").alias("cell"), F.col("best.d2").alias("d2"))
-    )
-
-
 def pq_assign(subs: DataFrame, cent: DataFrame) -> DataFrame:
-    """THE per-subspace code-assignment law, factored module-level so
-    incremental PQ maintenance (sources/ann_index.upsert_pq_codes)
-    encodes NEW vectors under persisted codebooks with the identical
-    arithmetic the trainer used: exact BIGINT squared-L2 per gid, ties
-    to the lowest cid. Carrying the winning d2 out costs nothing and
-    spares callers (kmeans_fit_quantized) a re-join against the final
-    centroids. ``subs``: gid/vec_id/sv; ``cent``: gid/cid/c_q →
-    gid/vec_id/sv/cid/d2.
+    """THE assignment law of every quantized trainer: exact BIGINT
+    squared-L2 per gid, ties to the lowest cid. The trainer's rounds,
+    its final assignment, IVF routing (ivf_assign), PQ encoding and
+    two-level routing all call it, so NEW vectors land under persisted
+    centroids with the identical arithmetic the trainer used. Carrying
+    the winning d2 out costs nothing and spares callers
+    (kmeans_fit_quantized) a re-join against the final centroids.
+    ``subs``: gid/vec_id/sv plus any payload columns, which ride along;
+    ``cent``: gid/cid/c_q → every ``subs`` column, then cid/d2.
 
     Shape (round 13 — the sf100 routing-spill fix): the centroid side
     collapses to ONE broadcastable row per gid holding a cid-sorted
@@ -159,13 +130,11 @@ def pq_assign(subs: DataFrame, cent: DataFrame) -> DataFrame:
             c["cid"].alias("cid"),
         ),
     )
+    keep = subs.columns
     return (
         subs.join(F.broadcast(cents), "gid")
-        .select("gid", "vec_id", "sv", F.array_min(scored).alias("m"))
-        .select(
-            "gid", "vec_id", "sv", F.col("m.cid").alias("cid"),
-            F.col("m.d2").alias("d2"),
-        )
+        .select(*keep, F.array_min(scored).alias("m"))
+        .select(*keep, F.col("m.cid").alias("cid"), F.col("m.d2").alias("d2"))
     )
 
 
@@ -173,12 +142,12 @@ def lloyd_fit_grouped_quantized(
     subs: DataFrame, k: int, iters: int
 ) -> tuple[DataFrame, DataFrame]:
     """Grouped Lloyd's on FIXED-POINT integer subvectors with the
-    floor-integer centroid update — the bit-replayable twin of
-    lloyd_fit_grouped, for oracle-gated PQ codebooks (sim_knn_pq).
+    floor-integer centroid update — the one trainer behind the IVF
+    coarse quantizer, the PQ codebooks, the two-level router and
+    sim_kmeans_cells (each an oracle-gated, bit-replayable row).
 
     ``subs`` is ``(gid: int, vec_id, sv: array<bigint>)``. Arithmetic
-    law per group (identical to sim_knn_ivf_trained's trainer, which
-    proved it cross-engine-exact):
+    law per group (replayed in SQL by similarity._pq_trainer_parts):
 
     - init: the k lowest vec_ids per gid, cid = 0..k-1 in vec_id order;
     - assign: exact BIGINT squared-L2, ties to the lowest cid;
@@ -188,17 +157,14 @@ def lloyd_fit_grouped_quantized(
       in both engines);
     - a cell that loses all members vanishes.
 
-    Unlike lloyd_fit_grouped there is NO driver loop state: the trainer
-    is one declarative plan (iters is small and fixed), materialized at
-    an eager plan boundary (_util.boundary over the k*M centroid rows)
-    so downstream search plans start from a LogicalRDD instead of
-    re-embedding the unroll per consumer.
+    There is NO driver loop state: the trainer is one declarative plan
+    (iters is small and fixed), materialized at an eager plan boundary
+    (_util.boundary over the k*M centroid rows) so downstream search
+    plans start from a LogicalRDD instead of re-embedding the unroll per
+    consumer.
     Returns (codes: gid/vec_id/cid/d2 under the FINAL centroids — d2 is
     the exact integer distance to the winning centroid,
     cent: gid/cid/c_q — checkpointed, k*M rows)."""
-    def assign(cent: DataFrame) -> DataFrame:
-        return pq_assign(subs, cent)
-
     iw = Window.partitionBy("gid").orderBy("vec_id")
     cent = (
         subs.select("gid", "vec_id", "sv", F.row_number().over(iw).alias("irn"))
@@ -210,7 +176,7 @@ def lloyd_fit_grouped_quantized(
         )
     )
     for _ in range(iters):
-        ex = assign(cent).select(
+        ex = pq_assign(subs, cent).select(
             "gid", F.col("cid").alias("cell"), F.posexplode("sv").alias("dim", "qv")
         )
         agg = ex.groupBy("gid", "cell", "dim").agg(
@@ -245,7 +211,7 @@ def lloyd_fit_grouped_quantized(
             .select("gid", F.col("cell").alias("cid"), "c_q")
         )
     cent = boundary(cent)
-    codes = assign(cent).select("gid", "vec_id", "cid", "d2")
+    codes = pq_assign(subs, cent).select("gid", "vec_id", "cid", "d2")
     return codes, cent
 
 
@@ -273,8 +239,6 @@ def _kmeans_cells_oracle(k: int, iters: int) -> str:
     subs CTE feeds the SAME trainer unroll the PQ oracles use
     (_pq_trainer_parts), then the summary aggregates exact integer d2
     per final cell — the one IEEE divide is the mean at the surface."""
-    from .similarity import _pq_trainer_parts
-
     parts = [
         "subs AS (SELECT CAST(0 AS BIGINT) AS gid, vec_id, fe AS sv FROM vecs)",
     ]
@@ -341,12 +305,11 @@ def _kmeans_cells_oracle(k: int, iters: int) -> str:
     "coordinate sum, and mean (one IEEE division). This is the SQL-"
     "expressible core of sim_kmeans_cells: the full trainer only "
     "re-enters this step with re-derived centroids, so the driver row "
-    "here covers the arithmetic the iterative loop (rows-only by "
-    "policy) is built from. Plan: centroids broadcast (K rows), "
-    "argmin via min_by struct — map-side partial agg, ~n rows "
-    "shuffled, no window over the vector table; the update is one "
-    "posexplode + keyed agg, the same shape that scales to 100 TB in "
-    "the trainer itself.",
+    "here covers the arithmetic each trainer round is built from. "
+    "Plan: the argmin is the trainer's own pq_assign — one broadcast "
+    "row of cid-sorted centroids and a row-local array_min fold, so "
+    "assignment shuffles nothing; the update is one posexplode + keyed "
+    "agg, the same shape that scales to 100 TB in the trainer itself.",
 )
 def sim_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Fixed-point quantized embeddings — the similarity module's shared
@@ -355,27 +318,24 @@ def sim_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = spread(t(spark, sf_dir, "embeddings")).select(
         "vec_id", _fixed(F.col("embedding")).alias("q")
     )
+    gid = F.lit(0).cast("long").alias("gid")
     cents = (
         v.orderBy("vec_id")
         .limit(K_DEFAULT)
-        .select(F.col("vec_id").alias("cid"), F.col("q").alias("c_emb"))
+        .select(gid, F.col("vec_id").alias("cid"), F.col("q").alias("c_q"))
     )
-    # The trainer's own _assign, run in exact integer arithmetic (long
-    # accumulator): |a-b|^2 sums are bounded by 4 * FP_SCALE^2 for
-    # unit-norm vectors (~4e14 << 2^63) — the same bound discipline as
-    # similarity._dot. The unit-norm precondition is DERIVED, not
-    # assumed: _long_d2_guard hard-fails past the actual bound, lazily —
-    # the guard is a 1-row broadcast side of the returned plan, so the
-    # builder itself runs no Spark job (see the crossJoin at the tail).
+    # The trainer's own pq_assign (long accumulator): |a-b|^2 sums are
+    # bounded by 4 * FP_SCALE^2 for unit-norm vectors (~4e14 << 2^63) —
+    # the same bound discipline as similarity._dot. The unit-norm
+    # precondition is DERIVED, not assumed: _long_d2_guard hard-fails
+    # past the actual bound, lazily — the guard is a 1-row broadcast
+    # side of the returned plan, so the builder itself runs no Spark job
+    # (see the crossJoin at the tail).
     guard = _long_d2_guard(v, "q")
-    assigned = _assign(
-        v.select("vec_id", F.col("q").alias("emb")),
-        cents,
-        zero=F.lit(0).cast("long"),
-    )
-    ex = assigned.select("cell", F.posexplode("emb").alias("dim0", "qv")).select(
-        "cell", (F.col("dim0") + 1).cast("long").alias("dim"), "qv"
-    )
+    assigned = pq_assign(v.select(gid, "vec_id", F.col("q").alias("sv")), cents)
+    ex = assigned.select(
+        F.col("cid").alias("cell"), F.posexplode("sv").alias("dim0", "qv")
+    ).select("cell", (F.col("dim0") + 1).cast("long").alias("dim"), "qv")
     return (
         ex.groupBy("cell", "dim")
         .agg(
@@ -415,9 +375,10 @@ def sim_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     "aggregates the exact integer d2 to the FINAL centroids "
     "(decimal-accumulated, so no overflow at any SF) with the single "
     "IEEE divide at the surface; the oracle reuses _pq_trainer_parts "
-    "verbatim. Plan per iteration: centroids broadcast (k rows), argmin "
-    "via min_by — map-side partial agg, ~n rows shuffled, no window "
-    "over the vector table — the shape that scales to 100 TB.",
+    "verbatim. Plan per iteration: pq_assign's row-local array_min "
+    "fold against one broadcast row of k centroids (no assignment "
+    "shuffle), then one (cell, dim) aggregate for the update — the "
+    "shape that scales to 100 TB.",
 )
 def sim_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     pv = kmeans_fit_quantized(spark, sf_dir)
@@ -430,73 +391,42 @@ def sim_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# _sql_d2 moved to similarity.py (imported above) so the PQ oracle there
-# can share it without a circular module-level import.
-
-
 def _ivf_trained_parts(
     k: int, iters: int, nprobe: int, nq: int, src: str = "vecs"
 ) -> list[str]:
     """CTE parts of the trained-IVF search, up to ``scored(query_id,
     vec_id, cosine, fe, nrm)`` — shared by _ivf_trained_oracle (top-5
     select), sim_knn_ivf_mmr's oracle (top-C candidates into the MMR
-    rounds), and sim_knn_ivf_upsert's oracle, so the trainer unroll
-    exists exactly once. ``src``: the CTE the TRAINER reads (cent0 init
-    + per-round assignment); the final assignment (fassign) and the
-    queries always cover the FULL ``vecs`` — with src="vecs" that is
-    the plain trained search, with src = a base subset it states the
-    incremental-index law (old centroids, union corpus)."""
+    rounds), sim_knn_ivf_upsert's oracle and the balance audit. The
+    trainer is the PQ oracles' own unroll (_pq_trainer_parts, prefix
+    ``ivf``) over a one-gid subs CTE, as ivf_train is the one-group
+    call of lloyd_fit_grouped_quantized. ``src``: the CTE the TRAINER
+    reads; the final assignment (fassign) and the queries always cover
+    the FULL ``vecs`` — with src="vecs" that is the plain trained
+    search, with src = a base subset it states the incremental-index
+    law (old centroids, union corpus)."""
     parts = [
-        f"cent0 AS (SELECT vec_id AS cid, fe AS c_q"
-        f" FROM {src} ORDER BY vec_id LIMIT {k})"
+        f"ivftrain AS (SELECT CAST(0 AS BIGINT) AS gid, vec_id, fe AS sv FROM {src})",
+        "ivfsubs AS (SELECT CAST(0 AS BIGINT) AS gid, vec_id, fe AS sv FROM vecs)",
     ]
-    for i in range(1, iters + 1):
-        prev = f"cent{i - 1}"
-        parts.append(
-            f"""a{i} AS (
-        SELECT v.vec_id, v.fe, c.cid
-        FROM {src} v CROSS JOIN {prev} c
-        QUALIFY ROW_NUMBER() OVER (
-            PARTITION BY v.vec_id
-            ORDER BY {_sql_d2("v.fe", "c.c_q")}, c.cid) = 1)"""
+    parts.extend(
+        _pq_trainer_parts(
+            k, iters, train_src="ivftrain", prefix="ivf", subs_src="ivfsubs"
         )
-        parts.append(
-            f"""m{i} AS (
-        SELECT cell, dim,
-               CAST((s - ((s % n) + n) % n) // n AS BIGINT) AS m
-        FROM (
-            SELECT cell, dim, COUNT(*) AS n,
-                   SUM(CAST(qv AS HUGEINT)) AS s
-            FROM (
-                SELECT cid AS cell,
-                       CAST(generate_subscripts(fe, 1) AS BIGINT) AS dim,
-                       unnest(fe) AS qv
-                FROM a{i}
-            ) ex
-            GROUP BY cell, dim
-        ) agg)"""
-        )
-        parts.append(
-            f"cent{i} AS (SELECT cell AS cid, list(m ORDER BY dim) AS c_q"
-            f" FROM m{i} GROUP BY cell)"
-        )
-    cent = f"cent{iters}"
+    )
     parts.append(f"q AS (SELECT * FROM vecs WHERE vec_id < {nq})")
     parts.append(
         f"""probes AS (
         SELECT q.vec_id AS query_id, c.cid
-        FROM q CROSS JOIN {cent} c
+        FROM q CROSS JOIN ivfcent{iters} c
         QUALIFY ROW_NUMBER() OVER (
             PARTITION BY q.vec_id
             ORDER BY {_sql_d2("q.fe", "c.c_q")}, c.cid) <= {nprobe})"""
     )
     parts.append(
-        f"""fassign AS (
+        """fassign AS (
         SELECT v.vec_id, v.fe, v.nrm, c.cid
-        FROM vecs v CROSS JOIN {cent} c
-        QUALIFY ROW_NUMBER() OVER (
-            PARTITION BY v.vec_id
-            ORDER BY {_sql_d2("v.fe", "c.c_q")}, c.cid) = 1)"""
+        FROM vecs v JOIN ivfcodes c ON c.vec_id = v.vec_id)"""
     )
     parts.append(
         """scored AS (
@@ -536,27 +466,29 @@ def _ivf_trained_oracle(k: int, iters: int, nprobe: int, nq: int) -> str:
     "INCLUDING the trainer — closes SCALE.md's 'fixture-rule centroids' "
     f"shortcut with a stronger guarantee than the planned swap: "
     f"{IVF_TRAIN_ITERS} quantized-Lloyd rounds (init = the "
-    f"{K_DEFAULT} lowest vec_ids, exact BIGINT squared-L2 assignment "
-    "with ties to the lowest cid, centroid update = per-dimension "
-    "FLOOR-INTEGER mean via the subtract-mod identity, a cell that "
-    "loses all members vanishes) keep every intermediate in exact "
-    "fixed-point arithmetic, so the whole iterative trainer is "
-    "bit-reproducible in ANSI SQL — the oracle unrolls the identical "
-    f"rounds mechanically (_ivf_trained_oracle). Queries then probe "
-    f"their {NPROBE} nearest cells BY THE ASSIGNMENT LAW (exact d2, "
-    "not cosine — probe law == cell law is what bounds recall loss), "
-    "and exact fixed-point cosine re-ranks inside probed cells only. "
-    "Floor quantization costs <=1e-7 relative error per coordinate per "
-    "round — noise at embedding precision, and the price of an exact "
+    f"{K_DEFAULT} lowest vec_ids as cells 0..{K_DEFAULT - 1}, exact "
+    "BIGINT squared-L2 assignment with ties to the lowest cid, "
+    "centroid update = per-dimension FLOOR-INTEGER mean via the "
+    "subtract-mod identity, a cell that loses all members vanishes) "
+    "keep every intermediate in exact fixed-point arithmetic, so the "
+    "whole iterative trainer is bit-reproducible in ANSI SQL. The "
+    "trainer is lloyd_fit_grouped_quantized with one group — the PQ "
+    "codebooks' own trainer — and the oracle unrolls the identical "
+    "rounds through _pq_trainer_parts. Queries then probe their "
+    f"{NPROBE} nearest cells BY THE ASSIGNMENT LAW (exact d2, not "
+    "cosine — probe law == cell law is what bounds recall loss), and "
+    "exact fixed-point cosine re-ranks inside probed cells only. Floor "
+    "quantization costs <=1e-7 relative error per coordinate per round "
+    "— noise at embedding precision, and the price of an exact "
     "cross-engine gate on an iterative algorithm. Plan: the whole "
-    "trainer is ONE lazy declarative plan (no driver loop, no collect "
-    "— the superseded float trainer re-entered literals); each round is a k-row "
-    "broadcast crossJoin + min_by argmin (map-side partial agg, ~n "
-    "rows shuffled) + posexplode/regroup update; the vector table is "
-    "cached once and re-read per round from memory. 100 TB: identical "
-    "layout to sim_knn_ivf — bucket vectors by trained cid, centroids "
-    "broadcast, queries touch nprobe buckets; training cost is "
-    "iters x (one pass + one dims x k shuffle), the standard Lloyd "
+    "trainer is ONE declarative plan (no driver loop, no collect) cut "
+    "at an eager k-row centroid boundary; each round is pq_assign's "
+    "row-local array_min fold against one broadcast row of centroids "
+    "(no assignment shuffle) + posexplode/regroup update; the vector "
+    "table is cached once and re-read per round from memory. 100 TB: "
+    "identical layout to sim_knn_ivf — bucket vectors by trained cid, "
+    "centroids broadcast, queries touch nprobe buckets; training cost "
+    "is iters x (one pass + one dims x k shuffle), the standard Lloyd "
     "bill.",
 )
 def sim_knn_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -568,86 +500,31 @@ def sim_knn_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivf_train(v: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The trained-IVF *build* step, factored out of the search so the
     index can be PERSISTED (sources/ann_index.py) instead of re-trained
-    per query: quantized-Lloyd centroids plus the final cell assignment
-    of every vector. Returns ``(cent: cid/c_q — checkpointed, k rows,
-    fassign: vec_id/fe/nrm/cid)``. Same arithmetic law as
-    lloyd_fit_grouped_quantized (exact BIGINT assignment, floor-integer
-    means), so the artifact round-trips through parquet bit-exactly."""
-
-    def assign(cent: DataFrame) -> DataFrame:
-        return ivf_assign(v, cent)
-
-    cent = (
-        v.orderBy("vec_id")
-        .limit(K_DEFAULT)
-        .select(F.col("vec_id").alias("cid"), F.col("fe").alias("c_q"))
+    per query: lloyd_fit_grouped_quantized with one group (k=K_DEFAULT,
+    IVF_TRAIN_ITERS rounds), so cells are the trainer's 0..k-1 rank ids,
+    plus the final cell assignment of every vector. Returns ``(cent:
+    cid/c_q — checkpointed, k rows, fassign: vec_id/fe/nrm/cid)``; the
+    artifact round-trips through parquet bit-exactly."""
+    subs = v.select(
+        F.lit(0).cast("long").alias("gid"), "vec_id", F.col("fe").alias("sv")
     )
-    for _ in range(IVF_TRAIN_ITERS):
-        ex = assign(cent).select(
-            F.col("cid").alias("cell"), F.posexplode("fe").alias("dim", "qv")
-        )
-        agg = ex.groupBy("cell", "dim").agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal accumulator: per-cell coordinate sums are bounded by
-            # n_members * FP_SCALE, which outgrows BIGINT before the
-            # vectors themselves do (sim_kmeans_step's discipline).
-            F.sum(F.col("qv").cast("decimal(38,0)")).alias("s"),
-        )
-        smod = ((F.col("s") % F.col("n")) + F.col("n")) % F.col("n")
-        # Decimal-domain quotient, same law as lloyd_fit_grouped_quantized
-        # (see the note there): exact to the 38-digit accumulator bound,
-        # no 2^53 double-division caveat.
-        means = agg.select(
-            "cell", "dim", ((F.col("s") - smod) / F.col("n")).cast("long").alias("m")
-        )
-        cent = (
-            means.groupBy("cell")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("dim", "m"))),
-                    lambda st: st["m"],
-                ).alias("c_q")
-            )
-            .select(F.col("cell").alias("cid"), "c_q")
-        )
-    # The trained centroid frame (k rows) feeds BOTH the final assignment
-    # and the probe routing; the eager boundary hands each of them a k-row
-    # LogicalRDD instead of both unrolled Lloyd rounds.
-    cent = boundary(cent)
-    return cent, assign(cent)
+    _codes, cent = lloyd_fit_grouped_quantized(subs, K_DEFAULT, IVF_TRAIN_ITERS)
+    cent = cent.select("cid", "c_q")
+    return cent, ivf_assign(v, cent)
 
 
 def ivf_assign(v: DataFrame, cent: DataFrame) -> DataFrame:
-    """THE cell-assignment law, factored module-level so incremental
-    index maintenance (sources/ann_index.upsert_ivf_postings) assigns
-    NEW vectors under persisted centroids with the identical arithmetic
-    the trainer used: exact BIGINT squared-L2, ties to the lowest cid.
-    Carries fe/nrm through so consumers need no join back to the vector
-    table. ``v``: vec_id/fe/nrm → returns vec_id/fe/nrm/cid.
-
-    Same row-local fold shape as pq_assign (round 13): one broadcast
-    row holding the cid-sorted centroid array, argmin via array_min on
-    (d2, cid) structs — identical law to the old min_by(cid,
-    struct(d2, cid)) (ties to lowest cid), but one output row per input
-    row with NO n*k aggregate: daily-increment assignment is pure map
-    work at any corpus scale."""
-    cents = cent.groupBy().agg(
-        F.sort_array(F.collect_list(F.struct("cid", "c_q"))).alias("cents")
-    )
-    scored = F.transform(
-        "cents",
-        lambda c: F.struct(
-            F.aggregate(
-                F.zip_with(F.col("fe"), c["c_q"], lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("d2"),
-            c["cid"].alias("cid"),
-        ),
-    )
-    return (
-        v.crossJoin(F.broadcast(cents))
-        .select("vec_id", "fe", "nrm", F.array_min(scored)["cid"].alias("cid"))
+    """THE cell-assignment law — pq_assign with one group — so
+    incremental index maintenance (sources/ann_index.upsert_ivf_postings)
+    assigns NEW vectors under persisted centroids with the identical
+    arithmetic the trainer used: exact BIGINT squared-L2, ties to the
+    lowest cid. Carries fe/nrm through so consumers need no join back to
+    the vector table. ``v``: vec_id/fe/nrm, ``cent``: cid/c_q → returns
+    vec_id/fe/nrm/cid."""
+    gid = F.lit(0).cast("long").alias("gid")
+    subs = v.select(gid, "vec_id", F.col("fe").alias("sv"), "nrm")
+    return pq_assign(subs, cent.select(gid, "cid", "c_q")).select(
+        "vec_id", F.col("sv").alias("fe"), "nrm", "cid"
     )
 
 

@@ -185,8 +185,10 @@ def decode_png(payload: bytes):
         ctype = payload[pos + 4 : pos + 8]
         data = payload[pos + 8 : pos + 8 + length]
         if ctype == b"IHDR":
+            if len(data) < 13:
+                raise ValueError("truncated PNG IHDR chunk")
             width, height, bit_depth, color_type, _comp, _filt, interlace = (
-                struct.unpack(">IIBBBBB", data)
+                struct.unpack(">IIBBBBB", data[:13])
             )
             if interlace:
                 raise NotImplementedError("interlaced PNG (Adam7) not supported")
@@ -199,6 +201,10 @@ def decode_png(payload: bytes):
         elif ctype == b"IEND":
             break
         pos += 12 + length
+    if width is None:
+        raise ValueError("PNG payload has no IHDR chunk")
+    if color_type not in _PNG_CHANNELS:
+        raise ValueError(f"unknown PNG colour type {color_type}")
     channels = _PNG_CHANNELS[color_type]
     stride = width * channels
     raw = np.frombuffer(zlib.decompress(idat), np.uint8).reshape(height, stride + 1)
@@ -329,6 +335,8 @@ def decode_bmp(payload: bytes):
 
     if payload[:2] != b"BM":
         raise ValueError("not a BMP payload")
+    if len(payload) < 34:
+        raise ValueError("truncated BMP header")
     (data_offset,) = struct.unpack("<I", payload[10:14])
     width, height = struct.unpack("<ii", payload[18:26])
     _planes, bpp = struct.unpack("<HH", payload[26:30])

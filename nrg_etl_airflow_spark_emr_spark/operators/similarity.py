@@ -239,6 +239,14 @@ def sim_knn_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("rn") <= 10)
 
 
+def _fixture_centroids(v: DataFrame) -> DataFrame:
+    """(cid, cfe, cnrm): the fixture-rule centroids — every vector with
+    vec_id % CENTROID_MOD == 0 is a cell, labelled by its vec_id."""
+    return v.filter(F.col("vec_id") % CENTROID_MOD == 0).select(
+        F.col("vec_id").alias("cid"), F.col("fe").alias("cfe"), F.col("nrm").alias("cnrm")
+    )
+
+
 def _cell_assignment(v: DataFrame) -> DataFrame:
     """(vec_id, fe, nrm, cid): nearest-centroid cell per vector (payload
     carried through), centroids broadcast.
@@ -255,9 +263,7 @@ def _cell_assignment(v: DataFrame) -> DataFrame:
     cid ASC because -cid is distinct (no ties reach the second key
     ambiguously).
     """
-    cent = v.filter(F.col("vec_id") % CENTROID_MOD == 0).select(
-        F.col("vec_id").alias("cid"), F.col("fe").alias("cfe"), F.col("nrm").alias("cnrm")
-    )
+    cent = _fixture_centroids(v)
     c_cos = _dot(F.col("fe"), F.col("cfe")).cast("double") / (F.col("nrm") * F.col("cnrm"))
     return (
         v.crossJoin(F.broadcast(cent))
@@ -340,9 +346,7 @@ _SQL_ASSIGN_CTE = f"""
 )
 def sim_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _vectors(spark, sf_dir).cache()
-    cent = v.filter(F.col("vec_id") % CENTROID_MOD == 0).select(
-        F.col("vec_id").alias("cid"), F.col("fe").alias("cfe"), F.col("nrm").alias("cnrm")
-    )
+    cent = _fixture_centroids(v)
     # Assign every vector to its nearest centroid cell (centroids broadcast).
     assigned = _cell_assignment(v)
     # Queries probe their NPROBE closest cells.
@@ -1164,9 +1168,7 @@ def sim_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     v = _vectors(spark, sf_dir).cache()
     _check_pq_dim_src(spark, sf_dir)
-    cent = v.filter(F.col("vec_id") % CENTROID_MOD == 0).select(
-        F.col("vec_id").alias("cid"), F.col("fe").alias("cfe"), F.col("nrm").alias("cnrm")
-    )
+    cent = _fixture_centroids(v)
     # Coarse assignment (shared law with sim_knn_ivf), then exact BIGINT
     # residuals — vector minus its cell centroid, centroids broadcast.
     assigned = _cell_assignment(v)

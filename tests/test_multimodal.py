@@ -171,6 +171,29 @@ def test_bmp_roundtrip_24bit():
     assert mm.decode_image(payload) == (5, 6, 3)
 
 
+def _png_ihdr(ihdr: bytes) -> bytes:
+    import struct
+
+    return mm._PNG_MAGIC + struct.pack(">I", 13) + b"IHDR" + ihdr + b"\0" * 4
+
+
+@pytest.mark.parametrize(
+    "decode, payload, match",
+    [
+        (mm.decode_png, mm._PNG_MAGIC + b"junk", "no IHDR chunk"),
+        (mm.decode_png, _png_ihdr(b"\0\0\0\2\0\0\0\2\x08\x05\0\0\0"), "colour type 5"),
+        (mm.decode_png, _png_ihdr(b"\0\0\0\2\0"), "truncated PNG IHDR"),
+        (mm.decode_bmp, b"BMjunk", "truncated BMP header"),
+    ],
+    ids=["png-no-ihdr", "png-unknown-colour", "png-short-ihdr", "bmp-short-header"],
+)
+def test_truncated_raster_raises_named_value_error(decode, payload, match):
+    """A payload with a valid magic but a broken header fails with a
+    ValueError that says what is wrong, as the WAV and AVI codecs do."""
+    with pytest.raises(ValueError, match=match):
+        decode(payload)
+
+
 def test_resize_cross_codec(spark, sf_dir):
     """mm_resize's round-12 cross-check semantics: decoded dimensions
     and pixel sums of both targets match a local replay of the pixel
