@@ -11,7 +11,13 @@ and every anti-pattern replaced by its scale-safe form:
   tokens (nrg_sql_queries.py:37-42, bug B5) → the intended Java pattern
   ``MM/dd/yyyy hh:mm:ss a`` under CORRECTED parser policy;
 - repeated count()/show() re-executions without cache (nrg_etl.py:25-34)
-  → single action per output;
+  and three strictly serial writes → one chain per output (transform →
+  partitioned write → read-back → that table's QC aggregate), the three
+  chains run as concurrent Spark jobs on a thread pool of one thread per
+  output. The weather chain is submitted first: its pivot and its
+  three-level partitioned write (one file per bal_auth/year/month) are
+  the pipeline's critical path, and the FIFO scheduler gives free cores
+  to the earliest submitted job first;
 - the commented-out BA fact write (nrg_etl.py:36, bug B6) implemented
   live, since the QC job requires it (nrg_qc.py:18-25);
 - QC loop bugs B1/B2/B3/B4/B7 → the declarative framework in ``qc.py``.
@@ -22,8 +28,10 @@ real EIA-930/GHCN data is not committed in the reference repo).
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -91,18 +99,19 @@ def bal_auth_table(raw: DataFrame) -> DataFrame:
     (reference bal_auth_query, nrg_sql_queries.py:1-22; operators P1/P2/A2).
 
     Numeric columns are cast explicitly instead of relying on implicit
-    string→double coercion (SURVEY.md §1.2)."""
-    cols = [F.col(f"`{src}`").alias(dst) for src, dst in BAL_AUTH_RENAMES.items()]
+    string→double coercion (SURVEY.md §1.2), inline in the one projection
+    rather than one ``withColumn`` per column."""
+    numeric = {"demand_forecast", "demand", "net_generation", *FUEL_COLUMNS.values()}
+    cols = [
+        (F.col(f"`{src}`").cast("double") if dst in numeric else F.col(f"`{src}`")).alias(dst)
+        for src, dst in BAL_AUTH_RENAMES.items()
+    ]
     data_date = F.to_date(F.col("`Data Date`"), DATA_DATE_FMT)
-    projected = raw.select(
+    return raw.select(
         *cols,
         F.month(data_date).alias("month"),
         F.year(data_date).alias("year"),
-    )
-    numeric = ["demand_forecast", "demand", "net_generation", *FUEL_COLUMNS.values()]
-    for c in numeric:
-        projected = projected.withColumn(c, F.col(c).cast("double"))
-    return projected.distinct()
+    ).distinct()
 
 
 def time_table(raw: DataFrame) -> DataFrame:
@@ -194,6 +203,8 @@ class NrgOutputs:
     time_path: str
     weather_path: str
     qc_report_path: str
+    #: Failed QC checks in the written report (its ``n_failed``).
+    n_failed: int
 
 
 def run_pipeline(
@@ -206,34 +217,63 @@ def run_pipeline(
 ) -> NrgOutputs:
     """Full reference pipeline: ingest → transform → partitioned parquet →
     read-back → QC report (reference DAG steps, spark_submit_airflow.py:
-    213-227, collapsed to a library call; Airflow/EMR become deployment)."""
+    213-227, collapsed to a library call; Airflow/EMR become deployment).
+
+    Each output is one chain: transform → ``write_partitioned_parquet`` →
+    read-back → ``qc.evaluate`` over that table's checks. The three chains
+    run on a pool of one thread per output, so their Spark jobs overlap
+    and a write's single-task tail no longer leaves the other cores idle.
+    Weather goes first because it is the critical path and the FIFO
+    scheduler serves the earliest job first. Each thread target is wrapped
+    in ``inheritable_thread_target(spark)``, so the caller's job group,
+    local properties and tags reach every job. All chains are joined
+    before the report is built from the per-table results in sorted table
+    order, the order ``qc.evaluate`` uses, so it holds exactly what one
+    ``qc.evaluate`` over the three read-backs returns. A failed chain
+    re-raises its error and no report is written."""
     raw_ba = read_csv_table(spark, bal_auth_csv, header=True)
     raw_weather = read_csv_table(spark, weather_csv, schema=WEATHER_SCHEMA, header=False)
     locations = read_csv_table(spark, locations_csv, header=True)
+    checks = nrg_checks(max_unmatched_station_days)
 
-    out = NrgOutputs(
+    # table -> (transform, partition columns), critical path first.
+    chains = {
+        # Weather fact, 3-level partitioning (reference nrg_etl.py:72, S6).
+        "weather": (lambda: weather_wide(raw_weather, locations), ["bal_auth", "year", "month"]),
+        # Live BA fact write (bug B6 fixed: reference commented it out yet
+        # QC depends on it), partitioned as the commented code intended.
+        "bal_auth": (lambda: bal_auth_table(raw_ba), ["year", "month"]),
+        # Time dim, partitioned by year/month (reference nrg_etl.py:37, S5).
+        "time": (lambda: time_table(raw_ba), ["year", "month"]),
+    }
+
+    def chain(table: str) -> list[dict]:
+        transform, partition_cols = chains[table]
+        path = f"{output_dir}/{table}"
+        write_partitioned_parquet(transform(), path, partition_cols)
+        # QC over the *written* output (read-back, S4 — reference nrg_qc.py:18-25).
+        written = spark.read.parquet(path)
+        return qc.evaluate({table: written}, [c for c in checks if c.table == table])
+
+    def inheriting(fn):
+        # One wrapper per chain: each copies the caller's local properties
+        # into its own object, so concurrent SQL executions never share one.
+        # With PYSPARK_PIN_THREAD=false the call hands back the session
+        # itself; Python threads then have no JVM thread of their own and
+        # there is nothing per thread to carry over.
+        wrap = inheritable_thread_target(spark)
+        return fn if wrap is spark else wrap(fn)
+
+    with ThreadPoolExecutor(max_workers=len(chains)) as pool:
+        futures = {t: pool.submit(inheriting(chain), t) for t in chains}
+    results = [r for t in sorted(futures) for r in futures[t].result()]
+
+    report_path = f"{output_dir}/data_quality/data_quality.json"
+    summary = qc.write_report(results, report_path)
+    return NrgOutputs(
         bal_auth_path=f"{output_dir}/bal_auth",
         time_path=f"{output_dir}/time",
         weather_path=f"{output_dir}/weather",
-        qc_report_path=f"{output_dir}/data_quality/data_quality.json",
+        qc_report_path=report_path,
+        n_failed=summary["n_failed"],
     )
-
-    # Live BA fact write (bug B6 fixed: reference commented it out yet QC
-    # depends on it), partitioned as the commented code intended.
-    write_partitioned_parquet(bal_auth_table(raw_ba), out.bal_auth_path, ["year", "month"])
-    # Time dim, partitioned by year/month (reference nrg_etl.py:37, S5).
-    write_partitioned_parquet(time_table(raw_ba), out.time_path, ["year", "month"])
-    # Weather fact, 3-level partitioning (reference nrg_etl.py:72, S6).
-    write_partitioned_parquet(
-        weather_wide(raw_weather, locations), out.weather_path, ["bal_auth", "year", "month"]
-    )
-
-    # QC over the *written* outputs (read-back, S4 — reference nrg_qc.py:18-25).
-    tables = {
-        "bal_auth": spark.read.parquet(out.bal_auth_path),
-        "time": spark.read.parquet(out.time_path),
-        "weather": spark.read.parquet(out.weather_path),
-    }
-    results = qc.evaluate(tables, nrg_checks(max_unmatched_station_days))
-    qc.write_report(results, out.qc_report_path)
-    return out

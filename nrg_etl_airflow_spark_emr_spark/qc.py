@@ -9,8 +9,8 @@ dags/scripts/spark/nrg_qc.py:27-55) with its latent bugs fixed:
   (reference nrg_qc.py:44,49 compared 0 != Row(...) — always True).
 - B3: no trailing semicolons inside templated SQL
   (reference nrg_sql_queries.py:53).
-- B4/B7: the report is plain JSON-serializable dicts written through an
-  engine-agnostic writer, not Python open() on an hdfs:// URI with Row
+- B4/B7: the report is plain JSON-serializable dicts written through the
+  Hadoop FileSystem API, not Python open() on an hdfs:// URI with Row
   objects in the payload (reference nrg_qc.py:46,51,54-55).
 
 Execution model fixes the reference's one-collect()-per-check loop
@@ -22,10 +22,10 @@ aggregate pass (one job per table, each check one aggregate column), so a
 from __future__ import annotations
 
 import json
-import os
 from dataclasses import dataclass
 from typing import Any
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -145,9 +145,14 @@ def _result(c: Check, value: Any) -> dict[str, Any]:
 def write_report(results: list[dict[str, Any]], path: str) -> dict[str, Any]:
     """Write the QC report as one JSON document; returns the summary.
 
-    Local filesystem writer with parent-dir creation (B4 fixed). For
-    object stores, write the same payload via
-    ``spark.createDataFrame(results).coalesce(1).write.json(path)``.
+    The file goes through the active SparkContext's Hadoop FileSystem API
+    (B4 fixed), as ``corpus_pipeline_run``'s control plane does: ``path``
+    may be a local path, a ``file:`` URI or any scheme the session's
+    Hadoop conf reaches (``hdfs://``, ``s3a://``), and a scheme-less path
+    resolves against ``fs.defaultFS`` exactly like the parquet outputs
+    written beside it. ``create`` makes the parent directories and
+    overwrites an earlier report; a local path gets the same bytes that
+    ``json.dump(summary, f, indent=2)`` writes.
     """
     summary = {
         "n_checks": len(results),
@@ -155,9 +160,15 @@ def write_report(results: list[dict[str, Any]], path: str) -> dict[str, Any]:
         "failures": [r for r in results if not r["passed"]],
         "results": results,
     }
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w", encoding="utf-8") as fout:
-        json.dump(summary, fout, indent=2)
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        raise RuntimeError("qc.write_report needs an active SparkContext")
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    out = hpath.getFileSystem(sc._jsc.hadoopConfiguration()).create(hpath, True)
+    try:
+        out.write(bytearray(json.dumps(summary, indent=2).encode("utf-8")))
+    finally:
+        out.close()
     return summary
 
 

@@ -28,7 +28,9 @@ Usage (local or cluster — identical file):
         scripts/run_job.py query dedup_minhash_lsh --sf-dir ... --out ...
 
 Exit code is non-zero on failure so schedulers can fail fast (the
-reference's CANCEL_AND_WAIT equivalent).
+reference's CANCEL_AND_WAIT equivalent): an exception, an unknown query
+name, or a pipeline QC report with failed checks (exit 1; the report is
+still written).
 """
 
 from __future__ import annotations
@@ -57,6 +59,11 @@ def main(argv: list[str] | None = None) -> int:
     pl.add_argument("--weather", required=True, help="weather CSV glob/URI")
     pl.add_argument("--locations", required=True, help="locations dimension CSV/URI")
     pl.add_argument("--out", required=True, help="output directory/URI")
+    pl.add_argument(
+        "--max-unmatched-station-days", type=int, default=0,
+        help="weather rows whose station has no balancing authority that the "
+        "QC report tolerates (default 0)",
+    )
 
     ls = sub.add_parser("list", help="list runnable catalog queries")
 
@@ -81,7 +88,14 @@ def main(argv: list[str] | None = None) -> int:
         else:
             from nrg_etl_airflow_spark_emr_spark.pipelines.nrg import run_pipeline
 
-            run_pipeline(spark, args.bal_auth, args.weather, args.locations, args.out)
+            out = run_pipeline(
+                spark, args.bal_auth, args.weather, args.locations, args.out,
+                max_unmatched_station_days=args.max_unmatched_station_days,
+            )
+            if out.n_failed:
+                print(f"{out.n_failed} QC check(s) failed; see {out.qc_report_path}",
+                      file=sys.stderr)
+                return 1
         return 0
     finally:
         spark.stop()

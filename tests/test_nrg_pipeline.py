@@ -9,31 +9,42 @@ OUTER NULL → __HIVE_DEFAULT_PARTITION__, corrected timestamp format B5).
 
 from __future__ import annotations
 
+import importlib.util
 import json
 from pathlib import Path
 
 import pytest
 
+from nrg_etl_airflow_spark_emr_spark import qc
 from nrg_etl_airflow_spark_emr_spark.pipelines import nrg
 
 from . import nrg_fixtures as fx
 
+# The fixture deliberately ships one station missing from locations.csv
+# × 3 days → 3 NULL-partition rows are expected.
+UNMATCHED_STATION_DAYS = 3
+
 
 @pytest.fixture(scope="module")
-def pipeline_out(spark, tmp_path_factory):
-    root = tmp_path_factory.mktemp("nrg")
-    inputs = fx.generate_all(root / "in", corrupt=False)
-    out = nrg.run_pipeline(
+def nrg_inputs(tmp_path_factory):
+    return fx.generate_all(tmp_path_factory.mktemp("nrg") / "in", corrupt=False)
+
+
+@pytest.fixture(scope="module")
+def pipeline_out(spark, nrg_inputs, tmp_path_factory):
+    return _run(spark, nrg_inputs, tmp_path_factory.mktemp("nrg-out"))
+
+
+def _run(spark, inputs, out_dir, **kwargs):
+    return nrg.run_pipeline(
         spark,
         inputs["bal_auth"],
         inputs["weather"],
         inputs["locations"],
-        str(root / "out"),
-        # the fixture deliberately ships one station missing from
-        # locations.csv × 3 days → 3 NULL-partition rows are expected
-        max_unmatched_station_days=3,
+        str(out_dir),
+        max_unmatched_station_days=UNMATCHED_STATION_DAYS,
+        **kwargs,
     )
-    return out
 
 
 def test_bal_auth_fact(spark, pipeline_out):
@@ -85,6 +96,105 @@ def test_qc_report_clean(pipeline_out):
         report = json.load(f)
     assert report["n_failed"] == 0
     assert report["n_checks"] == 10
+
+
+def test_report_is_one_evaluate_over_the_read_backs(spark, pipeline_out):
+    """The concurrent chains' per-table results, concatenated in sorted
+    table order, are exactly what one ``qc.evaluate`` call over the three
+    written tables returns."""
+    with open(pipeline_out.qc_report_path) as f:
+        report = json.load(f)
+    tables = {
+        "bal_auth": spark.read.parquet(pipeline_out.bal_auth_path),
+        "time": spark.read.parquet(pipeline_out.time_path),
+        "weather": spark.read.parquet(pipeline_out.weather_path),
+    }
+    expected = qc.evaluate(tables, nrg.nrg_checks(UNMATCHED_STATION_DAYS))
+    assert report["results"] == expected
+    assert pipeline_out.n_failed == report["n_failed"] == 0
+
+
+def test_failed_chain_raises_and_writes_no_report(spark, nrg_inputs, tmp_path, monkeypatch):
+    write = nrg.write_partitioned_parquet
+
+    def failing_write(df, path, partition_cols=None, mode="overwrite"):
+        if path.endswith("/time"):
+            raise RuntimeError("time sink unavailable")
+        write(df, path, partition_cols, mode)
+
+    monkeypatch.setattr(nrg, "write_partitioned_parquet", failing_write)
+    with pytest.raises(RuntimeError, match="time sink unavailable"):
+        _run(spark, nrg_inputs, tmp_path)
+    assert not list(tmp_path.rglob("data_quality.json"))
+
+
+def _marker_job(sc, group: str) -> int:
+    """Id of a one-task job run under ``group`` in the calling thread."""
+    sc.setJobGroup(group, "marker")
+    sc.parallelize([0], 1).count()
+    return max(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_caller_job_group_reaches_every_chain_job(spark, nrg_inputs, tmp_path):
+    """Every job between two marker jobs is the pipeline's, and each one
+    carries the job group its caller set, whichever thread submitted it."""
+    sc = spark.sparkContext
+    try:
+        before = _marker_job(sc, "nrg-before")
+        sc.setJobGroup("nrg-g", "nrg pipeline")
+        _run(spark, nrg_inputs, tmp_path)
+        after = _marker_job(sc, "nrg-after")
+    finally:
+        sc._jsc.clearJobGroup()
+    started = set(range(before + 1, after))
+    assert started, "the pipeline ran no Spark job"
+    assert started <= set(sc.statusTracker().getJobIdsForGroup("nrg-g"))
+
+
+def test_unpinned_threads_run_the_chains(spark, nrg_inputs, pipeline_out, tmp_path, monkeypatch):
+    """With PYSPARK_PIN_THREAD=false, ``inheritable_thread_target(session)``
+    returns the session itself; the chains must still run, unwrapped, and
+    write the same report."""
+    monkeypatch.setattr(nrg, "inheritable_thread_target", lambda session: session)
+    out = _run(spark, nrg_inputs, tmp_path)
+    assert Path(out.qc_report_path).read_bytes() == Path(pipeline_out.qc_report_path).read_bytes()
+
+
+def _run_job_module():
+    path = Path(__file__).resolve().parents[1] / "scripts" / "run_job.py"
+    spec = importlib.util.spec_from_file_location("run_job", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@pytest.mark.parametrize(
+    "extra, code",
+    [([], 1), (["--max-unmatched-station-days", str(UNMATCHED_STATION_DAYS)], 0)],
+    ids=["default-budget-fails", "budget-passed-through"],
+)
+def test_run_job_pipeline_exit_code(spark, nrg_inputs, tmp_path, monkeypatch, extra, code):
+    """``run_job.py pipeline`` exits non-zero when the QC report has failed
+    checks. The default budget of 0 fails on the fixture's 3 unmatched
+    station-days; passing 3 through clears it. Runs in-process on the
+    shared session, so no second JVM starts."""
+    run_job = _run_job_module()
+    monkeypatch.setattr(run_job, "get_spark", lambda app_name: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    argv = [
+        "pipeline",
+        "--bal-auth", nrg_inputs["bal_auth"],
+        "--weather", nrg_inputs["weather"],
+        "--locations", nrg_inputs["locations"],
+        "--out", str(tmp_path),
+        *extra,
+    ]
+    assert run_job.main(argv) == code
+    with open(tmp_path / "data_quality" / "data_quality.json") as f:
+        report = json.load(f)
+    assert [r["check"] for r in report["failures"]] == (
+        ["weather_null_partition_keys"] if code else []
+    )
 
 
 def test_qc_catches_corruption(spark, tmp_path):

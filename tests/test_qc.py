@@ -59,6 +59,23 @@ def test_report_is_json_serializable(spark, sf_dir, tmp_path):
     assert loaded == summary
 
 
+def test_report_goes_through_the_hadoop_filesystem(spark, tmp_path):
+    """A ``file://`` URI lands at its path, not in a local directory named
+    ``file:``; a plain local path gets the bytes ``json.dump`` writes."""
+    results = [
+        {"check": "t_row_count_min_1", "table": "t", "op": ">=",
+         "expected": 1, "actual": 0, "passed": False},
+    ]
+    uri = f"file://{tmp_path}/uri/data_quality.json"
+    summary = qc.write_report(results, uri)
+    plain = tmp_path / "plain" / "data_quality.json"
+    assert qc.write_report(results, str(plain)) == summary
+    want = json.dumps(summary, indent=2).encode("utf-8")
+    assert (tmp_path / "uri" / "data_quality.json").read_bytes() == want
+    assert plain.read_bytes() == want
+    assert summary["n_failed"] == 1
+
+
 def test_unknown_table_raises(spark, sf_dir):
     try:
         qc.evaluate({}, [qc.row_count_min("nope")])
