@@ -48,11 +48,11 @@ def _sql_shingles_cte(src: str = "documents") -> str:
     parameterized so composed pipelines (corpus_pipeline_e2e) can replay
     the IDENTICAL shingle law over an intermediate stage's output."""
     return f"""
-    sh AS (
+    sh AS MATERIALIZED (
         SELECT doc_id, {sql_word_shingles(3)} AS shingles
         FROM (SELECT doc_id, string_split(text, ' ') AS w FROM {src})
     ),
-    ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh)
+    ex AS MATERIALIZED (SELECT doc_id, unnest(shingles) AS shingle FROM sh)
 """
 
 
@@ -61,7 +61,7 @@ _SQL_SHINGLES_CTE = _sql_shingles_cte()
 _SQL_H1, _SQL_H2 = sql_hash_pair("shingle")
 _SQL_SIG_CTE = (
     f"hh AS (SELECT doc_id, {_SQL_H1} AS h1, {_SQL_H2} AS h2 FROM ex),\n"
-    "    sig AS (SELECT doc_id, "
+    "    sig AS MATERIALIZED (SELECT doc_id, "
     + ", ".join(
         f"MIN({sql_combined_hash('h1', 'h2', j)}) AS mh{j}" for j in range(MINHASH_K)
     )
@@ -525,7 +525,7 @@ def _sql_lsh_oracle(src: str = "documents") -> str:
     return f"""
     WITH {_sql_shingles_cte(src)},
     {_SQL_SIG_CTE},
-    bands AS ({bands}),
+    bands AS MATERIALIZED ({bands}),
     cand AS (
         SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
         FROM bands a

@@ -130,13 +130,13 @@ def connected_components(
 # by the group-aware split in pipelines/training.py). Callers prepend
 # `WITH RECURSIVE` and append their own final SELECT over `reach`.
 _SQL_CC_CTES = f"""{_SQL_SHINGLES_CTE},
-    sizes AS (SELECT doc_id, len(shingles) AS sz FROM sh),
+    sizes AS MATERIALIZED (SELECT doc_id, len(shingles) AS sz FROM sh),
     inter AS (
         SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS n_common
         FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         GROUP BY a.doc_id, b.doc_id
     ),
-    pairs AS (
+    pairs AS MATERIALIZED (
         SELECT d1, d2
         FROM inter
         JOIN sizes s1 ON d1 = s1.doc_id
@@ -202,7 +202,7 @@ def _sql_cc_lsh_ctes(src: str = "documents") -> str:
     and select over `reach`."""
     from .dedup import _sql_lsh_oracle
 
-    return f"""lsh_pairs AS (SELECT d1, d2 FROM ({_sql_lsh_oracle(src)}) lp),
+    return f"""lsh_pairs AS MATERIALIZED (SELECT d1, d2 FROM ({_sql_lsh_oracle(src)}) lp),
     lsh_edges AS (
         SELECT d1 AS src, d2 AS dst FROM lsh_pairs
         UNION SELECT d2, d1 FROM lsh_pairs

@@ -406,7 +406,7 @@ def _ivf_trained_parts(
     search, with src = a base subset it states the incremental-index
     law (old centroids, union corpus)."""
     parts = [
-        f"ivftrain AS (SELECT CAST(0 AS BIGINT) AS gid, vec_id, fe AS sv FROM {src})",
+        f"ivftrain AS MATERIALIZED (SELECT CAST(0 AS BIGINT) AS gid, vec_id, fe AS sv FROM {src})",
         "ivfsubs AS (SELECT CAST(0 AS BIGINT) AS gid, vec_id, fe AS sv FROM vecs)",
     ]
     parts.extend(
@@ -414,7 +414,7 @@ def _ivf_trained_parts(
             k, iters, train_src="ivftrain", prefix="ivf", subs_src="ivfsubs"
         )
     )
-    parts.append(f"q AS (SELECT * FROM vecs WHERE vec_id < {nq})")
+    parts.append(f"q AS MATERIALIZED (SELECT * FROM vecs WHERE vec_id < {nq})")
     parts.append(
         f"""probes AS (
         SELECT q.vec_id AS query_id, c.cid
@@ -798,7 +798,7 @@ def _ivf_mmr_oracle() -> str:
     return f"""
     WITH {_SQL_VEC_CTE},
     {body},
-    cand AS (
+    cand AS MATERIALIZED (
         SELECT query_id, vec_id, cosine AS rel, fe, nrm FROM (
             SELECT *, ROW_NUMBER() OVER (
                 PARTITION BY query_id

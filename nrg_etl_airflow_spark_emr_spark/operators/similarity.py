@@ -83,7 +83,7 @@ _SQL_VEC_CTE = f"""
                [CAST(floor(CAST(x AS DOUBLE) * {FP_SCALE}) AS BIGINT) for x in embedding] AS fe
         FROM embeddings
     ),
-    vecs AS (
+    vecs AS MATERIALIZED (
         SELECT vec_id, label, fe, sqrt(list_dot_product(fe, fe)) AS nrm FROM fx
     )
 """
@@ -786,8 +786,11 @@ def _pq_trainer_parts(
             GROUP BY gid, cell, dim
         ) agg)"""
         )
+        # The last round's centroids are read twice: by codes and by
+        # the caller's search or summary.
+        mat = " MATERIALIZED" if i == iters else ""
         parts.append(
-            f"{prefix}cent{i} AS (SELECT gid, cell AS cid, list(m ORDER BY dim) AS c_q"
+            f"{prefix}cent{i} AS{mat} (SELECT gid, cell AS cid, list(m ORDER BY dim) AS c_q"
             f" FROM {prefix}m{i} GROUP BY gid, cell)"
         )
     cent = f"{prefix}cent{iters}"
@@ -1561,7 +1564,7 @@ def _mmr_round_sql(t: int) -> str:
     p{t} AS (
         SELECT query_id, {t} AS pick, vec_id, score FROM r{t} WHERE rn = 1
     ),
-    sel{t} AS (SELECT * FROM sel{t - 1} UNION ALL SELECT * FROM p{t})"""
+    sel{t} AS MATERIALIZED (SELECT * FROM sel{t - 1} UNION ALL SELECT * FROM p{t})"""
 
 
 def mmr_oracle_tail() -> str:
@@ -1570,9 +1573,13 @@ def mmr_oracle_tail() -> str:
     already in scope — sim_knn_mmr supplies the brute-force top-C,
     sim_knn_ivf_mmr (operators/kmeans.py) the trained-IVF shortlist;
     the rounds themselves are the one shared definition, so the two
-    oracles can never drift on the greedy semantics."""
+    oracles can never drift on the greedy semantics. Every CTE read more
+    than once is MATERIALIZED: DuckDB inlines a plain CTE at each
+    reference, and each round reads the previous selection three times,
+    so inlined rounds re-ran cand (and the IVF trainer behind it) at
+    every reference."""
     return (
-        f"""psim AS (
+        f"""psim AS MATERIALIZED (
         SELECT a.query_id, a.vec_id AS vid_a, b.vec_id AS vid_b,
                list_dot_product(a.fe, b.fe) / (a.nrm * b.nrm) AS sim
         FROM cand a JOIN cand b
@@ -1590,7 +1597,7 @@ def mmr_oracle_tail() -> str:
                    ORDER BY {MMR_L} * rel DESC, vec_id) AS rn
         FROM cand
     ),
-    sel1 AS (SELECT query_id, 1 AS pick, vec_id, score FROM r1 WHERE rn = 1),
+    sel1 AS MATERIALIZED (SELECT query_id, 1 AS pick, vec_id, score FROM r1 WHERE rn = 1),
 """
         + ",".join(_mmr_round_sql(t) for t in range(2, MMR_K + 1))
         + f"""
@@ -1610,7 +1617,7 @@ _MMR_ORACLE = (
                v.fe AS fe, v.nrm AS nrm
         FROM q JOIN vecs v ON v.vec_id != q.vec_id
     ),
-    cand AS (
+    cand AS MATERIALIZED (
         SELECT query_id, vec_id, rel, fe, nrm FROM (
             SELECT *, ROW_NUMBER() OVER (
                 PARTITION BY query_id ORDER BY rel DESC, vec_id) AS rn

@@ -2646,7 +2646,7 @@ def _line_dedup_oracle(src: str = "documents") -> str:
                string_agg(word, ' ' ORDER BY ord) AS line
         FROM w GROUP BY doc_id, floor((ord - 1) / {LINE_WORDS})
     ),
-    enc AS (
+    enc AS MATERIALIZED (
         SELECT doc_id, pos, line, md5(line) AS lh,
                doc_id * {_LINE_ENC} + pos AS e
         FROM lines

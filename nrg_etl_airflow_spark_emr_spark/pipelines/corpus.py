@@ -170,7 +170,7 @@ def _e2e_oracle(candidates: str = "exact") -> str:
 
     return f"""
     WITH cleaned AS (SELECT doc_id, text FROM ({_compose_oracle(candidates)}) cc),
-    lined AS (
+    lined AS MATERIALIZED (
         SELECT doc_id, clean_text AS text
         FROM ({_line_dedup_oracle("cleaned")}) ld
         WHERE len(clean_text) > 0

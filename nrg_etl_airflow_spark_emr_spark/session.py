@@ -30,7 +30,7 @@ _RUNTIME_CONF = {
     "spark.sql.parquet.datetimeRebaseModeInRead": "CORRECTED",
     "spark.sql.legacy.timeParserPolicy": "CORRECTED",
     # The fixture parquet stores TIMESTAMP(NANOS) which the Spark reader
-    # rejects; read as long and convert in sources.tables.load_table.
+    # rejects; read as long (sources/tables.py NANOS_TS_COLS).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Arrow transfer for toPandas/mapInPandas — without it a driver-side
     # toPandas silently falls back to row-object collect (measured ~5x
@@ -82,11 +82,9 @@ def get_spark(
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable determinism/perf conf to an externally-owned
-    session (e.g. the verify driver's). Builder-only keys are skipped."""
+    """Apply runtime-settable determinism/perf conf to a session built
+    elsewhere (e.g. the one passed to ``__spark_entry__.entry``). Every
+    key is runtime-settable, so a failed set raises, naming the key."""
     for k, v in _RUNTIME_CONF.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:  # pragma: no cover - read-only conf on some builds
-            pass
+        spark.conf.set(k, v)
     return spark

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -43,11 +44,48 @@ NANOS_TS_COLS: dict[str, tuple[str, ...]] = {
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan (partition-discovering, self-describing schema) —
-    SURVEY.md §2.1 S4."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Parquet scan of fixture table ``name`` (partition-discovering) with
+    its timestamp columns normalized — SURVEY.md §2.1 S4.
+
+    The raw schema comes from ``_raw_schema``: parquet footers are read
+    once per stamp of the table's files, not on every load, so a warm
+    load runs no Spark job. Any rewrite, append or removal of a file
+    under the path changes the stamp and re-infers. The cache holds
+    metadata only, lives as long as the process (like a metastore's
+    table schema within one session) and is never persisted, so a new
+    process always reads the files it is given."""
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(_raw_schema(spark, path)).parquet(path)
     return _normalize_ts(df, NANOS_TS_COLS.get(name, ()))
+
+
+# path -> (stamp, raw StructType) of every parquet path _raw_schema has
+# inferred in this process; one entry per path, replaced when stale.
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _raw_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The parquet schema of ``path`` as Spark infers it (before
+    ``_normalize_ts``), inferred only when the path's stamp changed.
+
+    The stamp is ``(path, length, modificationTime)`` of every file a
+    recursive Hadoop ``listFiles`` returns, so the same check runs on
+    local disk, HDFS and s3a. No lock: a dict assignment is atomic, and
+    two threads missing together only infer twice."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    listing = hpath.getFileSystem(spark._jsc.hadoopConfiguration()).listFiles(hpath, True)
+    files = []
+    while listing.hasNext():
+        st = listing.next()
+        files.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
+    stamp = tuple(sorted(files))
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[path] = (stamp, schema)
+    return schema
 
 
 def _normalize_ts(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:

@@ -43,7 +43,7 @@ from pyspark.sql import types as T
 
 from ..operators._util import dsum
 from ..operators.temporal import SESSION_GAP_US
-from ..sources.tables import NANOS_TS_COLS, _normalize_ts
+from ..sources.tables import NANOS_TS_COLS, _normalize_ts, _raw_schema
 
 SESSION_GAP = f"{SESSION_GAP_US // 60_000_000} minutes"
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
@@ -55,14 +55,14 @@ def events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int |
     A directory of arriving parquet files is the classic replay source;
     the fixture is one file, which the source handles as a single batch.
     The file source needs an explicit schema (no inference on streams), so
-    take it from a batch scan of the same file — that also tracks whichever
-    physical ts encoding the testdata generation used (long nanos under
-    nanosAsLong, or timestamp[us] NTZ); normalized to LTZ by the batch
-    loader's own rule (sources/tables.py NANOS_TS_COLS).
+    take the batch loader's raw schema of the same file (``_raw_schema``,
+    inferred once per file stamp) — that also tracks whichever physical ts
+    encoding the testdata generation used (long nanos under nanosAsLong,
+    or timestamp[us] NTZ); normalized to LTZ by the batch loader's own
+    rule (sources/tables.py NANOS_TS_COLS).
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = _raw_schema(spark, f"{sf_dir}/events.parquet")
     reader = spark.readStream.schema(raw_schema).format("parquet")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))

@@ -4,6 +4,8 @@ fixture table it started from."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -207,3 +209,98 @@ def test_text_wholetext_one_row_per_file(spark, tmp_path):
     whole = read_text_lines(spark, str(d), wholetext=True)
     assert per_line.count() == 3
     assert sorted(r.value for r in whole.collect()) == ["line1\nline2", "solo"]
+
+
+# --- load_table's schema cache ------------------------------------------------
+
+
+@pytest.fixture
+def schemas(monkeypatch):
+    """A fresh, test-local schema cache for ``load_table``."""
+    from nrg_etl_airflow_spark_emr_spark.sources import tables
+
+    monkeypatch.setattr(tables, "_SCHEMAS", {})
+    return tables._SCHEMAS
+
+
+def _load_jobs(spark, sf_dir, name):
+    """``(load_table(...), number of Spark jobs the call ran)``."""
+    sc = spark.sparkContext
+    group = f"load-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "load_table")
+    try:
+        df = load_table(spark, sf_dir, name)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_pq(path, cols: dict):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(cols), str(path))
+
+
+def test_load_table_reuses_schema_of_unchanged_table(spark, schemas, tmp_path):
+    _write_pq(tmp_path / "t.parquet", {"id": [1, 2], "v": ["a", "b"]})
+    first, n_first = _load_jobs(spark, str(tmp_path), "t")
+    again, n_again = _load_jobs(spark, str(tmp_path), "t")
+    assert n_first >= 1, "the first load infers the schema with a Spark job"
+    assert n_again == 0
+    assert again.schema == first.schema and _rows(again) == _rows(first)
+
+
+def test_load_table_rereads_a_rewritten_file(spark, schemas, tmp_path):
+    _write_pq(tmp_path / "t.parquet", {"id": [1, 2], "v": ["a", "b"]})
+    assert load_table(spark, str(tmp_path), "t").columns == ["id", "v"]
+    _write_pq(tmp_path / "t.parquet", {"id": [3], "v": ["c"], "score": [9.5]})
+    back = load_table(spark, str(tmp_path), "t")
+    assert back.columns == ["id", "v", "score"]
+    assert [tuple(r) for r in back.collect()] == [(3, "c", 9.5)]
+
+
+def test_load_table_reinfers_after_a_part_file_is_added(spark, schemas, tmp_path):
+    path = str(tmp_path / "d.parquet")
+    spark.createDataFrame([(1, "a")], ["id", "v"]).write.parquet(path)
+    _load_jobs(spark, str(tmp_path), "d")
+    spark.createDataFrame([(2, "b")], ["id", "v"]).write.mode("append").parquet(path)
+    back, n = _load_jobs(spark, str(tmp_path), "d")
+    assert n >= 1, "an appended part file must invalidate the cached schema"
+    assert sorted(r.id for r in back.collect()) == [1, 2]
+
+
+def test_load_table_cached_nanos_schema_reads_like_the_inferred_one(spark, schemas, tmp_path):
+    """``events.ts`` stored as TIMESTAMP(NANOS): the cached raw schema
+    (bigint under nanosAsLong) gets the same normalization as inference."""
+    import pyarrow as pa
+
+    ts = pa.array([1_700_000_000_123_456_789, 1_700_086_400_000_000_001], pa.timestamp("ns"))
+    _write_pq(tmp_path / "events.parquet", {"event_id": [1, 2], "ts": ts})
+    first, _ = _load_jobs(spark, str(tmp_path), "events")
+    again, n_again = _load_jobs(spark, str(tmp_path), "events")
+    assert n_again == 0
+    assert first.dtypes == again.dtypes == [("event_id", "bigint"), ("ts", "timestamp")]
+    assert [tuple(r) for r in again.orderBy("event_id").collect()] == [
+        tuple(r) for r in first.orderBy("event_id").collect()
+    ]
+
+
+def test_load_table_keeps_one_cache_entry_per_path(spark, schemas, tmp_path):
+    _write_pq(tmp_path / "t.parquet", {"id": [1]})
+    load_table(spark, str(tmp_path), "t")
+    _write_pq(tmp_path / "t.parquet", {"id": [1, 2], "v": ["a", "b"]})
+    load_table(spark, str(tmp_path), "t")
+    assert list(schemas) == [f"{tmp_path}/t.parquet"]
+    assert [f.name for f in schemas[f"{tmp_path}/t.parquet"][1].fields] == ["id", "v"]
+
+
+def test_tune_raises_naming_a_key_it_cannot_set(spark, monkeypatch):
+    """``t()`` runs ``tune`` before every load; a conf it cannot apply
+    must fail the load, not be skipped."""
+    from nrg_etl_airflow_spark_emr_spark import session
+
+    monkeypatch.setitem(session._RUNTIME_CONF, "spark.driver.memory", "1g")
+    with pytest.raises(Exception, match="spark.driver.memory"):
+        session.tune(spark)
