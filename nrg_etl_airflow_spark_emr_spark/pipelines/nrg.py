@@ -137,15 +137,20 @@ def weather_wide(weather: DataFrame, locations: DataFrame) -> DataFrame:
 
     The reference collected ``locations.Stations`` to the driver and
     filtered with ``.isin`` (its only RDD usage) — replaced by a broadcast
-    LEFT SEMI join so the plan stays distributed. The explicit pivot value
-    list avoids the distinct-scan pre-job. Unmatched stations keep the
-    reference's LEFT OUTER NULL → __HIVE_DEFAULT_PARTITION__ semantics."""
+    LEFT SEMI join so the plan stays distributed. The pivot is one
+    conditional MAX per parameter in a single aggregation: it returns what
+    ``.pivot("parameter_id", WEATHER_PARAMETERS).max("value")`` returns
+    (a station-day with none of the parameters keeps its row, all NULL),
+    but Spark plans that pivot as two aggregations, each behind its own
+    hash exchange. Unmatched stations keep the reference's LEFT OUTER
+    NULL → __HIVE_DEFAULT_PARTITION__ semantics."""
     known = F.broadcast(locations.select(F.col("Stations")))
     filtered = weather.join(known, weather.station_id == known.Stations, "left_semi")
-    wide = (
-        filtered.groupBy("station_id", "date")
-        .pivot("parameter_id", WEATHER_PARAMETERS)
-        .max("value")
+    wide = filtered.groupBy("station_id", "date").agg(
+        *(
+            F.max(F.when(F.col("parameter_id") == p, F.col("value"))).alias(p)
+            for p in WEATHER_PARAMETERS
+        )
     )
     dim = F.broadcast(locations.select("Stations", "Acronym"))
     date = F.to_date(F.col("date"), WEATHER_DATE_FMT)
@@ -222,7 +227,11 @@ def run_pipeline(
     Each output is one chain: transform → ``write_partitioned_parquet`` →
     read-back → ``qc.evaluate`` over that table's checks. The three chains
     run on a pool of one thread per output, so their Spark jobs overlap
-    and a write's single-task tail no longer leaves the other cores idle.
+    and one chain's serial stretches (its CSV scan, the driver-side job
+    commit, a straggler write task) leave no core idle. Each partitioned
+    write itself runs on up to ``defaultParallelism`` tasks: AQE coalesces
+    its REBALANCE shuffle no further than the 64 KB floor set in
+    ``session._RUNTIME_CONF``.
     Weather goes first because it is the critical path and the FIFO
     scheduler serves the earliest job first. Each thread target is wrapped
     in ``inheritable_thread_target(spark)``, so the caller's job group,

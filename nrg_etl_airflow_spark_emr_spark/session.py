@@ -26,6 +26,13 @@ _RUNTIME_CONF = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # Floor of AQE's parallelism-first coalescing, which targets
+    # max(min(bytes / defaultParallelism, advisory), floor). At the 1 MB
+    # default the nrg weather write (about 2 MB of REBALANCE shuffle, 156
+    # partition files) was merged into one task that paid the local-FS
+    # per-file cost serially; at 64 KB it runs on every core. At scale
+    # bytes / defaultParallelism is far above either floor.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.parquet.datetimeRebaseModeInRead": "CORRECTED",
     "spark.sql.legacy.timeParserPolicy": "CORRECTED",

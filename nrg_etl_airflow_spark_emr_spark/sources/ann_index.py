@@ -95,6 +95,8 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .readers import rebalanced
+
 # --- manifest mechanics -------------------------------------------------------
 
 _VER_RE = re.compile(r"^v(\d{8})\.json$")
@@ -223,20 +225,6 @@ def _publish(path: str, manifest: dict, expect_parent: int | None = None) -> Non
                 f"publish of v{ver} raced committed v{racers} past parent "
                 f"v{expect_parent}: retracted"
             )
-
-
-def _sized(df: DataFrame, part: str | None = None) -> DataFrame:
-    """Size-adaptive output layout for index segment writes (guide §6):
-    an AQE REBALANCE hint keyed on the write's partitionBy column (or
-    keyless for unpartitioned segments). Without it every segment write
-    fanned out tasks x partition-values files — the sf0.1 IVF postings
-    segment was 322 files of a few KB each (r15 measurement), paying
-    driver commit time per file on write and an open per file on every
-    read-back. REBALANCE coalesces small partitions to the advisory
-    size AND splits oversized ones, so the same code writes one tidy
-    file per cell locally and size-bounded multi-file cells at 100 TB —
-    unlike a repartition(col), which would cap a cell at one task."""
-    return df.hint("rebalance", part) if part else df.hint("rebalance")
 
 
 def _seg(name: str, ver: int, suffix: str = "") -> str:
@@ -622,7 +610,10 @@ def _commit(
     parts = {s.name: s.part for s in (*layout.routers, *layout.data)}
     for name, df in frames.items():
         seg = _seg(name, ver, suffix)
-        _write(_sized(df, parts[name]), os.path.join(path, seg), parts[name])
+        part = parts[name]
+        # Without the rebalance a segment fanned out tasks x cells files
+        # (the sf0.1 IVF postings segment was 322 files of a few KB).
+        _write(rebalanced(df, *([part] if part else [])), os.path.join(path, seg), part)
         m["schemas"].setdefault(name, df.schema.json())
         if name in routers:
             m["segments"][name] = seg

@@ -14,9 +14,11 @@ import json
 from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
 
 from nrg_etl_airflow_spark_emr_spark import qc
 from nrg_etl_airflow_spark_emr_spark.pipelines import nrg
+from nrg_etl_airflow_spark_emr_spark.sources.readers import rebalanced
 
 from . import nrg_fixtures as fx
 
@@ -80,6 +82,64 @@ def test_pivot_max_over_duplicates(spark, pipeline_out):
     df = spark.read.parquet(pipeline_out.weather_path)
     bad = df.filter("TMAX IS NULL").count()
     assert bad == 0
+
+
+def _edge_weather(spark):
+    """Weather rows with a duplicate TMAX, NULL values, a station-day with
+    only AWND rows and a station missing from locations, plus locations
+    with a NULL acronym."""
+    rows = [
+        ("S1", "20230101", "TMAX", 100), ("S1", "20230101", "TMAX", 150),
+        ("S1", "20230101", "TMIN", 5), ("S1", "20230101", "PRCP", None),
+        ("S1", "20230102", "AWND", 30), ("S1", "20230102", "AWND", 31),
+        ("S2", "20230101", "TMIN", None), ("S2", "20230101", "TMAX", None),
+        ("S2", "20230101", "TAVG", 7), ("S2", "20230101", "SNOW", 3),
+        ("S2", "20230101", "SNWD", 0), ("S2", "20230201", "TMAX", -40),
+        ("S3", "20230101", "TMAX", 99),
+        ("S4", "20230301", "TMIN", -3), ("S4", "20230301", None, 12),
+    ]
+    weather = spark.createDataFrame(
+        [(s, d, p, v, None, None, None, None) for s, d, p, v in rows], nrg.WEATHER_SCHEMA
+    )
+    locations = spark.createDataFrame(
+        [("S1", "BA1"), ("S2", "BA2"), ("S4", None)], "Stations string, Acronym string"
+    )
+    return weather, locations
+
+
+def _pivot_weather_wide(weather, locations):
+    """``weather_wide`` written with ``DataFrame.pivot``, as it first was."""
+    known = F.broadcast(locations.select("Stations"))
+    filtered = weather.join(known, weather.station_id == known.Stations, "left_semi")
+    wide = filtered.groupBy("station_id", "date").pivot("parameter_id", nrg.WEATHER_PARAMETERS).max("value")
+    dim = F.broadcast(locations.select("Stations", "Acronym"))
+    date = F.to_date(F.col("date"), nrg.WEATHER_DATE_FMT)
+    return wide.join(dim, wide.station_id == dim.Stations, "left_outer").select(
+        F.col("Acronym").alias("bal_auth"), wide["*"], F.month(date).alias("month"), F.year(date).alias("year")
+    )
+
+
+def test_weather_wide_matches_the_pivot_formulation(spark):
+    weather, locations = _edge_weather(spark)
+    got = nrg.weather_wide(weather, locations)
+    want = _pivot_weather_wide(weather, locations)
+    assert got.schema == want.schema
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+    awnd_only = got.filter("station_id = 'S1' AND date = '20230102'").collect()
+    assert [tuple(r[p] for p in nrg.WEATHER_PARAMETERS) for r in awnd_only] == [(None,) * 6]
+    assert got.filter("station_id = 'S1' AND date = '20230101'").first()["TMAX"] == 150
+
+
+def test_weather_wide_aggregates_behind_one_hash_exchange(spark):
+    """Below the write's REBALANCE the pivot is one aggregation, so one
+    ENSURE_REQUIREMENTS hash exchange; ``DataFrame.pivot`` plans two."""
+    weather, locations = _edge_weather(spark)
+    written = rebalanced(nrg.weather_wide(weather, locations), "bal_auth", "year", "month")
+    plan = written._jdf.queryExecution().executedPlan().toString()
+    top, below = plan.split("REBALANCE_PARTITIONS_BY_COL", 1)
+    assert "Exchange hashpartitioning(bal_auth" in top
+    hash_exchanges = [ln for ln in below.splitlines() if "Exchange hashpartitioning" in ln]
+    assert len(hash_exchanges) == 1 and "ENSURE_REQUIREMENTS" in hash_exchanges[0]
 
 
 def test_null_acronym_hive_default_partition(spark, pipeline_out):

@@ -223,17 +223,24 @@ def schemas(monkeypatch):
     return tables._SCHEMAS
 
 
-def _load_jobs(spark, sf_dir, name):
-    """``(load_table(...), number of Spark jobs the call ran)``."""
+def _in_job_group(spark, fn):
+    """``(fn(), the fresh job group its Spark jobs ran under)``, with the
+    listener bus drained so ``statusTracker`` has every job."""
     sc = spark.sparkContext
-    group = f"load-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "load_table")
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "test")
     try:
-        df = load_table(spark, sf_dir, name)
+        out = fn()
     finally:
         sc._jsc.clearJobGroup()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, group
+
+
+def _load_jobs(spark, sf_dir, name):
+    """``(load_table(...), number of Spark jobs the call ran)``."""
+    df, group = _in_job_group(spark, lambda: load_table(spark, sf_dir, name))
+    return df, len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
 
 
 def _write_pq(path, cols: dict):
@@ -304,3 +311,33 @@ def test_tune_raises_naming_a_key_it_cannot_set(spark, monkeypatch):
     monkeypatch.setitem(session._RUNTIME_CONF, "spark.driver.memory", "1g")
     with pytest.raises(Exception, match="spark.driver.memory"):
         session.tune(spark)
+
+
+def test_runtime_conf_keys_are_all_modifiable(spark):
+    """``tune()`` sets every ``_RUNTIME_CONF`` key on a running session; a
+    static key added there would fail at deploy time, so fail here."""
+    from nrg_etl_airflow_spark_emr_spark import session
+
+    static = [k for k in session._RUNTIME_CONF if not spark.conf.isModifiable(k)]
+    assert static == []
+
+
+# --- write_partitioned_parquet's layout and parallelism -----------------------
+
+
+def test_partitioned_write_keeps_one_file_per_leaf_on_several_tasks(spark, tmp_path):
+    """A small write over 150 leaf partitions: the REBALANCE keyed on the
+    partition columns still gives each leaf exactly one file, and AQE
+    coalesces its shuffle into several write tasks, not one."""
+    df = spark.range(10_000).select(
+        (F.col("id") % 15).alias("a"),
+        (F.col("id") % 150 / 15).cast("int").alias("b"),
+        F.sha2(F.col("id").cast("string"), 256).alias("payload"),
+    )
+    _, group = _in_job_group(spark, lambda: write_partitioned_parquet(df, str(tmp_path / "t"), ["a", "b"]))
+    leaves = list((tmp_path / "t").glob("a=*/b=*"))
+    assert len(leaves) == 150
+    assert [d for d in leaves if len(list(d.glob("*.parquet"))) != 1] == []
+    tracker = spark.sparkContext.statusTracker()
+    write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+    assert tracker.getStageInfo(max(write_job.stageIds)).numTasks > 1
