@@ -78,6 +78,14 @@ def get_spark(
         # JVM-side and core-count-independent (not a local[32] tune);
         # memory bound is entries x generated-class size (KBs each).
         .config("spark.sql.codegen.cache.maxEntries", "1024")
+        # PySpark 4 wraps every Column method and pyspark.sql.functions
+        # call to capture its Python call site: per call an active-session
+        # lookup, a conf read and a set and clear of the JVM origin, all
+        # over Py4J. The builders make thousands of such calls per query.
+        # PySpark reads this key once per process, at the first wrapped
+        # call. An error keeps its error class and JVM message; only the
+        # Python line fragment of its query context is lost.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in _RUNTIME_CONF.items():
         builder = builder.config(k, v)

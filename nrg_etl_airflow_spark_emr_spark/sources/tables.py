@@ -7,6 +7,8 @@ self-describing parquet instead of all-string CSV (SURVEY.md §1.3).
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -47,45 +49,77 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan of fixture table ``name`` (partition-discovering) with
     its timestamp columns normalized — SURVEY.md §2.1 S4.
 
-    The raw schema comes from ``_raw_schema``: parquet footers are read
-    once per stamp of the table's files, not on every load, so a warm
-    load runs no Spark job. Any rewrite, append or removal of a file
-    under the path changes the stamp and re-infers. The cache holds
+    The scan is built once per stamp of the table's files and per
+    session, then reused (``_frame``): a warm load runs no Spark job,
+    lists nothing through Spark and analyses only a projection over the
+    cached plan. Each call returns that frame under fresh attribute ids
+    (``toDF``), so a query can join a table with itself. Any rewrite,
+    append or removal of a file under the path changes the stamp
+    (``_stamp``, which forks no process). The cache holds plans and
     metadata only, lives as long as the process (like a metastore's
-    table schema within one session) and is never persisted, so a new
-    process always reads the files it is given."""
-    path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.schema(_raw_schema(spark, path)).parquet(path)
-    return _normalize_ts(df, NANOS_TS_COLS.get(name, ()))
+    table within one session) and is never persisted, so a new process
+    always reads the files it is given."""
+    frame = _frame(spark, sf_dir, name).frame
+    return frame.toDF(*frame.columns)
 
 
-# path -> (stamp, raw StructType) of every parquet path _raw_schema has
-# inferred in this process; one entry per path, replaced when stale.
-_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+class _Entry(NamedTuple):
+    stamp: tuple
+    session: SparkSession
+    raw_schema: T.StructType  # as Spark infers it, before _normalize_ts
+    frame: DataFrame  # the normalized scan
 
 
-def _raw_schema(spark: SparkSession, path: str) -> T.StructType:
-    """The parquet schema of ``path`` as Spark infers it (before
-    ``_normalize_ts``), inferred only when the path's stamp changed.
+# path -> _Entry of every fixture table _frame has built in this process;
+# one entry per path, replaced when its stamp or its session changed.
+_FRAMES: dict[str, _Entry] = {}
 
-    The stamp is ``(path, length, modificationTime)`` of every file a
-    recursive Hadoop ``listFiles`` returns, so the same check runs on
-    local disk, HDFS and s3a. No lock: a dict assignment is atomic, and
-    two threads missing together only infer twice."""
+
+def _frame(spark: SparkSession, sf_dir: str, name: str) -> _Entry:
+    """The ``_FRAMES`` entry of table ``name``, rebuilt when stale: one
+    Spark job infers the parquet schema, and the normalized scan is built
+    over it and analysed under the session's conf at that moment (UTC, as
+    ``session.tune`` sets it). The stamp is taken before the read, so a
+    file written during the read only makes the next call rebuild. No
+    lock: a dict assignment is atomic, and two threads missing together
+    only build twice."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    listing = hpath.getFileSystem(spark._jsc.hadoopConfiguration()).listFiles(hpath, True)
-    files = []
-    while listing.hasNext():
-        st = listing.next()
-        files.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
-    stamp = tuple(sorted(files))
-    hit = _SCHEMAS.get(path)
-    if hit is not None and hit[0] == stamp:
-        return hit[1]
-    schema = spark.read.parquet(path).schema
-    _SCHEMAS[path] = (stamp, schema)
-    return schema
+    path = f"{sf_dir}/{name}.parquet"
+    stamp = _stamp(spark, path)
+    hit = _FRAMES.get(path)
+    if hit is not None and hit.stamp == stamp and hit.session is spark:
+        return hit
+    raw = spark.read.parquet(path)
+    entry = _Entry(stamp, spark, raw.schema, _normalize_ts(raw, NANOS_TS_COLS.get(name, ())))
+    _FRAMES[path] = entry
+    return entry
+
+
+def _raw_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
+    """The raw parquet schema of table ``name``, from the same cache entry
+    as ``load_table``."""
+    return _frame(spark, sf_dir, name).raw_schema
+
+
+def _stamp(spark: SparkSession, path: str) -> tuple:
+    """``(path, length, modificationTime)`` of every file under ``path``,
+    sorted, so the same check runs on local disk, HDFS and s3a.
+
+    Walks ``getFileStatus`` and ``listStatus`` rather than ``listFiles``:
+    the ``LocatedFileStatus`` that ``listFiles`` builds per file asks for
+    its permission, which the local file system without native Hadoop
+    answers by forking ``ls -ld`` (Spark's ``HadoopFSUtils`` avoids it for
+    the same reason)."""
+    hpath = getattr(spark._jvm, "org.apache.hadoop.fs.Path")(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    files, todo = [], [fs.getFileStatus(hpath)]
+    while todo:
+        st = todo.pop()
+        if st.isDirectory():
+            todo.extend(fs.listStatus(st.getPath()))
+        else:
+            files.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
+    return tuple(sorted(files))
 
 
 def _normalize_ts(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:

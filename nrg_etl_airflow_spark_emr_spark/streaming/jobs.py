@@ -62,7 +62,7 @@ def events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int |
     rule (sources/tables.py NANOS_TS_COLS).
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = _raw_schema(spark, f"{sf_dir}/events.parquet")
+    raw_schema = _raw_schema(spark, sf_dir, "events")
     reader = spark.readStream.schema(raw_schema).format("parquet")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))

@@ -211,16 +211,16 @@ def test_text_wholetext_one_row_per_file(spark, tmp_path):
     assert sorted(r.value for r in whole.collect()) == ["line1\nline2", "solo"]
 
 
-# --- load_table's schema cache ------------------------------------------------
+# --- load_table's frame cache -------------------------------------------------
 
 
 @pytest.fixture
-def schemas(monkeypatch):
-    """A fresh, test-local schema cache for ``load_table``."""
+def frames(monkeypatch):
+    """A fresh, test-local frame cache for ``load_table``."""
     from nrg_etl_airflow_spark_emr_spark.sources import tables
 
-    monkeypatch.setattr(tables, "_SCHEMAS", {})
-    return tables._SCHEMAS
+    monkeypatch.setattr(tables, "_FRAMES", {})
+    return tables._FRAMES
 
 
 def _in_job_group(spark, fn):
@@ -250,7 +250,7 @@ def _write_pq(path, cols: dict):
     pq.write_table(pa.table(cols), str(path))
 
 
-def test_load_table_reuses_schema_of_unchanged_table(spark, schemas, tmp_path):
+def test_load_table_reuses_schema_of_unchanged_table(spark, frames, tmp_path):
     _write_pq(tmp_path / "t.parquet", {"id": [1, 2], "v": ["a", "b"]})
     first, n_first = _load_jobs(spark, str(tmp_path), "t")
     again, n_again = _load_jobs(spark, str(tmp_path), "t")
@@ -259,7 +259,7 @@ def test_load_table_reuses_schema_of_unchanged_table(spark, schemas, tmp_path):
     assert again.schema == first.schema and _rows(again) == _rows(first)
 
 
-def test_load_table_rereads_a_rewritten_file(spark, schemas, tmp_path):
+def test_load_table_rereads_a_rewritten_file(spark, frames, tmp_path):
     _write_pq(tmp_path / "t.parquet", {"id": [1, 2], "v": ["a", "b"]})
     assert load_table(spark, str(tmp_path), "t").columns == ["id", "v"]
     _write_pq(tmp_path / "t.parquet", {"id": [3], "v": ["c"], "score": [9.5]})
@@ -268,7 +268,7 @@ def test_load_table_rereads_a_rewritten_file(spark, schemas, tmp_path):
     assert [tuple(r) for r in back.collect()] == [(3, "c", 9.5)]
 
 
-def test_load_table_reinfers_after_a_part_file_is_added(spark, schemas, tmp_path):
+def test_load_table_reinfers_after_a_part_file_is_added(spark, frames, tmp_path):
     path = str(tmp_path / "d.parquet")
     spark.createDataFrame([(1, "a")], ["id", "v"]).write.parquet(path)
     _load_jobs(spark, str(tmp_path), "d")
@@ -278,7 +278,7 @@ def test_load_table_reinfers_after_a_part_file_is_added(spark, schemas, tmp_path
     assert sorted(r.id for r in back.collect()) == [1, 2]
 
 
-def test_load_table_cached_nanos_schema_reads_like_the_inferred_one(spark, schemas, tmp_path):
+def test_load_table_cached_nanos_schema_reads_like_the_inferred_one(spark, frames, tmp_path):
     """``events.ts`` stored as TIMESTAMP(NANOS): the cached raw schema
     (bigint under nanosAsLong) gets the same normalization as inference."""
     import pyarrow as pa
@@ -294,13 +294,57 @@ def test_load_table_cached_nanos_schema_reads_like_the_inferred_one(spark, schem
     ]
 
 
-def test_load_table_keeps_one_cache_entry_per_path(spark, schemas, tmp_path):
+def test_load_table_keeps_one_cache_entry_per_path(spark, frames, tmp_path):
     _write_pq(tmp_path / "t.parquet", {"id": [1]})
     load_table(spark, str(tmp_path), "t")
     _write_pq(tmp_path / "t.parquet", {"id": [1, 2], "v": ["a", "b"]})
     load_table(spark, str(tmp_path), "t")
-    assert list(schemas) == [f"{tmp_path}/t.parquet"]
-    assert [f.name for f in schemas[f"{tmp_path}/t.parquet"][1].fields] == ["id", "v"]
+    assert list(frames) == [f"{tmp_path}/t.parquet"]
+    assert [f.name for f in frames[f"{tmp_path}/t.parquet"].raw_schema.fields] == ["id", "v"]
+
+
+def test_load_table_self_join_matches_two_fresh_scans(spark, sf_dir):
+    """Each load is the cached scan under fresh attribute ids, so a table
+    joins with itself like two independent reads of its file."""
+    a, b = load_table(spark, sf_dir, "nation"), load_table(spark, sf_dir, "nation")
+    got = a.join(b, a["n_regionkey"] == b["n_nationkey"]).select(a["n_name"], b["n_name"].alias("b_name"))
+    x, y = (spark.read.parquet(f"{sf_dir}/nation.parquet") for _ in range(2))
+    want = x.join(y, x["n_regionkey"] == y["n_nationkey"]).select(x["n_name"], y["n_name"].alias("b_name"))
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    assert got.count() > 0
+
+
+def test_load_table_reinfers_after_a_file_is_added_to_a_nested_partition(spark, frames, tmp_path):
+    """The stamp walks every level of a two-level partitioned table, so a
+    part file added to one leaf directory invalidates the entry."""
+    path = tmp_path / "p.parquet"
+    df = spark.createDataFrame([(1, "x", 1), (2, "y", 2)], ["id", "a", "b"])
+    df.write.partitionBy("a", "b").parquet(str(path))
+    _load_jobs(spark, str(tmp_path), "p")
+    _write_pq(path / "a=x" / "b=1" / "extra.parquet", {"id": [3]})
+    back, n = _load_jobs(spark, str(tmp_path), "p")
+    assert n >= 1, "a part file added to a leaf partition must invalidate the entry"
+    assert sorted((r.id, r.a, r.b) for r in back.collect()) == [(1, "x", 1), (2, "y", 2), (3, "x", 1)]
+
+
+def test_tables_module_stamps_without_located_listings():
+    """``LocatedFileStatus`` asks each file for its permission, which the
+    local file system without native Hadoop answers with a forked
+    ``ls -ld``; the stamp must walk plain ``FileStatus`` listings."""
+    import ast
+    import pathlib
+
+    from nrg_etl_airflow_spark_emr_spark.sources import tables
+
+    tree = ast.parse(pathlib.Path(tables.__file__).read_text())
+    calls = [
+        f"{node.func.attr}:{node.lineno}"
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("listFiles", "listLocatedStatus")
+    ]
+    assert calls == []
 
 
 def test_tune_raises_naming_a_key_it_cannot_set(spark, monkeypatch):
@@ -320,6 +364,25 @@ def test_runtime_conf_keys_are_all_modifiable(spark):
 
     static = [k for k in session._RUNTIME_CONF if not spark.conf.isModifiable(k)]
     assert static == []
+
+
+def test_get_spark_turns_off_call_site_capture(spark):
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def test_failures_keep_their_error_class_without_call_site_capture(spark):
+    """Without the captured call site an ANSI failure still raises, with
+    its error class."""
+    from pyspark.errors import PySparkException
+
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        with pytest.raises(PySparkException) as err:
+            spark.range(1).select(F.lit("x").cast("int")).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", before)
+    assert err.value.getCondition() == "CAST_INVALID_INPUT"
 
 
 # --- write_partitioned_parquet's layout and parallelism -----------------------
