@@ -94,6 +94,7 @@ def run_canary() -> dict[str, float]:
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from nrg_etl_airflow_spark_emr_spark.operators._util import owned
 from nrg_etl_airflow_spark_emr_spark.plans.catalog import all_specs
 from nrg_etl_airflow_spark_emr_spark.session import get_spark
 
@@ -229,8 +230,8 @@ def main() -> None:
     # first run, stable afterwards). Timing the steady state is what makes
     # round-over-round comparisons meaningful.
     for name in sorted(specs):
-        spark.catalog.clearCache()
-        specs[name].builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        with owned():
+            specs[name].builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
     mark, measure = make_spill_probe(spark)
@@ -240,18 +241,19 @@ def main() -> None:
         best = float("inf")
         for _ in range(reps):
             marker = mark()
-            # Each rep is timed in isolation: several queries .cache()
+            # Each rep is timed in isolation: several queries pin
             # intermediate frames, and Spark's cache manager substitutes any
             # matching plan fragment in LATER queries/reps, so leftover
-            # caches both distort timings and build up memory pressure
-            # across the run. clearCache() also forces each rep to re-plan
-            # and re-execute from the parquet scan.
-            spark.catalog.clearCache()
-            start = time.perf_counter()
-            df = specs[name].builder(spark, sf_dir)
-            # Consume fully without driver-side materialization of wide rows.
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - start)
+            # caches and checkpoint blocks would both distort timings and
+            # build up memory pressure across the run. The scope releases
+            # them after the consume, so each rep re-plans and re-executes
+            # from the parquet scan.
+            with owned():
+                start = time.perf_counter()
+                df = specs[name].builder(spark, sf_dir)
+                # Consume fully without driver-side materialization of wide rows.
+                df.write.format("noop").mode("overwrite").save()
+                best = min(best, time.perf_counter() - start)
             # Max-of-reps spill: the regime question is "does this query
             # EVER spill here", so the conservative rep wins (unlike time,
             # where min estimates code cost).

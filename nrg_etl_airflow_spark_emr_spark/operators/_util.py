@@ -6,17 +6,28 @@ Centralizes the oracle-parity conventions documented in
 
 from __future__ import annotations
 
+import weakref
+from contextlib import contextmanager
+from contextvars import ContextVar
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import tune
 from ..sources import load_table
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load a fixture table with determinism conf applied to the session."""
-    tune(spark)
+    """Load a fixture table. The catalog's registered builder applies the
+    session's runtime conf once per query, before the first load."""
     return load_table(spark, sf_dir, name)
+
+
+def sql_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...], query: str) -> DataFrame:
+    """Reference-style SQL entry: temp views + spark.sql (nrg_etl.py:28-29)."""
+    for name in tables:
+        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+    return spark.sql(query)
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -32,6 +43,69 @@ def spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+# The materializations of the innermost open ``owned()`` scope of this
+# thread or task, by id: each maps to the call that releases it. A
+# ContextVar, so concurrent threads never share a scope.
+_SCOPE: ContextVar[dict[int, Callable[[], object]] | None] = ContextVar(
+    "materialization_scope", default=None
+)
+# Pins made while no scope is open. Nothing releases them at an exit, but
+# release() must still tell them from a caller's pin.
+_UNSCOPED: weakref.WeakValueDictionary[int, DataFrame] = weakref.WeakValueDictionary()
+
+
+@contextmanager
+def owned():
+    """The owner of every materialization made inside it: each ``pin``
+    and each local ``boundary`` registers with the innermost open scope,
+    and the exit releases them, newest first (a cache is dropped before
+    the caches it was built over, so Spark re-plans no dependant). Build
+    AND consume a frame inside one scope: a frame read after its scope
+    exits recomputes dropped caches, and a dropped local checkpoint fails
+    loudly (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``). Also a decorator
+    (``@owned()``) for calls whose result is written, not returned."""
+    scope: dict[int, Callable[[], object]] = {}
+    token = _SCOPE.set(scope)
+    try:
+        yield
+    finally:
+        _SCOPE.reset(token)
+        for drop in reversed(scope.values()):
+            drop()
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """THE cache: persist ``df`` unless it is already persisted, and
+    register a pin this call created with the innermost ``owned()``
+    scope. Spark persistence is not reference-counted, and a plan that
+    matches a caller's cached plan reports it as persisted, so a caller's
+    pin is never taken over and never dropped (pinned by a source-scan
+    test: no other module caches)."""
+    lvl = df.storageLevel
+    if lvl.useMemory or lvl.useDisk:
+        return df
+    df.cache()
+    scope = _SCOPE.get()
+    if scope is None:
+        _UNSCOPED[id(df)] = df
+    else:
+        scope[id(df)] = df.unpersist
+    return df
+
+
+def release(df: DataFrame) -> None:
+    """Drop ``df``'s pin or checkpoint now, ahead of its scope's exit —
+    for loops whose older materializations are dead mid-query. Only what
+    ``pin``/``boundary`` created is dropped; a caller's pin is left."""
+    scope = _SCOPE.get()
+    if scope is not None:
+        drop = scope.pop(id(df), None)
+        if drop is not None:
+            drop()
+    elif _UNSCOPED.pop(id(df), None) is df:
+        df.unpersist()
 
 
 BOUNDARY_CONF = "spark.nrg.boundaryCheckpoint"
@@ -62,18 +136,28 @@ def boundary(df: DataFrame, eager: bool = True) -> DataFrame:
 
     Any other value raises: a typo must not silently drop durability.
 
+    Who releases the blocks: a local checkpoint registers with the
+    innermost ``owned()`` scope, whose exit unpersists its LogicalRDD
+    (``spark.catalog.clearCache()`` cannot reach them). With no scope
+    open they stay until the session ends. Reliable checkpoint files stay
+    where Spark's checkpoint dir policy puts them.
+
     ``eager=False`` is not free: under AQE, building the boundary runs
     the upstream plan's shuffle stages before this returns. A lazy
     boundary saves only the final materialization job, whose work then
     happens inside the first action on the result."""
     mode = df.sparkSession.conf.get(BOUNDARY_CONF, "local")
-    if mode == "local":
-        return df.localCheckpoint(eager)
     if mode == "reliable":
         return df.checkpoint(eager)
-    raise ValueError(
-        f"{BOUNDARY_CONF} must be 'local' or 'reliable', got {mode!r}"
-    )
+    if mode != "local":
+        raise ValueError(
+            f"{BOUNDARY_CONF} must be 'local' or 'reliable', got {mode!r}"
+        )
+    out = df.localCheckpoint(eager)
+    scope = _SCOPE.get()
+    if scope is not None:
+        scope[id(out)] = lambda: out._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    return out
 
 
 def explode_unpushed(df: DataFrame, arr: Column, alias: str, *keep: str) -> DataFrame:

@@ -15,17 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.catalog import register
-from ..session import tune
 from ..sources import load_table
-from ._util import t
-
-
-def _sql(spark: SparkSession, sf_dir: str, tables: tuple[str, ...], query: str) -> DataFrame:
-    """Reference-style SQL entry: temp views + spark.sql (nrg_etl.py:28-29)."""
-    tune(spark)
-    for name in tables:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    return spark.sql(query)
+from ._util import pin, sql_views, t
 
 
 @register(
@@ -45,7 +36,7 @@ def _sql(spark: SparkSession, sf_dir: str, tables: tuple[str, ...], query: str) 
     "evaluates the subquery once and folds it into the filter.",
 )
 def sub1_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(
+    return sql_views(
         spark,
         sf_dir,
         ("orders",),
@@ -75,7 +66,7 @@ def sub1_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     "high-quantity line item.",
 )
 def sub2_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(
+    return sql_views(
         spark,
         sf_dir,
         ("supplier", "lineitem"),
@@ -104,7 +95,7 @@ def sub2_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     "customers with at least one very large order.",
 )
 def sub3_correlated_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(
+    return sql_views(
         spark,
         sf_dir,
         ("customer", "orders"),
@@ -135,7 +126,7 @@ def sub3_correlated_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     "customer's average. Decorrelates to an aggregate + join.",
 )
 def sub4_correlated_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(
+    return sql_views(
         spark,
         sf_dir,
         ("orders",),
@@ -210,7 +201,6 @@ def f7_from_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     "literals, never string-concatenated into the query text.",
 )
 def sub5_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
         """
@@ -243,7 +233,7 @@ GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
     "hash aggregate in Spark: one pass over lineitem, no re-scan per set.",
 )
 def g3_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, ("lineitem",), _GROUPING_SETS_SQL)
+    return sql_views(spark, sf_dir, ("lineitem",), _GROUPING_SETS_SQL)
 
 
 @register(
@@ -375,7 +365,7 @@ def approx_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     "output depends on partitioning and cannot be oracle-checked.",
 )
 def f10_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(
+    return sql_views(
         spark,
         sf_dir,
         ("orders",),
@@ -478,10 +468,7 @@ LATERAL (
     "keyed exchange, not a per-row subquery execution.",
 )
 def sub6_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune(spark)
-    for name in ("region", "nation", "customer"):
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    return spark.sql(_LATERAL_TOPN_SQL)
+    return sql_views(spark, sf_dir, ("region", "nation", "customer"), _LATERAL_TOPN_SQL)
 
 
 _RECURSIVE_ROLLUP_SQL = """
@@ -520,7 +507,7 @@ _RECURSIVE_ROLLUP_SQL = """
     "(operators/graph.py) — O(log d) rounds vs the CTE's O(d).",
 )
 def sub7_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, ("part",), _RECURSIVE_ROLLUP_SQL)
+    return sql_views(spark, sf_dir, ("part",), _RECURSIVE_ROLLUP_SQL)
 
 
 from ..functions.hashing import seeded_hash60 as _seeded_hash60  # noqa: E402
@@ -715,8 +702,8 @@ def approx_kmv_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    ha = side("orders", "o_custkey").cache()
-    hb = side("customer", "c_custkey").cache()
+    ha = pin(side("orders", "o_custkey"))
+    hb = pin(side("customer", "c_custkey"))
     # k smallest of the union: TakeOrderedAndProject (k tiny, no global sort).
     u = ha.unionByName(hb).distinct().orderBy("h").limit(KMVJ_K)
     flags = (

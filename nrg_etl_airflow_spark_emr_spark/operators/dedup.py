@@ -32,7 +32,7 @@ from ..functions.hashing import (
     sql_word_shingles,
 )
 from ..plans.catalog import register
-from ._util import boundary, explode_unpushed, spread, t
+from ._util import boundary, explode_unpushed, pin, release, spread, t
 
 # MinHash configuration: 16 hashes in 4 bands of 4.
 MINHASH_K = 16
@@ -177,9 +177,9 @@ def _hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     InMemoryRelation), so prefix's extra stages reuse, never re-derive.
     """
     docs = _doc_shingles(spark, sf_dir)
-    return docs.select(
+    return pin(docs.select(
         "doc_id", F.transform("shingles", lambda s: hash60(s)).alias("hs_arr")
-    ).cache()
+    ))
 
 
 def _pair_intersections(spark: SparkSession, sf_dir: str):
@@ -545,7 +545,7 @@ def _sql_lsh_oracle(src: str = "documents") -> str:
 def _lsh_candidates(spark: SparkSession, sf_dir: str):
     """(cached signatures, band-keyed candidate pairs d1<d2) — the shared
     candidate-generation stage for every LSH-routed dedup scorer."""
-    sig = _signatures(spark, sf_dir).cache()
+    sig = pin(_signatures(spark, sf_dir))
     return sig, _lsh_candidates_from(sig)
 
 
@@ -845,7 +845,7 @@ def dedup_simhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~9× per doc, ×2 sides (measured 2.5× wall-clock on the fixture).
     # The cached frame is 16 bytes/doc; at 100 TB corpus scale this is
     # the same small-sketch persist dedup_minhash_lsh already does.
-    sh = _simhashes(spark, sf_dir).cache()
+    sh = pin(_simhashes(spark, sf_dir))
     band_vals = F.array(
         *[
             F.shiftright("simhash", off).bitwiseAND(F.lit((1 << w) - 1))
@@ -1014,7 +1014,7 @@ def dedup_simhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache(): same semantic barrier as dedup_simhash_banded — without it
     # CollapseProject inlines the word folds into every band expression
     # and both join sides.
-    sh = _simhash_wide(spark, sf_dir).cache()
+    sh = pin(_simhash_wide(spark, sf_dir))
     band_vals = F.array(
         *[
             F.shiftright(
@@ -1112,7 +1112,7 @@ assert RB_BLOCKS * RB_BLOCK_BITS == SIMHASH_BITS and RB_MATCH >= 1
 )
 def dedup_simhash_rb(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache(): same CollapseProject barrier as dedup_simhash_banded.
-    sh = _simhashes(spark, sf_dir).cache()
+    sh = pin(_simhashes(spark, sf_dir))
     block = [
         F.shiftright("simhash", RB_BLOCK_BITS * j).bitwiseAND(
             F.lit((1 << RB_BLOCK_BITS) - 1)
@@ -1209,13 +1209,13 @@ def _sql_emb_dedup_vec_cte() -> str:
 def dedup_embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .similarity import _cell_assignment, _dot, _vectors
 
-    v = _vectors(spark, sf_dir).cache()
+    v = pin(_vectors(spark, sf_dir))
     # Cache: the assignment feeds both sides of the self-join; without it
     # the k-centroid broadcast pass runs twice.
     # The assignment carries each vector's fe/nrm payload, so the same-cell
     # self-join scores exact cosine directly — no joins back to the vector
     # table (two fewer vec_id-keyed exchanges).
-    assigned = _cell_assignment(v).cache()
+    assigned = pin(_cell_assignment(v))
     a = assigned.select(
         F.col("vec_id").alias("keep_id"), "cid",
         F.col("fe").alias("fa"), F.col("nrm").alias("na"),
@@ -1285,24 +1285,21 @@ def _twolevel_oracle(k1: int, k2: int, iters: int) -> str:
 
 def twolevel_train(
     v: DataFrame, k1: int, k2: int, iters: int
-) -> tuple[DataFrame, DataFrame, DataFrame, tuple[DataFrame, ...]]:
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Train BOTH routing levels over a cached vector frame ``v``
     (vec_id/fe/nrm) — the shared trainer behind the inline query
     (dedup_embedding_twolevel) and the persisted artifact
     (sources/ann_index.write_twolevel_index). Returns
-    ``(cent1, cent2, assigned, pins)``:
+    ``(cent1, cent2, assigned)``:
 
-    - cent1: gid(=0)/cid/c_q — the coarse centroids (cached);
+    - cent1: gid(=0)/cid/c_q — the coarse centroids (a boundary);
     - cent2: gid(=coarse cid)/cid/c_q — per-cell sub-centroids,
       COMPLETED so every cent1 cid appears as a gid (an empty coarse
       cell gets the coarse centroid itself as its single sub-centroid —
       route_twolevel never drops a vector);
     - assigned: c1/c2/vec_id/fe/nrm — the corpus under the FINAL
-      centroids of both levels (cached, NOT yet materialized);
-    - pins: every cached frame the caller must unpersist once its last
-      consumer has materialized (v, subs2, and the raw trainer cent2
-      the completed table unions over; cent1/assigned are returned, so
-      their lifetime is the caller's).
+      centroids of both levels, pinned and materialized, so the
+      trainer's level-2 input pin is released before this returns.
 
     Assignment under the returned centroids is route_twolevel — the
     trainer's own final-assign law (pq_assign twice), so persisted
@@ -1317,10 +1314,9 @@ def twolevel_train(
     # Cache the level-2 input: the grouped trainer re-reads its subs
     # frame every iteration, and without the pin each re-read would
     # replay the ENTIRE level-1 trainer as a plan prefix.
-    subs2 = (
+    subs2 = pin(
         codes1.select(F.col("cid").alias("gid"), "vec_id")
         .join(v.select("vec_id", F.col("fe").alias("sv")), "vec_id")
-        .cache()
     )
     codes2, cent2 = lloyd_fit_grouped_quantized(subs2, k2, iters)
     # A cent1 centroid can win ZERO vectors in the FINAL level-1
@@ -1335,18 +1331,18 @@ def twolevel_train(
     # are untouched: no corpus vector routes to an empty cell (level-1
     # routing reproduces codes1 bit-for-bit), so the oracle replay and
     # the persisted-row hash are unchanged.
-    cent2_raw = cent2
-    cent2 = cent2_raw.unionByName(
+    cent2 = cent2.unionByName(
         cent1.select(F.col("cid").alias("gid"), "c_q")
-        .join(cent2_raw.select("gid").distinct(), "gid", "left_anti")
+        .join(cent2.select("gid").distinct(), "gid", "left_anti")
         .select("gid", F.lit(0).cast("long").alias("cid"), "c_q")
     )
-    assigned = (
+    assigned = pin(
         codes2.select(F.col("gid").alias("c1"), F.col("cid").alias("c2"), "vec_id")
         .join(v.select("vec_id", "fe", "nrm"), "vec_id")
-        .cache()
     )
-    return cent1, cent2, assigned, (v, subs2, cent2_raw)
+    assigned.count()
+    release(subs2)
+    return cent1, cent2, assigned
 
 
 def route_twolevel(
@@ -1425,24 +1421,12 @@ def embedding_dedup_twolevel(
     broadcast, k rows)."""
     from .similarity import _vectors
 
-    created = vectors is None
-    v = _vectors(spark, sf_dir).cache() if created else vectors
-    cent1, cent2, assigned, pins = twolevel_train(v, k1, k2, iters)
-    # Materialize the final assignment, then release every upstream pin
-    # THIS call created (subs2, the raw trainer cent2, cent1 — and v
-    # only when built here; a caller-supplied frame's cache is the
-    # caller's to manage, ADVICE r12): the returned pair join reads
-    # only `assigned`, so a long-lived session invoking this repeatedly
-    # accumulates one small (id, cell, vector) frame per call, not
-    # four. `assigned` itself stays cached — it feeds both sides of the
-    # self-join below; callers running many invocations should
-    # clearCache() between them (the probe scripts do).
-    assigned.count()
-    own_v, *trainer_pins = pins
-    for pinned in (*trainer_pins, cent1):
-        pinned.unpersist()
-    if created:
-        own_v.unpersist()
+    v = vectors if vectors is not None else pin(_vectors(spark, sf_dir))
+    _cent1, _cent2, assigned = twolevel_train(v, k1, k2, iters)
+    # The pair join reads only the materialized `assigned` (pinned: it
+    # feeds both self-join sides), so the corpus pin is dead here. A
+    # caller-supplied frame's pin stays the caller's (ADVICE r12).
+    release(v)
     return twolevel_pairs(assigned)
 
 
@@ -1884,7 +1868,7 @@ def _sql_incremental_lsh_oracle() -> str:
     "engines).",
 )
 def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sig = _signatures(spark, sf_dir).cache()
+    sig = pin(_signatures(spark, sf_dir))
     bands = _band_frame(sig)
     a = bands.filter(F.col("doc_id") % INCR_MOD == 0).alias("a")
     b_ = bands.alias("b")
@@ -1986,7 +1970,7 @@ def dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     hist_sig, hist_bands = read_minhash_index(spark, path)
     hist_bands = hist_bands.select("doc_id", "band_id", "band_key")
-    new_sig = _signatures(spark, sf_dir).filter(F.col("doc_id") % INCR_MOD == 0).cache()
+    new_sig = pin(_signatures(spark, sf_dir).filter(F.col("doc_id") % INCR_MOD == 0))
     new_bands = _band_frame(new_sig)
 
     a = new_bands.alias("a")
@@ -2162,11 +2146,10 @@ def substring_spans(docs: DataFrame) -> DataFrame:
     # cache() is a semantic barrier against CollapseProject re-inlining
     # (the dedup_simhash_banded trap): without it, both self-join sides
     # recompute the O(n·W) window hashing AND the occurrence window.
-    kept = (
+    kept = pin(
         seeds.withColumn("occ", F.count(F.lit(1)).over(occ))
         .filter(F.col("occ") <= SPAN_DF_CAP)
         .select("doc_id", "pos", "h")
-        .cache()
     )
     a = kept.select(F.col("doc_id").alias("doc_a"), F.col("pos").alias("pos_a"), "h")
     b = kept.select(F.col("doc_id").alias("doc_b"), F.col("pos").alias("pos_b"), "h")

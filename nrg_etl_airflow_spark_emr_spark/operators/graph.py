@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..plans.catalog import register
 from .dedup import JACCARD_THRESHOLD, _SQL_SHINGLES_CTE, dedup_jaccard_pairs
-from ._util import boundary, t
+from ._util import boundary, pin, t
 
 MAX_ITERATIONS = 40  # 2^40 diameter headroom — pointer jumping is O(log d)
 
@@ -335,7 +335,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at a 1.09x cost at sf0.1 — the three-way layout A/B (old checkpoint /
     # repartition+sort+cache / merge-hinted cache) is recorded in
     # BASELINE.md, "Round-11 fix of regime finding 2".
-    graph = bi.join(deg.hint("merge"), "src").cache()
+    graph = pin(bi.join(deg.hint("merge"), "src"))
     # Every node appears as src in bi (each edge is mirrored), so the
     # graph's src domain is exactly the node set. Rank init reads it
     # FROM THE CACHED GRAPH, not from deg: deg's plan re-embeds the

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators._util import boundary, spread, t
+from ..operators._util import boundary, pin, spread, t
 from ..operators.similarity import (
     FP_SCALE,
     N_QUERIES,
@@ -225,9 +225,9 @@ def kmeans_fit_quantized(
     a single constant group, plus the exact integer d2 of every vector to
     its FINAL centroid. Returns (vec_id, cell, d2: long)."""
     v = _vectors(spark, sf_dir)
-    subs = v.select(
+    subs = pin(v.select(
         F.lit(0).cast("long").alias("gid"), "vec_id", F.col("fe").alias("sv")
-    ).cache()
+    ))
     # The trainer's final assignment already carries the winning d2 —
     # no re-join against the centroids.
     codes, _cent = lloyd_fit_grouped_quantized(subs, k, iters)
@@ -582,7 +582,7 @@ def ivf_trained_shortlist(spark: SparkSession, sf_dir: str, topn: int) -> DataFr
     Composes ivf_train + ivf_search (trainer inline — the persisted-
     index twin is sim_knn_ivf_persisted) plus the long-d2 exactness
     guard."""
-    v = _vectors(spark, sf_dir).cache()
+    v = pin(_vectors(spark, sf_dir))
     guard = _long_d2_guard(v, "fe")
     cent, fassign = ivf_train(v)
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
@@ -681,7 +681,7 @@ def _ivf_balance_oracle() -> str:
     "job the upsert path deliberately defers.",
 )
 def qc_ivf_index_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _vectors(spark, sf_dir).cache()
+    v = pin(_vectors(spark, sf_dir))
     _cent, fassign = ivf_train(v)
     return cell_balance(fassign)
 
@@ -761,7 +761,7 @@ def sim_knn_ivf_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path = _roundtrip_dir(spark, "ivfups", sf_dir)
-    v = _vectors(spark, sf_dir).cache()
+    v = pin(_vectors(spark, sf_dir))
     write_ivf_index(
         spark, sf_dir, path, vectors=v.filter(F.col("vec_id") % 4 != 0)
     )

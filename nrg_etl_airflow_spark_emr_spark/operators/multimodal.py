@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..plans.catalog import register
-from ._util import t
+from ._util import pin, t
 
 N_HIST_BINS = 16
 
@@ -969,7 +969,7 @@ def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache(): the hash is a pure projection — without the barrier
     # CollapseProject would inline the 64 substr/ascii expressions into
     # the posexplode AND both self-join sides (the simhash_banded trap).
-    h = t2.select("doc_id", *band_cols).cache()
+    h = pin(t2.select("doc_id", *band_cols))
     return _banded_hamming_pairs(h)
 
 
@@ -1126,7 +1126,7 @@ def mm_phash_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield _frame(rows, hash_schema)
 
     images = docs.mapInPandas(render_kernel, schema=image_schema)
-    h = images.mapInPandas(hash_kernel, schema=hash_schema).cache()
+    h = pin(images.mapInPandas(hash_kernel, schema=hash_schema))
     return _banded_hamming_pairs(h)
 
 

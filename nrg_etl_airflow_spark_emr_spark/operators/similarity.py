@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..plans.catalog import register
-from ._util import boundary, spread, t
+from ._util import boundary, pin, spread, t
 
 FP_SCALE = 10_000_000  # 1e-7 resolution; exact for unit-norm float32 vectors
 N_QUERIES = 5          # fixture queries: vec_id < 5
@@ -345,7 +345,7 @@ _SQL_ASSIGN_CTE = f"""
     "(trainer amortized to a maintenance job entirely).",
 )
 def sim_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _vectors(spark, sf_dir).cache()
+    v = pin(_vectors(spark, sf_dir))
     cent = _fixture_centroids(v)
     # Assign every vector to its nearest centroid cell (centroids broadcast).
     assigned = _cell_assignment(v)
@@ -456,9 +456,9 @@ def _srp_signatures(v: DataFrame) -> DataFrame:
     "cell-routed alternative.",
 )
 def sim_cosine_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _vectors(spark, sf_dir).cache()
+    v = pin(_vectors(spark, sf_dir))
     # Cache: the signature frame feeds both sides of the self-join.
-    sig = _srp_signatures(v).cache()
+    sig = pin(_srp_signatures(v))
     a = sig.alias("a")
     b = sig.alias("b")
     cand = a.join(
@@ -526,7 +526,7 @@ def sim_cosine_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "signature computation is one broadcast pass, no all-pairs shuffle.",
 )
 def sim_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _vectors(spark, sf_dir).cache()
+    v = pin(_vectors(spark, sf_dir))
     # 5-bit signature per vector (shared helper — exactly LSH_PLANES
     # hyperplanes at every scale factor).
     sig = _srp_signatures(v)
@@ -620,7 +620,7 @@ _SQ8_ORACLE = f"""
     "tests/test_approx.py.",
 )
 def sim_knn_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _vectors(spark, sf_dir).cache()
+    v = pin(_vectors(spark, sf_dir))
     ev = v.select("vec_id", F.posexplode("fe").alias("p0", "v")).select(
         "vec_id", (F.col("p0") + 1).alias("p"), "v"
     )
@@ -914,7 +914,7 @@ def _pq_oracle(
 def sim_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .kmeans import lloyd_fit_grouped_quantized
 
-    v = _vectors(spark, sf_dir).cache()
+    v = pin(_vectors(spark, sf_dir))
     _check_pq_dim_src(spark, sf_dir)
     subs = _subvectors(v, "vec_id", "fe", "sv")
     codes, cent = lloyd_fit_grouped_quantized(subs, PQ_K, PQ_ITERS)
@@ -994,7 +994,7 @@ def sim_knn_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _roundtrip_dir(spark, "pqidx", sf_dir)
     write_pq_index(spark, sf_dir, path)  # the once-per-corpus build
     cb, codes, norms = read_pq_index(spark, path)
-    v = _vectors(spark, sf_dir).cache()
+    v = pin(_vectors(spark, sf_dir))
     return _pq_adc_search(cb, codes, norms, v, _pq_queries(v))
 
 
@@ -1031,7 +1031,7 @@ def sim_knn_pq_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .formats import _roundtrip_dir
 
     path = _roundtrip_dir(spark, "pqups", sf_dir)
-    v = _vectors(spark, sf_dir).cache()
+    v = pin(_vectors(spark, sf_dir))
     # Dim validation happens inside BOTH write_pq_index and
     # upsert_pq_codes (round-11 advice: a mis-sized batch must fail
     # loudly, not write ragged subvector codes) — no caller-side
@@ -1169,13 +1169,13 @@ def _ivfpq_oracle(
 def sim_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .kmeans import lloyd_fit_grouped_quantized
 
-    v = _vectors(spark, sf_dir).cache()
+    v = pin(_vectors(spark, sf_dir))
     _check_pq_dim_src(spark, sf_dir)
     cent = _fixture_centroids(v)
     # Coarse assignment (shared law with sim_knn_ivf), then exact BIGINT
     # residuals — vector minus its cell centroid, centroids broadcast.
     assigned = _cell_assignment(v)
-    resid = (
+    resid = pin(
         assigned.join(F.broadcast(cent), "cid")
         .select(
             "vec_id",
@@ -1183,7 +1183,6 @@ def sim_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             "nrm",
             F.zip_with("fe", "cfe", lambda a, b: a - b).alias("res"),
         )
-        .cache()
     )
     subs = _subvectors(resid, "vec_id", "res", "sv")
     codes, pcent = lloyd_fit_grouped_quantized(subs, PQ_K, PQ_ITERS)
@@ -1297,7 +1296,7 @@ def sim_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     "touching the vote.",
 )
 def sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _vectors(spark, sf_dir).cache()
+    v = pin(_vectors(spark, sf_dir))
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("fe").alias("qfe"),
         F.col("nrm").alias("qnrm"), F.col("label").alias("true_label"),
@@ -1826,7 +1825,7 @@ HN_K = 2         # hard negatives per anchor
     "IEEE-identical ranking in both engines.",
 )
 def train_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _vectors(spark, sf_dir).cache()
+    v = pin(_vectors(spark, sf_dir))
     assigned = _cell_assignment(v)  # vec_id, fe, nrm, cid (payload carried)
     lab = v.select("vec_id", "label")
     anchors = (

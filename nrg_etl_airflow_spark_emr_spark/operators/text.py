@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import hash60, sql_hash60
 from ..plans.catalog import register
-from ._util import boundary, explode_unpushed, spread, t
+from ._util import boundary, explode_unpushed, pin, release, spread, t
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
 
@@ -671,7 +671,7 @@ def _tfidf_weights(spark: SparkSession, sf_dir: str):
         .agg(F.count(F.lit(1)).alias("df"))
         .filter(F.col("df") * 2 <= F.lit(n_docs))
     )
-    w = (
+    w = pin(
         tf.join(dft, "word")
         .select(
             "doc_id",
@@ -679,7 +679,6 @@ def _tfidf_weights(spark: SparkSession, sf_dir: str):
             "df",
             (F.col("tf") * F.expr(f"(CAST({n_docs} AS BIGINT) * {TFIDF_SCALE}) div df")).alias("w"),
         )
-        .cache()
     )
     norms = w.groupBy("doc_id").agg(
         F.sum(F.col("w").cast("decimal(38,0)") * F.col("w")).alias("n2")
@@ -1521,7 +1520,7 @@ def text_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", (F.col("pos0") + 1).cast("long").alias("pos"), "word")
     )
-    ex = ex.cache()  # fans out three ways: pair join (x2) + unigram counts
+    ex = pin(ex)  # fans out three ways: pair join (x2) + unigram counts
     offsets = F.explode(
         F.array(*[F.lit(i) for i in range(1, COOC_WINDOW + 1)])
     ).alias("off")
@@ -2202,16 +2201,16 @@ def _bpe_train(
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    seqs = wf.select(
+    seqs = pin(wf.select(
         "word",
         "n",
         F.expr(
             "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
         ).alias("toks"),
-    ).cache()
+    ))
 
     rows: list[tuple[int, str, str, int]] = []
-    generations = [seqs]  # cached frames; all but the last two unpersist
+    generations = [seqs]  # pinned frames; all but the last two are released
     rounds = 0
     while len(rows) < n_merges:
         rounds += 1
@@ -2235,7 +2234,7 @@ def _bpe_train(
         # everything two generations back is dead — release it (the
         # newest frame stays lazy and recomputes from its cached parent).
         if len(generations) >= 2:
-            generations[-2].unpersist()
+            release(generations[-2])
         if not cands:
             break
         want = min(batch, n_merges - len(rows))
@@ -2261,7 +2260,7 @@ def _bpe_train(
             sel.append((a, b))
             rows.append((len(rows) + 1, a, b, int(c["cnt"])))
             used.update((a, b, a + b))
-        seqs = _apply_pairs(seqs, sel).cache()
+        seqs = pin(_apply_pairs(seqs, sel))
         generations.append(seqs)
 
     return rows, seqs

@@ -29,17 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.catalog import register
-from ..session import tune
-from ..sources import load_table
-from ._util import davg, dsum, fixed, sql_davg, sql_dsum, t
-
-
-def _sql(spark: SparkSession, sf_dir: str, tables: tuple[str, ...], query: str) -> DataFrame:
-    """Reference-style SQL entry: temp views + spark.sql (nrg_etl.py:28-29)."""
-    tune(spark)
-    for name in tables:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    return spark.sql(query)
+from ._util import davg, dsum, fixed, pin, sql_davg, sql_dsum, sql_views, t
 
 
 # ---------------------------------------------------------------------------
@@ -112,7 +102,7 @@ GROUP BY o_orderpriority
     "predicate is l_shipdate > o_orderdate.",
 )
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, ("orders", "lineitem"), _Q4_SQL)
+    return sql_views(spark, sf_dir, ("orders", "lineitem"), _Q4_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -507,7 +497,7 @@ WHERE p_brand = 'Brand#3'
     "doubles), so the threshold is engine-portable without fixed point.",
 )
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, ("lineitem", "part"), _Q17_SQL)
+    return sql_views(spark, sf_dir, ("lineitem", "part"), _Q17_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -642,7 +632,7 @@ GROUP BY s_name
 )
 def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    flagged = (
+    flagged = pin(
         t(spark, sf_dir, "lineitem")
         .join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
         .select(
@@ -652,7 +642,6 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "is_late"
             ),
         )
-        .cache()
     )
     per_order = flagged.groupBy("l_orderkey").agg(
         F.count_distinct("l_suppkey").alias("n_supp"),
@@ -705,7 +694,7 @@ GROUP BY c_nationkey
     "fixed-point deterministic; NOT EXISTS → LeftAnti join.",
 )
 def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(
+    return sql_views(
         spark, sf_dir, ("customer", "orders"), _Q22_SQL.replace(" AS avg_bal", "")
     )
 

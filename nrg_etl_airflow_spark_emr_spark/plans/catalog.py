@@ -23,6 +23,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import tune
+
 Builder = Callable[[SparkSession, str], DataFrame]
 
 _REGISTRY: dict[str, "QuerySpec"] = {}
@@ -68,13 +70,20 @@ def register(
     bench: bool = False,
     doc: str = "",
 ) -> Callable[[Builder], Builder]:
-    """Decorator: register a query builder under ``name``."""
+    """Decorator: register a query builder under ``name``. The spec's
+    builder applies the session's runtime conf once, then calls ``fn``;
+    ``fn`` itself is returned unchanged for composition."""
 
     def deco(fn: Builder) -> Builder:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
+
+        def built(spark: SparkSession, sf_dir: str) -> DataFrame:
+            tune(spark)
+            return fn(spark, sf_dir)
+
         _REGISTRY[name] = QuerySpec(
-            name=name, builder=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""), tags=tags, bench=bench,
+            name=name, builder=built, oracle=oracle, doc=doc or (fn.__doc__ or ""), tags=tags, bench=bench,
         )
         return fn
 

@@ -86,7 +86,6 @@ from __future__ import annotations
 import json
 import os
 import re
-from contextlib import contextmanager
 from dataclasses import dataclass
 from functools import partial, reduce
 from typing import Callable
@@ -95,6 +94,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..operators._util import owned, pin
 from .readers import rebalanced
 
 # --- manifest mechanics -------------------------------------------------------
@@ -235,20 +235,6 @@ def _write(df: DataFrame, target: str, part: str | None) -> None:
     """Whole-dir overwrite of one segment or stream-batch directory."""
     w = df.write.mode("overwrite")
     (w.partitionBy(part) if part else w).parquet(target)
-
-
-def _pin(df: DataFrame) -> bool:
-    """Persist ``df`` only if the CALLER has not already; returns True
-    when this call now owns the pin (and must release it). Spark
-    persistence is not reference-counted — the upserts' old
-    unconditional persist()/unpersist() pair silently dropped a
-    caller's cache pin on an already-cached batch, and a failed write
-    leaked the pin entirely (ADVICE r13). Pair with try/finally."""
-    lvl = df.storageLevel
-    if lvl.useMemory or lvl.useDisk:
-        return False
-    df.persist()
-    return True
 
 
 def _read_segments(
@@ -638,26 +624,10 @@ def _parent(path: str, expect_parent: int | None) -> int:
     return pm["version"] if pm else 0
 
 
-@contextmanager
-def _corpus(spark: SparkSession, sf_dir: str, vectors: DataFrame | None):
-    """The build corpus: the caller's ``vectors`` as given (its cache
-    pin stays the caller's), or ``sf_dir``'s embeddings cached for the
-    build and released after it."""
-    if vectors is not None:
-        yield vectors
-        return
-    from ..operators.similarity import _vectors
-
-    v = _vectors(spark, sf_dir).cache()
-    try:
-        yield v
-    finally:
-        v.unpersist()
-
-
-@contextmanager
-def _train_sample(v: DataFrame, fraction: float | None, salt: str, k: int):
-    """Yield (training frame, sample_rows) for a router build.
+def _train_sample(
+    v: DataFrame, fraction: float | None, salt: str, k: int
+) -> tuple[DataFrame, int | None]:
+    """(training frame, sample_rows) for a router build.
 
     ``fraction`` None/1.0 trains on ``v`` (sample_rows None). Otherwise
     the trainer runs on a deterministic xxhash64(vec_id) sample — Lloyd
@@ -672,17 +642,13 @@ def _train_sample(v: DataFrame, fraction: float | None, salt: str, k: int):
     decides, and a short one falls back to ``v`` — loud in the manifest,
     where sample_rows < k records the fallback."""
     if fraction is None or fraction >= 1.0:
-        yield v, None
-        return
-    sample = v.filter(
+        return v, None
+    sample = pin(v.filter(
         F.abs(F.xxhash64(F.col("vec_id"), F.lit(salt))) % 1_000_000
         < int(fraction * 1_000_000)
-    ).cache()
-    try:
-        rows = sample.count()
-        yield (sample if rows >= k else v), rows
-    finally:
-        sample.unpersist()
+    ))
+    rows = sample.count()
+    return (sample if rows >= k else v), rows
 
 
 def _build(
@@ -721,6 +687,7 @@ def _build(
     vacuum_index(path, keep_versions=vacuum_keep)
 
 
+@owned()
 def _upsert(spark: SparkSession, path: str, layout: _Layout, batch: DataFrame) -> None:
     """Route ``batch`` under the PERSISTED routers and commit it as one
     ``-upsert`` segment per data kind in one manifest version — the
@@ -732,21 +699,16 @@ def _upsert(spark: SparkSession, path: str, layout: _Layout, batch: DataFrame) -
     action fetches the batch's first row for both the empty guard and
     the layout's ``check``. The batch is pinned first, so its lineage is
     evaluated at most once per partition across guard + route + write;
-    only a pin this call created is released."""
-    owned = _pin(batch)
-    try:
-        head = batch.first()
-        if head is None:
-            return
-        if layout.check:
-            layout.check(head)
-        m = _require(path, layout.kind)
-        routed = layout.route(batch, *_routers(spark, path, layout, m))
-        frames = {d.name: df for d, df in zip(layout.data, routed)}
-        _commit(path, layout, m, m["version"], frames, append=True)
-    finally:
-        if owned:
-            batch.unpersist()
+    a caller's pin on it stays the caller's (ADVICE r13)."""
+    head = pin(batch).first()
+    if head is None:
+        return
+    if layout.check:
+        layout.check(head)
+    m = _require(path, layout.kind)
+    routed = layout.route(batch, *_routers(spark, path, layout, m))
+    frames = {d.name: df for d, df in zip(layout.data, routed)}
+    _commit(path, layout, m, m["version"], frames, append=True)
 
 
 def _stream_ingest(
@@ -834,6 +796,7 @@ def _compact(spark: SparkSession, path: str, layout: _Layout) -> None:
     )
 
 
+@owned()
 def _maintain(
     spark: SparkSession,
     path: str,
@@ -890,13 +853,10 @@ def _maintain(
     healed_batches = 0
     if rebuilt:
         new_fence = covered[-1] if covered else fence
-        corpus = postings.select(*_VEC).cache()
-        try:
-            corpus.count()  # pin the old-manifest scan BEFORE the rebuild's
-            # post-publish vacuum retires those directories
-            rebuild(vectors=corpus, folded_upto=new_fence, expect_parent=m["version"])
-        finally:
-            corpus.unpersist()
+        corpus = pin(postings.select(*_VEC))
+        corpus.count()  # pin the old-manifest scan BEFORE the rebuild's
+        # post-publish vacuum retires those directories
+        rebuild(vectors=corpus, folded_upto=new_fence, expect_parent=m["version"])
         late = _contiguous_prefix(_live_batches(path, layout, new_fence), new_fence)
         if late:
             healed_batches = len(late)
@@ -916,6 +876,7 @@ HOT_CELL_RATIO = 3.0  # a cell above 3x the uniform 1/k share is "hot"
 # --- IVF index ----------------------------------------------------------------
 
 
+@owned()
 def write_ivf_index(
     spark: SparkSession,
     sf_dir: str,
@@ -934,20 +895,20 @@ def write_ivf_index(
     oracle-gated rows keep full-corpus training, since sampled
     centroids legitimately differ."""
     from ..operators.kmeans import K_DEFAULT, ivf_assign, ivf_train
+    from ..operators.similarity import _vectors
 
     parent = _parent(path, expect_parent)
-    with _corpus(spark, sf_dir, vectors) as v, _train_sample(
-        v, train_fraction, "ivf-train", K_DEFAULT
-    ) as (train, sample_rows):
-        cent, fassign = ivf_train(train)
-        if train is not v:
-            fassign = ivf_assign(v, cent)
-        _build(
-            path, _IVF, parent, {"centroids": cent, "postings": fassign},
-            vacuum_keep,
-            params={"train_fraction": train_fraction, "sample_rows": sample_rows},
-            folded_upto=folded_upto,
-        )
+    v = vectors if vectors is not None else pin(_vectors(spark, sf_dir))
+    train, sample_rows = _train_sample(v, train_fraction, "ivf-train", K_DEFAULT)
+    cent, fassign = ivf_train(train)
+    if train is not v:
+        fassign = ivf_assign(v, cent)
+    _build(
+        path, _IVF, parent, {"centroids": cent, "postings": fassign},
+        vacuum_keep,
+        params={"train_fraction": train_fraction, "sample_rows": sample_rows},
+        folded_upto=folded_upto,
+    )
 
 
 def upsert_ivf_postings(spark: SparkSession, path: str, new_vectors: DataFrame) -> None:
@@ -1022,6 +983,7 @@ def maintain_ivf_index(
 # --- Two-level dedup router ----------------------------------------------------
 
 
+@owned()
 def write_twolevel_index(
     spark: SparkSession,
     sf_dir: str,
@@ -1053,33 +1015,29 @@ def write_twolevel_index(
     broadcast joins). None/1.0 keeps full-corpus training (the
     oracle-gated fixture rows, where trainer determinism IS the gate)."""
     from ..operators.dedup import twolevel_train
+    from ..operators.similarity import _vectors
 
     parent = _parent(path, expect_parent)
-    with _corpus(spark, sf_dir, vectors) as v, _train_sample(
-        v, train_fraction, "tl-train", k1
-    ) as (train, sample_rows):
-        cent1, cent2, assigned, pins = twolevel_train(train, k1, k2, iters)
-        if train is v:
-            posted = assigned.select(*_TL_POSTINGS)
-        else:
-            (posted,) = _route_twolevel(v, cent1, cent2)
-        _build(
-            path, _TWOLEVEL, parent,
-            {"l1cent": cent1, "l2cent": cent2, "postings": posted},
-            vacuum_keep,
-            params={
-                "k1": k1,
-                "k2": k2,
-                "iters": iters,
-                "train_fraction": train_fraction,
-                "sample_rows": sample_rows,
-            },
-            folded_upto=folded_upto,
-        )
-        # pins[0] is the trainer's input — the sample or the corpus,
-        # released by their owners above; the rest are the trainer's.
-        for pinned in (*pins[1:], cent1, assigned):
-            pinned.unpersist()
+    v = vectors if vectors is not None else pin(_vectors(spark, sf_dir))
+    train, sample_rows = _train_sample(v, train_fraction, "tl-train", k1)
+    cent1, cent2, assigned = twolevel_train(train, k1, k2, iters)
+    if train is v:
+        posted = assigned.select(*_TL_POSTINGS)
+    else:
+        (posted,) = _route_twolevel(v, cent1, cent2)
+    _build(
+        path, _TWOLEVEL, parent,
+        {"l1cent": cent1, "l2cent": cent2, "postings": posted},
+        vacuum_keep,
+        params={
+            "k1": k1,
+            "k2": k2,
+            "iters": iters,
+            "train_fraction": train_fraction,
+            "sample_rows": sample_rows,
+        },
+        folded_upto=folded_upto,
+    )
 
 
 def read_twolevel_centroids(
@@ -1177,6 +1135,7 @@ def maintain_twolevel_index(
 # --- PQ index -----------------------------------------------------------------
 
 
+@owned()
 def write_pq_index(
     spark: SparkSession,
     sf_dir: str,
@@ -1200,20 +1159,20 @@ def write_pq_index(
     Search reads codes + codebooks + norms; raw vectors are fetched (by
     vec_id, from the source table) ONLY for shortlist rows."""
     from ..operators.kmeans import lloyd_fit_grouped_quantized
-    from ..operators.similarity import PQ_ITERS, PQ_K, _check_pq_dim, _subvectors
+    from ..operators.similarity import PQ_ITERS, PQ_K, _check_pq_dim, _subvectors, _vectors
 
     parent = _parent(path, expect_parent)
-    with _corpus(spark, sf_dir, vectors) as v:
-        _check_pq_dim(len(v.select("fe").first()[0]))
-        codes, cent = lloyd_fit_grouped_quantized(
-            _subvectors(v, "vec_id", "fe", "sv"), PQ_K, PQ_ITERS
-        )
-        frames = {
-            "codebooks": cent,
-            "codes": codes.select("gid", "vec_id", "cid"),
-            "norms": v.select("vec_id", "nrm"),
-        }
-        _build(path, _PQ, parent, frames, vacuum_keep)
+    v = vectors if vectors is not None else pin(_vectors(spark, sf_dir))
+    _check_pq_dim(len(v.select("fe").first()[0]))
+    codes, cent = lloyd_fit_grouped_quantized(
+        _subvectors(v, "vec_id", "fe", "sv"), PQ_K, PQ_ITERS
+    )
+    frames = {
+        "codebooks": cent,
+        "codes": codes.select("gid", "vec_id", "cid"),
+        "norms": v.select("vec_id", "nrm"),
+    }
+    _build(path, _PQ, parent, frames, vacuum_keep)
 
 
 def upsert_pq_codes(spark: SparkSession, path: str, new_vectors: DataFrame) -> None:
@@ -1254,6 +1213,7 @@ def read_pq_index(
 # --- MinHash band index ---------------------------------------------------------
 
 
+@owned()
 def write_minhash_index(
     spark: SparkSession,
     sf_dir: str,

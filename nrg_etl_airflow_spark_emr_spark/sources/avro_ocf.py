@@ -121,27 +121,6 @@ def avro_schema_json(schema: T.StructType, name: str = "row") -> str:
     return json.dumps({"type": "record", "name": name, "fields": fields})
 
 
-def _encode_value(dt: T.DataType, v, out: bytearray) -> None:
-    # Union branch index: 0 = null, 1 = the value type.
-    if v is None:
-        out += _zigzag_encode(0)
-        return
-    out += _zigzag_encode(1)
-    if isinstance(dt, (T.LongType, T.IntegerType, T.TimestampType)):
-        out += _zigzag_encode(int(v))  # timestamps pre-converted to micros
-    elif isinstance(dt, T.DoubleType):
-        out += struct.pack("<d", float(v))
-    elif isinstance(dt, T.StringType):
-        b = str(v).encode("utf-8")
-        out += _zigzag_encode(len(b)) + b
-    elif isinstance(dt, T.DateType):
-        out += _zigzag_encode(int(v))  # caller pre-converts to epoch days
-    elif isinstance(dt, T.BooleanType):
-        out += b"\x01" if v else b"\x00"
-    else:  # pragma: no cover - guarded by avro_schema_json
-        raise ValueError(f"unsupported type {dt}")
-
-
 def _decode_value(dt: T.DataType, buf: memoryview, pos: int):
     branch, pos = _zigzag_decode(buf, pos)
     if branch == 0:

@@ -51,18 +51,20 @@ def catalog_sweep(spark, sf_dir) -> dict:
     - ``row_udfs``: queries whose executed plan holds a row-at-a-time
       Python UDF (``BatchEvalPython``);
     - ``nonscalar``: query -> its array/map/struct output columns."""
+    from nrg_etl_airflow_spark_emr_spark.operators._util import owned
     from nrg_etl_airflow_spark_emr_spark.plans.catalog import all_specs
 
     specs = all_specs()
     row_udfs, nonscalar = [], {}
     for name in sorted(specs):
-        df = specs[name].builder(spark, sf_dir)
-        if "BatchEvalPython" in df._jdf.queryExecution().executedPlan().toString():
-            row_udfs.append(name)
-        cols = [
-            f.name for f in df.schema.fields
-            if f.dataType.typeName() in ("array", "map", "struct")
-        ]
+        with owned():
+            df = specs[name].builder(spark, sf_dir)
+            if "BatchEvalPython" in df._jdf.queryExecution().executedPlan().toString():
+                row_udfs.append(name)
+            cols = [
+                f.name for f in df.schema.fields
+                if f.dataType.typeName() in ("array", "map", "struct")
+            ]
         if cols:
             nonscalar[name] = cols
     return {"row_udfs": row_udfs, "nonscalar": nonscalar}

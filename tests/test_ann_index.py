@@ -1553,7 +1553,7 @@ def test_twolevel_train_completes_empty_coarse_cells(spark):
     )
 
     v = _empty_cell_corpus(spark).cache()
-    cent1, cent2, assigned, pins = twolevel_train(v, 3, 2, 1)
+    cent1, cent2, assigned = twolevel_train(v, 3, 2, 1)
     c1_rows = {r.cid: r.c_q for r in cent1.collect()}
     assert set(c1_rows) == {0, 1, 2}
     assert c1_rows[1] == [15]  # cell 1 exists in cent1...
@@ -1569,8 +1569,8 @@ def test_twolevel_train_completes_empty_coarse_cells(spark):
     )
     routed = route_twolevel(nv, cent1, cent2).collect()
     assert [(r.vec_id, r.c1, r.c2) for r in routed] == [(100, 1, 0)]
-    for p in (*pins, cent1, assigned):
-        p.unpersist()
+    assigned.unpersist()
+    v.unpersist()
 
 
 def test_twolevel_upsert_into_empty_cell_is_lossless(spark, tmp_path):

@@ -14,6 +14,7 @@ import math
 
 import pytest
 
+from nrg_etl_airflow_spark_emr_spark.operators._util import owned
 from nrg_etl_airflow_spark_emr_spark.plans.catalog import all_specs
 
 SPECS = all_specs()
@@ -71,6 +72,7 @@ def _duck_type(dt: str) -> str:
 
 
 @pytest.mark.parametrize("name", sorted(SPECS))
+@owned()  # build and consume in one scope, which releases the query's pins
 def test_catalog_query_matches_oracle(name, spark, duck, sf_dir):
     spec = SPECS[name]
     sdf = spec.builder(spark, sf_dir)

@@ -348,13 +348,31 @@ def test_tables_module_stamps_without_located_listings():
 
 
 def test_tune_raises_naming_a_key_it_cannot_set(spark, monkeypatch):
-    """``t()`` runs ``tune`` before every load; a conf it cannot apply
-    must fail the load, not be skipped."""
+    """A registered builder runs ``tune`` before its first load; a conf it
+    cannot apply must fail the query, not be skipped."""
     from nrg_etl_airflow_spark_emr_spark import session
 
     monkeypatch.setitem(session._RUNTIME_CONF, "spark.driver.memory", "1g")
     with pytest.raises(Exception, match="spark.driver.memory"):
         session.tune(spark)
+
+
+def test_registered_builder_tunes_once_per_call(spark, sf_dir, monkeypatch):
+    """The runtime conf is applied once per query, by the registered
+    builder, not once per table load."""
+    from nrg_etl_airflow_spark_emr_spark.plans import catalog
+
+    calls = []
+    real_tune = catalog.tune
+    monkeypatch.setattr(catalog, "tune", lambda s: calls.append(s) or real_tune(s))
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Chicago")
+    try:
+        catalog.all_specs()["q5_region_revenue"].builder(spark, sf_dir)
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    assert len(calls) == 1
 
 
 def test_runtime_conf_keys_are_all_modifiable(spark):
