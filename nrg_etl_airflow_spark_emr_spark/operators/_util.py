@@ -139,7 +139,8 @@ def boundary(df: DataFrame, eager: bool = True) -> DataFrame:
     Who releases the blocks: a local checkpoint registers with the
     innermost ``owned()`` scope, whose exit unpersists its LogicalRDD
     (``spark.catalog.clearCache()`` cannot reach them). With no scope
-    open they stay until the session ends. Reliable checkpoint files stay
+    open they stay until Spark's context cleaner drops them after a JVM
+    GC of the frame, or the session ends. Reliable checkpoint files stay
     where Spark's checkpoint dir policy puts them.
 
     ``eager=False`` is not free: under AQE, building the boundary runs
